@@ -158,6 +158,58 @@ class TestExpiry:
         assert engine.count(now=T0 + 100) == 1
         assert engine.get("e.t", now=T0 + 100) == [b"live"]
 
+    def test_purge_rewrites_only_partitions_with_expired_rows(self, engine: Engine, spark):
+        """A partition left with no live row is dropped; a partition
+        with nothing expired keeps its files untouched."""
+        from unitdb_spark.engine import _data_files, _partitions
+
+        engine.put_entry(Entry("e.t", b"dead", ttl="1s"), ts=T0)
+        engine.put_entry(Entry("e.t", b"live"), ts=T0 + 90_000)
+        engine.flush()
+        root = engine.table.path
+        dead_part, live_part = sorted(_partitions(spark, root))
+        live_files = _data_files(spark, f"{root}/{live_part}")
+        engine.purge_expired(now=T0 + 100_000)
+        assert list(_partitions(spark, root)) == [live_part]
+        assert _data_files(spark, f"{root}/{live_part}") == live_files
+        assert engine.get("e.t", now=T0 + 100_000) == [b"live"]
+
+    def test_purge_crash_between_renames_loses_nothing(self, spark, tmp_path, monkeypatch):
+        """A crash right after purge_expired's first rename must be
+        recovered at the next open: same reads, and the seq counter
+        resumes above every stored seq (a reused seq would be hidden by
+        a tombstone still on disk)."""
+        from unitdb_spark import fs
+
+        path = str(tmp_path / "purgecrash")
+        eng = Engine.open(spark, path)
+        eng.put_entry(Entry("e.t", b"dead", ttl="1s"), ts=T0)
+        seqs = [eng.put_entry(Entry("e.t", b"live%d" % i), ts=T0 + i) for i in range(3)]
+        eng.flush()
+        eng.delete(seqs[0])
+        now = T0 + 100
+        before = eng.get("e.t", now=now)
+        assert before == [b"live2", b"live1"]
+
+        real_rename = fs.rename
+        done = []
+
+        def crash_after_first_rename(sp, src, dst):
+            if done:
+                raise RuntimeError("crash")
+            done.append((src, dst))
+            return real_rename(sp, src, dst)
+
+        monkeypatch.setattr(fs, "rename", crash_after_first_rename)
+        with pytest.raises(RuntimeError, match="crash"):
+            eng.purge_expired(now=now)
+        monkeypatch.setattr(fs, "rename", real_rename)
+
+        reopened = Engine(spark, path)
+        assert reopened.get("e.t", now=now) == before
+        assert reopened.count(now=now) == len(before)
+        assert reopened.put_entry(Entry("e.t", b"next"), ts=now) > max(seqs)
+
 
 class TestDelete:
     def test_delete_then_get(self, engine: Engine):
@@ -531,41 +583,6 @@ class TestCompactSafety:
             fs.delete(spark, eng.table.lease_path)
             eng.destroy()
 
-    def test_recovery_promotes_complete_stage(self, spark, tmp_path):
-        """Crash BETWEEN the two swap renames: partition gone from the
-        table, rewrite complete in staging. Reopening the engine must
-        promote the stage so no data is lost."""
-        from unitdb_spark import fs
-        from unitdb_spark.engine import Engine
-
-        path = str(tmp_path / "crashmid")
-        eng = Engine.open(spark, path)
-        for i in range(4):
-            eng.put_entry(Entry("c.t", b"v%d" % i), ts=T0 + i)
-            eng.flush()
-        before = eng.get("c.t", now=T0 + 10)
-        root = eng.table.path
-        part = next(
-            f"{c}/{d}"
-            for c, _, cd in fs.list_status(spark, root)
-            if cd and c.startswith("contract=")
-            for d, _, dd in fs.list_status(spark, f"{root}/{c}")
-            if dd and d.startswith("p_date=")
-        )
-        ppath = f"{root}/{part}"
-        stage = f"{path}/.compact-part/stage/{part}"
-        # a complete rewrite (with _SUCCESS) sits in staging...
-        spark.read.parquet(ppath).coalesce(1).write.parquet(stage)
-        # ...and the crash happened right after ppath -> trash
-        trash = f"{path}/.compact-part/trash/{part}"
-        fs.mkdirs(spark, str(__import__("pathlib").Path(trash).parent))
-        fs.rename(spark, ppath, trash)
-        spark.catalog.refreshByPath(root)
-        reopened = Engine(spark, path)
-        assert reopened.get("c.t", now=T0 + 10) == before
-        assert not fs.exists(spark, stage) and not fs.exists(spark, trash)
-        reopened.destroy()
-
     def test_recovery_restores_trash_when_stage_incomplete(self, spark, tmp_path):
         """Crash during the stage write (no _SUCCESS): the original
         partition must come back from trash, the partial stage dropped."""
@@ -596,6 +613,96 @@ class TestCompactSafety:
         assert reopened.get("r.t", now=T0 + 10) == [b"keep"]
         assert not fs.exists(spark, stage)
         reopened.destroy()
+
+
+class TestMaintenanceCrashPoints:
+    """Crash compact, vacuum and purge_expired at each fs.rename /
+    fs.delete call they make (the call raises instead of running),
+    reopen the store, and compare it with the state before the job:
+    the same live rows, no duplicate seq, nothing left under
+    ``.compact-part/``, and a seq counter above every stored seq."""
+
+    NOW = T0 + 200_000
+
+    @pytest.fixture(scope="class")
+    def base_store(self, spark, tmp_path_factory):
+        """Day 0: four one-row files (compact's target) holding an
+        expired row (purge_expired's) and a tombstoned one (vacuum's).
+        Day 1: one healthy file no job touches. Day 2: only an expired
+        row, so purge_expired drops the whole partition."""
+        path = str(tmp_path_factory.mktemp("crash") / "base")
+        eng = Engine.open(spark, path)
+        eng.put_entry(Entry("k.t", b"expired", ttl="1s"), ts=T0)
+        eng.flush()
+        seqs = []
+        for i in range(3):
+            seqs.append(eng.put_entry(Entry("k.t", b"v%d" % i), ts=T0 + 1 + i))
+            eng.flush()
+        eng.put_entry(Entry("k.t", b"next-day"), ts=T0 + 90_000)
+        eng.put_entry(Entry("k.t", b"expired-day", ttl="1s"), ts=T0 + 180_000)
+        eng.flush()
+        eng.delete(seqs[1])
+        return path
+
+    @staticmethod
+    def _live_seqs(eng: Engine, now: float) -> list[int]:
+        df = eng.get_df(Query("...", limit=1000), now=now)
+        return sorted(r["seq"] for r in df.select("seq").collect())
+
+    @pytest.mark.parametrize(
+        "op",
+        [
+            lambda e: e.compact(min_files=4),
+            lambda e: e.vacuum(),
+            lambda e: e.purge_expired(now=TestMaintenanceCrashPoints.NOW),
+        ],
+        ids=["compact", "vacuum", "purge_expired"],
+    )
+    def test_crash_at_every_rename_and_delete(self, spark, base_store, tmp_path, monkeypatch, op):
+        import shutil
+
+        from unitdb_spark import fs
+
+        real = {"rename": fs.rename, "delete": fs.delete}
+        want = self._live_seqs(Engine(spark, base_store), self.NOW)
+        for k in range(50):
+            path = str(tmp_path / f"k{k}")
+            shutil.copytree(base_store, path)
+            eng = Engine(spark, path)
+            calls = []
+
+            def faulty(name):
+                def call(*args, **kwargs):
+                    calls.append(name)
+                    if len(calls) == k + 1:
+                        raise RuntimeError(f"crash at {name} #{k}")
+                    return real[name](*args, **kwargs)
+
+                return call
+
+            for name in real:
+                monkeypatch.setattr(fs, name, faulty(name))
+            try:
+                op(eng)
+                crashed = False
+            except RuntimeError as e:
+                assert str(e).startswith("crash at"), e
+                crashed = True
+            finally:
+                for name, fn in real.items():
+                    monkeypatch.setattr(fs, name, fn)
+
+            reopened = Engine(spark, path)
+            assert self._live_seqs(reopened, self.NOW) == want, f"crash at call {k}"
+            raw = [r["seq"] for r in reopened.table.read().select("seq").collect()]
+            assert len(raw) == len(set(raw)), f"duplicate rows after crash at call {k}"
+            assert not fs.has_files(spark, f"{path}/.compact-part", ""), k
+            assert reopened.put_entry(Entry("k.t", b"new"), ts=self.NOW) > max(raw)
+            if not crashed:
+                break
+        else:
+            pytest.fail("the job never finished without reaching the crash point")
+        assert k >= 5  # at least the swap's two deletes, two renames and trash drop
 
 
 class TestCompactMixedGenerations:
@@ -686,5 +793,50 @@ class TestVacuumConcurrency:
             assert not fs.has_files(spark, eng.tombstones_path)
             raw = {r["seq"] for r in eng.table.read().select("seq").collect()}
             assert raw == {seqs[2]}
+        finally:
+            eng.destroy()
+
+    def test_skipped_partition_keeps_snapshot_tombstones(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A writer that ignores the lease lands a file in the partition
+        vacuum is rewriting, so the pre-swap re-check skips it. The
+        snapshotted tombstones must then stay: retiring them would
+        bring the skipped partition's deleted row back."""
+        from unitdb_spark import fs
+        from unitdb_spark import engine as eng_mod
+        from unitdb_spark.engine import Engine
+
+        eng = Engine.open(spark, str(tmp_path / "vacskip"))
+        try:
+            seqs = [eng.put_entry(Entry("v.t", b"d%d" % i), ts=T0 + i) for i in range(3)]
+            eng.flush()
+            eng.delete(seqs[0])
+
+            real_ls = eng_mod.fs.list_status
+            fired = {}
+
+            def racing_ls(sp, path):
+                res = real_ls(sp, path)
+                if path.startswith(eng.table.path + "/") and "p_date=" in path and "x" not in fired:
+                    fired["x"] = True
+                    fs.delete(spark, eng.table.lease_path)
+                    eng.put_entry(Entry("v.t", b"late"), ts=T0 + 5)
+                    eng.flush()
+                    fs.create_new(spark, eng.table.lease_path)
+                return res
+
+            monkeypatch.setattr(eng_mod.fs, "list_status", racing_ls)
+            report = eng.vacuum()
+            monkeypatch.setattr(eng_mod.fs, "list_status", real_ls)
+
+            assert fired and report == {}  # the only affected partition was skipped
+            assert fs.has_files(spark, eng.tombstones_path)
+            assert not fs.exists(spark, eng.table.lease_path)
+            assert eng.get("v.t", now=T0 + 100) == [b"late", b"d2", b"d1"]
+            # the next run applies the kept tombstone
+            assert sum(eng.vacuum().values()) == 1
+            assert not fs.has_files(spark, eng.tombstones_path)
+            assert eng.get("v.t", now=T0 + 100) == [b"late", b"d2", b"d1"]
         finally:
             eng.destroy()

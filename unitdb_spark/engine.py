@@ -26,12 +26,15 @@ path.
 from __future__ import annotations
 
 import datetime as dt
+import math
 import time
 from collections import deque
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -45,6 +48,7 @@ from unitdb_spark.core.model import (
     Query,
     _SeqSource,
     message_id,
+    message_id_seq,
     new_contract,
 )
 from unitdb_spark.core.topic import parse_topic
@@ -62,6 +66,9 @@ class ResultTooLarge(RuntimeError):
 
 #: sentinel distinguishing "not passed" from an explicit None (= no cap)
 _UNSET = object()
+
+#: a table lease older than this is presumed held by a crashed job
+LEASE_TTL_S = 3600
 
 
 @dataclass
@@ -104,13 +111,12 @@ class Engine:
         self._latencies: dict[str, deque] = {
             op: deque(maxlen=50) for op in ("get", "put", "del")
         }
-        # finish any crashed compact() swap BEFORE first read: a crash
+        # finish any crashed partition swap BEFORE first read: a crash
         # between its renames leaves a partition absent from the table
         self._recover_compact()
         # break a lease whose holder crashed past the TTL (else appends
-        # would refuse until someone re-runs compact)
-        lease_m = fs.mtime(self.spark, self.table.lease_path)
-        if lease_m is not None and (time.time() * 1000 - lease_m) >= 3600 * 1000:
+        # would refuse until someone re-runs a maintenance job)
+        if self._lease_stale():
             fs.delete(self.spark, self.table.lease_path)
         if self.table.exists():
             top = self.table.read().agg(F.max("seq")).collect()[0][0]
@@ -161,8 +167,6 @@ class Engine:
         A caller-supplied msg_id (NewID + WithID flow, entry.go:61-66)
         pins the row's seq to the one embedded in the id — otherwise
         delete_entry would tombstone a seq no row carries."""
-        from unitdb_spark.core.model import message_id_seq
-
         spec = parse_topic(entry.topic)
         now = ts if ts is not None else time.time()
         ttl = entry.ttl_seconds()
@@ -203,8 +207,6 @@ class Engine:
         This is the 100 TB path — no driver-side rows. The max(seq) the
         seq counter needs is captured via observe() DURING the write —
         a separate agg would re-execute the caller's whole input plan."""
-        from pyspark.sql import Observation
-
         self.flush()
         cols = {c for c in df.columns}
         if "msg_id" not in cols:
@@ -355,17 +357,20 @@ class Engine:
         """db.go:389-425 Delete(): tombstone by sequence."""
         if self.options.immutable:
             raise ImmutableError("delete forbidden: store is immutable")
-        self._metrics["dels"] += 1
-        self.spark.createDataFrame([(int(seq),)], "seq long").write.mode("append").parquet(
-            self.tombstones_path
-        )
+        self._write_tombstones([seq])
 
     def delete_entry(self, entry: Entry) -> None:
-        if entry.msg_id is None:
-            raise ValueError("delete requires message id")
-        from unitdb_spark.core.model import message_id_seq
+        self.delete(_entry_seq(entry))
 
-        self.delete(message_id_seq(entry.msg_id))
+    def _write_tombstones(self, seqs: list[int]) -> None:
+        """One append of tombstone rows (the delete and batch-commit
+        path), as ONE file: every Get lists and scans the tombstone dir.
+        repartition(1), not coalesce(1): coalesce pulls the input's
+        partitions through one task and made each write ~2x slower."""
+        self._metrics["dels"] += len(seqs)
+        self.spark.createDataFrame(
+            [(int(s),) for s in seqs], "seq long"
+        ).repartition(1).write.mode("append").parquet(self.tombstones_path)
 
     def _tombstones_df(self) -> DataFrame | None:
         if fs.has_files(self.spark, self.tombstones_path):
@@ -423,61 +428,101 @@ class Engine:
             }
         return out
 
-    def _acquire_table_lease(self, lease_ttl_s: int = 3600) -> str:
-        """Take the single-writer table lease (atomic create-if-absent;
-        a lease older than the TTL is presumed crashed and broken).
-        Callers flush() BEFORE acquiring — appends check the lease."""
-        import time as _time
+    # ------------------------------------------------------ maintenance
+    # compact, vacuum and purge_expired are unitdb's background reclaim
+    # jobs (leasing.go, expiry_window.go). Each one only picks partitions
+    # and says how to rewrite one; the lease and the recoverable swap
+    # below are shared.
 
+    def _lease_stale(self) -> bool:
+        """True unless a live maintenance job holds the table lease: the
+        lease file is absent, or older than ``LEASE_TTL_S`` (its holder
+        crashed)."""
+        m = fs.mtime(self.spark, self.table.lease_path)
+        return m is None or time.time() * 1000 - m >= LEASE_TTL_S * 1000
+
+    @contextmanager
+    def _maintenance(self):
+        """Flush, then hold the single-writer table lease (atomic
+        create-if-absent; a stale lease is broken) for the body, and
+        always release it. The flush comes first because appends refuse
+        while the lease is held — which is the point: no file can land
+        in a partition between a job's listing and its swap."""
+        self.flush()
         lease = self.table.lease_path
         if not fs.create_new(self.spark, lease):
-            age_ms = fs.mtime(self.spark, lease)
-            if age_ms is not None and (_time.time() * 1000 - age_ms) < lease_ttl_s * 1000:
+            if not self._lease_stale():
                 raise RuntimeError(
-                    f"another maintenance job holds the lease at {lease}; "
-                    "retry after it finishes (or after the 1h lease TTL)"
+                    f"another maintenance job holds the lease at {lease}; retry "
+                    f"after it finishes (or after the {LEASE_TTL_S}s lease TTL)"
                 )
             fs.delete(self.spark, lease)  # stale: previous holder crashed
             if not fs.create_new(self.spark, lease):
                 raise RuntimeError(f"lost the race re-acquiring the lease at {lease}")
-        return lease
+        try:
+            yield
+        finally:
+            fs.delete(self.spark, lease)
+
+    def _swap_partition(self, part: str, rewrite: Callable[[DataFrame], DataFrame]) -> bool:
+        """Replace partition dir ``part`` (``contract=<c>/p_date=<d>``)
+        with ``rewrite`` of its rows, or drop it when no row survives.
+        Caller holds ``_maintenance()``.
+
+        The rewrite is written to ``.compact-part/stage/<part>``; then
+        the partition is re-listed, and if its files changed since they
+        were read (a writer ignored the lease) the stage is dropped and
+        False returned with the partition untouched. Otherwise: rename
+        live → trash, stage → live, drop trash. Stage and trash sit
+        outside the table dir, where a leftover cannot parse as a
+        partition value. A crash at any step is finished or undone by
+        ``_recover_compact`` at the next open."""
+        ppath = f"{self.table.path}/{part}"
+        stage = f"{self._stage_root}/stage/{part}"
+        trash = f"{self._stage_root}/trash/{part}"
+        files = _data_files(self.spark, ppath)
+        fs.delete(self.spark, stage)  # debris of an earlier failed run
+        fs.delete(self.spark, trash)
+        kept = Observation()
+        rewrite(self.spark.read.schema(_DATA_SCHEMA).parquet(ppath)).observe(
+            kept, F.count(F.lit(1)).alias("rows")
+        ).write.parquet(stage)
+        if _data_files(self.spark, ppath) != files:
+            fs.delete(self.spark, stage)
+            return False
+        fs.mkdirs(self.spark, str(Path(trash).parent))
+        _rename(self.spark, ppath, trash)
+        if kept.get["rows"]:
+            _rename(self.spark, stage, ppath)
+        else:
+            fs.delete(self.spark, stage)
+        fs.delete(self.spark, trash)
+        return True
+
+    @property
+    def _stage_root(self) -> str:
+        return str(Path(self.path) / ".compact-part")
 
     def purge_expired(self, now: float | None = None) -> None:
         """Background expirer parity (expiry_window.go:28-148): rewrite
-        the table dropping dead rows. At scale this is the compaction /
-        retention job; on Parquet we rewrite partitions.
+        the partitions that hold a row with ``expires_at <= now``,
+        dropping those rows. Partitions with nothing expired are not
+        touched, so the cost tracks expired data, not table size.
 
-        Single-writer (same table lease as compact/vacuum — a
-        micro-batch landing between the full-table read and the swap
-        would vanish with the trash dir otherwise). Crash-safe swap:
-        the rewrite lands in a fresh staging dir (stale staging from a
-        failed prior run is discarded first, so it can never be
-        appended into twice), then live -> trash and staging -> live.
-        The only loss window is between the two renames (ms); a crash
-        there leaves the completed rewrite in staging for manual
-        promotion rather than silently reusing seqs against old
-        tombstones."""
+        Runs under the shared table lease and swaps each partition with
+        ``_swap_partition``, so a crash at any step is recovered at the
+        next open: no row is lost and no seq is reused."""
         if not self.table.exists():
             return
-        self.flush()
-        lease = self._acquire_table_lease()
-        try:
-            now_dt = dt.datetime.fromtimestamp(now or time.time(), dt.timezone.utc).replace(tzinfo=None)
-            df = self.table.read().filter(ttl_live_expr(F.lit(now_dt))).select(
-                [f.name for f in MESSAGES_SCHEMA.fields]
-            )
-            tmp = str(Path(self.path) / ".compact")
-            trash = str(Path(self.path) / ".compact-old")
-            fs.delete(self.spark, tmp)  # stale staging from a crash
-            fs.delete(self.spark, trash)
-            # the staging table's OWN lease path is distinct, so the
-            # staging append is not blocked by the lease we hold
-            MessagesTable(self.spark, tmp).append(df)
-            fs.rename(self.spark, self.table.path, trash)
-            fs.rename(self.spark, tmp, self.table.path)
-            fs.delete(self.spark, trash)
-        finally:
-            fs.delete(self.spark, lease)
+        now_dt = dt.datetime.fromtimestamp(now or time.time(), dt.timezone.utc).replace(tzinfo=None)
+        live = ttl_live_expr(F.lit(now_dt))
+        with self._maintenance():
+            dead = self.table.read().filter(~live).select("contract", "p_date").distinct()
+            for r in dead.collect():
+                self._swap_partition(
+                    _part_dir(r["contract"], r["p_date"]),
+                    lambda df: df.filter(live).sortWithinPartitions("seq"),
+                )
 
     def vacuum(self) -> dict[str, int]:
         """Physically apply delete tombstones, then drop them — the
@@ -494,31 +539,29 @@ class Engine:
         nothing serializes through the driver except the
         affected-partition list, and the per-partition rewrite is an
         anti-JOIN on seq, never a driver-built IN-list. Single-writer
-        via the shared table lease;
-        stage → trash → promote per partition with the same
-        ``_recover_compact`` coverage; re-runnable — a crash leaves
-        the tombstone set in place, so reads stay correct either way.
+        via the shared table lease; each partition is replaced by
+        ``_swap_partition``. The snapshotted tombstone files retire
+        only when every affected partition was rewritten: if one was
+        skipped (its files changed under us) they stay, or its rows
+        would come back. Re-runnable — a crash leaves the tombstone
+        set in place, so reads stay correct either way.
         Returns {partition_dir: rows_removed}.
         """
         report: dict[str, int] = {}
-        self.flush()
-        if not fs.has_files(self.spark, self.tombstones_path) or not self.table.exists():
+        if not fs.has_files(self.spark, self.tombstones_path):
             return report
         # lease FIRST, snapshot SECOND: a tombstone appended after the
         # snapshot survives (only the snapshotted files retire below),
         # and appends to the table are blocked for the whole rewrite —
         # no window where a concurrent delete() can be silently undone
-        lease = self._acquire_table_lease()
-        try:
+        with self._maintenance():
             snap_files = [
                 f"{self.tombstones_path}/{name}"
-                for name, _sz, is_dir in fs.list_status(self.spark, self.tombstones_path)
-                if not is_dir and name.endswith(".parquet")
+                for name in _data_files(self.spark, self.tombstones_path)
             ]
-            if not snap_files:
+            if not snap_files or not self.table.exists():
                 return report
-            tombs = self.spark.read.parquet(*snap_files)
-            tomb_seqs_df = tombs.select("seq").distinct()
+            tomb_seqs = self.spark.read.parquet(*snap_files).select("seq").distinct()
             # affected-partition discovery is a JOIN, not a driver-side
             # intersect: a mass delete (GDPR-style) may tombstone
             # millions of seqs, which must never serialize through the
@@ -530,42 +573,23 @@ class Engine:
                 .groupBy("contract", "p_date")
                 .agg(F.min("seq").alias("lo"), F.max("seq").alias("hi"))
             )
-            affected = [
-                (r["contract"], r["p_date"])
-                for r in _tombstone_affected(ranges, tomb_seqs_df).collect()
-            ]
-            root = self.table.path
-            data_schema = T.StructType([
-                f for f in MessagesTable._full_schema().fields
-                if f.name not in ("contract", "p_date")
-            ])
-            stage_root = str(Path(self.path) / ".compact-part")
-            for contract, p_date in affected:
-                part = f"contract={contract}/p_date={p_date}"
-                ppath = f"{root}/{part}"
-                pdf = self.spark.read.schema(data_schema).parquet(ppath)
-                removed = pdf.join(tomb_seqs_df, "seq", "leftsemi").count()
+            retire = True
+            for r in _tombstone_affected(ranges, tomb_seqs).collect():
+                part = _part_dir(r["contract"], r["p_date"])
+                pdf = self.spark.read.schema(_DATA_SCHEMA).parquet(f"{self.table.path}/{part}")
+                removed = pdf.join(tomb_seqs, "seq", "leftsemi").count()
                 if not removed:
                     continue
-                kept = _partition_kept(pdf, tomb_seqs_df)
-                tmp = f"{stage_root}/stage/{part}"
-                trash = f"{stage_root}/trash/{part}"
-                fs.delete(self.spark, tmp)
-                fs.delete(self.spark, trash)
-                kept.write.parquet(tmp)
-                fs.mkdirs(self.spark, str(Path(trash).parent))
-                fs.rename(self.spark, ppath, trash)
-                fs.rename(self.spark, tmp, ppath)
-                fs.delete(self.spark, trash)
-                report[part] = removed
-            # every seq in the SNAPSHOT is now physically absent
-            # (rewritten above, or never present in any partition's
-            # range) — retire exactly the snapshotted files; tombstones
-            # appended since the snapshot stay live for the next run
-            for f in snap_files:
-                fs.delete(self.spark, f)
-        finally:
-            fs.delete(self.spark, lease)
+                if self._swap_partition(part, lambda df: _partition_kept(df, tomb_seqs)):
+                    report[part] = removed
+                else:
+                    retire = False
+            # every seq in the SNAPSHOT is now physically absent (or was
+            # never in any partition's range) — retire exactly the
+            # snapshotted files; tombstones appended since stay live
+            if retire:
+                for f in snap_files:
+                    fs.delete(self.spark, f)
         return report
 
     def compact(
@@ -580,123 +604,42 @@ class Engine:
         Streaming ingest appends one file per (contract, p_date) per
         micro-batch, so a hot partition accretes files over time. This
         rewrites ONLY partitions holding >= ``min_files`` data files,
-        coalescing each to ceil(bytes / target_file_bytes) files —
-        unlike ``purge_expired`` it never touches healthy partitions,
-        so the job's cost tracks fragmentation, not table size (the
-        property that matters at 100 TB: compaction of a day's worth
-        of micro-batches reads a day, not the decade).
+        coalescing each to ceil(bytes / target_file_bytes) seq-sorted
+        files — it never touches healthy partitions, so the job's cost
+        tracks fragmentation, not table size (compaction of a day's
+        worth of micro-batches reads a day, not the decade).
 
-        Writer safety: compact is SINGLE-WRITER. It takes a lease file
-        (``table.lease_path``, atomic create-if-absent) for its whole
-        run; ``MessagesTable.append`` — every write path: flush,
-        put_df, streaming foreachBatch — refuses loudly while the lease
-        is held, so a micro-batch file can never land in a partition
-        between compact's listing and its directory swap (where the old
-        swap would have silently deleted it with the trash dir). A
-        lease older than ``lease_ttl_s`` is presumed crashed and
-        broken. Defense in depth: the partition's file list is
-        re-checked right before the swap and the partition is skipped
-        if it changed under us.
-
-        Crash safety: per-partition stage → trash → promote swap, with
-        ``_recover_compact()`` at engine open promoting a complete
-        leftover stage (crash between the renames), restoring trash
-        (incomplete stage), and clearing debris — so no crash point
-        leaves a partition missing from the table. Returns
-        {partition_dir: (files_before, files_after)}.
+        Single-writer under the shared table lease (``_maintenance``):
+        every append refuses while it is held, and a lease older than
+        ``LEASE_TTL_S`` is presumed crashed and broken. Each partition
+        is replaced by ``_swap_partition``, which skips a partition
+        whose files changed under us and is recovered at the next open
+        after a crash. Returns {partition_dir: (files_before,
+        files_after)}.
         """
-        import math
-        import time as _time
-
         report: dict[str, tuple[int, int]] = {}
         if not self.table.exists():
             return report
-        self.flush()  # before the lease: flush appends, appends check the lease
-        lease = self.table.lease_path
-        lease_ttl_s = 3600
-        if not fs.create_new(self.spark, lease):
-            age_ms = fs.mtime(self.spark, lease)
-            if age_ms is not None and (_time.time() * 1000 - age_ms) < lease_ttl_s * 1000:
-                raise RuntimeError(
-                    f"another compact() holds the lease at {lease}; "
-                    "retry after it finishes (or after the 1h lease TTL)"
-                )
-            fs.delete(self.spark, lease)  # stale: previous compactor crashed
-            if not fs.create_new(self.spark, lease):
-                raise RuntimeError(f"lost the race re-acquiring the lease at {lease}")
-        try:
-            root = self.table.path
-            for cdir, _, c_is_dir in fs.list_status(self.spark, root):
-                if not c_is_dir or not cdir.startswith("contract="):
+        with self._maintenance():
+            for part in _partitions(self.spark, self.table.path):
+                ppath = f"{self.table.path}/{part}"
+                n_files = len(_data_files(self.spark, ppath))
+                if n_files < min_files:
                     continue
-                for ddir, _, d_is_dir in fs.list_status(self.spark, f"{root}/{cdir}"):
-                    if not d_is_dir or not ddir.startswith("p_date="):
-                        continue
-                    part = f"{cdir}/{ddir}"
-                    ppath = f"{root}/{part}"
-                    files = sorted(
-                        n for n, _, isd in fs.list_status(self.spark, ppath)
-                        if not isd and n.endswith(".parquet")
-                    )
-                    if len(files) < min_files:
-                        continue
-                    n_out = max(1, math.ceil(fs.tree_bytes(self.spark, ppath) / target_file_bytes))
-                    if n_out >= len(files):
-                        continue  # already at or under the target layout
-                    # explicit DATA schema (everything but the dir-encoded
-                    # partition columns): schema inference from one file
-                    # would silently drop columns legacy files lack — e.g.
-                    # the `encrypted` marker, turning mixed-store ciphertext
-                    # into "plaintext" on read
-                    from unitdb_spark.table import MessagesTable as _MT
-
-                    data_schema = T.StructType([
-                        f for f in _MT._full_schema().fields
-                        if f.name not in ("contract", "p_date")
-                    ])
-                    # sort AFTER coalesce: the merged output files must be
-                    # seq-sorted end to end for row-group stats pruning —
-                    # sorting before would leave concatenated sorted runs
-                    df = (
-                        self.spark.read.schema(data_schema).parquet(ppath)
-                        .coalesce(n_out)
-                        .sortWithinPartitions("seq")
-                    )
-                    # stage/trash OUTSIDE the table dir (dot-prefixed under
-                    # the engine root, like purge_expired): a leftover
-                    # '<partition>.old' dir inside the table would parse as
-                    # a partition value and brick or double every read
-                    stage_root = str(Path(self.path) / ".compact-part")
-                    tmp = f"{stage_root}/stage/{part}"
-                    trash = f"{stage_root}/trash/{part}"
-                    fs.delete(self.spark, tmp)
-                    fs.delete(self.spark, trash)
-                    df.write.parquet(tmp)
-                    # re-list before the swap: if a writer ignored the
-                    # lease and appended since our listing, skip this
-                    # partition rather than delete its new file
-                    now_files = sorted(
-                        n for n, _, isd in fs.list_status(self.spark, ppath)
-                        if not isd and n.endswith(".parquet")
-                    )
-                    if now_files != files:
-                        fs.delete(self.spark, tmp)
-                        continue
-                    fs.mkdirs(self.spark, str(Path(trash).parent))
-                    fs.rename(self.spark, ppath, trash)
-                    fs.rename(self.spark, tmp, ppath)
-                    fs.delete(self.spark, trash)
-                    after = len([
-                        n for n, _, isd in fs.list_status(self.spark, ppath)
-                        if not isd and n.endswith(".parquet")
-                    ])
-                    report[part] = (len(files), after)
-        finally:
-            fs.delete(self.spark, lease)
+                n_out = max(1, math.ceil(fs.tree_bytes(self.spark, ppath) / target_file_bytes))
+                if n_out >= n_files:
+                    continue  # already at or under the target layout
+                # sort AFTER coalesce: the merged output files must be
+                # seq-sorted end to end for row-group stats pruning —
+                # sorting before would leave concatenated sorted runs
+                if self._swap_partition(
+                    part, lambda df: df.coalesce(n_out).sortWithinPartitions("seq")
+                ):
+                    report[part] = (n_files, len(_data_files(self.spark, ppath)))
         return report
 
     def _recover_compact(self) -> None:
-        """Promote/restore leftovers of a crashed ``compact()`` swap.
+        """Promote/restore leftovers of a crashed ``_swap_partition``.
 
         Crash points and their cleanup (stage written → rename ppath→
         trash → rename stage→ppath → delete trash):
@@ -708,19 +651,10 @@ class Engine:
           restore trash;
         - after promote, trash delete lost: partition intact → drop trash.
         """
-        stage_root = str(Path(self.path) / ".compact-part")
         root = self.table.path
-
-        def _parts(base: str):
-            for cdir, _, c_is_dir in fs.list_status(self.spark, base):
-                if c_is_dir and cdir.startswith("contract="):
-                    for ddir, _, d_is_dir in fs.list_status(self.spark, f"{base}/{cdir}"):
-                        if d_is_dir and ddir.startswith("p_date="):
-                            yield f"{cdir}/{ddir}"
-
-        for part in list(_parts(f"{stage_root}/stage")):
-            stage = f"{stage_root}/stage/{part}"
-            trash = f"{stage_root}/trash/{part}"
+        for part in list(_partitions(self.spark, f"{self._stage_root}/stage")):
+            stage = f"{self._stage_root}/stage/{part}"
+            trash = f"{self._stage_root}/trash/{part}"
             ppath = f"{root}/{part}"
             complete = fs.exists(self.spark, f"{stage}/_SUCCESS")
             if not fs.exists(self.spark, ppath) and complete:
@@ -730,8 +664,8 @@ class Engine:
                 if not fs.exists(self.spark, ppath) and fs.exists(self.spark, trash):
                     fs.rename(self.spark, trash, ppath)
                 fs.delete(self.spark, stage)
-        for part in list(_parts(f"{stage_root}/trash")):
-            trash = f"{stage_root}/trash/{part}"
+        for part in list(_partitions(self.spark, f"{self._stage_root}/trash")):
+            trash = f"{self._stage_root}/trash/{part}"
             ppath = f"{root}/{part}"
             if not fs.exists(self.spark, ppath):
                 fs.rename(self.spark, trash, ppath)
@@ -802,11 +736,7 @@ class Batch:
         self._deletes.append(int(seq))
 
     def delete_entry(self, entry: Entry) -> None:
-        if entry.msg_id is None:
-            raise ValueError("delete requires message id")
-        from unitdb_spark.core.model import message_id_seq
-
-        self.delete(message_id_seq(entry.msg_id))
+        self.delete(_entry_seq(entry))
 
     def write(self) -> None:  # staging no-op kept for API parity
         pass
@@ -826,10 +756,7 @@ class Batch:
         eng = self.engine
         eng.flush()  # earlier direct puts are a separate commit unit
         if self._deletes:
-            eng._metrics["dels"] += len(self._deletes)
-            eng.spark.createDataFrame(
-                [(s,) for s in self._deletes], "seq long"
-            ).coalesce(1).write.mode("append").parquet(eng.tombstones_path)
+            eng._write_tombstones(self._deletes)
         if self._entries:
             rows = [eng._make_row(entry, ts)[1] for entry, ts in self._entries]
             df = eng.spark.createDataFrame(rows, MESSAGES_SCHEMA)
@@ -856,6 +783,49 @@ class Batch:
 
 def _as_bytes(payload: bytes | str) -> bytes:
     return payload.encode("utf-8") if isinstance(payload, str) else bytes(payload)
+
+
+def _entry_seq(entry: Entry) -> int:
+    """The seq a DeleteEntry targets: the one embedded in its id."""
+    if entry.msg_id is None:
+        raise ValueError("delete requires message id")
+    return message_id_seq(entry.msg_id)
+
+
+#: the columns stored IN a partition's files: everything but the
+#: directory-encoded partition columns. Reads pass it explicitly —
+#: inferring from one legacy file would drop columns it lacks (the
+#: `encrypted` marker, turning mixed-store ciphertext into "plaintext").
+_DATA_SCHEMA = T.StructType(
+    [f for f in MessagesTable._full_schema().fields if f.name not in ("contract", "p_date")]
+)
+
+
+def _part_dir(contract: int, p_date: dt.date) -> str:
+    return f"contract={contract}/p_date={p_date}"
+
+
+def _partitions(spark: SparkSession, base: str) -> Iterator[str]:
+    """The ``contract=<c>/p_date=<d>`` dirs under ``base``."""
+    for cdir, _, c_is_dir in fs.list_status(spark, base):
+        if c_is_dir and cdir.startswith("contract="):
+            for ddir, _, d_is_dir in fs.list_status(spark, f"{base}/{cdir}"):
+                if d_is_dir and ddir.startswith("p_date="):
+                    yield f"{cdir}/{ddir}"
+
+
+def _rename(spark: SparkSession, src: str, dst: str) -> None:
+    """A swap rename; failing loudly keeps the trash for recovery."""
+    if not fs.rename(spark, src, dst):
+        raise RuntimeError(f"partition swap failed to rename {src} -> {dst}")
+
+
+def _data_files(spark: SparkSession, path: str) -> list[str]:
+    """Sorted names of the ``*.parquet`` files directly under ``path``."""
+    return sorted(
+        n for n, _, is_dir in fs.list_status(spark, path)
+        if not is_dir and n.endswith(".parquet")
+    )
 
 
 def _tombstone_affected(ranges: DataFrame, tomb_seqs: DataFrame) -> DataFrame:

@@ -10,10 +10,12 @@ All calls ride the live JVM gateway of the provided SparkSession — no
 extra process, no Python I/O; the FS instances are cached by Hadoop per
 (scheme, authority), so per-call overhead is a method hop.
 
-Rename caveat (matters for `purge_expired`): HDFS/local renames are
-atomic directory moves; S3A "rename" is copy+delete. The compaction
-swap is documented as having a small loss window either way — on an
-object store prefer a catalog pointer swap; see engine.purge_expired.
+Rename caveat (matters for the partition swap that compact, vacuum and
+purge_expired share, `Engine._swap_partition`): HDFS/local renames are
+atomic directory moves, so a crash between its two renames leaves a
+complete stage that the next open promotes. S3A "rename" is
+copy+delete and not atomic; on an object store prefer a catalog
+pointer swap.
 """
 
 from __future__ import annotations

@@ -98,10 +98,11 @@ class MessagesTable:
 
     @property
     def lease_path(self) -> str:
-        """Compaction lease marker — a dot-free SIBLING of the table dir
+        """Maintenance lease marker — a dot-free SIBLING of the table dir
         (never inside it, where it would parse as a partition value).
-        While this file exists, `Engine.compact` owns the table: appends
-        refuse loudly instead of racing the partition swap."""
+        While this file exists, one of `Engine.compact`, `Engine.vacuum`
+        or `Engine.purge_expired` owns the table: appends refuse loudly
+        instead of racing its partition swap."""
         return self.path.rstrip("/") + ".compact-lease"
 
     def append(self, df: DataFrame) -> None:
@@ -112,8 +113,8 @@ class MessagesTable:
         top-K scans skip old row groups (reverse-time layout parity,
         time_window.go:37-40).
 
-        Refuses while a compaction lease is held: a file appended to a
-        partition between compact's listing and its directory swap
+        Refuses while the maintenance lease is held: a file appended to
+        a partition between a job's listing and its directory swap
         would be silently deleted with the old partition (leasing.go
         parity — writers there also wait out the lease).
         """
@@ -121,8 +122,8 @@ class MessagesTable:
 
         if fs.exists(self.spark, self.lease_path):
             raise RuntimeError(
-                "messages table is being compacted (lease held at "
-                f"{self.lease_path}); retry after compact() finishes"
+                "messages table is held by compact/vacuum/purge_expired "
+                f"(lease at {self.lease_path}); retry after it finishes"
             )
         out = with_partition_columns(with_topic_columns(df))
         # cluster rows by partition key before the write: one task per

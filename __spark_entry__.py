@@ -103,15 +103,6 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _pin_utc(spark).read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _li_key(spark: SparkSession, sf_dir: str) -> tuple:
-    """Session cache key for the lineitem co-purchase pair relation:
-    every parts_* graph query derives from the same (src<dst, w)
-    pairs, so they share ONE |order|² build per session (the
-    per-session analogue of a catalog-bucketed edge table — see
-    operators/graph.cooccurrence_pairs)."""
-    return (spark.sparkContext.applicationId, sf_dir, "lineitem")
-
-
 # ------------------------------------------------- unitdb Get semantics
 
 
@@ -3406,7 +3397,7 @@ def q_parts_pagerank(spark, sf_dir):
 
     li = _read(spark, sf_dir, "lineitem")
     pr = pagerank(
-        cooccurrence_edges(li, "l_orderkey", "l_partkey", cache_key=_li_key(spark, sf_dir)), iterations=5
+        cooccurrence_edges(li, "l_orderkey", "l_partkey"), iterations=5
     )
     return pr.select(F.col("node").alias("part_id"), "pr_r")
 
@@ -3420,7 +3411,7 @@ def q_parts_triangles(spark, sf_dir):
     from unitdb_spark.operators.graph import cooccurrence_edges, triangle_counts
 
     li = _read(spark, sf_dir, "lineitem")
-    return triangle_counts(cooccurrence_edges(li, "l_orderkey", "l_partkey", cache_key=_li_key(spark, sf_dir)))
+    return triangle_counts(cooccurrence_edges(li, "l_orderkey", "l_partkey"))
 
 
 def q_parts_clustering(spark, sf_dir):
@@ -3435,7 +3426,7 @@ def q_parts_clustering(spark, sf_dir):
     )
 
     li = _read(spark, sf_dir, "lineitem")
-    e = cooccurrence_edges(li, "l_orderkey", "l_partkey", cache_key=_li_key(spark, sf_dir))
+    e = cooccurrence_edges(li, "l_orderkey", "l_partkey")
     tri = triangle_counts(e)
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
@@ -3560,8 +3551,7 @@ def q_parts_label_prop(spark, sf_dir):
 
     li = _read(spark, sf_dir, "lineitem")
     edges = weighted_cooccurrence_edges(
-        li, "l_orderkey", "l_partkey", min_count=2,
-        cache_key=_li_key(spark, sf_dir),
+        li, "l_orderkey", "l_partkey", min_count=2
     )
     out = label_propagation(edges, weight="w", rounds=3)
     return out.select(F.col("node").alias("part_id"), F.col("lbl").alias("comm"))
@@ -3594,7 +3584,7 @@ def q_parts_ppr(spark, sf_dir):
     from unitdb_spark.operators.graph import cooccurrence_edges, personalized_pagerank
 
     li = _read(spark, sf_dir, "lineitem")
-    edges = cooccurrence_edges(li, "l_orderkey", "l_partkey", cache_key=_li_key(spark, sf_dir))
+    edges = cooccurrence_edges(li, "l_orderkey", "l_partkey")
     seeds = edges.select(F.col("src").alias("node")).distinct().filter(
         F.col("node") % 97 == 0
     )
@@ -3610,7 +3600,7 @@ def q_parts_bfs(spark, sf_dir):
     from unitdb_spark.operators.graph import bfs_hops, cooccurrence_edges
 
     li = _read(spark, sf_dir, "lineitem")
-    edges = cooccurrence_edges(li, "l_orderkey", "l_partkey", cache_key=_li_key(spark, sf_dir))
+    edges = cooccurrence_edges(li, "l_orderkey", "l_partkey")
     seeds = edges.select(F.col("src").alias("node")).distinct().filter(
         F.col("node") % 97 == 0
     )
@@ -4470,8 +4460,7 @@ def q_parts_kcore(spark, sf_dir):
 
     li = _read(spark, sf_dir, "lineitem")
     edges = weighted_cooccurrence_edges(
-        li, "l_orderkey", "l_partkey", min_count="auto",
-        cache_key=_li_key(spark, sf_dir),
+        li, "l_orderkey", "l_partkey", min_count="auto"
     ).select("src", "dst")
     out = kcore(edges, k=3, rounds=3)
     return out.select(F.col("node").alias("part_id"), "deg")
@@ -4800,8 +4789,7 @@ def q_parts_link_pred(spark, sf_dir):
     li = _read(spark, sf_dir, "lineitem")
     edges = mutual_top_neighbors(
         weighted_cooccurrence_edges(
-            li, "l_orderkey", "l_partkey", min_count="auto",
-            cache_key=_li_key(spark, sf_dir),
+            li, "l_orderkey", "l_partkey", min_count="auto"
         ),
         max_degree=32,
     ).select("src", "dst")
@@ -5575,7 +5563,7 @@ def q_parts_assortativity(spark, sf_dir):
     from unitdb_spark.operators.olap import pinned_pearson
 
     li = _read(spark, sf_dir, "lineitem")
-    e = cooccurrence_edges(li, "l_orderkey", "l_partkey", cache_key=_li_key(spark, sf_dir))
+    e = cooccurrence_edges(li, "l_orderkey", "l_partkey")
     deg = e.groupBy(F.col("src").alias("_n")).agg(
         F.count(F.lit(1)).cast("long").alias("_d")
     )
@@ -5615,8 +5603,7 @@ def q_parts_pagerank_w(spark, sf_dir):
     li = _read(spark, sf_dir, "lineitem")
     pr = pagerank_weighted(
         weighted_cooccurrence_edges(
-            li, "l_orderkey", "l_partkey", min_count=2,
-            cache_key=_li_key(spark, sf_dir),
+            li, "l_orderkey", "l_partkey", min_count=2
         ),
         iterations=3,
     )
@@ -5652,8 +5639,7 @@ def q_parts_link_ra(spark, sf_dir):
 
     li = _read(spark, sf_dir, "lineitem")
     edges = weighted_cooccurrence_edges(
-        li, "l_orderkey", "l_partkey", min_count=2,
-        cache_key=_li_key(spark, sf_dir),
+        li, "l_orderkey", "l_partkey", min_count=2
     ).select("src", "dst")
     return link_prediction_ra(edges, min_common=2)
 
@@ -6195,7 +6181,7 @@ def q_parts_neg_edges(spark, sf_dir):
 
     li = _read(spark, sf_dir, "lineitem")
     part = _read(spark, sf_dir, "part")
-    edges = cooccurrence_edges(li, "l_orderkey", "l_partkey", cache_key=_li_key(spark, sf_dir))
+    edges = cooccurrence_edges(li, "l_orderkey", "l_partkey")
     mx = part.agg(F.max("p_partkey").alias("max_id"))
     return negative_edge_samples(edges, mx, k=3, oversample=3)
 
@@ -8862,8 +8848,7 @@ def q_parts_degree_dist(spark, sf_dir):
 
     li = _read(spark, sf_dir, "lineitem")
     edges = weighted_cooccurrence_edges(
-        li, "l_orderkey", "l_partkey", min_count="auto",
-        cache_key=_li_key(spark, sf_dir),
+        li, "l_orderkey", "l_partkey", min_count="auto"
     )
     deg = edges.groupBy(F.col("src").alias("part_id")).agg(
         F.count(F.lit(1)).alias("deg")
@@ -8913,8 +8898,7 @@ def q_parts_components(spark, sf_dir):
 
     li = _read(spark, sf_dir, "lineitem")
     edges = weighted_cooccurrence_edges(
-        li, "l_orderkey", "l_partkey", min_count="auto",
-        cache_key=_li_key(spark, sf_dir),
+        li, "l_orderkey", "l_partkey", min_count="auto"
     )
     out = connected_components(edges, src="src", dst="dst")
     return out.select(F.col("node").alias("part_id"), "cluster_id")
@@ -9483,8 +9467,7 @@ def q_parts_sssp(spark, sf_dir):
 
     li = _read(spark, sf_dir, "lineitem")
     edges = weighted_cooccurrence_edges(
-        li, "l_orderkey", "l_partkey", min_count="auto",
-        cache_key=_li_key(spark, sf_dir),
+        li, "l_orderkey", "l_partkey", min_count="auto"
     ).withColumn("cost", F.expr("1000000 div w"))
     seeds = (
         li.select(F.col("l_partkey").alias("p")).distinct()
@@ -9723,8 +9706,7 @@ def q_parts_ktruss(spark, sf_dir):
 
     li = _read(spark, sf_dir, "lineitem")
     edges = weighted_cooccurrence_edges(
-        li, "l_orderkey", "l_partkey", min_count=2,
-        cache_key=_li_key(spark, sf_dir),
+        li, "l_orderkey", "l_partkey", min_count=2
     )
     return ktruss_edges(edges, k=3, rounds=2)
 

@@ -39,9 +39,9 @@ since round 1) and then SPARK_GRAFT_HEAVY_REPS (default 3) timed reps
 with the Spark cache cleared between reps (within-query persists would
 otherwise serve the next rep's identical plan from memory), reporting
 median + min/max spread;
-the shared co-purchase pair memo is re-persisted outside the timed
-region so each rep sees the billed-once warm-memo state. Round 13
-also adds the round-12-optimized heavies (ngram jaccard, ROUGE,
+the shared co-purchase pair relation is rebuilt into Spark's cache
+outside the timed region so each rep sees the billed-once warm state.
+Round 13 also adds the round-12-optimized heavies (ngram jaccard, ROUGE,
 repetition, novelty, char entropy, quality pipeline, triangles,
 training mix) as additions-only panel entries.
 """
@@ -231,10 +231,10 @@ def main() -> None:
     # the sub-second queries. Between reps the Spark cache is CLEARED
     # (within-query persisted relations would otherwise be picked up by
     # the next rep's identical plan via CacheManager, timing a warm
-    # cache instead of the query); the session-scoped co-purchase pair
-    # memo — deliberately shared across graph queries and billed once
-    # as parts_edge_build — is re-persisted OUTSIDE the timed region so
-    # every rep sees the same warm-memo state the r12 single-shot saw.
+    # cache instead of the query); the cached co-purchase pair
+    # relation — deliberately shared across graph queries and billed
+    # once as parts_edge_build — is rebuilt OUTSIDE the timed region so
+    # every rep sees the same warm state the r12 single-shot saw.
     HEAVY_REPS = int(os.environ.get("SPARK_GRAFT_HEAVY_REPS", "3"))
     spreads: dict[str, list[float]] = {}
 
@@ -252,7 +252,7 @@ def main() -> None:
 
     def _canonical_state(reprime) -> None:
         # canonical per-rep state: nothing cached except (for graph
-        # queries) the billed-once pair memo — the within-query
+        # queries) the billed-once pair relation — the within-query
         # persists a previous rep left behind would otherwise serve
         # the next rep's identical plan from memory.
         spark.catalog.clearCache()
@@ -336,24 +336,21 @@ def main() -> None:
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     t0 = time.time()
-    ck = (spark.sparkContext.applicationId, SF_DIR, "lineitem")
-    pairs, _ = cooccurrence_pairs(
-        li, "l_orderkey", "l_partkey", cache_key=ck
-    )
-    pairs.count()
-    # derive the density threshold once too (the edge TABLE, not just
-    # the pair relation, is what a production pipeline materializes)
+    # cooccurrence_pairs persists the pairs; every graph query's plan
+    # over the same lineitem read then reads Spark's cached relation
+    cooccurrence_pairs(li, "l_orderkey", "l_partkey").count()
+    # the density-threshold histogram, billed here as in r13 (each
+    # min_count="auto" call derives it from the cached pairs)
     weighted_cooccurrence_edges(
-        li, "l_orderkey", "l_partkey", min_count="auto", cache_key=ck
+        li, "l_orderkey", "l_partkey", min_count="auto"
     )
     timings["parts_edge_build"] = time.time() - t0
 
     def reprime_pairs() -> None:
-        # clearCache between heavy reps unpersists the session pair
-        # memo; re-persist + materialize it outside the timed region so
-        # graph queries keep the billed-once warm-memo protocol.
-        p, _ = cooccurrence_pairs(li, "l_orderkey", "l_partkey", cache_key=ck)
-        p.persist().count()
+        # clearCache between heavy reps unpersists the shared pairs;
+        # rebuild them outside the timed region so graph queries keep
+        # the billed-once warm-cache protocol.
+        cooccurrence_pairs(li, "l_orderkey", "l_partkey").count()
 
     timed_heavy("parts_pagerank", qs["parts_pagerank"], reprime=reprime_pairs)
     timed_heavy("doc_prefix_jaccard", qs["doc_prefix_jaccard"])
@@ -367,7 +364,7 @@ def main() -> None:
     # Round-11: the claimed 100 TB edge shape demonstrated END TO END
     # — the same weighted co-purchase edges written ONCE as a catalog
     # table bucketed on the node key (the production form of the
-    # session pair memo above; tests/test_plans.py pins that node-key
+    # cached pair relation above; tests/test_plans.py pins that node-key
     # join/agg plans over it have ZERO Exchange), then one real graph
     # query run straight off the bucketed table. Billed separately:
     # the write is a once-per-refresh cost, the query is the steady
@@ -375,13 +372,13 @@ def main() -> None:
     from unitdb_spark.operators.graph import pagerank
     from unitdb_spark.sources.bucketed import read_table, write_bucketed
 
-    # pin the write's cache state to the canonical memo-warm one —
+    # pin the write's cache state to the canonical pairs-warm one —
     # residual within-query persists from the panel reps above would
     # otherwise be substituted into the write plan and make the timing
     # depend on panel ordering (observed 1.7-10.6s for the same write).
     _canonical_state(reprime_pairs)
     edges = weighted_cooccurrence_edges(
-        li, "l_orderkey", "l_partkey", min_count="auto", cache_key=ck
+        li, "l_orderkey", "l_partkey", min_count="auto"
     )
     t0 = time.time()
     # bucketed on DST: the per-iteration contribution agg groups on

@@ -3,8 +3,9 @@
 The round-13 sf1 panel runner (r12 verdict items 4/6/9): same
 methodology as bench.py's heavy panel — one untimed warmup (codegen/
 JIT), then reps timed reps from a canonical cache state (clearCache
-per rep; no cross-rep reuse), noop sink as the timed action — but
-parameterised over repo tree, data dir, core count and extra Spark
+per rep; no cross-rep reuse, so every graph rep pays the co-purchase
+pair build that bench.py bills once), noop sink as the timed action —
+but parameterised over repo tree, data dir, core count and extra Spark
 confs so the same harness can run the r11 tree vs HEAD, 8 vs 32
 cores, lz4 vs zstd, broadcast vs no-broadcast.
 
@@ -26,6 +27,18 @@ import sys
 import time
 
 
+def _edge_pairs(spark, sf_dir):
+    # the bench's parts_edge_build core (the cache is cleared per rep,
+    # so each rep pays the full |order|^2 self-join plus filling the
+    # pair cache) — lets the SHUFFLE_HASH-hint A/B run under
+    # autoBroadcastJoinThreshold=-1 (the at-scale regime where neither
+    # side broadcasts).
+    from unitdb_spark.operators.graph import cooccurrence_pairs
+
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    return cooccurrence_pairs(li, "l_orderkey", "l_partkey")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--repo", default="/root/repo")
@@ -41,6 +54,11 @@ def main() -> None:
     os.environ["SPARK_GRAFT_CPUS"] = str(args.cpus)
     import __spark_entry__ as entry
     from unitdb_spark.session import get_spark
+
+    fns = {**entry.queries(), "_edge_pairs": _edge_pairs}
+    unknown = [n for n in args.queries if n not in fns]
+    if unknown:
+        ap.error(f"unknown queries: {' '.join(unknown)}")
 
     # get_spark uses getOrCreate; in a fresh process the builder confs
     # win, so extra confs must be set before the first session.
@@ -59,30 +77,18 @@ def main() -> None:
     spark = get_spark("sf1-panel", cpus=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    def _edge_pairs(spark, sf_dir):
-        # the bench's parts_edge_build core (no memo, so each rep pays
-        # the full |order|^2 self-join) — lets the SHUFFLE_HASH-hint
-        # A/B run under autoBroadcastJoinThreshold=-1 (the at-scale
-        # regime where neither side broadcasts).
-        from unitdb_spark.operators.graph import cooccurrence_pairs
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        pairs, _ = cooccurrence_pairs(li, "l_orderkey", "l_partkey")
-        return pairs
-
-    qs = entry.queries()
     out: dict[str, dict] = {}
     for name in args.queries:
-        fn = _edge_pairs if name == "_edge_pairs" else qs[name]
+        fn = fns[name]
         spark.sparkContext.setJobDescription(f"sf1-panel:{name}")
 
         def run_once() -> float:
             spark.catalog.clearCache()
-            t0 = time.time()
+            t0 = time.perf_counter()
             fn(spark, args.sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-            return time.time() - t0
+            return time.perf_counter() - t0
 
         run_once()  # untimed warmup (codegen/JIT)
         runs = sorted(run_once() for _ in range(args.reps))

@@ -312,13 +312,20 @@ class TestCountVarz:
         assert engine.file_size() > s1
 
     def test_varz_latency_percentiles(self, engine: Engine):
-        engine.put_entry(Entry("c.t", b"x"), ts=T0)
+        seq = engine.put_entry(Entry("c.t", b"x"), ts=T0)
+        engine.flush()
         for _ in range(3):
             engine.get("c.t", now=T0 + 10)
-        lat = engine.varz()["get_latency"]
+        engine.delete(seq)
+        varz = engine.varz()
+        lat = varz["get_latency"]
         assert lat["n"] == 3
         assert 0 < lat["p50"] <= lat["p95"] <= lat["p999"]
         assert lat["hmean"] > 0
+        # one flushed append, one tombstone write
+        for op in ("put", "del"):
+            assert varz[f"{op}_latency"]["n"] == 1
+            assert varz[f"{op}_latency"]["p50"] > 0
 
 
 class TestEncryption:

@@ -3851,79 +3851,28 @@ class TestPagerank:
             pagerank(e)
 
 
-class TestPairCacheHygiene:
-    def _df(self, spark):
-        return spark.createDataFrame(
+class TestPairSharing:
+    def test_independent_reads_share_persisted_pairs(self, spark, tmp_path):
+        """Two reads of one Parquet file build equal plans, so the
+        second pair relation is served from the first one's cache
+        entry (Spark's CacheManager, no key) until it is released."""
+        from unitdb_spark.operators import graph
+
+        path = str(tmp_path / "baskets.parquet")
+        spark.createDataFrame(
             [(100, "a"), (100, "b"), (101, "b"), (101, "c")],
             ["grp", "item"],
+        ).write.parquet(path)
+        first = graph.cooccurrence_pairs(spark.read.parquet(path), "grp", "item")
+        assert first.count() == 2
+        second = graph.cooccurrence_pairs(spark.read.parquet(path), "grp", "item")
+        assert "InMemoryRelation" in str(
+            second._jdf.queryExecution().optimizedPlan()
         )
-
-    def test_clear_pair_cache_releases_persisted_relation(self, spark):
-        from unitdb_spark.operators import graph
-
+        assert second.storageLevel.useMemory
         graph.clear_pair_cache()
-        pairs, n = graph.cooccurrence_pairs(
-            self._df(spark), "grp", "item", cache_key=("t", "clear")
-        )
-        pairs.count()  # materialize the cache
-        assert pairs.storageLevel.useMemory  # persisted while memoized
-        assert n == 3
-        dropped = graph.clear_pair_cache()
-        assert dropped == 1
-        assert len(graph._PAIR_CACHE) == 0
-        # the relation is actually released, not just forgotten
-        assert not pairs.storageLevel.useMemory
-        assert graph.clear_pair_cache() == 0  # idempotent
-
-    def test_engine_close_evicts_only_its_own_entries(self, spark, tmp_path):
-        """ADVICE r11: the memo is process-global; closing one engine
-        must drop entries minted under ITS path and leave every other
-        engine's (and the query registry's) relations persisted."""
-        from unitdb_spark.engine import Engine
-        from unitdb_spark.operators import graph
-
-        graph.clear_pair_cache()
-        path = str(tmp_path / "db")
-        df = self._df(spark)
-        mine, _ = graph.cooccurrence_pairs(
-            df, "grp", "item", cache_key=(path, "edges")
-        )
-        # distinct plan: identical plans share one CacheManager entry,
-        # so an aliased relation couldn't prove the scoping
-        other, _ = graph.cooccurrence_pairs(
-            df.filter("grp >= 100"), "grp", "item",
-            cache_key=("someone-else", "edges"),
-        )
-        mine.count(), other.count()
-        assert len(graph._PAIR_CACHE) == 2
-        eng = Engine.open(spark, path)
-        eng.close()
-        assert len(graph._PAIR_CACHE) == 1
-        assert not mine.storageLevel.useMemory
-        assert other.storageLevel.useMemory  # survived the foreign close
-        graph.clear_pair_cache()
-        assert len(graph._PAIR_CACHE) == 0
-
-    def test_stale_application_id_entry_is_evicted(self, spark):
-        from unitdb_spark.operators import graph
-
-        graph.clear_pair_cache()
-        df = self._df(spark)
-        graph.cooccurrence_pairs(df, "grp", "item", cache_key=("t", "app"))
-        key = (("t", "app"), "grp", "item")
-        pairs, n, memo, _app = graph._PAIR_CACHE[key]
-        # simulate an entry left over from a previous SparkSession
-        graph._PAIR_CACHE[key] = (pairs, n, memo, "app-from-a-dead-session")
-        p2, n2 = graph.cooccurrence_pairs(
-            df, "grp", "item", cache_key=("t", "app")
-        )
-        # the stale entry was dropped and rebuilt under the live appId
-        assert n2 == 3 and p2.count() == 2
-        assert (
-            graph._PAIR_CACHE[key][3]
-            == spark.sparkContext.applicationId
-        )
-        graph.clear_pair_cache()
+        assert not first.storageLevel.useMemory
+        assert not second.storageLevel.useMemory
 
 
 class TestPairRetrievalReport:

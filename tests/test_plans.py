@@ -1462,8 +1462,9 @@ class TestBucketedEdgeTable:
     the co-purchase edge list materialized ONCE as a catalog table
     bucketed on the node key (sources/bucketed.py), so every
     downstream node-key aggregation and join reads the bucket spec
-    instead of shuffling the edge relation. The session `_PAIR_CACHE`
-    memo is the interactive equivalent; this is the production one."""
+    instead of shuffling the edge relation. The persisted pair
+    relation that `cooccurrence_pairs` shares through Spark's cache is
+    the interactive equivalent; this is the production one."""
 
     def _write_edges(self, spark, bucket_col="dst"):
         from unitdb_spark.sources.bucketed import write_bucketed

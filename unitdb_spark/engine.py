@@ -132,13 +132,6 @@ class Engine:
 
     def destroy(self) -> None:
         fs.delete(self.spark, self.path)
-        from unitdb_spark.operators.graph import clear_pair_cache
-
-        # scoped eviction (ADVICE r11): the pair memo is process-
-        # global; drop only entries minted under THIS engine's path
-        # so destroying one engine can't unpersist relations another
-        # live engine or the query registry still reads.
-        clear_pair_cache(owner=str(self.path))
 
     # ------------------------------------------------------------ write
     def put(self, topic: str, payload: bytes | str, contract: int = MASTER_CONTRACT) -> int:
@@ -219,7 +212,7 @@ class Engine:
         observed = df.select([f.name for f in MESSAGES_SCHEMA.fields]).observe(
             obs, F.max("seq").alias("max_seq")
         )
-        self.table.append(self._encrypt(observed))
+        self._append(observed)
         self._seq.advance_to(int(obs.get["max_seq"] or 0))
 
     def flush(self) -> None:
@@ -228,8 +221,15 @@ class Engine:
         if not self._buffer:
             return
         df = self.spark.createDataFrame(self._buffer, MESSAGES_SCHEMA)
-        self.table.append(self._encrypt(df))
+        self._append(df)
         self._buffer.clear()
+
+    def _append(self, df: DataFrame) -> None:
+        """One atomic append of encrypted rows: the commit unit of
+        flush, put_df and batch commit, timed into the put reservoir."""
+        t0 = time.monotonic()
+        self.table.append(self._encrypt(df))
+        self._latencies["put"].append(time.monotonic() - t0)
 
     def _encrypt(self, df: DataFrame) -> DataFrame:
         """Value-codec parity (db.go:281-294, chacha20-poly1305 there,
@@ -367,10 +367,12 @@ class Engine:
         path), as ONE file: every Get lists and scans the tombstone dir.
         repartition(1), not coalesce(1): coalesce pulls the input's
         partitions through one task and made each write ~2x slower."""
+        t0 = time.monotonic()
         self._metrics["dels"] += len(seqs)
         self.spark.createDataFrame(
             [(int(s),) for s in seqs], "seq long"
         ).repartition(1).write.mode("append").parquet(self.tombstones_path)
+        self._latencies["del"].append(time.monotonic() - t0)
 
     def _tombstones_df(self) -> DataFrame | None:
         if fs.has_files(self.spark, self.tombstones_path):
@@ -685,20 +687,9 @@ class Engine:
 
     def close(self) -> None:
         """db.go:213-220 Close(): flush pending writes and drop buffers.
-        The SparkSession is owned by the caller and stays open. Also
-        releases this engine's slice of the graph pair-relation memo
-        (operators/graph._PAIR_CACHE) so a long-lived process doesn't
-        pin executor storage for fact tables it no longer queries.
-        Scoped to entries minted under this engine's path (ADVICE
-        r11): the memo is process-global, and closing one engine must
-        not unpersist relations another live engine is still using —
-        a process-wide release is the explicit
-        ``clear_pair_cache()`` (no owner) call."""
+        The SparkSession is owned by the caller and stays open."""
         self.flush()
         self._buffer.clear()
-        from unitdb_spark.operators.graph import clear_pair_cache
-
-        clear_pair_cache(owner=str(self.path))
 
 
 class Batch:
@@ -760,7 +751,7 @@ class Batch:
         if self._entries:
             rows = [eng._make_row(entry, ts)[1] for entry, ts in self._entries]
             df = eng.spark.createDataFrame(rows, MESSAGES_SCHEMA)
-            eng.table.append(eng._encrypt(df))
+            eng._append(df)
             eng._metrics["puts"] += len(rows)
         self._entries.clear()
         self._deletes.clear()

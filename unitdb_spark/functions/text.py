@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from unitdb_spark.operators.skew import fan_out
+
 STOPWORDS = (
     "the a an and or of to in is are was were be been it this that for on with as at by".split()
 )
@@ -626,16 +628,12 @@ def char_entropy(docs, id_col: str = "doc_id", text_col: str = "text"):
     # semantics (sequence indices are never NULL, so NULL marks only
     # the fabricated row of an n=0 doc, which inner explode dropped)
     # while blocking InferFiltersFromGenerate's pushed-down inline of
-    # the child. The fan-out guard is the repo-standard spread for
-    # one-row-group inputs.
-    narrow = docs.select(
+    # the child.
+    narrow = fan_out(docs.select(
         F.col(id_col).alias("id"),
         F.length(text_col).alias("n"),
         F.col(text_col).alias("_txt"),
-    )
-    sc = docs.sparkSession.sparkContext
-    if narrow.rdd.getNumPartitions() < sc.defaultParallelism:
-        narrow = narrow.repartition(sc.defaultParallelism)
+    ))
     chars = (
         narrow.select(
             "id",

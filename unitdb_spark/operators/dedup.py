@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from unitdb_spark.operators.skew import fan_out
+
 
 def content_hash(col: Column | str) -> Column:
     """128-bit-ish deterministic content hash (md5 hex) for exact dedup."""
@@ -79,17 +81,13 @@ def ngram_jaccard_pairs(
     # the per-pair verify is CPU-bound and sits directly on the scan:
     # spread small inputs (one parquet file/row group = one task)
     # across the cluster BEFORE tokenizing, same fan-out guard as the
-    # MinHash signature build — at scale the scan already has enough
-    # splits and this is skipped (r12: the sf0.1 probe side was ONE
-    # task evaluating every same-block pair single-threaded).
-    narrow = df.select(
+    # MinHash signature build (r12: the sf0.1 probe side was ONE task
+    # evaluating every same-block pair single-threaded).
+    narrow = fan_out(df.select(
         F.col(id_col).alias("_id"),
         F.col(block_col).alias("_blk"),
         F.col(text_col).alias("_txt"),
-    )
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < par:
-        narrow = narrow.repartition(par)
+    ))
     t = narrow.select(
         "_id", "_blk", tokens("_txt").alias("_tok")
     ).withColumn("_n", F.size("_tok"))
@@ -203,12 +201,10 @@ def _minhash_sig_banded(
     rows_per_band = num_hashes // bands
     # signature computation is CPU-bound: spread small inputs (one
     # parquet file = one task) across the cluster BEFORE deriving
-    # shingles, so the shuffle moves raw text, not shingle arrays; at
-    # scale the input already has enough splits and this is skipped
-    par = df.sparkSession.sparkContext.defaultParallelism
-    narrow = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_txt"))
-    if narrow.rdd.getNumPartitions() < par:
-        narrow = narrow.repartition(par)
+    # shingles, so the shuffle moves raw text, not shingle arrays
+    narrow = fan_out(
+        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_txt"))
+    )
     # explode + groupBy-min instead of K array_min(transform(...)) passes:
     # identical signatures, but the aggregate's codegen is K simple min
     # exprs instead of one huge K-lambda method (~2x faster cold), and

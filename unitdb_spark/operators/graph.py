@@ -22,80 +22,52 @@ The reference engine has no graph surface; north-star analytics.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-#: Session memo for the aggregated co-occurrence pair relation — the
-#: |group|² build is by far the most expensive derived relation in the
-#: graph family, and EVERY parts_* query (components, degree dist,
-#: pagerank, sssp, assortativity, link-pred …) starts from the same
-#: (src<dst, weight) pairs over the same fact table. Rebuilding it per
-#: query is the per-query shape; at 100 TB you would materialize the
-#: edge list ONCE as a catalog-bucketed table (sources/bucketed.py —
+#: Sharing the co-occurrence pair relation. The |group|² build is by
+#: far the most expensive derived relation in the graph family, and
+#: EVERY parts_* query (components, degree dist, pagerank, sssp,
+#: assortativity, link-pred …) starts from the same (src<dst, weight)
+#: pairs over the same fact table. `cooccurrence_pairs` hands the
+#: relation back persisted, which registers its plan with Spark's
+#: CacheManager: any later plan that builds the same pairs over an
+#: equal source plan — a fresh `spark.read.parquet` of the same files
+#: counts — reads the cached InMemoryRelation instead of re-running
+#: the self-join. There is no key to mint, so two different inputs
+#: never share a relation (a CacheManager match needs equal plans),
+#: and a relation lives exactly as long as the session's cache: it is
+#: released by `unpersist()` or `spark.catalog.clearCache()`
+#: (`clear_pair_cache`). At 100 TB you would materialize the edge
+#: list ONCE as a catalog-bucketed table (sources/bucketed.py —
 #: write_bucketed(edges, "copurchase_edges", ["src"]) — bucketed on
 #: src so every downstream join/agg on the node key skips its
-#: Exchange) and re-derive it only when the fact table changes. In a
-#: single interactive session this memo is the same protocol without
-#: the catalog write: first consumer builds + persists, the rest read.
-#: Keyed by (caller key, group, item); entries hold (pairs_df,
-#: n_items, {target_avg_degree: auto_threshold}, application_id).
-#: Hygiene (r11): entries are self-evicting across SparkSession
-#: restarts — a lookup from a session whose applicationId differs
-#: from the entry's drops the stale entry instead of returning a
-#: dead DataFrame — and `clear_pair_cache()` unpersists + empties
-#: the memo (engine close calls it). The cache contract still
-#: relies on callers minting keys that identify the SOURCE relation
-#: (the docstring's (applicationId, sf_dir, table) idiom): a second
-#: call with the same key but a semantically different df returns
-#: the first relation by design.
-_PAIR_CACHE: dict[tuple, tuple] = {}
+#: Exchange) and re-derive it only when the fact table changes; the
+#: session cache is the same protocol without the catalog write.
 
 
-def clear_pair_cache(owner: str | None = None) -> int:
-    """Unpersist memoized pair relations and drop them from the memo.
-
-    ``owner=None`` clears everything (test teardown / explicit
-    process-wide release). With ``owner`` set, only entries whose
-    cache_key mentions that string are evicted — ADVICE r11: the
-    memo is process-global and shared by all Engine instances, so
-    Engine.close()/destroy() must not unpersist relations another
-    live engine (or the query registry, which keys by sf_dir) is
-    still using; they pass their engine path as the owner scope.
-
-    Returns the number of entries dropped. Safe across dead
-    sessions (unpersist on a stopped SparkContext is swallowed —
-    the executors holding those blocks are gone anyway).
-    """
-    if owner is None:
-        victims = list(_PAIR_CACHE.keys())
-    else:
-        victims = [k for k in _PAIR_CACHE if owner in repr(k[0])]
-    for k in victims:
-        pairs = _PAIR_CACHE.pop(k)[0]
-        try:
-            pairs.unpersist()
-        except Exception:
-            pass  # session already stopped; blocks died with it
-    return len(victims)
+def clear_pair_cache() -> None:
+    """Release the persisted pair relations: the active session's
+    ``catalog.clearCache()``, which drops every other cached relation
+    along with them. A no-op when no session is active."""
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        spark.catalog.clearCache()
 
 
-def cooccurrence_pairs(
-    df: DataFrame,
-    group_col: str,
-    item_col: str,
-    cache_key: tuple | str | None = None,
-) -> tuple[DataFrame, int | None]:
+def cooccurrence_pairs(df: DataFrame, group_col: str, item_col: str) -> DataFrame:
     """The aggregated undirected pair relation (src < dst, w = number
     of distinct groups containing both) every co-occurrence edge shape
-    derives from, plus the distinct-item count when cached (None when
-    not — callers that need it compute it themselves).
+    derives from.
 
-    With ``cache_key`` (any hashable token identifying the SOURCE
-    relation — e.g. (applicationId, sf_dir, "lineitem")), the pair
-    relation is persisted (MEMORY_AND_DISK) and memoized for the
-    session, so N graph queries pay ONE |group|² build. Without it,
-    behavior is the classic build-per-call.
+    Always returned persisted (MEMORY_AND_DISK_DESER, the DataFrame
+    default), so N graph queries over one source pay ONE |group|² build:
+    each later call over an equal source plan reads the cached
+    relation (see the block comment above); Spark logs such a hit as
+    "Asked to cache already cached data". Release it with
+    ``unpersist()`` on the returned frame, or with
+    ``spark.catalog.clearCache()``.
 
     Skew assumption (r12 advice): the self-join is pinned to a
     shuffled hash join, whose build side must hold an entire hash
@@ -107,18 +79,6 @@ def cooccurrence_pairs(
     family's `_cap_buckets` pattern) rather than relying on AQE's
     partial skew-split.
     """
-    key = None
-    if cache_key is not None:
-        key = (cache_key, group_col, item_col)
-        hit = _PAIR_CACHE.get(key)
-        if hit is not None:
-            # self-evict across SparkSession restarts: an entry built
-            # under a different applicationId holds a DataFrame whose
-            # executors (and cached blocks) no longer exist.
-            app = df.sparkSession.sparkContext.applicationId
-            if hit[3] == app:
-                return hit[0], hit[1]
-            _PAIR_CACHE.pop(key, None)
     g = df.select(
         F.col(group_col).alias("_g"), F.col(item_col).alias("_i")
     ).distinct()
@@ -141,36 +101,21 @@ def cooccurrence_pairs(
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    if key is None:
-        return pairs, None
-    pairs = pairs.persist()
-    n_items = g.select("_i").distinct().count()
-    _PAIR_CACHE[key] = (
-        pairs,
-        n_items,
-        {},
-        df.sparkSession.sparkContext.applicationId,
-    )
-    return pairs, n_items
+    return pairs.persist()
 
 
-def cooccurrence_edges(
-    df: DataFrame,
-    group_col: str,
-    item_col: str,
-    cache_key: tuple | str | None = None,
-) -> DataFrame:
+def cooccurrence_edges(df: DataFrame, group_col: str, item_col: str) -> DataFrame:
     """Symmetric distinct edges between items sharing a group.
 
     (src, dst) both directions, src != dst — e.g. parts co-purchased
     in one order, tokens co-occurring in one document. The self-join
     shuffles on the group key; per-group cost is |group|^2, so the
     group column plays the blocking role (same contract as the dedup
-    family — cap group size upstream for pathological groups).
-    ``cache_key`` shares the pair build across queries in a session
-    (see ``cooccurrence_pairs``).
+    family — cap group size upstream for pathological groups). The
+    pair build is persisted and shared by every later call over an
+    equal source (see ``cooccurrence_pairs``).
     """
-    pairs, _ = cooccurrence_pairs(df, group_col, item_col, cache_key)
+    pairs = cooccurrence_pairs(df, group_col, item_col)
     und = pairs.select("src", "dst")
     return und.unionAll(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
@@ -900,7 +845,6 @@ def weighted_cooccurrence_edges(
     item_col: str,
     min_count: int | str = 2,
     target_avg_degree: int = 3,
-    cache_key: tuple | str | None = None,
 ) -> DataFrame:
     """Symmetric weighted edges between items sharing a group: weight =
     number of distinct groups containing both, kept when >= min_count.
@@ -919,50 +863,35 @@ def weighted_cooccurrence_edges(
     pair-repeat probability falls with item count, so the w>=2 graph
     empties while the w>=1 graph stays meaningful; the density rule
     adapts in either direction and is exact-integer, so a SQL oracle
-    derives the identical threshold. The auto path consumes the pair
-    relation TWICE (weight histogram, then the thresholded output),
-    so it persists the aggregated pair relation (MEMORY_AND_DISK) —
-    without the cache the |group|² build runs once per consumer
-    (measured: the flagship parts_components chain re-built it 3×,
-    32s → 13s at sf0.1 from this + the components-loop cache). The
-    histogram itself is a bounded control-plane read (|distinct
-    weights| rows plus an item count).
+    derives the identical threshold. The auto path reads the pair
+    relation TWICE (weight histogram, then the thresholded output);
+    both reads hit the persisted relation ``cooccurrence_pairs``
+    returns, so the |group|² build runs once (measured: the flagship
+    parts_components chain re-built it 3× without a cache, 32s → 13s
+    at sf0.1 with it). The histogram is a bounded control-plane read
+    (|distinct weights| rows plus an item count), recomputed on each
+    call.
 
-    ``cache_key`` shares the pair build, the item count AND the
-    derived auto threshold across every graph query in the session
-    (see ``cooccurrence_pairs`` / ``_PAIR_CACHE``) — the per-session
-    analogue of materializing the edge list as a bucketed table.
+    The pair build is shared by every later call over an equal source
+    (see ``cooccurrence_pairs``) — the per-session analogue of
+    materializing the edge list as a bucketed table.
     """
-    pairs_all, n_items = cooccurrence_pairs(df, group_col, item_col, cache_key)
+    pairs_all = cooccurrence_pairs(df, group_col, item_col)
     if min_count == "auto":
-        memo = (
-            _PAIR_CACHE[(cache_key, group_col, item_col)][2]
-            if cache_key is not None
-            else {}
-        )
-        if target_avg_degree in memo:
-            min_count = memo[target_avg_degree]
-        else:
-            if cache_key is None:
-                pairs_all = pairs_all.persist()
-            hist = [
-                (int(r["w"]), int(r["c"]))
-                for r in pairs_all.groupBy("w")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .collect()
-            ]
-            if n_items is None:
-                n_items = (
-                    df.select(F.col(item_col).alias("_i")).distinct().count()
-                )
-            min_count = 1
-            cum = 0
-            for w, c in sorted(hist, reverse=True):
-                cum += c
-                if 2 * cum >= target_avg_degree * n_items:
-                    min_count = w
-                    break
-            memo[target_avg_degree] = min_count
+        hist = [
+            (int(r["w"]), int(r["c"]))
+            for r in pairs_all.groupBy("w")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .collect()
+        ]
+        n_items = df.select(F.col(item_col).alias("_i")).distinct().count()
+        min_count = 1
+        cum = 0
+        for w, c in sorted(hist, reverse=True):
+            cum += c
+            if 2 * cum >= target_avg_degree * n_items:
+                min_count = w
+                break
     pairs = pairs_all.filter(F.col("w") >= F.lit(int(min_count)))
     return pairs.unionAll(
         pairs.select(

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from unitdb_spark.operators.skew import fan_out
+
 
 def link_records(
     left: DataFrame,
@@ -254,13 +256,7 @@ def _passjoin_pairs(
     # fan-out guard (dedup.py pattern, guide §2.5): the <=(2d+1)²(d+1)
     # interpreted key tower sits directly on the scan; a one-row-group
     # input would evaluate it in ONE task (r13: 11.6s serial at sf0.1).
-    # At scale the scan already has >= defaultParallelism splits and
-    # this is skipped.
-    lsrc = l
-    par = l.sparkSession.sparkContext.defaultParallelism
-    if lsrc.rdd.getNumPartitions() < par:
-        lsrc = lsrc.repartition(par)
-    lch = lsrc.select("*", F.explode_outer(cks).alias("_kk")).select(
+    lch = fan_out(l).select("*", F.explode_outer(cks).alias("_kk")).select(
         "_lid", "_ltxt", *blocks,
         F.col("_kk._l").alias("_l"),
         F.col("_kk._slot").alias("_slot"),

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from unitdb_spark.operators.dedup import raw_tokens, shingles_from_tokens
+from unitdb_spark.operators.skew import fan_out
 
 
 def _token_sets(
@@ -51,8 +52,7 @@ def _token_sets(
     # verify (dedup.py). Without it the whole corpus shingle pass runs
     # as a single task (r13 sf1 profile: one 48s task in a 75s query,
     # and an 8c/32c scaling ratio of 1.08 where the guarded
-    # ngram-jaccard scales at 2.36). At scale the scan already has
-    # >= defaultParallelism splits and this is skipped.
+    # ngram-jaccard scales at 2.36).
     narrow = df.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_txt")
     )
@@ -72,9 +72,7 @@ def _token_sets(
         )
     elif unit != "shingle":
         raise ValueError(f"unit must be word|shingle, got {unit!r}")
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < par:
-        narrow = narrow.repartition(par)
+    narrow = fan_out(narrow)
     if unit == "word":
         toks: Column = F.array_distinct(raw_tokens("_txt"))
         return narrow.select("_id", toks.alias("_tok"))

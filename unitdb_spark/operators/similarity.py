@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from unitdb_spark.functions.portable_hash import md5_int60
+from unitdb_spark.operators.skew import fan_out
 
 
 def dot_expr(a: Column | str, b: Column | str) -> Column:
@@ -78,12 +79,11 @@ def cosine_topk(
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
     )
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cvec"))
     # scoring is CPU-bound; spread a small (single-file) corpus across
-    # the cluster — no-op at scale where the scan already has splits
-    par = corpus.sparkSession.sparkContext.defaultParallelism
-    if c.rdd.getNumPartitions() < par:
-        c = c.repartition(par)
+    # the cluster
+    c = fan_out(
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cvec"))
+    )
     cond = F.col("vec_id") != F.col("query_id") if exclude_self else F.lit(True)
     joined = c.join(F.broadcast(q), cond)
     sim = cosine_expr("_cvec", "_qvec").alias("cosine_sim")
@@ -121,14 +121,11 @@ def hard_negatives(
         F.col(label_col).alias("_qlabel"),
         F.col(vec_col).alias("_qvec"),
     )
-    c = corpus.select(
+    c = fan_out(corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(label_col).alias("neg_label"),
         F.col(vec_col).alias("_cvec"),
-    )
-    par = corpus.sparkSession.sparkContext.defaultParallelism
-    if c.rdd.getNumPartitions() < par:
-        c = c.repartition(par)
+    ))
     joined = c.join(
         F.broadcast(q),
         (F.col("vec_id") != F.col("query_id"))
@@ -461,12 +458,9 @@ def int8_cosine_topk(
     the quantized-space cosine (approximation error ~1e-3 vs float).
     """
     qz = quantize_int8(corpus, vec_col)
-    c = qz.select(F.col(id_col).alias("vec_id"), F.col("qvec").alias("_cq"))
+    c = fan_out(qz.select(F.col(id_col).alias("vec_id"), F.col("qvec").alias("_cq")))
     qq = quantize_int8(queries, vec_col)
     q = qq.select(F.col(query_id_col).alias("query_id"), F.col("qvec").alias("_qq"))
-    par = corpus.sparkSession.sparkContext.defaultParallelism
-    if c.rdd.getNumPartitions() < par:
-        c = c.repartition(par)
     joined = c.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
 
     def idot(a, b):
@@ -603,13 +597,10 @@ def hamming_topk(
         F.col(query_id_col).alias("query_id"),
         sign_sketch_words(vec_col, dim).alias("_qsk"),
     )
-    c = corpus.select(
+    c = fan_out(corpus.select(
         F.col(id_col).alias("vec_id"),
         sign_sketch_words(vec_col, dim).alias("_csk"),
-    )
-    par = corpus.sparkSession.sparkContext.defaultParallelism
-    if c.rdd.getNumPartitions() < par:
-        c = c.repartition(par)
+    ))
     cond = F.col("vec_id") != F.col("query_id") if exclude_self else F.lit(True)
     joined = c.join(F.broadcast(q), cond)
     n_words = (dim + 31) // 32

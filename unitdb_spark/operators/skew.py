@@ -19,6 +19,9 @@ hot key through one reducer. The classic fix is salting:
 Salt derivation is `pmod(xxhash64(entropy_col), n_salts)` — stable,
 JVM-side, and uniform; for rows with no natural entropy column use
 `F.rand(seed)` via `random_salt`.
+
+The opposite shape lives here too: `fan_out` spreads an input with too
+FEW partitions (one small file = one task) before CPU-bound work.
 """
 
 from __future__ import annotations
@@ -36,6 +39,20 @@ _MERGE = {
     "min": "min",
     "max": "max",
 }
+
+
+def fan_out(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to ``defaultParallelism`` when it has fewer
+    partitions, else return it unchanged.
+
+    CPU-bound work sitting directly on a scan runs one task per input
+    split, so a one-file/one-row-group input would run it serially. At
+    scale the scan already has enough splits and this is a no-op.
+    """
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df
 
 
 def hash_salt(entropy: Column | str, n_salts: int) -> Column:

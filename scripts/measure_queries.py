@@ -15,6 +15,8 @@ Usage:
 
 Prints one JSON line: {"label":..., "cpus":..., "sf_dir":...,
 "conf": {...}, "queries": {name: {"median": s, "spread": [lo, hi]}}}.
+``conf`` holds the effective value of each --conf key; a static key
+whose effective value differs gets a warning on stderr.
 PERF-ONLY: sf1 data is make_scale.py output, not oracle-checkable.
 """
 
@@ -60,8 +62,8 @@ def main() -> None:
     if unknown:
         ap.error(f"unknown queries: {' '.join(unknown)}")
 
-    # get_spark uses getOrCreate; in a fresh process the builder confs
-    # win, so extra confs must be set before the first session.
+    # extra confs go on the first builder: static ones (JVM, executor,
+    # static SQL) only take effect when the session is created
     from pyspark.sql import SparkSession
 
     builder = SparkSession.builder.master(f"local[{args.cpus}]").config(
@@ -76,6 +78,24 @@ def main() -> None:
     builder.getOrCreate()  # pin master + extra confs
     spark = get_spark("sf1-panel", cpus=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    # get_spark's getOrCreate re-applies its fixed runtime SQL confs to
+    # the pinned session, overriding colliding --conf values: set those
+    # again, then report what is in effect. A static key is fixed when
+    # the context starts, so its effective value is the context's.
+    started = spark.sparkContext.getConf()
+    conf: dict[str, str | None] = {}
+    for k, v in extra.items():
+        if spark.conf.isModifiable(k):
+            spark.conf.set(k, v)
+            conf[k] = spark.conf.get(k)
+        else:
+            conf[k] = started.get(k, None)
+        if conf[k] != v:
+            print(
+                f"# warning: static --conf {k}={v} differs from its "
+                f"effective value {conf[k]}",
+                file=sys.stderr,
+            )
 
     out: dict[str, dict] = {}
     for name in args.queries:
@@ -104,7 +124,7 @@ def main() -> None:
                 "label": args.label,
                 "cpus": args.cpus,
                 "sf_dir": args.sf_dir,
-                "conf": extra,
+                "conf": conf,
                 "reps": args.reps,
                 "queries": out,
             }

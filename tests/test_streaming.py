@@ -2350,3 +2350,100 @@ class TestStreamingPageHinkley:
             assert r.alarm == (ph > 50_000_000)
         # the 100s after the dip must alarm at lam=50
         assert out[3].alarm or out[4].alarm
+
+
+class TestSnapshotSinkCrashPoints:
+    """A fault during the second micro-batch of a versioned-snapshot
+    sink, then a restart from the same checkpoint without the fault:
+    the committed state equals the batch answer, no batch is folded
+    twice, and latest_commit names a snapshot that exists. Two sinks
+    with different merges (winner-per-key, sum) at two fault points:
+    the commit-entry write inside CommitLog.record, and
+    CommitLog.prune_other_generations after the entry exists."""
+
+    _SCHEMA = "key long, value binary, op string, op_order long"
+    _B1 = [
+        (1, bytearray(b"v1"), "put", 10),
+        (2, bytearray(b"v2"), "put", 11),
+        (1, bytearray(b"v1b"), "put", 12),
+    ]
+    _B2 = [
+        (2, None, "delete", 20),
+        (3, bytearray(b"v3"), "put", 21),
+        (1, bytearray(b"v1c"), "put", 22),
+    ]
+
+    @pytest.mark.parametrize("point", ["record", "prune"])
+    @pytest.mark.parametrize("sink", ["kv", "key_counts"])
+    def test_restart_after_fault_in_second_batch(
+        self, spark, tmp_path, monkeypatch, sink, point
+    ):
+        from pyspark.errors import StreamingQueryException
+
+        from unitdb_spark import fs
+        from unitdb_spark.operators.kv import kv_state
+        from unitdb_spark.streaming.commitlog import CommitLog, latest_commit
+        from unitdb_spark.streaming.continuous import (
+            continuous_key_counts,
+            read_key_counts,
+        )
+        from unitdb_spark.streaming.kv_sink import continuous_kv, read_kv
+
+        src, state, cp = (str(tmp_path / d) for d in ("src", "state", "cp"))
+
+        def write_ops(rows):
+            spark.createDataFrame(rows, self._SCHEMA).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+
+        def run():
+            stream = spark.readStream.schema(self._SCHEMA).parquet(src)
+            if sink == "kv":
+                q = continuous_kv(stream, state, cp)
+            else:
+                q = continuous_key_counts(stream, "key", state, cp)
+            q.awaitTermination(180)
+
+        write_ops(self._B1)
+        run()
+        write_ops(self._B2)
+
+        hits = []
+        if point == "record":
+            real = fs.write_text
+
+            def faulty(spark_, path, text):
+                if "/_applied/" in path:
+                    hits.append(path)
+                    raise OSError("injected: commit-entry write")
+                return real(spark_, path, text)
+
+            monkeypatch.setattr(fs, "write_text", faulty)
+        else:
+
+            def faulty(log):
+                hits.append(log.log_root)
+                raise OSError("injected: prune_other_generations")
+
+            monkeypatch.setattr(CommitLog, "prune_other_generations", faulty)
+        with pytest.raises(StreamingQueryException):
+            run()
+        assert len(hits) == 1
+        monkeypatch.undo()
+        run()
+
+        oplog = spark.read.parquet(src)
+        if sink == "kv":
+            got = {r["key"]: bytes(r["value"]) for r in read_kv(spark, state).collect()}
+            want = {r["key"]: bytes(r["value"]) for r in kv_state(oplog).collect()}
+            assert got == want == {1: b"v1c", 3: b"v3"}
+        else:
+            got = {r["_k"]: r["_n"] for r in read_key_counts(spark, state).collect()}
+            want = {r["key"]: r["count"] for r in oplog.groupBy("key").count().collect()}
+            assert got == want == {1: 3, 2: 2, 3: 1}
+        # two micro-batches in, both committed, each once
+        qid, last = latest_commit(spark, state)
+        assert last == 1
+        assert fs.is_dir(spark, f"{state}/v_{qid}_{last}")
+        entries = sorted(n for n, _, _ in fs.list_status(spark, f"{state}/_applied/{qid}"))
+        assert entries == ["0", "1"]

@@ -41,7 +41,6 @@ from pyspark.sql import types as T
 from unitdb_spark import fs
 
 from unitdb_spark.core.model import (
-    DEFAULT_QUERY_LIMIT,
     MASTER_CONTRACT,
     MAX_PAYLOAD_BYTES,
     Entry,
@@ -64,6 +63,25 @@ class ResultTooLarge(RuntimeError):
     than EngineOptions.max_get_result_bytes allows."""
 
 
+def _capped_fetch(
+    df: DataFrame, cap: int | None, what: str, hint: str
+) -> Iterator[tuple[Row, bytes]]:
+    """Stream ``df`` to the driver one partition at a time
+    (``toLocalIterator``), yielding (row, payload bytes), and raise
+    ``ResultTooLarge`` once the payloads seen pass ``cap`` bytes (None
+    = no cap)."""
+    total = 0
+    for n, r in enumerate(df.toLocalIterator(), 1):
+        p = bytes(r["payload"] or b"")
+        total += len(p)
+        if cap is not None and total > cap:
+            raise ResultTooLarge(
+                f"{what} result passed {cap} bytes at row {n}; "
+                f"raise max_get_result_bytes or use {hint}"
+            )
+        yield r, p
+
+
 #: sentinel distinguishing "not passed" from an explicit None (= no cap)
 _UNSET = object()
 
@@ -76,7 +94,6 @@ class EngineOptions:
     """Subset of options.go:102-252 that has meaning on Spark."""
 
     immutable: bool = False
-    default_query_limit: int = DEFAULT_QUERY_LIMIT
     flush_every: int = 50_000  # driver buffer bound (tiny-log parity)
     # payload encryption parity (options.go WithEncryption + reference
     # chacha20-poly1305 value codec, db.go:281-294): AES-GCM via Spark's
@@ -228,12 +245,13 @@ class Engine:
         """One atomic append of encrypted rows: the commit unit of
         flush, put_df and batch commit, timed into the put reservoir."""
         t0 = time.monotonic()
-        self.table.append(self._encrypt(df))
+        self.table.append(self._codec(df, F.aes_encrypt))
         self._latencies["put"].append(time.monotonic() - t0)
 
-    def _encrypt(self, df: DataFrame) -> DataFrame:
+    def _codec(self, df: DataFrame, aes: Callable) -> DataFrame:
         """Value-codec parity (db.go:281-294, chacha20-poly1305 there,
-        AES-GCM here): executors encrypt JVM-side; payloads at rest are
+        AES-GCM here): ``aes`` (F.aes_encrypt on append, F.aes_decrypt on
+        read) runs JVM-side on executors; payloads at rest are
         ciphertext, everything else stays queryable plaintext. Only
         rows whose ``encrypted`` marker is set are touched, so a mixed
         store (per-entry WithEncryption) round-trips correctly.
@@ -249,20 +267,7 @@ class Engine:
         enc = F.coalesce(F.col("encrypted"), F.lit(self._encrypt_all))
         return df.withColumn(
             "payload",
-            F.when(enc, F.aes_encrypt(F.col("payload"), F.lit(key), F.lit("GCM")))
-            .otherwise(F.col("payload")),
-        )
-
-    def _decrypt(self, df: DataFrame) -> DataFrame:
-        """Inverse of _encrypt; the NULL-marker case mirrors it (legacy
-        rows decrypt under the store-wide setting)."""
-        key = self.options.encryption_key
-        if key is None:
-            return df
-        enc = F.coalesce(F.col("encrypted"), F.lit(self._encrypt_all))
-        return df.withColumn(
-            "payload",
-            F.when(enc, F.aes_decrypt(F.col("payload"), F.lit(key), F.lit("GCM")))
+            F.when(enc, aes(F.col("payload"), F.lit(key), F.lit("GCM")))
             .otherwise(F.col("payload")),
         )
 
@@ -298,17 +303,8 @@ class Engine:
             else max_result_bytes
         )
         t0 = time.monotonic()
-        out: list[bytes] = []
-        total = 0
-        for r in self.get_df(query, now=now).select("payload").toLocalIterator():
-            p = bytes(r[0]) if r[0] is not None else b""
-            total += len(p)
-            if cap is not None and total > cap:
-                raise ResultTooLarge(
-                    f"get() result passed {cap} bytes at row {len(out) + 1}; "
-                    "raise max_get_result_bytes or use get_df()"
-                )
-            out.append(p)
+        rows = self.get_df(query, now=now).select("payload")
+        out = [p for _, p in _capped_fetch(rows, cap, "get()", "get_df()")]
         self._latencies["get"].append(time.monotonic() - t0)
         return out
 
@@ -320,25 +316,18 @@ class Engine:
         as N separate ``get`` calls."""
         from unitdb_spark.operators.get import apply_get_many
 
-        cap = self.options.max_get_result_bytes
         t0 = time.monotonic()
         self._metrics["gets"] += len(queries)
-        it = (
-            apply_get_many(self._live_df(), queries, now=now)
-            .select("query_id", "seq", "payload")
-            .toLocalIterator()
+        rows = apply_get_many(self._live_df(), queries, now=now).select(
+            "query_id", "seq", "payload"
         )
         out: list[list[tuple[int, bytes]]] = [[] for _ in queries]
-        total = n = 0
-        for r in it:
-            p = bytes(r["payload"] or b"")
-            total += len(p)
-            n += 1
-            if cap is not None and total > cap:
-                raise ResultTooLarge(
-                    f"get_many() result passed {cap} bytes at row {n}; "
-                    "raise max_get_result_bytes or use apply_get_many directly"
-                )
+        for r, p in _capped_fetch(
+            rows,
+            self.options.max_get_result_bytes,
+            "get_many()",
+            "apply_get_many directly",
+        ):
             out[r["query_id"]].append((r["seq"], p))
         self._latencies["get"].append(time.monotonic() - t0)
         return [[p for _, p in sorted(l, reverse=True)] for l in out]
@@ -350,7 +339,7 @@ class Engine:
         if tombs is not None:
             # deletes are rare → broadcast anti-join, no shuffle of the big side
             df = df.join(F.broadcast(tombs), on="seq", how="left_anti")
-        return self._decrypt(df)
+        return self._codec(df, F.aes_decrypt)
 
     # ----------------------------------------------------------- delete
     def delete(self, seq: int) -> None:

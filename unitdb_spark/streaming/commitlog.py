@@ -1,4 +1,5 @@
-"""Applied-batch commit log for foreachBatch sinks.
+"""Applied-batch commit log for foreachBatch sinks, and the versioned
+snapshot sink built on it.
 
 Round 1 kept a single marker file beside the output table holding a
 bare batch_id. Two failure modes:
@@ -28,15 +29,38 @@ db_sync.go). Restarting against an existing table with a *fresh*
 checkpoint replays the whole source and appends again — at-least-once,
 the honest answer for a non-transactional sink; true exactly-once
 across generations needs a transactional table format.
+
+Versioned snapshots (``snapshot_sink`` / ``read_snapshot``): a
+read-merge-write fold is NOT naturally idempotent (a replayed batch
+would double-count), so streaming state tables keep one snapshot
+directory per committed batch, ``<state_path>/v_<query_id>_<batch_id>``,
+and use the commit log under ``state_path`` as the commit point:
+
+  read snapshot v(last committed) -> merge batch b -> write snapshot
+  v(b) -> create the commit-log entry for b
+
+A crash anywhere before the entry exists leaves the log pointing at
+the old snapshot, so the replayed batch re-merges from unchanged state
+(no loss, no double-count). Snapshots are keyed by (query-generation,
+batch), so a pipeline restarted with a FRESH checkpoint — which
+replays the whole source from batch 0 — rebuilds its own snapshot
+line instead of matching a stale high-water mark. One maintainer
+stream per state table; other generations and superseded snapshots
+are pruned after each commit.
 """
 
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from unitdb_spark import fs
+
+#: commit entries kept per generation: Spark only ever replays the
+#: trailing uncommitted batch, so a short tail is ample
+KEEP = 16
 
 
 class CommitLog:
@@ -72,72 +96,57 @@ class CommitLog:
             self._qid = json.loads(meta)["id"] if meta else "no-checkpoint"
         return self._qid
 
-    def _dir(self) -> str:
-        return f"{self.log_root}/_applied/{self.query_id}"
+    def _dir(self, query_id: str) -> str:
+        return f"{self.log_root}/_applied/{query_id}"
+
+    def _ids(self, query_id: str) -> list[int]:
+        return sorted(
+            int(name)
+            for name, _, _ in fs.list_status(self.spark, self._dir(query_id))
+            if name.isdigit()
+        )
 
     def applied(self, batch_id: int) -> bool:
-        return fs.exists(self.spark, f"{self._dir()}/{int(batch_id)}")
+        return self.applied_for(self.query_id, batch_id)
 
     def last(self) -> int | None:
         """Highest applied batch id for THIS query generation."""
-        ids = [
-            int(name)
-            for name, _, _ in fs.list_status(self.spark, self._dir())
-            if name.isdigit()
-        ]
-        return max(ids) if ids else None
+        return self.last_for(self.query_id)
 
-    def record(self, batch_id: int, keep: int = 16) -> None:
-        """Commit point: create the batch's file, prune old entries.
-
-        ``keep`` bounds the log (Spark only ever replays the trailing
-        uncommitted batch, so a short tail is ample)."""
-        fs.write_text(self.spark, f"{self._dir()}/{int(batch_id)}", "")
-        ids = sorted(
-            int(name)
-            for name, _, _ in fs.list_status(self.spark, self._dir())
-            if name.isdigit()
-        )
-        for old in ids[:-keep]:
-            fs.delete(self.spark, f"{self._dir()}/{old}")
+    def record(self, batch_id: int) -> None:
+        """Commit point: create the batch's file, then prune the log to
+        its last ``KEEP`` entries."""
+        self.record_for(self.query_id, batch_id)
+        for old in self._ids(self.query_id)[:-KEEP]:
+            fs.delete(self.spark, f"{self._dir(self.query_id)}/{old}")
 
     def applied_for(self, query_id: str, batch_id: int) -> bool:
         """`applied` for an EXPLICIT generation (resume paths touch
         other generations' entries — e.g. redelivering a crashed
         subscriber's in-flight batches, streaming.pubsub.ReliableSink)."""
-        return fs.exists(
-            self.spark, f"{self.log_root}/_applied/{query_id}/{int(batch_id)}"
-        )
+        return fs.exists(self.spark, f"{self._dir(query_id)}/{int(batch_id)}")
 
     def last_for(self, query_id: str) -> int | None:
         """`last` for an explicit generation (resume paths use it as
         the ack high-water mark when an old marker has been pruned)."""
-        ids = [
-            int(name)
-            for name, _, _ in fs.list_status(
-                self.spark, f"{self.log_root}/_applied/{query_id}"
-            )
-            if name.isdigit()
-        ]
-        return max(ids) if ids else None
+        ids = self._ids(query_id)
+        return ids[-1] if ids else None
 
     def record_for(self, query_id: str, batch_id: int) -> None:
         """`record` for an explicit generation (no pruning: the foreign
         generation's tail is not ours to manage)."""
-        fs.write_text(
-            self.spark, f"{self.log_root}/_applied/{query_id}/{int(batch_id)}", ""
-        )
+        fs.write_text(self.spark, f"{self._dir(query_id)}/{int(batch_id)}", "")
 
     def prune_other_generations(self) -> None:
         """Drop OTHER query generations' commit entries.
 
-        For single-writer versioned-snapshot sinks (continuous rollup /
-        KV state) that already prune other generations' snapshot dirs:
-        without this, a stale generation's entry can win latest_commit's
-        mtime tie-break on a coarse-mtime filesystem and point readers
-        at a just-deleted snapshot. Do NOT call this for multi-writer
-        logs (e.g. the ingest table log) — there, sibling generations
-        belong to live concurrent writers."""
+        For single-writer versioned-snapshot sinks (``snapshot_sink``)
+        that already prune other generations' snapshot dirs: without
+        this, a stale generation's entry can win latest_commit's mtime
+        tie-break on a coarse-mtime filesystem and point readers at a
+        just-deleted snapshot. Do NOT call this for multi-writer logs
+        (e.g. the ingest table log) — there, sibling generations belong
+        to live concurrent writers."""
         base = f"{self.log_root}/_applied"
         for qid, _, is_dir in fs.list_status(self.spark, base):
             if is_dir and qid != self.query_id:
@@ -159,3 +168,67 @@ def latest_commit(spark: SparkSession, log_root: str) -> tuple[str, int] | None:
                 if best is None or cand > best:
                     best = cand
     return (best[2], best[1]) if best else None
+
+
+def _snap_path(state_path: str, qid: str, batch_id: int) -> str:
+    return f"{state_path.rstrip('/')}/v_{qid}_{batch_id}"
+
+
+def read_snapshot(spark: SparkSession, state_path: str, what: str) -> DataFrame:
+    """The committed snapshot under ``state_path`` (latest commit-log
+    entry across query generations); ``what`` names the state in the
+    error raised when nothing is committed yet."""
+    cur = latest_commit(spark, state_path)
+    if cur is None:
+        raise FileNotFoundError(f"no committed {what} under {state_path}")
+    return spark.read.parquet(_snap_path(state_path, *cur))
+
+
+def snapshot_sink(
+    stream: DataFrame,
+    state_path: str,
+    checkpoint: str,
+    partials: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+    trigger_available_now: bool = True,
+):
+    """Start the streaming query maintaining a versioned state table
+    under ``state_path`` (read it with ``read_snapshot``). Per
+    micro-batch, ``partials(batch)`` is the batch's mergeable state and
+    ``merge(committed ∪ partials)`` re-aggregates it with the committed
+    snapshot; the first batch is written as its partials. Returns the
+    StreamingQuery."""
+    spark = stream.sparkSession
+    fs.mkdirs(spark, state_path)
+    log = CommitLog(spark, checkpoint, state_path)
+    root = state_path.rstrip("/")
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        if log.applied(batch_id):
+            return  # replay of an already-applied batch: skip (idempotence)
+        applied = log.last()
+        state = partials(batch_df)
+        if applied is not None:
+            prev = spark.read.parquet(_snap_path(root, log.query_id, applied))
+            state = merge(prev.unionByName(state))
+        snap = _snap_path(root, log.query_id, batch_id)
+        state.write.mode("overwrite").parquet(snap)
+        log.record(batch_id)  # commit point
+        # retire stale generations' commit entries BEFORE deleting any
+        # snapshot: a reader between the two steps (or after a crash
+        # here) must never resolve latest_commit to a generation whose
+        # snapshot is already gone
+        log.prune_other_generations()
+        # prune superseded snapshots (best-effort; never the current one)
+        for name, _, is_dir in fs.list_status(spark, root):
+            if is_dir and name.startswith("v_") and f"{root}/{name}" != snap:
+                fs.delete(spark, f"{root}/{name}")
+
+    writer = (
+        stream.writeStream.foreachBatch(fold)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint)
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

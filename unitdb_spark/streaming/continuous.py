@@ -16,24 +16,9 @@ distincts); callers needing them run the batch rollup or an
 approx-distinct sketch instead.
 
 The merge cost per refresh is O(|table| + |touched prefixes|), never
-O(history). The read-merge-write fold is NOT naturally idempotent (a
-replayed batch would double-count), so the table is maintained as
-versioned snapshots with the applied-batch commit log
-(streaming.commitlog) as the commit point:
-
-  read snapshot v(last committed) -> merge batch b -> write snapshot
-  v(b) -> create the commit-log entry for b
-
-A crash anywhere before the commit-log append leaves the log pointing
-at the old snapshot, so the replayed batch re-merges from unchanged
-state (no loss, no double-count) — the same commit discipline as the
-reference's WAL release (db_sync.go: segments freed only after sync
-completes). Snapshots are keyed by (query-generation, batch), so a
-pipeline restarted with a FRESH checkpoint — which replays the whole
-source from batch 0 — rebuilds its own snapshot line instead of
-matching a stale high-water mark and skipping every batch (the
-round-1 single-marker failure mode). One maintainer stream per rollup
-table; superseded snapshots are pruned after each commit.
+O(history). Every state table here is a versioned snapshot maintained
+by ``streaming.commitlog.snapshot_sink``, whose docstring gives the
+crash and restart protocol.
 """
 
 from __future__ import annotations
@@ -41,9 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from unitdb_spark import fs
 from unitdb_spark.operators.rollup import prefix_expr
-from unitdb_spark.streaming.commitlog import CommitLog, latest_commit
+from unitdb_spark.streaming.commitlog import read_snapshot, snapshot_sink
 
 
 def _batch_partials(batch: DataFrame) -> DataFrame:
@@ -62,8 +46,7 @@ def _batch_partials(batch: DataFrame) -> DataFrame:
     )
 
 
-def _merge(existing: DataFrame, partials: DataFrame) -> DataFrame:
-    u = existing.unionByName(partials)
+def _merge(u: DataFrame) -> DataFrame:
     return u.groupBy("contract", "topic_prefix").agg(
         F.sum("n_msgs").alias("n_msgs"),
         F.min("first_ts").alias("first_ts"),
@@ -72,17 +55,10 @@ def _merge(existing: DataFrame, partials: DataFrame) -> DataFrame:
     )
 
 
-def _snap_path(agg_path: str, qid: str, batch_id: int) -> str:
-    return f"{agg_path.rstrip('/')}/v_{qid}_{batch_id}"
-
-
 def read_rollup(spark, agg_path: str) -> DataFrame:
     """Read the current committed rollup snapshot (latest commit-log
     entry across query generations)."""
-    cur = latest_commit(spark, agg_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed rollup snapshot under {agg_path}")
-    return spark.read.parquet(_snap_path(agg_path, *cur))
+    return read_snapshot(spark, agg_path, "rollup snapshot")
 
 
 def continuous_rollup(
@@ -95,44 +71,10 @@ def continuous_rollup(
     table under ``agg_path`` (read it with ``read_rollup``) from a
     messages-schema stream (with derived topic columns). Returns the
     StreamingQuery."""
-    spark = entries.sparkSession
-    fs.mkdirs(spark, agg_path)
-    log = CommitLog(spark, checkpoint, agg_path)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if log.applied(batch_id):
-            return  # replay of an already-applied batch: skip (idempotence)
-        applied = log.last()
-        partials = _batch_partials(batch_df)
-        if applied is not None:
-            merged = _merge(
-                spark.read.parquet(_snap_path(agg_path, log.query_id, applied)),
-                partials,
-            )
-        else:
-            merged = partials
-        snap = _snap_path(agg_path, log.query_id, batch_id)
-        merged.write.mode("overwrite").parquet(snap)
-        log.record(batch_id)  # commit point
-        # retire stale generations' commit entries BEFORE deleting any
-        # snapshot: a reader between the two steps (or after a crash
-        # here) must never resolve latest_commit to a generation whose
-        # snapshot is already gone
-        log.prune_other_generations()
-        # prune superseded snapshots (best-effort; never the current one)
-        keep = f"v_{log.query_id}_{batch_id}"
-        for name, _, is_dir in fs.list_status(spark, agg_path):
-            if is_dir and name.startswith("v_") and name != keep:
-                fs.delete(spark, f"{agg_path.rstrip('/')}/{name}")
-
-    writer = (
-        entries.writeStream.foreachBatch(fold)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
+    return snapshot_sink(
+        entries, agg_path, checkpoint, _batch_partials, _merge,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --------------------------------------------- rolling key-count state
@@ -145,55 +87,7 @@ def continuous_rollup(
 # state at read time via the batch operator's own math
 # (operators.profile.concentration_from_counts): a rolling skew audit
 # refreshed per micro-batch at O(state + batch) cost, never
-# O(history). Same versioned-snapshot + commit-log discipline as
-# continuous_rollup above (crash before the commit point re-merges
-# from unchanged state; replayed batches are skipped).
-
-
-def _run_maintainer(
-    stream: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    partials_fn,
-    merge_fn,
-    trigger_available_now: bool = True,
-):
-    """The shared versioned-snapshot fold: per batch, compute the
-    mergeable partials, merge into the committed state, write the new
-    snapshot, commit, prune — identical commit discipline to
-    continuous_rollup (replayed batches skipped, crash before commit
-    re-merges from unchanged state)."""
-    spark = stream.sparkSession
-    fs.mkdirs(spark, state_path)
-    log = CommitLog(spark, checkpoint, state_path)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if log.applied(batch_id):
-            return
-        applied = log.last()
-        partials = partials_fn(batch_df)
-        if applied is not None:
-            prev = spark.read.parquet(_snap_path(state_path, log.query_id, applied))
-            merged = merge_fn(prev, partials)
-        else:
-            merged = partials
-        snap = _snap_path(state_path, log.query_id, batch_id)
-        merged.write.mode("overwrite").parquet(snap)
-        log.record(batch_id)  # commit point
-        log.prune_other_generations()
-        keep = f"v_{log.query_id}_{batch_id}"
-        for name, _, is_dir in fs.list_status(spark, state_path):
-            if is_dir and name.startswith("v_") and name != keep:
-                fs.delete(spark, f"{state_path.rstrip('/')}/{name}")
-
-    writer = (
-        stream.writeStream.foreachBatch(fold)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+# O(history).
 
 
 def continuous_key_counts(
@@ -207,26 +101,21 @@ def continuous_key_counts(
     from any streaming DataFrame; read it with ``read_key_counts`` or
     go straight to the audit with ``read_concentration``. Returns the
     StreamingQuery."""
-    return _run_maintainer(
+    return snapshot_sink(
         stream,
         state_path,
         checkpoint,
         lambda b: b.groupBy(F.col(key_col).alias("_k")).agg(
             F.count(F.lit(1)).alias("_n")
         ),
-        lambda prev, p: prev.unionByName(p)
-        .groupBy("_k")
-        .agg(F.sum("_n").alias("_n")),
+        lambda u: u.groupBy("_k").agg(F.sum("_n").alias("_n")),
         trigger_available_now,
     )
 
 
 def read_key_counts(spark, state_path: str) -> DataFrame:
     """The committed (_k, _n) per-key state."""
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed key-count state under {state_path}")
-    return spark.read.parquet(_snap_path(state_path, *cur))
+    return read_snapshot(spark, state_path, "key-count state")
 
 
 def read_concentration(spark, state_path: str, top_k: int = 10) -> DataFrame:
@@ -278,24 +167,19 @@ def continuous_hourly_cells(
             .agg(cents.alias("_cents"), F.count(F.lit(1)).alias("_c"))
         )
 
-    def merge(prev: DataFrame, p: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(p)
-            .groupBy("_k", "_d", "_h")
-            .agg(F.sum("_cents").alias("_cents"), F.sum("_c").alias("_c"))
+    def merge(u: DataFrame) -> DataFrame:
+        return u.groupBy("_k", "_d", "_h").agg(
+            F.sum("_cents").alias("_cents"), F.sum("_c").alias("_c")
         )
 
-    return _run_maintainer(
+    return snapshot_sink(
         stream, state_path, checkpoint, partials, merge, trigger_available_now
     )
 
 
 def read_cells(spark, state_path: str) -> DataFrame:
     """The committed (_k, _d, _h, _cents, _c) cell state."""
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed cell state under {state_path}")
-    return spark.read.parquet(_snap_path(state_path, *cur))
+    return read_snapshot(spark, state_path, "cell state")
 
 
 def read_forecast_backtest(
@@ -381,10 +265,9 @@ def continuous_json_stats(
             F.sum("v").alias("sum_v"),
         )
 
-    def merge(prev: DataFrame, p: DataFrame) -> DataFrame:
+    def merge(u: DataFrame) -> DataFrame:
         return (
-            prev.unionByName(p)
-            .groupBy("group")
+            u.groupBy("group")
             .agg(
                 F.sum("n").alias("n"),
                 F.sum("n_missing").alias("n_missing"),
@@ -394,7 +277,7 @@ def continuous_json_stats(
             )
         )
 
-    return _run_maintainer(
+    return snapshot_sink(
         stream, state_path, checkpoint, partials, merge, trigger_available_now
     )
 
@@ -405,10 +288,7 @@ def read_json_stats(spark, state_path: str) -> DataFrame:
     minus the non-mergeable n_distinct column."""
     from unitdb_spark.operators.olap import json_stats_finish
 
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed json-stats state under {state_path}")
-    return json_stats_finish(spark.read.parquet(_snap_path(state_path, *cur)))
+    return json_stats_finish(read_snapshot(spark, state_path, "json-stats state"))
 
 
 # ------------------------------------------------------- rolling M4
@@ -437,10 +317,9 @@ def continuous_m4(
     def partials(b: DataFrame) -> DataFrame:
         return m4_partials(b, key_col, ts_col, value_col, order_cols, bucket_s)
 
-    def merge(prev: DataFrame, p: DataFrame) -> DataFrame:
+    def merge(u: DataFrame) -> DataFrame:
         return (
-            prev.unionByName(p)
-            .groupBy("key", "_b")
+            u.groupBy("key", "_b")
             .agg(
                 F.sum("n").alias("n"),
                 F.min("min_v").alias("min_v"),
@@ -450,7 +329,7 @@ def continuous_m4(
             )
         )
 
-    return _run_maintainer(
+    return snapshot_sink(
         stream, state_path, checkpoint, partials, merge, trigger_available_now
     )
 
@@ -460,10 +339,7 @@ def read_m4(spark, state_path: str, bucket_s: int) -> DataFrame:
     finish with the batch `operators.timeseries.m4_downsample`."""
     from unitdb_spark.operators.timeseries import m4_finish
 
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed m4 state under {state_path}")
-    return m4_finish(spark.read.parquet(_snap_path(state_path, *cur)), bucket_s)
+    return m4_finish(read_snapshot(spark, state_path, "m4 state"), bucket_s)
 
 
 # --------------------------------------------------- rolling Benford
@@ -487,14 +363,10 @@ def continuous_benford(
     def partials(b: DataFrame) -> DataFrame:
         return benford_digit_counts(b, amount_col)
 
-    def merge(prev: DataFrame, p: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(p)
-            .groupBy("digit")
-            .agg(F.sum("n").alias("n"))
-        )
+    def merge(u: DataFrame) -> DataFrame:
+        return u.groupBy("digit").agg(F.sum("n").alias("n"))
 
-    return _run_maintainer(
+    return snapshot_sink(
         stream, state_path, checkpoint, partials, merge, trigger_available_now
     )
 
@@ -505,10 +377,7 @@ def read_benford(spark, state_path: str) -> DataFrame:
     (shared finish)."""
     from unitdb_spark.operators.profile import benford_finish
 
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed benford state under {state_path}")
-    return benford_finish(spark.read.parquet(_snap_path(state_path, *cur)))
+    return benford_finish(read_snapshot(spark, state_path, "benford state"))
 
 
 # ------------------------------------------------------ rolling ABC
@@ -535,14 +404,10 @@ def continuous_abc(
     def partials(b: DataFrame) -> DataFrame:
         return abc_key_cents(b, key_col, value_col)
 
-    def merge(prev: DataFrame, p: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(p)
-            .groupBy("key")
-            .agg(F.sum("cents").alias("cents"))
-        )
+    def merge(u: DataFrame) -> DataFrame:
+        return u.groupBy("key").agg(F.sum("cents").alias("cents"))
 
-    return _run_maintainer(
+    return snapshot_sink(
         stream, state_path, checkpoint, partials, merge, trigger_available_now
     )
 
@@ -553,10 +418,7 @@ def read_abc(spark, state_path: str) -> DataFrame:
     (shared finish)."""
     from unitdb_spark.operators.olap import abc_finish
 
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed abc state under {state_path}")
-    return abc_finish(spark.read.parquet(_snap_path(state_path, *cur)))
+    return abc_finish(read_snapshot(spark, state_path, "abc state"))
 
 
 def read_holt(
@@ -629,14 +491,10 @@ def continuous_gram(
     def partials(b: DataFrame) -> DataFrame:
         return gram_partials(b, vec_col, dim, PCA_QUANT)
 
-    def merge(prev: DataFrame, p: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(p)
-            .groupBy("i", "j")
-            .agg(F.sum("v").cast("long").alias("v"))
-        )
+    def merge(u: DataFrame) -> DataFrame:
+        return u.groupBy("i", "j").agg(F.sum("v").cast("long").alias("v"))
 
-    return _run_maintainer(
+    return snapshot_sink(
         stream, state_path, checkpoint, partials, merge, trigger_available_now
     )
 
@@ -650,10 +508,7 @@ def read_pca_dir(spark, state_path: str, dim: int = 64) -> DataFrame:
     rescan."""
     from unitdb_spark.operators.pca import moment_finish, power_iteration
 
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed gram state under {state_path}")
-    tot = spark.read.parquet(_snap_path(state_path, *cur))
+    tot = read_snapshot(spark, state_path, "gram state")
     md, _, _ = moment_finish(tot)
     return power_iteration(md, dim=dim)
 
@@ -706,22 +561,17 @@ def continuous_skyline(
     def partials(b: DataFrame) -> DataFrame:
         return skyline2d(b, min_col, max_col, bucket_width)
 
-    def merge(prev: DataFrame, p: DataFrame) -> DataFrame:
-        return skyline2d(
-            prev.unionByName(p), min_col, max_col, bucket_width
-        )
+    def merge(u: DataFrame) -> DataFrame:
+        return skyline2d(u, min_col, max_col, bucket_width)
 
-    return _run_maintainer(
+    return snapshot_sink(
         stream, state_path, checkpoint, partials, merge, trigger_available_now
     )
 
 
 def read_skyline(spark, state_path: str) -> DataFrame:
     """The committed frontier rows (full input schema)."""
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed skyline state under {state_path}")
-    return spark.read.parquet(_snap_path(state_path, *cur))
+    return read_snapshot(spark, state_path, "skyline state")
 
 
 # ---------------------------------------------- rolling bootstrap CI
@@ -761,17 +611,16 @@ def continuous_bootstrap(
         )
         return bootstrap_partials(rows, group_col, id_col, "_cents", b)
 
-    def merge(prev: DataFrame, p: DataFrame) -> DataFrame:
+    def merge(u: DataFrame) -> DataFrame:
         return (
-            prev.unionByName(p)
-            .groupBy("_g", "_b")
+            u.groupBy("_g", "_b")
             .agg(
                 F.sum("_s").cast("decimal(38,0)").alias("_s"),
                 F.sum("_wn").cast("long").alias("_wn"),
             )
         )
 
-    return _run_maintainer(
+    return snapshot_sink(
         stream, state_path, checkpoint, partials, merge,
         trigger_available_now,
     )
@@ -785,13 +634,8 @@ def read_bootstrap_ci(
     so on the same data the streamed CI IS the batch CI."""
     from unitdb_spark.operators.bootstrap import bootstrap_finish
 
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no committed bootstrap state under {state_path}"
-        )
     return bootstrap_finish(
-        spark.read.parquet(_snap_path(state_path, *cur)), group_col
+        read_snapshot(spark, state_path, "bootstrap state"), group_col
     )
 
 
@@ -852,17 +696,16 @@ def continuous_survival(
         ).filter(F.col("_vmin").isNotNull())
         return o.unionByName(e).unionByName(m)
 
-    def merge(prev: DataFrame, p: DataFrame) -> DataFrame:
+    def merge(u: DataFrame) -> DataFrame:
         return (
-            prev.unionByName(p)
-            .groupBy("_kind", "_s", "_d")
+            u.groupBy("_kind", "_s", "_d")
             .agg(
                 F.min("_vmin").alias("_vmin"),
                 F.max("_vmax").alias("_vmax"),
             )
         )
 
-    return _run_maintainer(
+    return snapshot_sink(
         stream, state_path, checkpoint, partials, merge,
         trigger_available_now,
     )
@@ -877,12 +720,7 @@ def read_survival(spark, state_path: str) -> DataFrame:
     exactly as a batch recompute would."""
     from unitdb_spark.operators.survival import kaplan_meier
 
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no committed survival state under {state_path}"
-        )
-    st = spark.read.parquet(_snap_path(state_path, *cur))
+    st = read_snapshot(spark, state_path, "survival state")
     t0 = st.filter(F.col("_kind") == "o").select(
         "_s", F.col("_vmin").alias("_t0")
     )
@@ -916,6 +754,30 @@ def read_survival(spark, state_path: str) -> DataFrame:
     return kaplan_meier(durations, "duration_days", "event")
 
 
+def _cells_hourly(spark, state_path: str, key_col: str) -> DataFrame:
+    """The committed cells mapped to absolute hour indices — the
+    shared entry point of the hour-grain dashboards."""
+    cells = read_cells(spark, state_path)
+    return cells.select(
+        F.col("_k").alias(key_col),
+        (
+            F.expr("CAST(unix_date(_d) AS BIGINT)") * 24 + F.col("_h")
+        ).alias("hidx"),
+        F.col("_c").alias("y"),
+    )
+
+
+def _cells_daily(spark, state_path: str, key_col: str) -> DataFrame:
+    """The committed cells rolled up to (key, day-index, count) — the
+    shared entry point of the day-grain dashboards (mergeable sums,
+    batch-equal however the stream split)."""
+    cells = read_cells(spark, state_path)
+    return cells.groupBy(
+        F.col("_k").alias(key_col),
+        F.expr("CAST(unix_date(_d) AS BIGINT)").alias("t"),
+    ).agg(F.sum("_c").cast("long").alias("y"))
+
+
 def read_peaks(
     spark, state_path: str, key_col: str = "event_type",
     half_window: int = 12, thresh_num: int = 2, thresh_den: int = 1,
@@ -927,14 +789,7 @@ def read_peaks(
     `peaks_from_cells` code path."""
     from unitdb_spark.operators.timeseries import peaks_from_cells
 
-    cells = read_cells(spark, state_path)
-    hourly = cells.select(
-        F.col("_k").alias(key_col),
-        (
-            F.expr("CAST(unix_date(_d) AS BIGINT)") * 24 + F.col("_h")
-        ).alias("hidx"),
-        F.col("_c").alias("y"),
-    )
+    hourly = _cells_hourly(spark, state_path, key_col)
     return peaks_from_cells(
         hourly, key_col, "hidx", "y",
         bucket_s=3600, half_window=half_window,
@@ -953,14 +808,7 @@ def read_ewma(
     shared `ewma_from_cells` fold + cross-multiplied 3σ test."""
     from unitdb_spark.operators.timeseries import ewma_from_cells
 
-    cells = read_cells(spark, state_path)
-    hourly = cells.select(
-        F.col("_k").alias(key_col),
-        (
-            F.expr("CAST(unix_date(_d) AS BIGINT)") * 24 + F.col("_h")
-        ).alias("hidx"),
-        F.col("_c").alias("y"),
-    )
+    hourly = _cells_hourly(spark, state_path, key_col)
     return ewma_from_cells(
         hourly, key_col, "hidx", "y", bucket_s=3600, lam=lam, l2=l2
     )
@@ -976,14 +824,7 @@ def read_ljungbox(
     shared `ljungbox_from_cells` exact-moment Q test."""
     from unitdb_spark.operators.stats_tests import ljungbox_from_cells
 
-    cells = read_cells(spark, state_path)
-    hourly = cells.select(
-        F.col("_k").alias(key_col),
-        (
-            F.expr("CAST(unix_date(_d) AS BIGINT)") * 24 + F.col("_h")
-        ).alias("hidx"),
-        F.col("_c").alias("y"),
-    )
+    hourly = _cells_hourly(spark, state_path, key_col)
     return ljungbox_from_cells(hourly, key_col, "hidx", "y", lags=lags)
 
 
@@ -995,14 +836,7 @@ def read_fano(
     through the shared `fano_from_cells` finish."""
     from unitdb_spark.operators.timeseries import fano_from_cells
 
-    cells = read_cells(spark, state_path)
-    hourly = cells.select(
-        F.col("_k").alias(key_col),
-        (
-            F.expr("CAST(unix_date(_d) AS BIGINT)") * 24 + F.col("_h")
-        ).alias("hidx"),
-        F.col("_c").alias("y"),
-    )
+    hourly = _cells_hourly(spark, state_path, key_col)
     return fano_from_cells(hourly, key_col, "hidx", "y")
 
 
@@ -1027,14 +861,7 @@ def read_haar(
     shared `haar_from_cells` block arithmetic."""
     from unitdb_spark.operators.timeseries import haar_from_cells
 
-    cells = read_cells(spark, state_path)
-    hourly = cells.select(
-        F.col("_k").alias(key_col),
-        (
-            F.expr("CAST(unix_date(_d) AS BIGINT)") * 24 + F.col("_h")
-        ).alias("hidx"),
-        F.col("_c").alias("y"),
-    )
+    hourly = _cells_hourly(spark, state_path, key_col)
     return haar_from_cells(hourly, key_col, "hidx", "y", levels=levels)
 
 
@@ -1046,39 +873,8 @@ def read_runs(
     through the shared `runs_from_cells` finish."""
     from unitdb_spark.operators.stats_tests import runs_from_cells
 
-    cells = read_cells(spark, state_path)
-    hourly = cells.select(
-        F.col("_k").alias(key_col),
-        (
-            F.expr("CAST(unix_date(_d) AS BIGINT)") * 24 + F.col("_h")
-        ).alias("hidx"),
-        F.col("_c").alias("y"),
-    )
+    hourly = _cells_hourly(spark, state_path, key_col)
     return runs_from_cells(hourly, key_col, "hidx", "y")
-
-
-def _cells_hourly(spark, state_path: str, key_col: str) -> DataFrame:
-    """The committed cells mapped to absolute hour indices — the
-    shared entry point of the hour-grain dashboards."""
-    cells = read_cells(spark, state_path)
-    return cells.select(
-        F.col("_k").alias(key_col),
-        (
-            F.expr("CAST(unix_date(_d) AS BIGINT)") * 24 + F.col("_h")
-        ).alias("hidx"),
-        F.col("_c").alias("y"),
-    )
-
-
-def _cells_daily(spark, state_path: str, key_col: str) -> DataFrame:
-    """The committed cells rolled up to (key, day-index, count) — the
-    shared entry point of the day-grain dashboards (mergeable sums,
-    batch-equal however the stream split)."""
-    cells = read_cells(spark, state_path)
-    return cells.groupBy(
-        F.col("_k").alias(key_col),
-        F.expr("CAST(unix_date(_d) AS BIGINT)").alias("t"),
-    ).agg(F.sum("_c").cast("long").alias("y"))
 
 
 def read_acf(
@@ -1154,15 +950,14 @@ def continuous_user_cents(
     cents = F.expr(
         f"CAST(sum(CAST({value_col} AS DECIMAL(18,2)) * 100) AS BIGINT)"
     )
-    return _run_maintainer(
+    return snapshot_sink(
         stream,
         state_path,
         checkpoint,
         lambda b: b.filter(F.col(value_col).isNotNull())
         .groupBy(F.col(user_col).alias("_u"))
         .agg(cents.alias("_cents"), F.count(F.lit(1)).alias("_c")),
-        lambda prev, p: prev.unionByName(p)
-        .groupBy("_u")
+        lambda u: u.groupBy("_u")
         .agg(F.sum("_cents").alias("_cents"), F.sum("_c").alias("_c")),
         trigger_available_now,
     )
@@ -1170,12 +965,17 @@ def continuous_user_cents(
 
 def read_user_cents(spark, state_path: str) -> DataFrame:
     """The committed (_u, _cents, _c) per-user revenue state."""
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(
-            f"no committed user-cents state under {state_path}"
-        )
-    return spark.read.parquet(_snap_path(state_path, *cur))
+    return read_snapshot(spark, state_path, "user-cents state")
+
+
+def _ab_arm():
+    """The A/B arm of a per-user state row: the same portable hash
+    the batch experiment queries use."""
+    from unitdb_spark.functions.portable_hash import md5_int60
+
+    return (
+        md5_int60(F.concat(F.col("_u").cast("string"), F.lit(":ab"))) % 2
+    ).cast("int").alias("arm")
 
 
 def read_power(spark, state_path: str) -> DataFrame:
@@ -1195,15 +995,10 @@ def read_effect_size(spark, state_path: str) -> DataFrame:
     Glass's Δ) off the per-user revenue state — the magnitude
     dashboard beside the rolling power/QTE readouts, arms from the
     same portable hash."""
-    from unitdb_spark.functions.portable_hash import md5_int60
     from unitdb_spark.operators.evaluation import effect_size_report
 
     units = read_user_cents(spark, state_path).select(
-        F.col("_cents").alias("cents"),
-        (
-            md5_int60(F.concat(F.col("_u").cast("string"), F.lit(":ab")))
-            % 2
-        ).cast("int").alias("arm"),
+        F.col("_cents").alias("cents"), _ab_arm()
     )
     return effect_size_report(units, "cents", "arm")
 
@@ -1211,15 +1006,10 @@ def read_effect_size(spark, state_path: str) -> DataFrame:
 def read_tost(spark, state_path: str, margin: float = 500.0) -> DataFrame:
     """Rolling TOST equivalence verdict off the per-user revenue
     state — the live do-no-harm gate."""
-    from unitdb_spark.functions.portable_hash import md5_int60
     from unitdb_spark.operators.stats_tests import tost_equivalence
 
     units = read_user_cents(spark, state_path).select(
-        F.col("_cents").alias("cents"),
-        (
-            md5_int60(F.concat(F.col("_u").cast("string"), F.lit(":ab")))
-            % 2
-        ).cast("int").alias("arm"),
+        F.col("_cents").alias("cents"), _ab_arm()
     )
     return tost_equivalence(units, "cents", "arm", margin=margin)
 
@@ -1228,15 +1018,10 @@ def read_qte(spark, state_path: str) -> DataFrame:
     """Rolling quantile treatment effects off the per-user revenue
     state: the distributional A/B readout, arms from the same
     portable hash the batch queries use."""
-    from unitdb_spark.functions.portable_hash import md5_int60
     from unitdb_spark.operators.evaluation import quantile_treatment_effect
 
     units = read_user_cents(spark, state_path).select(
-        F.col("_cents").alias("cents"),
-        (
-            md5_int60(F.concat(F.col("_u").cast("string"), F.lit(":ab")))
-            % 2
-        ).cast("int").alias("arm"),
+        F.col("_cents").alias("cents"), _ab_arm()
     )
     return quantile_treatment_effect(units, "cents", "arm")
 
@@ -1246,15 +1031,11 @@ def read_permtest(spark, state_path: str, n_perm: int = 199) -> DataFrame:
     the assumption-free significance readout next to `read_power` and
     `read_qte`: the md5 re-randomizations explode the maintained UNIT
     relation at read time (users, not events)."""
-    from unitdb_spark.functions.portable_hash import md5_int60
     from unitdb_spark.operators.stats_tests import permutation_test
 
     units = read_user_cents(spark, state_path).select(
         F.col("_u").alias("user_id"),
         F.col("_cents").alias("cents"),
-        (
-            md5_int60(F.concat(F.col("_u").cast("string"), F.lit(":ab")))
-            % 2
-        ).cast("int").alias("arm"),
+        _ab_arm(),
     )
     return permutation_test(units, "cents", "arm", "user_id", n_perm=n_perm)

@@ -14,11 +14,8 @@ rows inside the snapshot (bounded by key cardinality) so a replayed or
 out-of-order lower-`op_order` put can never resurrect a deleted key;
 `read_kv` filters them out.
 
-Crash safety reuses the versioned-snapshot + commit-log discipline of
-`streaming.continuous` (snapshot keyed by (query-generation, batch);
-commit-log append is the commit point — see commitlog.py for the
-restart/fresh-checkpoint story, reference parity db_sync.go WAL
-release).
+Crash safety is the versioned-snapshot protocol of
+``streaming.commitlog.snapshot_sink``.
 
 Scale note: each refresh rewrites the full state snapshot. That is the
 honest cost of crash-safe versioning over plain parquet; when live-key
@@ -35,8 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from unitdb_spark import fs
-from unitdb_spark.streaming.commitlog import CommitLog, latest_commit
+from unitdb_spark.streaming.commitlog import read_snapshot, snapshot_sink
 
 _STATE_COLS = ["key", "value", "op", "op_order"]
 
@@ -54,17 +50,10 @@ def _winners(ops: DataFrame) -> DataFrame:
     )
 
 
-def _snap_path(state_path: str, qid: str, batch_id: int) -> str:
-    return f"{state_path.rstrip('/')}/v_{qid}_{batch_id}"
-
-
 def read_kv(spark: SparkSession, state_path: str, include_tombstones: bool = False) -> DataFrame:
     """Current committed KV state. (key, value) of live keys — or the
     raw winner rows including delete tombstones when asked."""
-    cur = latest_commit(spark, state_path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed KV snapshot under {state_path}")
-    snap = spark.read.parquet(_snap_path(state_path, *cur))
+    snap = read_snapshot(spark, state_path, "KV snapshot")
     if include_tombstones:
         return snap
     return snap.filter(F.col("op") == "put").select("key", "value")
@@ -78,36 +67,11 @@ def continuous_kv(
 ):
     """Start the streaming query maintaining the KV state table under
     ``state_path`` from an op-log stream. Returns the StreamingQuery."""
-    spark = oplog.sparkSession
-    fs.mkdirs(spark, state_path)
-    log = CommitLog(spark, checkpoint, state_path)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if log.applied(batch_id):
-            return  # replayed batch: already folded (idempotence)
-        applied = log.last()
-        winners = _winners(batch_df.select(*_STATE_COLS))
-        if applied is not None:
-            prior = spark.read.parquet(_snap_path(state_path, log.query_id, applied))
-            merged = _winners(prior.unionByName(winners))
-        else:
-            merged = winners
-        snap = _snap_path(state_path, log.query_id, batch_id)
-        merged.write.mode("overwrite").parquet(snap)
-        log.record(batch_id)  # commit point
-        # retire stale generations' commit entries BEFORE their
-        # snapshots so latest_commit never points at a deleted path
-        log.prune_other_generations()
-        keep = f"v_{log.query_id}_{batch_id}"
-        for name, _, is_dir in fs.list_status(spark, state_path):
-            if is_dir and name.startswith("v_") and name != keep:
-                fs.delete(spark, f"{state_path.rstrip('/')}/{name}")
-
-    writer = (
-        oplog.writeStream.foreachBatch(fold)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
+    return snapshot_sink(
+        oplog,
+        state_path,
+        checkpoint,
+        lambda b: _winners(b.select(*_STATE_COLS)),
+        _winners,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from unitdb_spark.core.model import MASTER_CONTRACT, Query
+from unitdb_spark.functions import media_codec as mc
 from unitdb_spark.functions import text as TXT
 from unitdb_spark.functions.multimodal import extract_media_meta, synthetic_media
 from unitdb_spark.operators.dedup import (
@@ -3832,13 +3833,14 @@ def q_media_bmp_resize(spark, sf_dir):
     resample, row order, row padding, and channel order are all
     byte-correct. No stub in the path."""
     from unitdb_spark.functions.multimodal import (
-        bmp_pixel_stats,
-        resize_bmp_images,
+        pixel_stats,
+        resize_blobs,
         synthetic_bmp_media,
     )
 
     media = synthetic_bmp_media(_docs(spark, sf_dir))
-    return bmp_pixel_stats(resize_bmp_images(media, 8, 6)).select(
+    resized = resize_blobs(media, mc.resize_bmp24_nearest, 8, 6)
+    return pixel_stats(resized, mc.decode_bmp24).select(
         F.col("id").alias("doc_id"), "width", "height", "px_sum", "px_wsum"
     )
 
@@ -3856,13 +3858,14 @@ def q_media_png_resize(spark, sf_dir):
     unfilter, resample, row order, and channel order are all
     byte-correct. No stub in the path."""
     from unitdb_spark.functions.multimodal import (
-        png_pixel_stats,
-        resize_png_images,
+        pixel_stats,
+        resize_blobs,
         synthetic_png_media,
     )
 
     media = synthetic_png_media(_docs(spark, sf_dir))
-    return png_pixel_stats(resize_png_images(media, 8, 6)).select(
+    resized = resize_blobs(media, mc.resize_png_nearest, 8, 6)
+    return pixel_stats(resized, mc.decode_png_rgb).select(
         F.col("id").alias("doc_id"), "width", "height", "px_sum", "px_wsum"
     )
 
@@ -3880,13 +3883,14 @@ def q_media_gif_resize(spark, sf_dir):
     decode, palette order, resample, row order, and channel order are
     all byte-correct. No stub in the path."""
     from unitdb_spark.functions.multimodal import (
-        gif_pixel_stats,
-        resize_gif_images,
+        pixel_stats,
+        resize_blobs,
         synthetic_gif_media,
     )
 
     media = synthetic_gif_media(_docs(spark, sf_dir))
-    return gif_pixel_stats(resize_gif_images(media, 8, 6)).select(
+    resized = resize_blobs(media, mc.resize_gif_nearest, 8, 6)
+    return pixel_stats(resized, mc.decode_gif_rgb).select(
         F.col("id").alias("doc_id"), "width", "height", "px_sum", "px_wsum"
     )
 
@@ -3908,13 +3912,14 @@ def q_media_jpeg_resize(spark, sf_dir):
     transform, resample and channel order are all byte-correct. No
     stub in the path."""
     from unitdb_spark.functions.multimodal import (
-        png_pixel_stats,
-        resize_jpeg_images,
+        pixel_stats,
+        resize_blobs,
         synthetic_jpeg_media,
     )
 
     media = synthetic_jpeg_media(_docs(spark, sf_dir))
-    return png_pixel_stats(resize_jpeg_images(media, 8, 6)).select(
+    resized = resize_blobs(media, mc.resize_jpeg_nearest_png, 8, 6)
+    return pixel_stats(resized, mc.decode_png_rgb).select(
         F.col("id").alias("doc_id"), "width", "height", "px_sum", "px_wsum"
     )
 
@@ -4207,13 +4212,14 @@ def q_media_tiff_resize(spark, sf_dir):
     IFD walk, endian handling, strip layout, resample, and channel
     order are all byte-correct. No stub in the path."""
     from unitdb_spark.functions.multimodal import (
-        resize_tiff_images,
+        pixel_stats,
+        resize_blobs,
         synthetic_tiff_media,
-        tiff_pixel_stats,
     )
 
     media = synthetic_tiff_media(_docs(spark, sf_dir))
-    return tiff_pixel_stats(resize_tiff_images(media, 8, 6)).select(
+    resized = resize_blobs(media, mc.resize_tiff_nearest, 8, 6)
+    return pixel_stats(resized, mc.decode_tiff_rgb).select(
         F.col("id").alias("doc_id"), "width", "height", "px_sum", "px_wsum"
     )
 
@@ -6659,13 +6665,14 @@ def q_media_jpeg420_resize(spark, sf_dir):
     MCU block ORDER, the per-component DC predictor interleave, and
     the chroma upsample index math."""
     from unitdb_spark.functions.multimodal import (
-        png_pixel_stats,
-        resize_jpeg_images,
+        pixel_stats,
+        resize_blobs,
         synthetic_jpeg420_media,
     )
 
     media = synthetic_jpeg420_media(_docs(spark, sf_dir))
-    return png_pixel_stats(resize_jpeg_images(media, 8, 6)).select(
+    resized = resize_blobs(media, mc.resize_jpeg_nearest_png, 8, 6)
+    return pixel_stats(resized, mc.decode_png_rgb).select(
         F.col("id").alias("doc_id"), "width", "height", "px_sum", "px_wsum"
     )
 
@@ -9183,13 +9190,14 @@ def q_media_jpeg_prog_resize(spark, sf_dir):
     every progressive scan reconstructs its exact coefficients. No
     stub in the path."""
     from unitdb_spark.functions.multimodal import (
-        png_pixel_stats,
-        resize_jpeg_prog_images,
+        pixel_stats,
+        resize_blobs,
         synthetic_jpeg_prog_media,
     )
 
     media = synthetic_jpeg_prog_media(_docs(spark, sf_dir))
-    return png_pixel_stats(resize_jpeg_prog_images(media, 8, 6)).select(
+    resized = resize_blobs(media, mc.resize_jpeg_any_nearest_png, 8, 6)
+    return pixel_stats(resized, mc.decode_png_rgb).select(
         F.col("id").alias("doc_id"), "width", "height", "px_sum", "px_wsum"
     )
 
@@ -9338,13 +9346,14 @@ def q_media_png7_resize(spark, sf_dir):
     hash-match proves the de-interlace scatters every pixel to its
     exact grid position. No stub in the path."""
     from unitdb_spark.functions.multimodal import (
-        png7_pixel_stats,
-        resize_png7_images,
+        pixel_stats,
+        resize_blobs,
         synthetic_png7_media,
     )
 
     media = synthetic_png7_media(_docs(spark, sf_dir))
-    return png7_pixel_stats(resize_png7_images(media, 8, 6)).select(
+    resized = resize_blobs(media, mc.resize_png_adam7_nearest, 8, 6)
+    return pixel_stats(resized, mc.decode_png_rgb_any).select(
         F.col("id").alias("doc_id"), "width", "height", "px_sum", "px_wsum"
     )
 

@@ -73,23 +73,9 @@ def media_kernel_ms_per_blob(n: int = 32) -> dict[str, float]:
     import numpy as np
 
     from unitdb_spark.functions import media_codec as mc
+    from unitdb_spark.functions.multimodal import jpeg_fixture_pixels
 
-    def img(d):
-        bw, bh, s = d % 3 + 2, (d // 5) % 3 + 2, d % 241
-        BX, BY = np.meshgrid(np.arange(bw), np.arange(bh))
-        blocks = np.stack(
-            [
-                (s + 3 * BX + 5 * BY) % 256,
-                (2 * s + 7 * BX + BY) % 256,
-                (3 * s + BX + 11 * BY) % 256,
-            ],
-            axis=-1,
-        )
-        return np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1).astype(
-            np.uint8
-        )
-
-    arrs = [img(d) for d in range(n)]
+    arrs = [jpeg_fixture_pixels(d) for d in range(n)]
     samples = [
         ((np.arange(4096) * (d + 3) * 37) % 4096 - 2048).astype(np.int16)
         for d in range(n)
@@ -244,11 +230,14 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         return time.time() - t
 
-    def timed(name: str, fn, reps: int = 1) -> None:
-        runs = sorted(_run_once(fn) for _ in range(reps))
+    def record(name: str, runs: list[float]) -> None:
+        runs = sorted(runs)
         timings[name] = runs[len(runs) // 2]
-        if reps > 1:
+        if len(runs) > 1:
             spreads[name] = [round(runs[0], 3), round(runs[-1], 3)]
+
+    def timed(name: str, fn, reps: int = 1) -> None:
+        record(name, [_run_once(fn) for _ in range(reps)])
 
     def _canonical_state(reprime) -> None:
         # canonical per-rep state: nothing cached except (for graph
@@ -275,10 +264,7 @@ def main() -> None:
         for _ in range(HEAVY_REPS):
             _canonical_state(reprime)
             runs.append(_run_once(fn))
-        runs.sort()
-        timings[name] = runs[len(runs) // 2]
-        if HEAVY_REPS > 1:
-            spreads[name] = [round(runs[0], 3), round(runs[-1], 3)]
+        record(name, runs)
 
     # B2/B3: Get against the materialized store (the real read path —
     # partition pruning on contract, pushed topic/ts/TTL filters)
@@ -401,10 +387,7 @@ def main() -> None:
             t = time.time()
             mk().count()
             runs.append(time.time() - t)
-        runs.sort()
-        timings[name] = runs[len(runs) // 2]
-        if HEAVY_REPS > 1:
-            spreads[name] = [round(runs[0], 3), round(runs[-1], 3)]
+        record(name, runs)
 
     timed_heavy_count(
         "parts_pagerank_bucketed",

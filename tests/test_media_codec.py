@@ -17,6 +17,58 @@ from unitdb_spark.functions.media_codec import (
     build_wav,
     parse_media,
 )
+from unitdb_spark.functions import media_codec as mc
+
+_PAL = [((i * 3) % 256, (i * 7) % 256, (i * 11) % 256) for i in range(256)]
+
+# every nearest-neighbor resize kernel: name -> (encode an (h, w, 3)
+# uint8 image into the kernel's input format, kernel, decode its output)
+RESIZE_KERNELS = {
+    "bmp": (mc.encode_bmp24, mc.resize_bmp24_nearest, mc.decode_bmp24),
+    "png": (
+        lambda a: mc.encode_png_rgb(a, [(y * 2) % 5 for y in range(a.shape[0])]),
+        mc.resize_png_nearest,
+        mc.decode_png_rgb,
+    ),
+    "png_adam7": (
+        mc.encode_png_rgb_adam7,
+        mc.resize_png_adam7_nearest,
+        mc.decode_png_rgb_any,
+    ),
+    "gif": (
+        lambda a: mc.encode_gif_indexed(a[..., 0].copy(), _PAL),
+        mc.resize_gif_nearest,
+        mc.decode_gif_rgb,
+    ),
+    "jpeg": (
+        lambda a: mc.encode_jpeg_baseline(a, quant=8),
+        mc.resize_jpeg_nearest_png,
+        mc.decode_png_rgb,
+    ),
+    "jpeg_prog": (
+        lambda a: mc.encode_jpeg_progressive(a, quant=8),
+        mc.resize_jpeg_any_nearest_png,
+        mc.decode_png_rgb,
+    ),
+    "tiff": (
+        lambda a: mc.encode_tiff_rgb(a, little_endian=False),
+        mc.resize_tiff_nearest,
+        mc.decode_tiff_rgb,
+    ),
+}
+
+
+@pytest.mark.parametrize("width,height", [(0, 4), (4, 0), (-2, 4)])
+@pytest.mark.parametrize("name", sorted(RESIZE_KERNELS))
+def test_resize_kernel_nonpositive_target_is_null(name, width, height):
+    """A target with no pixels is the NULL-blob honest failure for
+    every kernel — never an empty blob the decoders then reject."""
+    import numpy as np
+
+    encode, kernel, decode = RESIZE_KERNELS[name]
+    b = encode(np.full((16, 16, 3), 100, dtype=np.uint8))
+    assert decode(kernel(b, 4, 3)).shape[:2] == (3, 4)  # the input is claimed
+    assert kernel(b, width, height) is None
 
 
 class TestRoundTrip:
@@ -388,22 +440,22 @@ class TestPngPixels:
         assert decode_png_rgb(bytes(b)) is None
         assert resize_png_nearest(b"junk", 4, 4) is None
 
-    def test_resize_matches_numpy_model(self):
+    @pytest.mark.parametrize("name", ["png", "png_adam7", "bmp", "tiff"])
+    def test_resize_matches_numpy_model(self, name):
+        """Lossless kernels: the output decodes to the index-math
+        resample of the decoded input, in the input's own format."""
         import numpy as np
 
-        from unitdb_spark.functions.media_codec import (
-            decode_png_rgb,
-            encode_png_rgb,
-            resize_png_nearest,
-        )
-
+        encode, kernel, decode = RESIZE_KERNELS[name]
         rng = np.random.default_rng(3)
-        arr = rng.integers(0, 256, (13, 17, 3), dtype=np.uint8)
-        b = encode_png_rgb(arr, [(y * 2) % 5 for y in range(13)])
-        out = decode_png_rgb(resize_png_nearest(b, 8, 6))
+        b = encode(rng.integers(0, 256, (13, 17, 3), dtype=np.uint8))
+        out = kernel(b, 8, 6)
         xs = (np.arange(8) * 17) // 8
         ys = (np.arange(6) * 13) // 6
-        assert (out == arr[np.ix_(ys, xs)]).all()
+        assert (decode(out) == decode(b)[np.ix_(ys, xs)]).all()
+        assert out[:2] == b[:2]  # same container (a TIFF keeps "MM")
+        if name == "png_adam7":  # re-encoded through the Adam7 writer
+            assert mc.decode_png_rgb(out) is None
 
 
 class TestGifLzw:
@@ -582,27 +634,21 @@ class TestJpegBaseline:
         sub[idx + 11] = 0x33
         assert decode_jpeg_rgb(bytes(sub)) is None
 
-    def test_resize_to_png_matches_index_math(self):
+    @pytest.mark.parametrize("name", ["jpeg", "jpeg_prog"])
+    def test_resize_to_png_matches_index_math(self, name):
+        """The lossless PNG output is the index-math resample of the
+        decoded JPEG input (40x24 -> 7x5: no integer scale factor, so
+        every index rounds)."""
         import numpy as np
 
-        from unitdb_spark.functions.media_codec import (
-            _ycbcr_to_rgb_int,
-            decode_png_rgb,
-            encode_jpeg_baseline,
-            resize_jpeg_nearest_png,
-        )
-
-        arr = self._block_constant(3, 3, seed=4)
-        png = resize_jpeg_nearest_png(encode_jpeg_baseline(arr, quant=8), 8, 6)
-        got = decode_png_rgb(png)
-        assert got is not None and got.shape == (6, 8, 3)
-        exp = np.zeros_like(arr)
-        for y in range(arr.shape[0]):
-            for x in range(arr.shape[1]):
-                exp[y, x] = _ycbcr_to_rgb_int(*[int(v) for v in arr[y, x]])
-        xs = (np.arange(8) * arr.shape[1]) // 8
-        ys = (np.arange(6) * arr.shape[0]) // 6
-        assert np.array_equal(got, exp[np.ix_(ys, xs)])
+        encode, kernel, decode = RESIZE_KERNELS[name]
+        rng = np.random.default_rng(4)
+        b = encode(rng.integers(0, 256, (24, 40, 3), dtype=np.uint8))
+        got = decode(kernel(b, 7, 5))
+        assert got is not None and got.shape == (5, 7, 3)
+        xs = (np.arange(7) * 40) // 7
+        ys = (np.arange(5) * 24) // 5
+        assert np.array_equal(got, mc.decode_jpeg_any_rgb(b)[np.ix_(ys, xs)])
 
     def test_zigzag_is_the_standard_table(self):
         from unitdb_spark.functions.media_codec import _ZIGZAG

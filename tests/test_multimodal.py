@@ -215,11 +215,14 @@ class TestRealPixelKernels:
     def test_resize_matches_numpy_model(self, bmp_media):
         import numpy as np
 
-        from unitdb_spark.functions.media_codec import decode_bmp24
-        from unitdb_spark.functions.multimodal import resize_bmp_images
+        from unitdb_spark.functions.media_codec import (
+            decode_bmp24,
+            resize_bmp24_nearest,
+        )
+        from unitdb_spark.functions.multimodal import resize_blobs
 
         src = {r["id"]: bytes(r["blob"]) for r in bmp_media.collect()}
-        out = resize_bmp_images(bmp_media, 8, 6).collect()
+        out = resize_blobs(bmp_media, resize_bmp24_nearest, 8, 6).collect()
         assert len(out) == len(src)
         for r in out:
             a = decode_bmp24(src[r["id"]])
@@ -230,12 +233,14 @@ class TestRealPixelKernels:
             assert (got == want).all()
 
     def test_resize_null_for_non_bmp(self, spark):
-        from unitdb_spark.functions.multimodal import resize_bmp_images
+        from unitdb_spark.functions.media_codec import resize_bmp24_nearest
+        from unitdb_spark.functions.multimodal import resize_blobs
 
         df = spark.createDataFrame(
             [(1, bytearray(b"not a bmp")), (2, None)], "id long, blob binary"
         )
-        rows = {r["id"]: r["blob"] for r in resize_bmp_images(df, 4, 4).collect()}
+        out = resize_blobs(df, resize_bmp24_nearest, 4, 4)
+        rows = {r["id"]: r["blob"] for r in out.collect()}
         assert rows[1] is None and rows[2] is None
 
     def test_pixel_stats_catch_orientation(self, spark):
@@ -243,8 +248,8 @@ class TestRealPixelKernels:
         array (the classic bottom-up BMP decode bug) must change it."""
         import numpy as np
 
-        from unitdb_spark.functions.media_codec import encode_bmp24
-        from unitdb_spark.functions.multimodal import bmp_pixel_stats
+        from unitdb_spark.functions.media_codec import decode_bmp24, encode_bmp24
+        from unitdb_spark.functions.multimodal import pixel_stats
 
         a = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
         df = spark.createDataFrame(
@@ -252,7 +257,7 @@ class TestRealPixelKernels:
              (2, bytearray(encode_bmp24(a[::-1])))],
             "id long, blob binary",
         )
-        rows = {r["id"]: r for r in bmp_pixel_stats(df).collect()}
+        rows = {r["id"]: r for r in pixel_stats(df, decode_bmp24).collect()}
         assert rows[1]["px_sum"] == rows[2]["px_sum"]  # same bytes
         assert rows[1]["px_wsum"] != rows[2]["px_wsum"]  # different order
         flat = a.reshape(-1).astype(np.int64)
@@ -389,11 +394,14 @@ class TestPngKernel:
     def test_resize_matches_numpy_model(self, png_media):
         import numpy as np
 
-        from unitdb_spark.functions.media_codec import decode_png_rgb
-        from unitdb_spark.functions.multimodal import resize_png_images
+        from unitdb_spark.functions.media_codec import (
+            decode_png_rgb,
+            resize_png_nearest,
+        )
+        from unitdb_spark.functions.multimodal import resize_blobs
 
         src = {r["id"]: bytes(r["blob"]) for r in png_media.collect()}
-        out = resize_png_images(png_media, 8, 6).collect()
+        out = resize_blobs(png_media, resize_png_nearest, 8, 6).collect()
         assert len(out) == len(src)
         for r in out:
             a = decode_png_rgb(src[r["id"]])
@@ -404,19 +412,21 @@ class TestPngKernel:
             assert (got == want).all()
 
     def test_resize_null_for_non_png(self, spark):
-        from unitdb_spark.functions.multimodal import resize_png_images
+        from unitdb_spark.functions.media_codec import resize_png_nearest
+        from unitdb_spark.functions.multimodal import resize_blobs
 
         df = spark.createDataFrame(
             [(1, bytearray(b"not a png")), (2, None)], "id long, blob binary"
         )
-        rows = {r["id"]: r["blob"] for r in resize_png_images(df, 4, 4).collect()}
+        out = resize_blobs(df, resize_png_nearest, 4, 4)
+        rows = {r["id"]: r["blob"] for r in out.collect()}
         assert rows[1] is None and rows[2] is None
 
     def test_pixel_stats_catch_orientation(self, spark):
         import numpy as np
 
-        from unitdb_spark.functions.media_codec import encode_png_rgb
-        from unitdb_spark.functions.multimodal import png_pixel_stats
+        from unitdb_spark.functions.media_codec import decode_png_rgb, encode_png_rgb
+        from unitdb_spark.functions.multimodal import pixel_stats
 
         a = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
         df = spark.createDataFrame(
@@ -424,7 +434,7 @@ class TestPngKernel:
              (2, bytearray(encode_png_rgb(a[::-1])))],
             "id long, blob binary",
         )
-        rows = {r["id"]: r for r in png_pixel_stats(df).collect()}
+        rows = {r["id"]: r for r in pixel_stats(df, decode_png_rgb).collect()}
         assert rows[1]["px_sum"] == rows[2]["px_sum"]
         assert rows[1]["px_wsum"] != rows[2]["px_wsum"]
         flat = a.reshape(-1).astype(np.int64)
@@ -455,10 +465,14 @@ class TestMixedDispatch:
         """The dispatching kernel must produce EXACTLY what each
         per-format pipeline produces — same blobs, same stats — plus
         the honest-failure NULL row for unclaimed bytes."""
+        from unitdb_spark.functions.media_codec import (
+            decode_bmp24,
+            resize_bmp24_nearest,
+        )
         from unitdb_spark.functions.multimodal import (
-            bmp_pixel_stats,
             mixed_pixel_stats,
-            resize_bmp_images,
+            pixel_stats,
+            resize_blobs,
             resize_mixed_images,
             synthetic_bmp_media,
             synthetic_gif_media,
@@ -491,8 +505,8 @@ class TestMixedDispatch:
         bmp_only = synthetic_bmp_media(docs.filter("doc_id % 4 = 0"))
         ded = {
             r["id"]: r
-            for r in bmp_pixel_stats(
-                resize_bmp_images(bmp_only, 8, 6)
+            for r in pixel_stats(
+                resize_blobs(bmp_only, resize_bmp24_nearest, 8, 6), decode_bmp24
             ).collect()
         }
         for i in (0, 4):
@@ -521,11 +535,9 @@ class TestTiffKernel:
         from unitdb_spark.functions.media_codec import (
             decode_tiff_rgb,
             encode_tiff_rgb,
+            resize_tiff_nearest,
         )
-        from unitdb_spark.functions.multimodal import (
-            resize_tiff_images,
-            tiff_pixel_stats,
-        )
+        from unitdb_spark.functions.multimodal import pixel_stats, resize_blobs
 
         a = np.arange(6 * 4 * 3, dtype=np.uint8).reshape(6, 4, 3)
         df = spark.createDataFrame(
@@ -538,7 +550,9 @@ class TestTiffKernel:
         )
         out = {
             r["id"]: r
-            for r in tiff_pixel_stats(resize_tiff_images(df, 4, 6)).collect()
+            for r in pixel_stats(
+                resize_blobs(df, resize_tiff_nearest, 4, 6), decode_tiff_rgb
+            ).collect()
         }
         # identical pixels in, identical stats out regardless of the
         # input byte order (4x6 from 4x6-shaped source = identity)

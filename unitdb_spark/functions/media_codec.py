@@ -6,14 +6,12 @@ metadata a training-data pipeline needs (dimensions, frame counts,
 sample rate, duration) parsed from the CONTAINER HEADERS of real
 formats — PNG, JPEG, GIF, WAV, MP4, BMP, TIFF (both byte orders),
 MP3 (ID3v2 skip + CBR frame walk) — with no external decode library.
-Pixel/sample decoding of COMPRESSED formats (which genuinely needs
-PIL/ffmpeg) stays behind the clearly-marked stubs in
-functions.multimodal. Uncompressed containers need only ``struct``:
-this module also carries REAL pixel/sample codecs for them —
-24-bit BMP pixel arrays (encode_bmp24/decode_bmp24, bottom-up rows,
-4-byte row padding, BGR order) and 16-bit PCM WAV samples
-(decode_wav_pcm16) — which back functions.multimodal's real resize
-and audio-feature kernels.
+It also carries REAL pixel/sample codecs: an encode/decode pair per
+image format (BMP, PNG sequential and Adam7, GIF LZW, baseline and
+progressive JPEG, TIFF) whose ``resize_*_nearest`` kernel is decode →
+`resample_nearest` → encode, plus PCM16 WAV and FLAC samples — which
+back functions.multimodal's resize, pixel-statistics and audio-feature
+pipelines. Only MP4 video frames stay out of scope.
 
 Two halves, designed to invert each other:
 
@@ -582,21 +580,28 @@ def decode_bmp24(b: bytes):
     return rows.copy()
 
 
-def resize_bmp24_nearest(b: bytes, width: int, height: int) -> bytes | None:
-    """REAL nearest-neighbor resample of a 24-bit BMP, re-encoded as a
-    24-bit BMP. Source pixel for output (X, Y) is
-    (floor(X·sw/width), floor(Y·sh/height)) — pure integer index math,
-    so an SQL oracle can predict every output pixel. None for blobs
-    decode_bmp24 doesn't claim."""
+def resample_nearest(src, width: int, height: int):
+    """The nearest-neighbor resample every image kernel shares: output
+    pixel (X, Y) is source pixel (floor(X·sw/width), floor(Y·sh/height))
+    — pure integer index math, so an SQL oracle can predict every
+    output pixel. Works on any (h, w, ...) array (GIF resamples its
+    index plane). None when ``src`` is None (the decoder did not claim
+    the blob) or a target dimension is not positive — the NULL-blob
+    honest-failure contract of the ``resize_*_nearest`` kernels."""
     import numpy as np
 
-    src = decode_bmp24(b)
-    if src is None:
+    if src is None or width <= 0 or height <= 0:
         return None
-    sh, sw, _ = src.shape
+    sh, sw = src.shape[:2]
     xs = (np.arange(width) * sw) // width
     ys = (np.arange(height) * sh) // height
-    return encode_bmp24(src[np.ix_(ys, xs)])
+    return src[np.ix_(ys, xs)]
+
+
+def resize_bmp24_nearest(b: bytes, width: int, height: int) -> bytes | None:
+    """24-bit BMP decode → `resample_nearest` → 24-bit BMP encode."""
+    out = resample_nearest(decode_bmp24(b), width, height)
+    return None if out is None else encode_bmp24(out)
 
 
 def decode_wav_pcm16(b: bytes):
@@ -907,37 +912,19 @@ def decode_png_rgb_any(b: bytes):
 
 
 def resize_png_adam7_nearest(b: bytes, width: int, height: int) -> bytes | None:
-    """REAL nearest-neighbor resample of an 8-bit truecolor PNG
-    (either interlace method), RE-ENCODED AS ADAM7 — so a decode of
-    the output exercises the interlaced writer and reader both. Same
-    integer index math as `resize_png_nearest`."""
-    import numpy as np
-
-    src = decode_png_rgb_any(b)
-    if src is None:
-        return None
-    sh, sw, _ = src.shape
-    xs = (np.arange(width) * sw) // width
-    ys = (np.arange(height) * sh) // height
-    return encode_png_rgb_adam7(src[np.ix_(ys, xs)])
+    """8-bit truecolor PNG decode (either interlace method) →
+    `resample_nearest` → RE-ENCODE AS ADAM7, so a decode of the output
+    exercises the interlaced writer and reader both."""
+    out = resample_nearest(decode_png_rgb_any(b), width, height)
+    return None if out is None else encode_png_rgb_adam7(out)
 
 
 def resize_png_nearest(b: bytes, width: int, height: int) -> bytes | None:
-    """REAL nearest-neighbor resample of an 8-bit truecolor PNG,
-    re-encoded as a PNG (filter type 0 rows — the content, not the
-    filter choice, is the contract). Source pixel for output (X, Y) is
-    (floor(X·sw/width), floor(Y·sh/height)) — the same integer index
-    math as the BMP kernel, so an SQL oracle predicts every pixel.
-    None for blobs decode_png_rgb doesn't claim."""
-    import numpy as np
-
-    src = decode_png_rgb(b)
-    if src is None:
-        return None
-    sh, sw, _ = src.shape
-    xs = (np.arange(width) * sw) // width
-    ys = (np.arange(height) * sh) // height
-    return encode_png_rgb(src[np.ix_(ys, xs)])
+    """Sequential 8-bit truecolor PNG decode → `resample_nearest` →
+    PNG encode (filter type 0 rows — the content, not the filter
+    choice, is the contract)."""
+    out = resample_nearest(decode_png_rgb(b), width, height)
+    return None if out is None else encode_png_rgb(out)
 
 
 # ------------------------------------------------- GIF LZW pixel kernel
@@ -1279,22 +1266,14 @@ def decode_gif_rgb(b: bytes):
 
 
 def resize_gif_nearest(b: bytes, width: int, height: int) -> bytes | None:
-    """REAL nearest-neighbor resample of a GIF in INDEX space (the
-    palette carries over untouched), re-encoded through the real LZW
-    encoder. Source pixel for output (X, Y) is (X·sw//width,
-    Y·sh//height) — the same integer index math as the PNG/BMP
-    kernels, so an SQL oracle predicts every output pixel."""
-    import numpy as np
-
+    """GIF decode → `resample_nearest` in INDEX space (the palette
+    carries over untouched) → the real LZW encoder."""
     got = decode_gif_indexed(b)
-    if got is None or width <= 0 or height <= 0:
+    if got is None:
         return None
     idx, pal = got
-    sh, sw = idx.shape
-    xs = (np.arange(width) * sw) // width
-    ys = (np.arange(height) * sh) // height
-    out = idx[np.ix_(ys, xs)]
-    return encode_gif_indexed(out, [tuple(p) for p in pal])
+    out = resample_nearest(idx, width, height)
+    return None if out is None else encode_gif_indexed(out, [tuple(p) for p in pal])
 
 
 # --------------------------------------------------- JPEG pixel codec
@@ -2011,22 +1990,11 @@ def _jpeg_decode_scan(b, pos, sof, qtabs, huff, scan, restart_interval):
 
 
 def resize_jpeg_nearest_png(b: bytes, width: int, height: int) -> bytes | None:
-    """REAL nearest-neighbor resample of a baseline JPEG, re-encoded
-    LOSSLESSLY as an 8-bit truecolor PNG — the honest pipeline shape
-    (a training pipeline never re-JPEGs intermediates; every
-    generation loses). Source pixel for output (X, Y) is
-    (X·sw//width, Y·sh//height), the shared integer index math, so an
-    SQL oracle predicts every output pixel. None for blobs the
-    decoder doesn't claim."""
-    import numpy as np
-
-    arr = decode_jpeg_rgb(b)
-    if arr is None or width <= 0 or height <= 0:
-        return None
-    sh, sw, _ = arr.shape
-    xs = (np.arange(width) * sw) // width
-    ys = (np.arange(height) * sh) // height
-    return encode_png_rgb(arr[np.ix_(ys, xs)])
+    """Baseline JPEG decode → `resample_nearest` → LOSSLESS 8-bit
+    truecolor PNG encode — the honest pipeline shape (a training
+    pipeline never re-JPEGs intermediates; every generation loses)."""
+    out = resample_nearest(decode_jpeg_rgb(b), width, height)
+    return None if out is None else encode_png_rgb(out)
 
 
 def encode_tiff_rgb(arr, little_endian: bool = True) -> bytes:
@@ -2139,21 +2107,11 @@ def decode_tiff_rgb(b: bytes):
 
 
 def resize_tiff_nearest(b: bytes, width: int, height: int) -> bytes | None:
-    """Real nearest-neighbor resize for baseline RGB8 TIFF blobs:
-    decode the strip, integer-index resample (sx = X·sw//W), re-encode
+    """Baseline RGB8 TIFF decode → `resample_nearest` → TIFF encode
     preserving the INPUT's byte order (an MM file stays MM — the
     round-trip must prove the endian path, not normalize it away)."""
-    import numpy as np
-
-    arr = decode_tiff_rgb(b)
-    if arr is None:
-        return None
-    sh, sw = arr.shape[0], arr.shape[1]
-    xs = (np.arange(width) * sw) // width
-    ys = (np.arange(height) * sh) // height
-    return encode_tiff_rgb(
-        arr[ys][:, xs], little_endian=b[:2] == b"II"
-    )
+    out = resample_nearest(decode_tiff_rgb(b), width, height)
+    return None if out is None else encode_tiff_rgb(out, little_endian=b[:2] == b"II")
 
 
 def encode_wav_pcm16(sample_rate: int, samples) -> bytes:
@@ -2846,6 +2804,14 @@ def decode_jpeg_any_rgb(b: bytes):
     if got is not None:
         return got
     return decode_jpeg_progressive_rgb(b)
+
+
+def resize_jpeg_any_nearest_png(b: bytes, width: int, height: int) -> bytes | None:
+    """`resize_jpeg_nearest_png` for progressive (or baseline) blobs:
+    the multi-scan coefficient accumulation runs for real, then the
+    same resample and LOSSLESS PNG encode."""
+    out = resample_nearest(decode_jpeg_any_rgb(b), width, height)
+    return None if out is None else encode_png_rgb(out)
 
 
 # --------------------------- G.711 mu-law ------------------------------

@@ -3,19 +3,21 @@
 Metadata extraction is REAL: container headers (PNG IHDR, JPEG SOF,
 GIF block walk, WAV fmt/data chunks, MP4 box tree) are parsed from the
 raw bytes by ``functions.media_codec`` — stdlib-only, no PIL/ffmpeg.
-Pixel/sample kernels are REAL for everything stdlib can decode:
-24-bit BMP decode → true nearest-neighbor resize → re-encode
-(`resize_bmp_images`), WAV PCM16 sample statistics (`pcm_features`),
-8-bit truecolor PNG — a genuinely COMPRESSED container — via
-stdlib zlib inflate + per-scanline unfilter (`resize_png_images`,
-`png_pixel_stats`), GIF via a real LZW codec, and baseline JPEG via
-a real entropy decoder (Huffman + dequant + IDCT + pinned integer
-YCbCr→RGB: `resize_jpeg_images`, `synthetic_jpeg_media`) — including
-4:2:0 subsampling, restart markers, and PROGRESSIVE (SOF2) streams
-(`synthetic_jpeg_prog_media`/`resize_jpeg_prog_images`: DC+AC
-first/refinement scans, EOB runs, correction bits). Only model
-inference (and codecs genuinely outside a from-scratch scope: MP4
-video frames) remains behind a clearly-marked deterministic stub.
+Pixel/sample kernels are REAL for everything stdlib can decode. Every
+image format is a decode/encode pair in ``media_codec``, and its
+``resize_*_nearest`` kernel runs decode → `resample_nearest` → encode:
+24-bit BMP, 8-bit truecolor PNG — a genuinely COMPRESSED container —
+via stdlib zlib inflate + per-scanline unfilter (sequential or Adam7),
+GIF via a real LZW codec, baseline and PROGRESSIVE (SOF2) JPEG via a
+real entropy decoder (Huffman + dequant + IDCT + pinned integer
+YCbCr→RGB, 4:2:0 subsampling, restart markers, DC+AC first/refinement
+scans), and TIFF in either byte order. Each pipeline shape is written
+once over those pairs: `resize_blobs(df, kernel, w, h)`,
+`pixel_stats(df, decode)`, and the `_fixture` frame behind every
+``synthetic_*_media`` builder. WAV PCM16 sample statistics are
+`pcm_features`. Only model inference (and codecs genuinely outside a
+from-scratch scope: MP4 video frames) remains behind a clearly-marked
+deterministic stub.
 
 Design for 100 TB of media:
 - media rows stay (id, media_type, blob BINARY, meta STRUCT); blobs
@@ -30,11 +32,14 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from unitdb_spark.functions import media_codec as mc
 from unitdb_spark.functions.media_codec import parse_media
+from unitdb_spark.operators.skew import fan_out
 
 MEDIA_META_SCHEMA = (
     "id long, media_type string, container string, n_bytes long, "
@@ -86,7 +91,7 @@ def extract_media_meta(df: DataFrame) -> DataFrame:
 
 
 def _media_ids(documents: DataFrame) -> DataFrame:
-    """doc_id relation for the fixture builders, repartitioned to the
+    """doc_id relation for the fixture builders, fanned out to the
     session's parallelism BEFORE the expensive per-blob kernel: the
     documents table is small enough to arrive as 1-2 parquet splits
     (5.9 MB even at sf1), and without this every per-blob
@@ -94,9 +99,43 @@ def _media_ids(documents: DataFrame) -> DataFrame:
     sweep found media_flac_pcm spending 18 of its 19.8 s at sf1
     single-threaded. Shuffling a bare id column is ~free; the blob
     work then scales with the cluster, which is the property that
-    matters at real media-table sizes."""
-    sc = documents.sparkSession.sparkContext
-    return documents.select("doc_id").repartition(sc.defaultParallelism)
+    matters at real media-table sizes. An input that already has
+    enough splits is left as it is (`skew.fan_out`)."""
+    return fan_out(documents.select("doc_id"))
+
+
+def _fixture(documents: DataFrame, make_blob, media_type="image") -> DataFrame:
+    """(id, media_type, blob) fixture over the documents table: one row
+    per doc_id holding ``make_blob(doc_id)``, built in one Arrow-batched
+    mapInPandas after the `_media_ids` fan-out. ``media_type`` is the
+    rows' media_type, or a function of doc_id for the mixed-container
+    fixtures."""
+    kind = media_type if callable(media_type) else lambda d: media_type
+
+    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = [int(d) for d in pdf["doc_id"]]
+            yield pd.DataFrame(
+                {
+                    "id": pd.array(ids, dtype="int64"),
+                    "media_type": pd.Series([kind(d) for d in ids], dtype=object),
+                    "blob": pd.Series([make_blob(d) for d in ids], dtype=object),
+                }
+            )
+
+    return _media_ids(documents).mapInPandas(
+        _build, "id long, media_type string, blob binary"
+    )
+
+
+def _pixels(w: int, h: int, channels, block: int = 1):
+    """Closed-form (h·block, w·block, c) uint8 image: channel k of cell
+    (x, y) is ``channels(X, Y)[k] % 256`` over the cell index grids X,
+    Y, and every cell is a constant block×block square — the shape
+    every image fixture's pixel formula takes."""
+    X, Y = np.meshgrid(np.arange(w), np.arange(h))
+    arr = (np.stack(channels(X, Y), axis=-1) % 256).astype(np.uint8)
+    return arr.repeat(block, axis=0).repeat(block, axis=1)
 
 
 def synthetic_media(documents: DataFrame) -> DataFrame:
@@ -110,41 +149,23 @@ def synthetic_media(documents: DataFrame) -> DataFrame:
 
     Cycle by doc_id % 5: PNG, JPEG, GIF (animated), WAV, MP4.
     """
-    from unitdb_spark.functions import media_codec as mc
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs, kinds = [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                t = d % 5
-                if t == 0:
-                    blobs.append(mc.build_png(d % 640 + 16, (d // 7) % 480 + 16, d % 64))
-                    kinds.append("image")
-                elif t == 1:
-                    blobs.append(mc.build_jpeg(d % 320 + 16, (d // 5) % 240 + 16, d % 32))
-                    kinds.append("image")
-                elif t == 2:
-                    blobs.append(mc.build_gif(d % 256 + 16, (d // 3) % 128 + 16, d % 4 + 1))
-                    kinds.append("image")
-                elif t == 3:
-                    blobs.append(
-                        mc.build_wav([8000, 16000, 44100][d % 3], d % 4000 + 100)
-                    )
-                    kinds.append("audio")
-                else:
-                    blobs.append(
-                        mc.build_mp4(d % 1280 + 16, (d // 9) % 720 + 16,
-                                     d % 60000 + 500, d % 300 + 1)
-                    )
-                    kinds.append("video")
-            yield pd.DataFrame(
-                {"id": pdf["doc_id"].values, "media_type": kinds, "blob": blobs}
-            )
+    def make_blob(d: int) -> bytes:
+        t = d % 5
+        if t == 0:
+            return mc.build_png(d % 640 + 16, (d // 7) % 480 + 16, d % 64)
+        if t == 1:
+            return mc.build_jpeg(d % 320 + 16, (d // 5) % 240 + 16, d % 32)
+        if t == 2:
+            return mc.build_gif(d % 256 + 16, (d // 3) % 128 + 16, d % 4 + 1)
+        if t == 3:
+            return mc.build_wav([8000, 16000, 44100][d % 3], d % 4000 + 100)
+        return mc.build_mp4(
+            d % 1280 + 16, (d // 9) % 720 + 16, d % 60000 + 500, d % 300 + 1
+        )
 
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
-    )
+    kinds = ("image", "image", "image", "audio", "video")
+    return _fixture(documents, make_blob, lambda d: kinds[d % 5])
 
 
 def synthetic_media_ext(documents: DataFrame) -> DataFrame:
@@ -156,42 +177,30 @@ def synthetic_media_ext(documents: DataFrame) -> DataFrame:
 
     Cycle by doc_id % 5: BMP, TIFF-LE, TIFF-BE, MP3, FLAC.
     """
-    from unitdb_spark.functions import media_codec as mc
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs, kinds = [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                t = d % 5
-                if t == 0:
-                    blobs.append(mc.build_bmp(d % 512 + 8, (d // 5) % 256 + 8,
-                                              d % 200))
-                    kinds.append("image")
-                elif t == 1:
-                    blobs.append(mc.build_tiff(d % 1024 + 8, (d // 3) % 512 + 8,
-                                               little_endian=True))
-                    kinds.append("image")
-                elif t == 2:
-                    blobs.append(mc.build_tiff(d % 300 + 8, (d // 7) % 200 + 8,
-                                               little_endian=False))
-                    kinds.append("image")
-                elif t == 3:
-                    blobs.append(mc.build_mp3([44100, 48000, 32000][d % 3],
-                                              d % 50 + 1, id3_len=d % 100))
-                    kinds.append("audio")
-                else:
-                    blobs.append(mc.build_flac(
-                        [8000, 22050, 44100][d % 3],
-                        d * 997 % 100000 + 1000, frame_len=d % 300,
-                    ))
-                    kinds.append("audio")
-            yield pd.DataFrame(
-                {"id": pdf["doc_id"].values, "media_type": kinds, "blob": blobs}
+    def make_blob(d: int) -> bytes:
+        t = d % 5
+        if t == 0:
+            return mc.build_bmp(d % 512 + 8, (d // 5) % 256 + 8, d % 200)
+        if t == 1:
+            return mc.build_tiff(
+                d % 1024 + 8, (d // 3) % 512 + 8, little_endian=True
             )
+        if t == 2:
+            return mc.build_tiff(
+                d % 300 + 8, (d // 7) % 200 + 8, little_endian=False
+            )
+        if t == 3:
+            return mc.build_mp3(
+                [44100, 48000, 32000][d % 3], d % 50 + 1, id3_len=d % 100
+            )
+        return mc.build_flac(
+            [8000, 22050, 44100][d % 3], d * 997 % 100000 + 1000,
+            frame_len=d % 300,
+        )
 
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
+    return _fixture(
+        documents, make_blob, lambda d: "audio" if d % 5 >= 3 else "image"
     )
 
 
@@ -486,12 +495,12 @@ def documents_as_media(df: DataFrame) -> DataFrame:
 
 # ----------------------------------------- real pixel/sample kernels
 #
-# Uncompressed containers don't need PIL/ffmpeg — these kernels do the
-# actual work on the actual bytes: BMP24 pixel arrays (decode, true
-# nearest-neighbor resample, re-encode) and WAV PCM16 samples (energy,
-# RMS, zero-crossings). The `decode_stub` paths above remain ONLY for
-# compressed formats (JPEG/MP4 pixels genuinely need a decode
-# library).
+# These kernels do the actual work on the actual bytes of every image
+# container (decode, true nearest-neighbor resample, re-encode) and of
+# WAV/FLAC PCM16 samples (energy, RMS, zero-crossings). The
+# `decode_stub` paths above are only the byte-level defaults of
+# `resize_images`/`extract_features`; no image format needs them (JPEG
+# included) — only MP4 video frames would need a decode library.
 
 
 def synthetic_bmp_media(
@@ -514,69 +523,44 @@ def synthetic_bmp_media(
     seed (the average-hash would then match everything to
     everything), while the products make different seeds genuinely
     different images."""
-    from unitdb_spark.functions import media_codec as mc
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make_blob(d: int) -> bytes:
+        if seed_mod is not None:
+            s = d % seed_mod
+            return mc.encode_bmp24(_pixels(16, 16, lambda X, Y: (
+                (s + 1) * (X + 1) * (Y + 3),
+                (s + 2) * (X + 3) * (Y + 1) + 5 * X,
+                (s + 3) * (X + 2) * (Y + 2) + 11 * Y,
+            )))
+        s = d % 251
+        return mc.encode_bmp24(_pixels(d % 24 + 4, (d // 3) % 20 + 4, lambda X, Y: (
+            s + 3 * X + 7 * Y, 2 * s + 5 * X + 11 * Y, 3 * s + X + 13 * Y,
+        )))
 
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if seed_mod is not None:
-                    sw, sh, s = 16, 16, d % seed_mod
-                    X, Y = np.meshgrid(np.arange(sw), np.arange(sh))
-                    arr = np.stack(
-                        [
-                            ((s + 1) * (X + 1) * (Y + 3)) % 256,
-                            ((s + 2) * (X + 3) * (Y + 1) + 5 * X) % 256,
-                            ((s + 3) * (X + 2) * (Y + 2) + 11 * Y) % 256,
-                        ],
-                        axis=-1,
-                    ).astype(np.uint8)
-                    blobs.append(mc.encode_bmp24(arr))
-                    continue
-                sw, sh, s = d % 24 + 4, (d // 3) % 20 + 4, d % 251
-                X, Y = np.meshgrid(np.arange(sw), np.arange(sh))
-                arr = np.stack(
-                    [
-                        (s + 3 * X + 7 * Y) % 256,
-                        (2 * s + 5 * X + 11 * Y) % 256,
-                        (3 * s + X + 13 * Y) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                blobs.append(mc.encode_bmp24(arr))
-            yield pd.DataFrame(
-                {
-                    "id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "blob": blobs,
-                }
-            )
-
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
-    )
+    return _fixture(documents, make_blob)
 
 
-def resize_bmp_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL nearest-neighbor resize for 24-bit BMP blobs: decode the
-    actual pixel array, resample with integer index math
-    (sx = floor(X·sw/W)), re-encode as a valid BMP. Blobs the BMP24
-    decoder doesn't claim (compressed formats, other depths) keep
-    their row with a NULL blob — the honest-failure contract.
+def resize_blobs(df: DataFrame, kernel, width: int, height: int) -> DataFrame:
+    """REAL nearest-neighbor resize of the blob column through a
+    ``media_codec`` kernel ``kernel(blob, width, height)`` — one
+    decode → `resample_nearest` → encode pair per image format:
+    `resize_bmp24_nearest`, `resize_png_nearest`,
+    `resize_png_adam7_nearest` (re-encodes as Adam7),
+    `resize_gif_nearest` (index space, palette kept),
+    `resize_jpeg_nearest_png` / `resize_jpeg_any_nearest_png`
+    (baseline / progressive JPEG, re-encoded LOSSLESSLY as PNG — a real
+    pipeline never re-JPEGs intermediates), `resize_tiff_nearest`
+    (input byte order kept). NULL blobs, blobs the kernel's decoder
+    doesn't claim, and non-positive target dims keep their row with a
+    NULL blob — the honest-failure contract.
 
     Output blob size is bounded by the target dims regardless of input
     size — the fixed-footprint property that matters at 100 TB."""
-    from unitdb_spark.functions.media_codec import resize_bmp24_nearest
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = [
-                resize_bmp24_nearest(bytes(b), width, height)
-                if b is not None
-                else None
+                kernel(bytes(b), width, height) if b is not None else None
                 for b in pdf["blob"]
             ]
             yield pd.DataFrame(
@@ -593,44 +577,48 @@ def resize_bmp_images(df: DataFrame, width: int, height: int) -> DataFrame:
     )
 
 
-def bmp_pixel_stats(df: DataFrame) -> DataFrame:
-    """Integer-exact pixel statistics from REAL BMP24 decode: per
-    image, the dimensions, the plain channel-value sum, and a
-    position-weighted checksum sum(v · p) over the flattened top-down
-    BGR array (p = 1-based position) — order-sensitive, so a flipped,
-    transposed, or channel-swapped decode cannot hash-match. NULL
-    stats for undecodable blobs."""
+def _px_stats(arr) -> tuple:
+    """(width, height, px_sum, px_wsum) of one decoded image: the plain
+    channel-value sum and the position-weighted checksum sum(v · p)
+    over the flattened top-down array (p = 1-based position) —
+    order-sensitive, so a flipped, transposed, or channel-swapped
+    decode cannot hash-match. All None when ``arr`` is None (an
+    undecodable blob)."""
+    if arr is None:
+        return (None,) * 4
+    flat = arr.reshape(-1).astype(np.int64)
+    return (
+        int(arr.shape[1]),
+        int(arr.shape[0]),
+        int(flat.sum()),
+        int((flat * (np.arange(flat.size) + 1)).sum()),
+    )
+
+
+def _px_stats_frame(ids, stats: list[tuple]) -> pd.DataFrame:
+    out = pd.DataFrame(
+        stats, columns=["width", "height", "px_sum", "px_wsum"], dtype=object
+    )
+    out.insert(0, "id", pd.array(ids, dtype="int64"))
+    return out
+
+
+def pixel_stats(df: DataFrame, decode) -> DataFrame:
+    """Integer-exact pixel statistics (`_px_stats`) of every blob as
+    decoded by ``decode``, a REAL ``media_codec`` decoder:
+    `decode_bmp24` (stored BGR order), `decode_png_rgb` (inflate +
+    unfilter), `decode_png_rgb_any` (either interlace method),
+    `decode_gif_rgb` (LZW + palette mapping) or `decode_tiff_rgb`.
+    NULL stats for NULL or undecodable blobs."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from unitdb_spark.functions.media_codec import decode_bmp24
-
         for pdf in batches:
-            rows = []
-            for i, b in zip(pdf["id"].values, pdf["blob"]):
-                arr = decode_bmp24(bytes(b)) if b is not None else None
-                if arr is None:
-                    rows.append((int(i), None, None, None, None))
-                    continue
-                flat = arr.reshape(-1).astype(np.int64)
-                rows.append(
-                    (
-                        int(i),
-                        int(arr.shape[1]),
-                        int(arr.shape[0]),
-                        int(flat.sum()),
-                        int((flat * (np.arange(flat.size) + 1)).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "id": pd.array([r[0] for r in rows], dtype="int64"),
-                    "width": pd.Series([r[1] for r in rows], dtype=object),
-                    "height": pd.Series([r[2] for r in rows], dtype=object),
-                    "px_sum": pd.Series([r[3] for r in rows], dtype=object),
-                    "px_wsum": pd.Series([r[4] for r in rows], dtype=object),
-                }
+            yield _px_stats_frame(
+                pdf["id"].values,
+                [
+                    _px_stats(decode(bytes(b)) if b is not None else None)
+                    for b in pdf["blob"]
+                ],
             )
 
     return df.select("id", "blob").mapInPandas(
@@ -789,22 +777,15 @@ def bmp_ahash_chunks(df: DataFrame, grid: int = 8) -> DataFrame:
     pHashes whose DCT floats are engine-specific."""
 
     def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from unitdb_spark.functions.media_codec import decode_bmp24
-
         weights = 1 << (15 - np.arange(16, dtype=np.int64))
         for pdf in batches:
             rows = []
             for i, blob in zip(pdf["id"].values, pdf["blob"]):
-                arr = decode_bmp24(bytes(blob)) if blob is not None else None
+                arr = mc.decode_bmp24(bytes(blob)) if blob is not None else None
                 if arr is None:
                     rows.append((int(i), None, None, None, None))
                     continue
-                sh, sw, _ = arr.shape
-                xs = (np.arange(grid) * sw) // grid
-                ys = (np.arange(grid) * sh) // grid
-                px = arr[np.ix_(ys, xs)].astype(np.int64)
+                px = mc.resample_nearest(arr, grid, grid).astype(np.int64)
                 gray = px.sum(axis=-1) // 3
                 mean = int(gray.sum()) // (grid * grid)
                 bits = (gray > mean).astype(np.int64).reshape(-1)
@@ -891,6 +872,14 @@ def ahash_pairs(
     )
 
 
+def _png_fixture_pixels(d: int):
+    """(s, image) of the PNG fixtures — see `synthetic_png_media`."""
+    s = d % 241
+    return s, _pixels(d % 21 + 4, (d // 5) % 17 + 4, lambda X, Y: (
+        s + 5 * X + 3 * Y, 2 * s + 7 * X + Y, 3 * s + 2 * X + 11 * Y,
+    ))
+
+
 def synthetic_png_media(documents: DataFrame) -> DataFrame:
     """Real-pixel PNG fixture — the COMPRESSED-container counterpart of
     `synthetic_bmp_media`: every doc becomes a VALID 8-bit truecolor
@@ -902,117 +891,12 @@ def synthetic_png_media(documents: DataFrame) -> DataFrame:
     Each scanline is filtered with type (s + y) % 5, so a corpus
     exercises ALL five PNG filter reconstructions; a hash-match proves
     inflate + unfilter touch the right bytes."""
-    from unitdb_spark.functions import media_codec as mc
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make_blob(d: int) -> bytes:
+        s, arr = _png_fixture_pixels(d)
+        return mc.encode_png_rgb(arr, [(s + y) % 5 for y in range(arr.shape[0])])
 
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                sw, sh, s = d % 21 + 4, (d // 5) % 17 + 4, d % 241
-                X, Y = np.meshgrid(np.arange(sw), np.arange(sh))
-                arr = np.stack(
-                    [
-                        (s + 5 * X + 3 * Y) % 256,
-                        (2 * s + 7 * X + Y) % 256,
-                        (3 * s + 2 * X + 11 * Y) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                filters = [(s + y) % 5 for y in range(sh)]
-                blobs.append(mc.encode_png_rgb(arr, filters))
-            yield pd.DataFrame(
-                {
-                    "id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "blob": blobs,
-                }
-            )
-
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
-    )
-
-
-def resize_png_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL nearest-neighbor resize for 8-bit truecolor PNG blobs:
-    inflate the IDAT, reconstruct every scanline through the five PNG
-    filters, resample the actual pixel array with integer index math
-    (sx = floor(X·sw/W)), re-encode as a valid PNG. Blobs the decoder
-    doesn't claim (palette/alpha/16-bit/interlaced, other containers)
-    keep their row with a NULL blob — the honest-failure contract.
-
-    Output blob size is bounded by the target dims regardless of input
-    size — the fixed-footprint property that matters at 100 TB."""
-    from unitdb_spark.functions.media_codec import resize_png_nearest
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                resize_png_nearest(bytes(b), width, height)
-                if b is not None
-                else None
-                for b in pdf["blob"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].values,
-                    "width": width,
-                    "height": height,
-                    "blob": pd.Series(out, dtype=object),
-                }
-            )
-
-    return df.select("id", "blob").mapInPandas(
-        _resize, "id long, width int, height int, blob binary"
-    )
-
-
-def png_pixel_stats(df: DataFrame) -> DataFrame:
-    """Integer-exact pixel statistics from REAL PNG decode (inflate +
-    unfilter): per image the dimensions, the plain channel-value sum,
-    and the position-weighted checksum sum(v · p) over the flattened
-    top-down RGB array (p = 1-based) — order-sensitive, so a flipped,
-    transposed, or channel-swapped decode cannot hash-match. NULL
-    stats for undecodable blobs."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from unitdb_spark.functions.media_codec import decode_png_rgb
-
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf["id"].values, pdf["blob"]):
-                arr = decode_png_rgb(bytes(b)) if b is not None else None
-                if arr is None:
-                    rows.append((int(i), None, None, None, None))
-                    continue
-                flat = arr.reshape(-1).astype(np.int64)
-                rows.append(
-                    (
-                        int(i),
-                        int(arr.shape[1]),
-                        int(arr.shape[0]),
-                        int(flat.sum()),
-                        int((flat * (np.arange(flat.size) + 1)).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "id": pd.array([r[0] for r in rows], dtype="int64"),
-                    "width": pd.Series([r[1] for r in rows], dtype=object),
-                    "height": pd.Series([r[2] for r in rows], dtype=object),
-                    "px_sum": pd.Series([r[3] for r in rows], dtype=object),
-                    "px_wsum": pd.Series([r[4] for r in rows], dtype=object),
-                }
-            )
-
-    return df.select("id", "blob").mapInPandas(
-        _stats, "id long, width int, height int, px_sum long, px_wsum long"
-    )
+    return _fixture(documents, make_blob)
 
 
 def synthetic_png7_media(documents: DataFrame) -> DataFrame:
@@ -1024,111 +908,13 @@ def synthetic_png7_media(documents: DataFrame) -> DataFrame:
     pixel CONTENT is container-independent, which is the proof trick:
     the non-interlaced oracle matches bitwise iff the Adam7
     reconstruction scatters every pixel to its exact grid position."""
-    from unitdb_spark.functions import media_codec as mc
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make_blob(d: int) -> bytes:
+        s, arr = _png_fixture_pixels(d)
+        n_lines = mc.adam7_scanline_count(arr.shape[1], arr.shape[0])
+        return mc.encode_png_rgb_adam7(arr, [(s + y) % 5 for y in range(n_lines)])
 
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                sw, sh, s = d % 21 + 4, (d // 5) % 17 + 4, d % 241
-                X, Y = np.meshgrid(np.arange(sw), np.arange(sh))
-                arr = np.stack(
-                    [
-                        (s + 5 * X + 3 * Y) % 256,
-                        (2 * s + 7 * X + Y) % 256,
-                        (3 * s + 2 * X + 11 * Y) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                n_lines = mc.adam7_scanline_count(sw, sh)
-                filters = [(s + y) % 5 for y in range(n_lines)]
-                blobs.append(mc.encode_png_rgb_adam7(arr, filters))
-            yield pd.DataFrame(
-                {
-                    "id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "blob": blobs,
-                }
-            )
-
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
-    )
-
-
-def resize_png7_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL nearest-neighbor resize for Adam7-interlaced PNG blobs:
-    de-interlace (seven independently-unfiltered passes scattered back
-    to the grid), resample with integer index math, RE-ENCODE AS
-    ADAM7 — the output blob runs the interlaced writer too. NULL blob
-    for anything the decoder doesn't claim."""
-    from unitdb_spark.functions.media_codec import resize_png_adam7_nearest
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                resize_png_adam7_nearest(bytes(b), width, height)
-                if b is not None
-                else None
-                for b in pdf["blob"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].values,
-                    "width": width,
-                    "height": height,
-                    "blob": pd.Series(out, dtype=object),
-                }
-            )
-
-    return df.select("id", "blob").mapInPandas(
-        _resize, "id long, width int, height int, blob binary"
-    )
-
-
-def png7_pixel_stats(df: DataFrame) -> DataFrame:
-    """`png_pixel_stats` for either interlace method: decode through
-    `decode_png_rgb_any` and reduce to the same order-sensitive
-    integer statistics (channel sum + position-weighted checksum)."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from unitdb_spark.functions.media_codec import decode_png_rgb_any
-
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf["id"].values, pdf["blob"]):
-                arr = decode_png_rgb_any(bytes(b)) if b is not None else None
-                if arr is None:
-                    rows.append((int(i), None, None, None, None))
-                    continue
-                flat = arr.reshape(-1).astype(np.int64)
-                rows.append(
-                    (
-                        int(i),
-                        int(arr.shape[1]),
-                        int(arr.shape[0]),
-                        int(flat.sum()),
-                        int((flat * (np.arange(flat.size) + 1)).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "id": pd.array([r[0] for r in rows], dtype="int64"),
-                    "width": pd.Series([r[1] for r in rows], dtype=object),
-                    "height": pd.Series([r[2] for r in rows], dtype=object),
-                    "px_sum": pd.Series([r[3] for r in rows], dtype=object),
-                    "px_wsum": pd.Series([r[4] for r in rows], dtype=object),
-                }
-            )
-
-    return df.select("id", "blob").mapInPandas(
-        _stats, "id long, width int, height int, px_sum long, px_wsum long"
-    )
+    return _fixture(documents, make_blob)
 
 
 def synthetic_agif_media(documents: DataFrame) -> DataFrame:
@@ -1140,74 +926,44 @@ def synthetic_agif_media(documents: DataFrame) -> DataFrame:
     sh = (d//5) % 11 + 4, nf = d % 7 + 2; palette entry p is RGB
     ((p + s) % 256, (2p + s) % 256, (3p + 2s) % 256). An SQL oracle
     predicts any sampled frame's statistics from doc_id alone."""
-    from unitdb_spark.functions import media_codec as mc
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make_blob(d: int) -> bytes:
+        sw, sh, s, nf = d % 13 + 4, (d // 5) % 11 + 4, d % 241, d % 7 + 2
+        frames = [
+            _pixels(sw, sh, lambda X, Y: (s + 5 * X + 3 * Y + 11 * f,))[..., 0]
+            for f in range(nf)
+        ]
+        pal = [
+            ((p + s) % 256, (2 * p + s) % 256, (3 * p + 2 * s) % 256)
+            for p in range(256)
+        ]
+        return mc.encode_gif_animated(frames, pal)
 
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                sw, sh = d % 13 + 4, (d // 5) % 11 + 4
-                s, nf = d % 241, d % 7 + 2
-                X, Y = np.meshgrid(np.arange(sw), np.arange(sh))
-                frames = [
-                    ((s + 5 * X + 3 * Y + 11 * f) % 256).astype(np.uint8)
-                    for f in range(nf)
-                ]
-                pal = [
-                    ((p + s) % 256, (2 * p + s) % 256, (3 * p + 2 * s) % 256)
-                    for p in range(256)
-                ]
-                blobs.append(mc.encode_gif_animated(frames, pal))
-            yield pd.DataFrame(
-                {
-                    "id": pdf["doc_id"].values,
-                    "media_type": "video",
-                    "blob": blobs,
-                }
-            )
-
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
-    )
+    return _fixture(documents, make_blob, "video")
 
 
 def gif_frame_stats(df: DataFrame, stride: int = 2) -> DataFrame:
     """REAL multi-frame decode + frame sampling — the video-pipeline
     primitive (decode, keep every ``stride``-th frame, reduce): each
     kept frame maps through the global palette to RGB and reduces to
-    the family's order-sensitive integer statistics (channel sum +
-    position-weighted checksum). Blobs outside `decode_gif_frames`'
-    claim produce no rows.
+    the family's order-sensitive integer statistics (`_px_stats`).
+    Blobs outside `decode_gif_frames`' claim produce no rows.
 
     Scale: Arrow-batched mapInPandas; the emitted relation is
     ceil(frames/stride) rows per blob, never pixels.
     """
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from unitdb_spark.functions.media_codec import decode_gif_frames
-
         for pdf in batches:
             rows = []
             for i, b in zip(pdf["id"].values, pdf["blob"]):
-                got = decode_gif_frames(bytes(b)) if b is not None else None
+                got = mc.decode_gif_frames(bytes(b)) if b is not None else None
                 if got is None:
                     continue
                 frames, pal = got
                 for f in range(0, len(frames), stride):
-                    rgb = pal[frames[f]]
-                    flat = rgb.reshape(-1).astype(np.int64)
                     rows.append(
-                        (
-                            int(i), f, len(frames),
-                            int(rgb.shape[1]), int(rgb.shape[0]),
-                            int(flat.sum()),
-                            int((flat * (np.arange(flat.size) + 1)).sum()),
-                        )
+                        (int(i), f, len(frames), *_px_stats(pal[frames[f]]))
                     )
             yield pd.DataFrame(
                 {
@@ -1239,114 +995,28 @@ def synthetic_gif_media(documents: DataFrame) -> DataFrame:
     + 4 — so an SQL oracle can predict any derived pixel statistic.
     A hash-match proves the LZW decode (code-width growth, KwKwK
     chains), palette mapping, and row order are all byte-correct."""
-    from unitdb_spark.functions import media_codec as mc
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make_blob(d: int) -> bytes:
+        s = d % 251
+        idx = _pixels(
+            d % 19 + 4, (d // 7) % 15 + 4, lambda X, Y: (s + 3 * X + 5 * Y,)
+        )[..., 0]
+        pal = [
+            ((s + i) % 256, (2 * s + 3 * i) % 256, (3 * s + 7 * i) % 256)
+            for i in range(256)
+        ]
+        return mc.encode_gif_indexed(idx, pal)
 
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                sw, sh, s = d % 19 + 4, (d // 7) % 15 + 4, d % 251
-                X, Y = np.meshgrid(np.arange(sw), np.arange(sh))
-                idx = ((s + 3 * X + 5 * Y) % 256).astype(np.uint8)
-                pal = [
-                    ((s + i) % 256, (2 * s + 3 * i) % 256, (3 * s + 7 * i) % 256)
-                    for i in range(256)
-                ]
-                blobs.append(mc.encode_gif_indexed(idx, pal))
-            yield pd.DataFrame(
-                {
-                    "id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "blob": blobs,
-                }
-            )
-
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
-    )
+    return _fixture(documents, make_blob)
 
 
-def resize_gif_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL nearest-neighbor resize for single-image GIF blobs: LZW
-    decode, resample the index array with integer index math
-    (sx = floor(X·sw/W)) — the palette rides along untouched — and
-    re-encode through the real LZW encoder. Blobs the decoder doesn't
-    claim (local color tables, interlace, non-256 GCT, malformed LZW)
-    keep their row with a NULL blob — the honest-failure contract.
-
-    Output blob size is bounded by the target dims regardless of
-    input size — the fixed-footprint property that matters at 100 TB."""
-    from unitdb_spark.functions.media_codec import resize_gif_nearest
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                resize_gif_nearest(bytes(b), width, height)
-                if b is not None
-                else None
-                for b in pdf["blob"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].values,
-                    "width": width,
-                    "height": height,
-                    "blob": pd.Series(out, dtype=object),
-                }
-            )
-
-    return df.select("id", "blob").mapInPandas(
-        _resize, "id long, width int, height int, blob binary"
-    )
-
-
-def gif_pixel_stats(df: DataFrame) -> DataFrame:
-    """Integer-exact pixel statistics from REAL GIF decode (LZW +
-    palette mapping): per image the dimensions, the plain RGB
-    channel-value sum, and the position-weighted checksum sum(v · p)
-    over the flattened top-down RGB array (p = 1-based) —
-    order-sensitive, so a flipped, transposed, palette-shifted, or
-    mis-decoded stream cannot hash-match. NULL stats for undecodable
-    blobs."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from unitdb_spark.functions.media_codec import decode_gif_rgb
-
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf["id"].values, pdf["blob"]):
-                arr = decode_gif_rgb(bytes(b)) if b is not None else None
-                if arr is None:
-                    rows.append((int(i), None, None, None, None))
-                    continue
-                flat = arr.reshape(-1).astype(np.int64)
-                rows.append(
-                    (
-                        int(i),
-                        int(arr.shape[1]),
-                        int(arr.shape[0]),
-                        int(flat.sum()),
-                        int((flat * (np.arange(flat.size) + 1)).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "id": pd.array([r[0] for r in rows], dtype="int64"),
-                    "width": pd.Series([r[1] for r in rows], dtype=object),
-                    "height": pd.Series([r[2] for r in rows], dtype=object),
-                    "px_sum": pd.Series([r[3] for r in rows], dtype=object),
-                    "px_wsum": pd.Series([r[4] for r in rows], dtype=object),
-                }
-            )
-
-    return df.select("id", "blob").mapInPandas(
-        _stats, "id long, width int, height int, px_sum long, px_wsum long"
-    )
+def jpeg_fixture_pixels(d: int):
+    """The JPEG fixtures' image for doc ``d`` — see
+    `synthetic_jpeg_media`."""
+    s = d % 241
+    return _pixels(d % 3 + 2, (d // 5) % 3 + 2, lambda BX, BY: (
+        s + 3 * BX + 5 * BY, 2 * s + 7 * BX + BY, 3 * s + BX + 11 * BY,
+    ), block=8)
 
 
 def synthetic_jpeg_media(documents: DataFrame) -> DataFrame:
@@ -1362,77 +1032,9 @@ def synthetic_jpeg_media(documents: DataFrame) -> DataFrame:
     ((s + 3bx + 5by) % 256, (2s + 7bx + by) % 256,
     (3s + bx + 11by) % 256) with s = doc_id % 241,
     sw = 8·(doc_id % 3 + 2), sh = 8·((doc_id//5) % 3 + 2)."""
-    from unitdb_spark.functions import media_codec as mc
-
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw, bh, s = d % 3 + 2, (d // 5) % 3 + 2, d % 241
-                BX, BY = np.meshgrid(np.arange(bw), np.arange(bh))
-                blocks = np.stack(
-                    [
-                        (s + 3 * BX + 5 * BY) % 256,
-                        (2 * s + 7 * BX + BY) % 256,
-                        (3 * s + BX + 11 * BY) % 256,
-                    ],
-                    axis=-1,
-                )
-                arr = np.repeat(
-                    np.repeat(blocks, 8, axis=0), 8, axis=1
-                ).astype(np.uint8)
-                blobs.append(mc.encode_jpeg_baseline(arr, quant=8))
-            yield pd.DataFrame(
-                {
-                    "id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "blob": blobs,
-                }
-            )
-
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
-    )
-
-
-def resize_jpeg_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL nearest-neighbor resize for baseline JPEG blobs: full
-    entropy decode (Huffman, dequant, de-zigzag, IDCT, level shift,
-    pinned integer YCbCr->RGB), integer-index resample, and LOSSLESS
-    re-encode as an 8-bit truecolor PNG — a real pipeline never
-    re-JPEGs intermediates (every generation loses), so the output
-    container is deliberately PNG and composes with
-    `png_pixel_stats`. Blobs the decoder doesn't claim (progressive,
-    subsampled, 12-bit, truncated) keep their row with a NULL blob —
-    the honest-failure contract.
-
-    Output blob size is bounded by the target dims regardless of
-    input size — the fixed-footprint property that matters at
-    100 TB."""
-    from unitdb_spark.functions.media_codec import resize_jpeg_nearest_png
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                resize_jpeg_nearest_png(bytes(b), width, height)
-                if b is not None
-                else None
-                for b in pdf["blob"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].values,
-                    "width": width,
-                    "height": height,
-                    "blob": pd.Series(out, dtype=object),
-                }
-            )
-
-    return df.select("id", "blob").mapInPandas(
-        _resize, "id long, width int, height int, blob binary"
+    return _fixture(
+        documents,
+        lambda d: mc.encode_jpeg_baseline(jpeg_fixture_pixels(d), quant=8),
     )
 
 
@@ -1445,79 +1047,9 @@ def synthetic_jpeg_prog_media(documents: DataFrame) -> DataFrame:
     bitwise iff every progressive scan reconstructs its exact
     coefficients — the Adam7-PNG proof trick, applied to entropy
     coding."""
-    from unitdb_spark.functions import media_codec as mc
-
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw, bh, s = d % 3 + 2, (d // 5) % 3 + 2, d % 241
-                BX, BY = np.meshgrid(np.arange(bw), np.arange(bh))
-                blocks = np.stack(
-                    [
-                        (s + 3 * BX + 5 * BY) % 256,
-                        (2 * s + 7 * BX + BY) % 256,
-                        (3 * s + BX + 11 * BY) % 256,
-                    ],
-                    axis=-1,
-                )
-                arr = np.repeat(
-                    np.repeat(blocks, 8, axis=0), 8, axis=1
-                ).astype(np.uint8)
-                blobs.append(mc.encode_jpeg_progressive(arr, quant=8))
-            yield pd.DataFrame(
-                {
-                    "id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "blob": blobs,
-                }
-            )
-
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
-    )
-
-
-def resize_jpeg_prog_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """`resize_jpeg_images` for progressive (or baseline) blobs: the
-    multi-scan coefficient accumulation runs for real, then the same
-    integer-index resample and LOSSLESS PNG re-encode."""
-    import numpy as np
-
-    from unitdb_spark.functions.media_codec import (
-        decode_jpeg_any_rgb,
-        encode_png_rgb,
-    )
-
-    def _one(b):
-        arr = decode_jpeg_any_rgb(b)
-        if arr is None or width <= 0 or height <= 0:
-            return None
-        sh, sw, _ = arr.shape
-        xs = (np.arange(width) * sw) // width
-        ys = (np.arange(height) * sh) // height
-        return encode_png_rgb(arr[np.ix_(ys, xs)])
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                _one(bytes(b)) if b is not None else None
-                for b in pdf["blob"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].values,
-                    "width": width,
-                    "height": height,
-                    "blob": pd.Series(out, dtype=object),
-                }
-            )
-
-    return df.select("id", "blob").mapInPandas(
-        _resize, "id long, width int, height int, blob binary"
+    return _fixture(
+        documents,
+        lambda d: mc.encode_jpeg_progressive(jpeg_fixture_pixels(d), quant=8),
     )
 
 
@@ -1532,42 +1064,15 @@ def synthetic_jpeg420_media(documents: DataFrame) -> DataFrame:
     ((s + 7mx + 3my) % 256, (2s + mx + 5my) % 256,
     (3s + 4mx + my) % 256) with s = doc_id % 241,
     sw = 16·(doc_id % 2 + 1), sh = 16·((doc_id//7) % 2 + 1)."""
-    from unitdb_spark.functions import media_codec as mc
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make_blob(d: int) -> bytes:
+        s = d % 241
+        arr = _pixels(d % 2 + 1, (d // 7) % 2 + 1, lambda MX, MY: (
+            s + 7 * MX + 3 * MY, 2 * s + MX + 5 * MY, 3 * s + 4 * MX + MY,
+        ), block=16)
+        return mc.encode_jpeg_baseline(arr, quant=8, subsample="420")
 
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                mw, mh, s = d % 2 + 1, (d // 7) % 2 + 1, d % 241
-                MX, MY = np.meshgrid(np.arange(mw), np.arange(mh))
-                macros = np.stack(
-                    [
-                        (s + 7 * MX + 3 * MY) % 256,
-                        (2 * s + MX + 5 * MY) % 256,
-                        (3 * s + 4 * MX + MY) % 256,
-                    ],
-                    axis=-1,
-                )
-                arr = np.repeat(
-                    np.repeat(macros, 16, axis=0), 16, axis=1
-                ).astype(np.uint8)
-                blobs.append(
-                    mc.encode_jpeg_baseline(arr, quant=8, subsample="420")
-                )
-            yield pd.DataFrame(
-                {
-                    "id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "blob": blobs,
-                }
-            )
-
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
-    )
+    return _fixture(documents, make_blob)
 
 
 def sniff_container(b: bytes) -> str | None:
@@ -1598,7 +1103,7 @@ def resize_mixed_images(df: DataFrame, width: int, height: int) -> DataFrame:
     per-format shuffle; at 100 TB a mixed media table is resized in
     one stage whose output size is bounded by the target dims.
 
-    JPEG inputs re-encode LOSSLESSLY as PNG (the resize_jpeg_images
+    JPEG inputs re-encode LOSSLESSLY as PNG (the resize_jpeg_nearest_png
     contract: a real pipeline never re-JPEGs intermediates), so the
     output blob's container can differ from the input's — the emitted
     `container` column records the INPUT format. Unclaimed blobs keep
@@ -1649,61 +1154,28 @@ def resize_mixed_images(df: DataFrame, width: int, height: int) -> DataFrame:
 def mixed_pixel_stats(df: DataFrame) -> DataFrame:
     """Integer-exact pixel statistics for a MIXED resized column:
     sniff the (resized) blob and decode with the matching kernel
-    (BMP24 / PNG / GIF — a resized JPEG is a PNG blob by the
+    (BMP24 / PNG / GIF / TIFF — a resized JPEG is a PNG blob by the
     resize_mixed_images contract), then the same order-sensitive
-    channel sum + position-weighted checksum as the per-format stats
-    functions. The input's `container` column passes through so the
-    report still says what each image WAS. NULL stats for
-    undecodable blobs."""
+    `_px_stats` as `pixel_stats`. The input's `container` column
+    passes through so the report still says what each image WAS.
+    NULL stats for undecodable blobs."""
+    decoders = {
+        "bmp": mc.decode_bmp24,
+        "png": mc.decode_png_rgb,
+        "gif": mc.decode_gif_rgb,
+        "tiff": mc.decode_tiff_rgb,
+    }
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from unitdb_spark.functions.media_codec import (
-            decode_bmp24,
-            decode_gif_rgb,
-            decode_png_rgb,
-            decode_tiff_rgb,
-        )
-
-        decoders = {
-            "bmp": decode_bmp24,
-            "png": decode_png_rgb,
-            "gif": decode_gif_rgb,
-            "tiff": decode_tiff_rgb,
-        }
         for pdf in batches:
-            rows = []
-            for i, c, b in zip(
-                pdf["id"].values, pdf["container"], pdf["blob"]
-            ):
+            stats = []
+            for b in pdf["blob"]:
                 bb = bytes(b) if b is not None else b""
                 dec = decoders.get(sniff_container(bb))
-                arr = dec(bb) if dec else None
-                if arr is None:
-                    rows.append((int(i), c, None, None, None, None))
-                    continue
-                flat = arr.reshape(-1).astype(np.int64)
-                rows.append(
-                    (
-                        int(i),
-                        c,
-                        int(arr.shape[1]),
-                        int(arr.shape[0]),
-                        int(flat.sum()),
-                        int((flat * (np.arange(flat.size) + 1)).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "id": pd.array([r[0] for r in rows], dtype="int64"),
-                    "container": pd.Series([r[1] for r in rows], dtype=object),
-                    "width": pd.Series([r[2] for r in rows], dtype=object),
-                    "height": pd.Series([r[3] for r in rows], dtype=object),
-                    "px_sum": pd.Series([r[4] for r in rows], dtype=object),
-                    "px_wsum": pd.Series([r[5] for r in rows], dtype=object),
-                }
-            )
+                stats.append(_px_stats(dec(bb) if dec else None))
+            out = _px_stats_frame(pdf["id"].values, stats)
+            out.insert(1, "container", pd.Series(pdf["container"].values, dtype=object))
+            yield out
 
     return df.select("id", "container", "blob").mapInPandas(
         _stats,
@@ -1721,111 +1193,15 @@ def synthetic_tiff_media(documents: DataFrame) -> DataFrame:
     — and the BYTE ORDER alternates by doc parity (even = II, odd =
     MM), so the decoder's endian handling is part of every oracle
     hash, not just a unit test."""
-    from unitdb_spark.functions import media_codec as mc
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make_blob(d: int) -> bytes:
+        s = d % 239
+        arr = _pixels(d % 22 + 4, (d // 4) % 18 + 4, lambda X, Y: (
+            s + 4 * X + 9 * Y, 2 * s + 6 * X + 5 * Y, 3 * s + 2 * X + 7 * Y,
+        ))
+        return mc.encode_tiff_rgb(arr, little_endian=d % 2 == 0)
 
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                sw, sh, s = d % 22 + 4, (d // 4) % 18 + 4, d % 239
-                X, Y = np.meshgrid(np.arange(sw), np.arange(sh))
-                arr = np.stack(
-                    [
-                        (s + 4 * X + 9 * Y) % 256,
-                        (2 * s + 6 * X + 5 * Y) % 256,
-                        (3 * s + 2 * X + 7 * Y) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                blobs.append(
-                    mc.encode_tiff_rgb(arr, little_endian=d % 2 == 0)
-                )
-            yield pd.DataFrame(
-                {
-                    "id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "blob": blobs,
-                }
-            )
-
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
-    )
-
-
-def resize_tiff_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL nearest-neighbor resize for baseline RGB8 TIFF blobs —
-    the uncompressed-but-endian-rich 6th container kernel (decode the
-    strip, integer-index resample, re-encode preserving the input's
-    byte order). Unclaimed blobs keep their row with a NULL blob."""
-    from unitdb_spark.functions.media_codec import resize_tiff_nearest
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                resize_tiff_nearest(bytes(b), width, height)
-                if b is not None
-                else None
-                for b in pdf["blob"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].values,
-                    "width": width,
-                    "height": height,
-                    "blob": pd.Series(out, dtype=object),
-                }
-            )
-
-    return df.select("id", "blob").mapInPandas(
-        _resize, "id long, width int, height int, blob binary"
-    )
-
-
-def tiff_pixel_stats(df: DataFrame) -> DataFrame:
-    """Integer-exact pixel statistics from REAL TIFF decode: the
-    shared order-sensitive channel sum + position-weighted checksum
-    over the flattened top-down RGB array. NULL stats for
-    undecodable blobs."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from unitdb_spark.functions.media_codec import decode_tiff_rgb
-
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf["id"].values, pdf["blob"]):
-                arr = decode_tiff_rgb(bytes(b)) if b is not None else None
-                if arr is None:
-                    rows.append((int(i), None, None, None, None))
-                    continue
-                flat = arr.reshape(-1).astype(np.int64)
-                rows.append(
-                    (
-                        int(i),
-                        int(arr.shape[1]),
-                        int(arr.shape[0]),
-                        int(flat.sum()),
-                        int((flat * (np.arange(flat.size) + 1)).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "id": pd.array([r[0] for r in rows], dtype="int64"),
-                    "width": pd.Series([r[1] for r in rows], dtype=object),
-                    "height": pd.Series([r[2] for r in rows], dtype=object),
-                    "px_sum": pd.Series([r[3] for r in rows], dtype=object),
-                    "px_wsum": pd.Series([r[4] for r in rows], dtype=object),
-                }
-            )
-
-    return df.select("id", "blob").mapInPandas(
-        _stats, "id long, width int, height int, px_sum long, px_wsum long"
-    )
+    return _fixture(documents, make_blob)
 
 
 def decimate_wav(df: DataFrame, factor: int) -> DataFrame:
@@ -1924,34 +1300,15 @@ def synthetic_flac_media(documents: DataFrame) -> DataFrame:
     sample-statistics oracle matches bitwise iff the whole FLAC
     bitstream path (Rice, fixed predictors, CRCs, framing) inverted
     exactly."""
-    from unitdb_spark.functions import media_codec as mc
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make_blob(d: int) -> bytes:
+        j = np.arange(d % 4000 + 100, dtype=np.int64)
+        raw = (6 * j) % 256 + 256 * ((6 * j + 3) % 256)
+        v = np.where(raw >= 32768, raw - 65536, raw)
+        return mc.encode_flac_fixed(v, [8000, 16000, 44100][d % 3], blocksize=1024)
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 5 != 3:
-                    continue
-                n = d % 4000 + 100
-                rate = [8000, 16000, 44100][d % 3]
-                j = np.arange(n, dtype=np.int64)
-                raw = (6 * j) % 256 + 256 * ((6 * j + 3) % 256)
-                v = np.where(raw >= 32768, raw - 65536, raw)
-                ids.append(d)
-                blobs.append(mc.encode_flac_fixed(v, rate, blocksize=1024))
-            yield pd.DataFrame(
-                {
-                    "id": pd.array(ids, dtype="int64"),
-                    "media_type": "audio",
-                    "blob": pd.Series(blobs, dtype=object),
-                }
-            )
-
-    return _media_ids(documents).mapInPandas(
-        _build, "id long, media_type string, blob binary"
+    return _fixture(
+        documents.filter(F.pmod("doc_id", F.lit(5)) == 3), make_blob, "audio"
     )
 
 

@@ -32,25 +32,27 @@ def now_column(now: float | dt.datetime | None) -> Column:
     return F.lit(dt.datetime.fromtimestamp(now, dt.timezone.utc).replace(tzinfo=None))
 
 
-def apply_get(
-    df: DataFrame,
-    query: Query | str,
-    now: float | dt.datetime | None = None,
-    symmetric: bool = True,
-) -> DataFrame:
-    """Apply Get semantics to a messages-schema DataFrame."""
-    q = Query(topic=query) if isinstance(query, str) else query
-    now_ts = now_column(now)
-    out = df.filter(F.col("contract") == F.lit(q.contract))
-    out = out.filter(topic_match_expr(q.spec, symmetric=symmetric))
+def _query_predicate(q: Query, now_ts: Column) -> Column:
+    """One Get query's contract, topic and ``?last`` predicate (TTL is
+    the same for every query and is applied by the callers)."""
+    cond = (F.col("contract") == F.lit(q.contract)) & topic_match_expr(q.spec)
     last = q.last_seconds()
     if last is not None:
         # fractional-second windows stay exact (INTERVAL accepts them);
         # int() would truncate ?last=500ms to a zero-width window
-        out = out.filter(
+        cond = cond & (
             F.col("ts") >= now_ts - F.expr(f"INTERVAL {float(last)!r} SECOND")
         )
-    out = out.filter(ttl_live_expr(now_ts))
+    return cond
+
+
+def apply_get(
+    df: DataFrame, query: Query | str, now: float | dt.datetime | None = None
+) -> DataFrame:
+    """Apply Get semantics to a messages-schema DataFrame."""
+    q = Query(topic=query) if isinstance(query, str) else query
+    now_ts = now_column(now)
+    out = df.filter(_query_predicate(q, now_ts)).filter(ttl_live_expr(now_ts))
     return out.orderBy(F.desc("seq")).limit(q.effective_limit())
 
 
@@ -58,7 +60,6 @@ def apply_get_many(
     df: DataFrame,
     queries: Sequence[Query | str],
     now: float | dt.datetime | None = None,
-    symmetric: bool = True,
 ) -> DataFrame:
     """N Get queries in ONE table pass (multi-topic RELAY,
     store/store.go:170-181 loops per topic; here the loop is fused).
@@ -76,17 +77,7 @@ def apply_get_many(
     qs = [Query(topic=q) if isinstance(q, str) else q for q in queries]
     now_ts = now_column(now)
     base = df.filter(ttl_live_expr(now_ts))
-    per_query: list[Column] = []
-    for q in qs:
-        cond = (F.col("contract") == F.lit(q.contract)) & topic_match_expr(
-            q.spec, symmetric=symmetric
-        )
-        last = q.last_seconds()
-        if last is not None:
-            cond = cond & (
-                F.col("ts") >= now_ts - F.expr(f"INTERVAL {float(last)!r} SECOND")
-            )
-        per_query.append(cond)
+    per_query = [_query_predicate(q, now_ts) for q in qs]
     tagged = base.select(
         "*",
         F.posexplode(

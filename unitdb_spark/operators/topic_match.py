@@ -74,16 +74,16 @@ def _stored_pattern_vs_query(
     parts: Column,
     depth: Column,
     has_tail: Column,
-    is_pattern: Column | None = None,
+    is_pattern: Column,
 ) -> Column:
     """Stored patterns (rows written to wildcard topics) matched against
     the query *treated as concrete* — the query's own wildcard/tail
     tokens count as literal levels, mirroring the Python reference
     matcher's symmetric formulation.
 
-    When ``is_pattern`` is given, the whole branch is guarded by it —
-    Parquet then receives the pushable `Or(topic = x, is_pattern)`
-    residual and prunes pattern-free row groups on stats.
+    The whole branch is guarded by ``is_pattern`` — Parquet then
+    receives the pushable `Or(topic = x, is_pattern)` residual and
+    prunes pattern-free row groups on stats.
     """
     qparts = list(spec.parts)  # INCLUDES a trailing '...' token if present
     qd = len(qparts)
@@ -100,53 +100,30 @@ def _stored_pattern_vs_query(
         flat_conds = flat_conds & (
             (F.get(parts, i) == F.lit(qp)) | (F.get(parts, i) == F.lit(WILDCARD_ONE))
         )
-    out = tail_conds | flat_conds
-    if is_pattern is not None:
-        out = is_pattern & out
-    return out
+    return is_pattern & (tail_conds | flat_conds)
 
 
-def topic_match_expr(
-    query_topic: str | TopicSpec,
-    topic: Column | str = "topic",
-    parts: Column | str = "parts",
-    depth: Column | str = "depth",
-    has_tail: Column | str = "has_tail",
-    is_pattern: Column | str | None = "is_pattern",
-    symmetric: bool = True,
-) -> Column:
-    """Build the match predicate for one query topic.
+def topic_match_expr(query_topic: str | TopicSpec) -> Column:
+    """Build the match predicate for one query topic over the messages
+    columns ``topic``/``parts``/``depth``/``has_tail``/``is_pattern``.
 
-    ``symmetric=True`` reproduces the reference's both-direction match
-    (stored pattern OR query pattern — db_test.go:296-317). Set it
-    False when the table is known to hold only concrete topics: the
-    resulting predicate is then a pure conjunction that Catalyst can
-    push down fully.
+    It is the reference's both-direction match (query pattern OR stored
+    pattern — db_test.go:296-317); a static query's forward direction
+    is the plain, prunable ``topic = x``.
     """
     spec = parse_topic(query_topic) if isinstance(query_topic, str) else query_topic
-    topic_c = F.col(topic) if isinstance(topic, str) else topic
-    parts_c = F.col(parts) if isinstance(parts, str) else parts
-    depth_c = F.col(depth) if isinstance(depth, str) else depth
-    tail_c = F.col(has_tail) if isinstance(has_tail, str) else has_tail
-    pat_c = F.col(is_pattern) if isinstance(is_pattern, str) else is_pattern
-
-    fwd = _query_pattern_vs_stored(spec, parts_c, depth_c, tail_c, topic_c)
-    if spec.kind == TopicKind.STATIC:
-        if not symmetric:
-            return topic_c == F.lit(spec.raw)
-        rev = _stored_pattern_vs_query(spec, parts_c, depth_c, tail_c, pat_c)
-        out = (topic_c == F.lit(spec.raw)) | rev
-    elif not symmetric:
-        out = fwd
-    else:
-        rev = _stored_pattern_vs_query(spec, parts_c, depth_c, tail_c, pat_c)
-        out = fwd | rev
-    coarse = _coarse_pushdown(spec, topic_c, pat_c if symmetric else None)
+    topic, parts, depth, has_tail, is_pattern = (
+        F.col(c) for c in ("topic", "parts", "depth", "has_tail", "is_pattern")
+    )
+    fwd = _query_pattern_vs_stored(spec, parts, depth, has_tail, topic)
+    rev = _stored_pattern_vs_query(spec, parts, depth, has_tail, is_pattern)
+    out = fwd | rev
+    coarse = _coarse_pushdown(spec, topic, is_pattern)
     return out & coarse if coarse is not None else out
 
 
 def _coarse_pushdown(
-    spec: TopicSpec, topic: Column, is_pattern: Column | None
+    spec: TopicSpec, topic: Column, is_pattern: Column
 ) -> Column | None:
     """A *necessary* (weaker) condition built only from pushable
     predicates (string equality / StartsWith / boolean), AND-ed onto the
@@ -176,9 +153,7 @@ def _coarse_pushdown(
             cond = (topic == F.lit(prefix)) | topic.startswith(F.lit(prefix + "."))
         else:
             cond = topic.startswith(F.lit(prefix + "."))
-    if is_pattern is not None:
-        cond = cond | is_pattern
-    return cond
+    return cond | is_pattern
 
 
 def topic_regex(query_topic: str | TopicSpec) -> str:

@@ -1035,6 +1035,21 @@ def _events_stream_src(spark, sf_dir: str, n_files: int = 4) -> str:
     return src
 
 
+def _streamed_state(spark, sf_dir: str, fold, what: str) -> DataFrame:
+    """Replay the events table as a multi-batch stream, keep
+    ``fold(stream)`` — one streaming aggregation — as a versioned state
+    table (streaming.commitlog.snapshot_sink: Spark's state store folds,
+    the sink publishes), and return the committed state."""
+    from unitdb_spark.streaming.commitlog import read_snapshot, snapshot_sink
+    from unitdb_spark.streaming.pubsub import events_as_stream
+
+    src = _events_stream_src(spark, sf_dir)
+    base = src.rsplit("/", 1)[0]
+    stream = events_as_stream(spark, src, max_files_per_trigger=2)
+    snapshot_sink(fold(stream), f"{base}/state", f"{base}/cp").awaitTermination(300)
+    return read_snapshot(spark, f"{base}/state", what)
+
+
 def q_streamed_rollup_snapshot(spark, sf_dir):
     """Driver-checkable twin of the CONTINUOUS rollup: replays the
     events-derived messages as a multi-batch stream, folds each batch
@@ -4141,54 +4156,24 @@ def q_media_wav_decimate(spark, sf_dir):
 
 
 def q_streamed_spc(spark, sf_dir):
-    """Driver-checkable twin of the ROLLING Shewhart zone monitor:
-    per-batch (event_type, day) cents-cell partials fold via
-    foreachBatch (cells merge by SUM); the read-time fold re-sums
-    and finishes through the SAME spc_western_rules operator (feeding
-    it the folded cells — re-aggregating pre-aggregated days is the
+    """Oracle-checkable twin of the ROLLING Shewhart zone monitor: the
+    (event_type, day) cents cells are one streaming aggregation (cells
+    are plain sums), and the committed cells finish through the SAME
+    spc_western_rules operator (feeding it pre-aggregated days is the
     identity, the forecast-cell convention). Oracle = the batch
-    events_spc SQL verbatim — the retrospective μ/σ are NOT
-    mergeable per batch, so the mergeable CELL is the state and the
-    chart stays a read-time projection."""
-    import uuid
-
+    events_spc SQL verbatim — the retrospective μ/σ are NOT mergeable
+    per batch, so the mergeable CELL is the state and the chart stays
+    a read-time projection."""
     from unitdb_spark.operators.timeseries import spc_western_rules
-    from unitdb_spark.streaming.pubsub import events_as_stream
 
     spark = _pin_utc(spark)
-    src = _events_stream_src(spark, sf_dir)
-    base = src.rsplit("/", 1)[0]
-    out = f"{base}/spc_{uuid.uuid4().hex[:8]}"
-    cp = f"{base}/spccp_{uuid.uuid4().hex[:8]}"
     cents = F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-
-    def _fold(df, _eid):
-        if df.isEmpty():
-            return
-        (
-            df.filter(F.col("value").isNotNull())
-            .groupBy(
-                F.col("event_type").alias("key"),
-                F.to_date("ts").alias("d"),
-            )
-            .agg(F.sum(cents).alias("x"))
-            .write.mode("append")
-            .parquet(out)
-        )
-
-    stream = events_as_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    cells = (
-        spark.read.parquet(out)
-        .groupBy("key", "d")
-        .agg(F.sum("x").alias("x"))
+    cells = _streamed_state(
+        spark, sf_dir,
+        lambda ev: ev.filter(F.col("value").isNotNull())
+        .groupBy(F.col("event_type").alias("key"), F.to_date("ts").alias("d"))
+        .agg(F.sum(cents).alias("x")),
+        "spc cells",
     )
     res = spc_western_rules(
         cells, "key", F.col("d").cast("timestamp"), "x"
@@ -6423,47 +6408,25 @@ def q_events_hll_users(spark, sf_dir):
 
 
 def q_streamed_hll(spark, sf_dir):
-    """Driver-checkable twin of the STREAMING HLL: each micro-batch
-    appends its per-(key, register) max-rho partials via foreachBatch;
-    the read-time fold re-MAXes per register and finishes with the
-    SAME pinned estimator expression. A register max is order- and
-    split-free, so the oracle is the identical SQL as
-    `events_hll_users` — a hash-match proves the streamed registers
-    == the batch registers bitwise regardless of micro-batch split."""
-    import tempfile
-    import uuid
-
+    """Oracle-checkable twin of the STREAMING HLL: the per-(key,
+    register) max rho is one streaming aggregation, and the committed
+    registers finish with the SAME pinned estimator expression. A
+    register max is order- and split-free (and needs no distinct), so
+    the oracle is the identical SQL as `events_hll_users` — a
+    hash-match proves the streamed registers == the batch registers
+    bitwise regardless of micro-batch split."""
     from unitdb_spark.operators.sketch import (
         hll_estimate_from_registers,
-        hll_registers,
+        hll_ranks,
     )
-    from unitdb_spark.streaming.pubsub import events_as_stream
 
     spark = _pin_utc(spark)
-    src = _events_stream_src(spark, sf_dir)
-    base = src.rsplit("/", 1)[0]
-    out = f"{base}/hll_{uuid.uuid4().hex[:8]}"
-    cp = f"{base}/hllcp_{uuid.uuid4().hex[:8]}"
-
-    stream = events_as_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, _eid: hll_registers(
-                df, ["event_type"], "user_id"
-            ).write.mode("append").parquet(out)
-            if not df.isEmpty()
-            else None
-        )
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    regs = (
-        spark.read.parquet(out)
+    regs = _streamed_state(
+        spark, sf_dir,
+        lambda ev: hll_ranks(ev, ["event_type"], "user_id")
         .groupBy("event_type", "reg")
-        .agg(F.max("rho").alias("rho"))
+        .agg(F.max("rho").alias("rho")),
+        "hll registers",
     )
     return hll_estimate_from_registers(
         regs, ["event_type"]
@@ -6530,57 +6493,29 @@ def q_events_wilcoxon(spark, sf_dir):
 
 
 def q_streamed_wilcoxon(spark, sf_dir):
-    """Driver-checkable twin of the ROLLING paired test: each
-    micro-batch appends its per-user (pre_cents, post_cents) partial
-    sums via foreachBatch (plain sums — mergeable by SUM, so the
-    folded state equals the one-shot aggregation bitwise); the
-    read-time fold re-sums per user and finishes through the SAME
+    """Oracle-checkable twin of the ROLLING paired test: the per-user
+    (pre_cents, post_cents) sums are one streaming aggregation (plain
+    sums, so the state equals the one-shot aggregation bitwise), and
+    the committed panel finishes through the SAME
     wilcoxon_signed_rank operator. Oracle = the batch SQL verbatim —
     a hash-match proves the streamed panel equals the batch test
     regardless of micro-batch split."""
-    import uuid
-
     from unitdb_spark.operators.stats_tests import wilcoxon_signed_rank
-    from unitdb_spark.streaming.pubsub import events_as_stream
 
     spark = _pin_utc(spark)
-    src = _events_stream_src(spark, sf_dir)
-    base = src.rsplit("/", 1)[0]
-    out = f"{base}/wx_{uuid.uuid4().hex[:8]}"
-    cp = f"{base}/wxcp_{uuid.uuid4().hex[:8]}"
     cents = F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
     mid = F.lit("2024-01-16").cast("timestamp")
-
-    def _fold(df, _eid):
-        if df.isEmpty():
-            return
-        (
-            df.filter(
-                (F.col("event_type") == "purchase")
-                & F.col("value").isNotNull()
-            )
-            .groupBy("user_id")
-            .agg(
-                F.sum(F.when(F.col("ts") < mid, cents)).alias("pre"),
-                F.sum(F.when(F.col("ts") >= mid, cents)).alias("post"),
-            )
-            .write.mode("append")
-            .parquet(out)
+    per = _streamed_state(
+        spark, sf_dir,
+        lambda ev: ev.filter(
+            (F.col("event_type") == "purchase") & F.col("value").isNotNull()
         )
-
-    stream = events_as_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    per = (
-        spark.read.parquet(out)
         .groupBy("user_id")
-        .agg(F.sum("pre").alias("_pre"), F.sum("post").alias("_post"))
+        .agg(
+            F.sum(F.when(F.col("ts") < mid, cents)).alias("_pre"),
+            F.sum(F.when(F.col("ts") >= mid, cents)).alias("_post"),
+        ),
+        "wilcoxon panel",
     )
     diffs = per.filter(
         F.col("_pre").isNotNull() & F.col("_post").isNotNull()
@@ -6605,48 +6540,23 @@ def q_events_hll_overlap(spark, sf_dir):
 
 
 def q_streamed_histq(spark, sf_dir):
-    """Driver-checkable twin of the ROLLING quantile dashboard: each
-    micro-batch appends its fixed-bucket histogram partials via
-    foreachBatch (bucket counts are plain SUMs — mergeable, so the
-    folded histogram equals the one-shot build bitwise); the
-    read-time fold re-sums per (key, bucket) and finishes through
-    the SAME pinned interpolation (quantiles_from_histogram). Oracle
-    = the batch SQL verbatim — hash-match proves the streamed
-    histogram equals the batch histogram regardless of micro-batch
-    split."""
-    import uuid
-
+    """Oracle-checkable twin of the ROLLING quantile dashboard: the
+    fixed-bucket histogram is one streaming aggregation (bucket
+    counts are plain SUMs, so the state equals the one-shot build
+    bitwise), and the committed histogram finishes through the SAME
+    pinned interpolation (quantiles_from_histogram). Oracle = the
+    batch SQL verbatim — hash-match proves the streamed histogram
+    equals the batch histogram regardless of micro-batch split."""
     from unitdb_spark.operators.sketch import (
         histogram_counts,
         quantiles_from_histogram,
     )
-    from unitdb_spark.streaming.pubsub import events_as_stream
 
     spark = _pin_utc(spark)
-    src = _events_stream_src(spark, sf_dir)
-    base = src.rsplit("/", 1)[0]
-    out = f"{base}/hq_{uuid.uuid4().hex[:8]}"
-    cp = f"{base}/hqcp_{uuid.uuid4().hex[:8]}"
-
-    stream = events_as_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, _eid: histogram_counts(
-                df, "value", ["event_type"], 0.0, 1000.0, 20
-            ).write.mode("append").parquet(out)
-            if not df.isEmpty()
-            else None
-        )
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    hist = (
-        spark.read.parquet(out)
-        .groupBy("event_type", "bucket")
-        .agg(F.sum("n_b").alias("n_b"))
+    hist = _streamed_state(
+        spark, sf_dir,
+        lambda ev: histogram_counts(ev, "value", ["event_type"], 0.0, 1000.0, 20),
+        "histogram",
     )
     return quantiles_from_histogram(
         hist, ["event_type"], [0.5, 0.9, 0.99], 0.0, 1000.0, 20
@@ -7114,63 +7024,32 @@ def q_embed_label_sim(spark, sf_dir):
 
 
 def q_streamed_anova(spark, sf_dir):
-    """Driver-checkable twin of the ROLLING k-group mean monitor:
-    each micro-batch appends its per-event-type (n, Σcents, Σcents²)
-    moment partials via foreachBatch (the minimal sufficient
-    statistic — mergeable by SUM, so the folded state equals the
-    one-shot aggregation bitwise); the read-time fold re-sums per
-    type and finishes through the SAME anova_from_moments closure as
-    the batch test. Oracle = the batch events_anova SQL verbatim — a
-    hash-match proves the streamed F test equals the batch one
-    regardless of micro-batch split."""
-    import uuid
-
+    """Oracle-checkable twin of the ROLLING k-group mean monitor: the
+    per-event-type (n, Σcents, Σcents²) moments are one streaming
+    aggregation (the minimal sufficient statistic — plain sums, so
+    the state equals the one-shot aggregation bitwise), and the
+    committed moments finish through the SAME anova_from_moments
+    closure as the batch test. Oracle = the batch events_anova SQL
+    verbatim — a hash-match proves the streamed F test equals the
+    batch one regardless of micro-batch split."""
     from unitdb_spark.operators.stats_tests import anova_from_moments
-    from unitdb_spark.streaming.pubsub import events_as_stream
 
     spark = _pin_utc(spark)
-    src = _events_stream_src(spark, sf_dir)
-    base = src.rsplit("/", 1)[0]
-    out = f"{base}/av_{uuid.uuid4().hex[:8]}"
-    cp = f"{base}/avcp_{uuid.uuid4().hex[:8]}"
     cents = F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-
-    def _fold(df, _eid):
-        if df.isEmpty():
-            return
-        (
-            df.filter(F.col("value").isNotNull())
-            .select("event_type", cents.alias("_x"))
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_j"),
-                F.sum("_x").alias("s_j"),
-                F.sum(
-                    F.col("_x").cast("decimal(38,0)")
-                    * F.col("_x").cast("decimal(38,0)")
-                ).alias("q_j"),
-            )
-            .write.mode("append")
-            .parquet(out)
-        )
-
-    stream = events_as_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    moments = (
-        spark.read.parquet(out)
+    moments = _streamed_state(
+        spark, sf_dir,
+        lambda ev: ev.filter(F.col("value").isNotNull())
+        .select("event_type", cents.alias("_x"))
         .groupBy("event_type")
         .agg(
-            F.sum("n_j").alias("n_j"),
-            F.sum("s_j").alias("s_j"),
-            F.sum("q_j").alias("q_j"),
-        )
+            F.count(F.lit(1)).alias("n_j"),
+            F.sum("_x").alias("s_j"),
+            F.sum(
+                F.col("_x").cast("decimal(38,0)")
+                * F.col("_x").cast("decimal(38,0)")
+            ).alias("q_j"),
+        ),
+        "anova moments",
     )
     return anova_from_moments(moments)
 
@@ -7208,49 +7087,24 @@ def q_events_levene(spark, sf_dir):
 
 
 def q_streamed_cochran(spark, sf_dir):
-    """Driver-checkable twin of the ROLLING engagement-equality
-    monitor: per-batch (user, event_type) count partials fold via
-    foreachBatch (counts merge by SUM); at read time the fold
-    re-sums, re-derives the >= 14 engagement flags on the dense
-    user × type grid, and finishes through the SAME cochran_q
-    operator. Oracle = the batch events_cochran SQL verbatim —
-    threshold flags are NOT mergeable, so the mergeable COUNT is the
-    state and flagging stays a read-time projection (the rolling-MK
-    / forecast-cell convention)."""
-    import uuid
-
+    """Oracle-checkable twin of the ROLLING engagement-equality
+    monitor: the per-(user, event_type) counts are one streaming
+    aggregation; at read time the committed counts re-derive the
+    >= 14 engagement flags on the dense user × type grid and finish
+    through the SAME cochran_q operator. Oracle = the batch
+    events_cochran SQL verbatim — threshold flags are NOT mergeable,
+    so the mergeable COUNT is the state and flagging stays a
+    read-time projection (the rolling-MK / forecast-cell
+    convention)."""
     from unitdb_spark.operators.stats_tests import cochran_q
-    from unitdb_spark.streaming.pubsub import events_as_stream
 
     spark = _pin_utc(spark)
-    src = _events_stream_src(spark, sf_dir)
-    base = src.rsplit("/", 1)[0]
-    out = f"{base}/cq_{uuid.uuid4().hex[:8]}"
-    cp = f"{base}/cqcp_{uuid.uuid4().hex[:8]}"
-
-    def _fold(df, _eid):
-        if df.isEmpty():
-            return
-        (
-            df.groupBy("user_id", "event_type")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .write.mode("append")
-            .parquet(out)
-        )
-
-    stream = events_as_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    per = (
-        spark.read.parquet(out)
-        .groupBy("user_id", "event_type")
-        .agg(F.sum("c").alias("c"))
+    per = _streamed_state(
+        spark, sf_dir,
+        lambda ev: ev.groupBy("user_id", "event_type").agg(
+            F.count(F.lit(1)).alias("c")
+        ),
+        "cochran counts",
     )
     dense = (
         per.select("user_id").distinct()
@@ -7374,65 +7228,29 @@ def q_doc_lexical_diversity(spark, sf_dir):
 
 
 def q_streamed_uplift(spark, sf_dir):
-    """Driver-checkable twin of the ROLLING uplift dashboard: each
-    micro-batch appends per-user (pre_cents, post-purchase count)
-    partials via foreachBatch (both merge by SUM); the read-time fold
-    re-sums, re-derives the conversion flag and hash arm, and
-    finishes through the SAME uplift_deciles_ranked operator (the
-    mergeable rank-threshold path — its per-score counts are
-    themselves SUM-mergeable, the same contract as this fold).
-    Oracle = the batch events_uplift SQL verbatim."""
-    import uuid
-
+    """Oracle-checkable twin of the ROLLING uplift dashboard: the
+    per-user (pre_cents, post-purchase conversion) state is one
+    streaming aggregation (a sum and a count), the hash arm is
+    re-derived at read time, and the committed panel finishes
+    through the SAME uplift_deciles_ranked operator (the mergeable
+    rank-threshold path — its per-score counts are themselves
+    SUM-mergeable). Oracle = the batch events_uplift SQL verbatim."""
     from unitdb_spark.functions.portable_hash import md5_int60
     from unitdb_spark.operators.evaluation import uplift_deciles_ranked
-    from unitdb_spark.streaming.pubsub import events_as_stream
 
     spark = _pin_utc(spark)
-    src = _events_stream_src(spark, sf_dir)
-    base = src.rsplit("/", 1)[0]
-    out = f"{base}/up_{uuid.uuid4().hex[:8]}"
-    cp = f"{base}/upcp_{uuid.uuid4().hex[:8]}"
     mid = F.lit("2024-01-16").cast("timestamp")
     cents = F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-
-    def _fold(df, _eid):
-        if df.isEmpty():
-            return
-        (
-            df.groupBy("user_id")
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("ts") < mid, cents)), F.lit(0)
-                ).alias("pre"),
-                F.count(
-                    F.when(
-                        (F.col("event_type") == "purchase")
-                        & (F.col("ts") >= mid),
-                        1,
-                    )
-                ).alias("np"),
-            )
-            .write.mode("append")
-            .parquet(out)
-        )
-
-    stream = events_as_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    per = (
-        spark.read.parquet(out)
-        .groupBy("user_id")
-        .agg(
-            F.sum("pre").alias("pre_cents"),
-            (F.sum("np") > 0).alias("y"),
-        )
+    post_purchase = (F.col("event_type") == "purchase") & (F.col("ts") >= mid)
+    per = _streamed_state(
+        spark, sf_dir,
+        lambda ev: ev.groupBy("user_id").agg(
+            F.coalesce(
+                F.sum(F.when(F.col("ts") < mid, cents)), F.lit(0)
+            ).alias("pre_cents"),
+            (F.count(F.when(post_purchase, 1)) > 0).alias("y"),
+        ),
+        "uplift panel",
     )
     arm = (
         md5_int60(F.concat(F.col("user_id").cast("string"), F.lit(":mw"))) % 2
@@ -7623,65 +7441,29 @@ def q_events_type_corr(spark, sf_dir):
 
 
 def q_streamed_iv(spark, sf_dir):
-    """Driver-checkable twin of the ROLLING encouragement dashboard:
-    per-batch per-user (post cents, post click count) partials fold
-    via foreachBatch (both merge by SUM); the read-time fold re-sums,
-    re-derives the uptake flag and hash instrument, and finishes
-    through the SAME iv_wald operator. Oracle = the batch
-    events_iv_wald SQL verbatim (the streamed_uplift convention:
-    mergeable counters are the state, thresholds/arms stay read-time
-    projections)."""
-    import uuid
-
+    """Oracle-checkable twin of the ROLLING encouragement dashboard:
+    the per-user (post cents, post-click uptake) state is one
+    streaming aggregation (a sum and a count), the hash instrument is
+    re-derived at read time, and the committed panel finishes through
+    the SAME iv_wald operator. Oracle = the batch events_iv_wald SQL
+    verbatim (the streamed_uplift convention: mergeable counters are
+    the state, arms stay read-time projections)."""
     from unitdb_spark.functions.portable_hash import md5_int60
     from unitdb_spark.operators.evaluation import iv_wald
-    from unitdb_spark.streaming.pubsub import events_as_stream
 
     spark = _pin_utc(spark)
-    src = _events_stream_src(spark, sf_dir)
-    base = src.rsplit("/", 1)[0]
-    out = f"{base}/iv_{uuid.uuid4().hex[:8]}"
-    cp = f"{base}/ivcp_{uuid.uuid4().hex[:8]}"
     mid = F.lit("2024-01-16").cast("timestamp")
     cents = F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-
-    def _fold(df, _eid):
-        if df.isEmpty():
-            return
-        (
-            df.groupBy("user_id")
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("ts") >= mid, cents)), F.lit(0)
-                ).alias("yc"),
-                F.count(
-                    F.when(
-                        (F.col("event_type") == "click")
-                        & (F.col("ts") >= mid),
-                        1,
-                    )
-                ).alias("nc"),
-            )
-            .write.mode("append")
-            .parquet(out)
-        )
-
-    stream = events_as_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    per = (
-        spark.read.parquet(out)
-        .groupBy("user_id")
-        .agg(
-            F.sum("yc").alias("y"),
-            (F.sum("nc") > 0).cast("int").alias("d"),
-        )
+    post_click = (F.col("event_type") == "click") & (F.col("ts") >= mid)
+    per = _streamed_state(
+        spark, sf_dir,
+        lambda ev: ev.groupBy("user_id").agg(
+            F.coalesce(
+                F.sum(F.when(F.col("ts") >= mid, cents)), F.lit(0)
+            ).alias("y"),
+            (F.count(F.when(post_click, 1)) > 0).cast("int").alias("d"),
+        ),
+        "iv panel",
     )
     z = (
         md5_int60(F.concat(F.col("user_id").cast("string"), F.lit(":iv"))) % 2
@@ -7830,58 +7612,22 @@ def q_events_nemenyi(spark, sf_dir):
 
 
 def q_streamed_topk_drift(spark, sf_dir):
-    """Driver-checkable twin of the ROLLING who-moved triage: each
-    micro-batch appends per-(user, side) count partials via
-    foreachBatch (counts merge by SUM); the read-time fold re-sums
-    and finishes through the SAME key_share_drift ppm/TakeOrdered
-    path. Oracle = the batch events_topk_drift SQL verbatim."""
-    import uuid
-
+    """Oracle-checkable twin of the ROLLING who-moved triage: the
+    per-user (pre, post) event counts are one streaming aggregation,
+    and the committed counts finish through the SAME key_share_drift
+    ppm/TakeOrdered path. Oracle = the batch events_topk_drift SQL
+    verbatim."""
     from unitdb_spark.operators.profile import share_drift_from_counts
-    from unitdb_spark.streaming.pubsub import events_as_stream
 
     spark = _pin_utc(spark)
-    src = _events_stream_src(spark, sf_dir)
-    base = src.rsplit("/", 1)[0]
-    out = f"{base}/kd_{uuid.uuid4().hex[:8]}"
-    cp = f"{base}/kdcp_{uuid.uuid4().hex[:8]}"
     mid = F.lit("2024-01-16").cast("timestamp")
-
-    def _fold(df, _eid):
-        if df.isEmpty():
-            return
-        (
-            df.groupBy(
-                "user_id", (F.col("ts") >= mid).alias("post")
-            )
-            .agg(F.count(F.lit(1)).alias("c"))
-            .write.mode("append")
-            .parquet(out)
-        )
-
-    stream = events_as_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    per = (
-        spark.read.parquet(out)
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.when(~F.col("post"), F.col("c")))
-            .alias("n_pre"),
-            F.sum(F.when(F.col("post"), F.col("c")))
-            .alias("n_post"),
-        )
-        .select(
-            "user_id",
-            F.coalesce("n_pre", F.lit(0)).alias("n_pre"),
-            F.coalesce("n_post", F.lit(0)).alias("n_post"),
-        )
+    per = _streamed_state(
+        spark, sf_dir,
+        lambda ev: ev.groupBy("user_id").agg(
+            F.count(F.when(F.col("ts") < mid, 1)).alias("n_pre"),
+            F.count(F.when(F.col("ts") >= mid, 1)).alias("n_post"),
+        ),
+        "drift counts",
     )
     return share_drift_from_counts(per, "user_id", top_k=20)
 
@@ -8942,46 +8688,22 @@ def q_events_hist_entropy(spark, sf_dir):
 
 
 def q_streamed_hist_entropy(spark, sf_dir):
-    """ROLLING twin of events_hist_entropy off the SAME maintained
-    state shape as streamed_histq (per-micro-batch fixed-bucket
-    histogram partials, appended via foreachBatch): the read-time
-    fold re-sums per (key, bucket) and finishes through the exactlog
-    integer entropy — bucket counts are plain sums and the finish is
-    all-integer, so the streamed result hashes equal to the batch
-    oracle VERBATIM regardless of micro-batch split."""
-    import uuid
-
+    """ROLLING twin of events_hist_entropy off the SAME state shape as
+    streamed_histq (the fixed-bucket histogram as one streaming
+    aggregation): the committed histogram finishes through the
+    exactlog integer entropy — bucket counts are plain sums and the
+    finish is all-integer, so the streamed result hashes equal to the
+    batch oracle VERBATIM regardless of micro-batch split."""
     from unitdb_spark.operators.sketch import (
         histogram_counts,
         histogram_entropy,
     )
-    from unitdb_spark.streaming.pubsub import events_as_stream
 
     spark = _pin_utc(spark)
-    src = _events_stream_src(spark, sf_dir)
-    base = src.rsplit("/", 1)[0]
-    out = f"{base}/he_{uuid.uuid4().hex[:8]}"
-    cp = f"{base}/hecp_{uuid.uuid4().hex[:8]}"
-
-    stream = events_as_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, _eid: histogram_counts(
-                df, "value", ["event_type"], 0.0, 1000.0, 20
-            ).write.mode("append").parquet(out)
-            if not df.isEmpty()
-            else None
-        )
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    hist = (
-        spark.read.parquet(out)
-        .groupBy("event_type", "bucket")
-        .agg(F.sum("n_b").alias("n_b"))
+    hist = _streamed_state(
+        spark, sf_dir,
+        lambda ev: histogram_counts(ev, "value", ["event_type"], 0.0, 1000.0, 20),
+        "histogram",
     )
     return histogram_entropy(hist, ["event_type"])
 

@@ -14,13 +14,18 @@ residual slope of -7.9e-15; IEEE `==` treats them equal, so the old
 gate passed while the driver — which hashes RENDERED values, where
 "-0.0" != "0.0" — failed. The uint64-view compare distinguishes them.
 
-Usage: python scripts/check_oracle.py [query ...]
+Usage: python scripts/check_oracle.py [pattern ...]
+
+Each pattern is a query name or an fnmatch pattern ('streamed_*');
+no pattern checks every query. A pattern that matches no query is an
+error (exit 2), so a typo cannot pass as "0 failures".
 """
 
 from __future__ import annotations
 
 import sys
 import time
+from fnmatch import fnmatchcase
 from pathlib import Path
 
 import duckdb
@@ -107,13 +112,17 @@ def main() -> int:
     import __spark_entry__ as entry
     from unitdb_spark.session import get_spark
 
-    only = set(sys.argv[1:])
+    patterns = sys.argv[1:]
+    qs, osql = entry.queries(), entry.oracle_sql()
+    unmatched = [p for p in patterns if not any(fnmatchcase(n, p) for n in qs)]
+    if unmatched:
+        print(f"no query matches {unmatched}")
+        return 2
     spark = get_spark("check-oracle", cpus=8)
     con = duck_connect()
-    qs, osql = entry.queries(), entry.oracle_sql()
     fails, rows_only = [], []
     for name, fn in qs.items():
-        if only and name not in only:
+        if patterns and not any(fnmatchcase(name, p) for p in patterns):
             continue
         t0 = time.time()
         try:

@@ -2356,9 +2356,10 @@ class TestSnapshotSinkCrashPoints:
     """A fault during the second micro-batch of a versioned-snapshot
     sink, then a restart from the same checkpoint without the fault:
     the committed state equals the batch answer, no batch is folded
-    twice, and latest_commit names a snapshot that exists. Two sinks
-    with different merges (winner-per-key, sum) at two fault points:
-    the commit-entry write inside CommitLog.record, and
+    twice, and latest_commit names a snapshot that exists. Both sink
+    paths: two state-store aggregations (winner-per-key, count) and
+    the skyline's read-union-merge, at two fault points: the
+    commit-entry write inside CommitLog.record, and
     CommitLog.prune_other_generations after the entry exists."""
 
     _SCHEMA = "key long, value binary, op string, op_order long"
@@ -2374,7 +2375,7 @@ class TestSnapshotSinkCrashPoints:
     ]
 
     @pytest.mark.parametrize("point", ["record", "prune"])
-    @pytest.mark.parametrize("sink", ["kv", "key_counts"])
+    @pytest.mark.parametrize("sink", ["kv", "key_counts", "skyline"])
     def test_restart_after_fault_in_second_batch(
         self, spark, tmp_path, monkeypatch, sink, point
     ):
@@ -2382,10 +2383,13 @@ class TestSnapshotSinkCrashPoints:
 
         from unitdb_spark import fs
         from unitdb_spark.operators.kv import kv_state
+        from unitdb_spark.operators.skyline import skyline2d
         from unitdb_spark.streaming.commitlog import CommitLog, latest_commit
         from unitdb_spark.streaming.continuous import (
             continuous_key_counts,
+            continuous_skyline,
             read_key_counts,
+            read_skyline,
         )
         from unitdb_spark.streaming.kv_sink import continuous_kv, read_kv
 
@@ -2400,6 +2404,8 @@ class TestSnapshotSinkCrashPoints:
             stream = spark.readStream.schema(self._SCHEMA).parquet(src)
             if sink == "kv":
                 q = continuous_kv(stream, state, cp)
+            elif sink == "skyline":
+                q = continuous_skyline(stream, "op_order", "key", state, cp)
             else:
                 q = continuous_key_counts(stream, "key", state, cp)
             q.awaitTermination(180)
@@ -2437,6 +2443,12 @@ class TestSnapshotSinkCrashPoints:
             got = {r["key"]: bytes(r["value"]) for r in read_kv(spark, state).collect()}
             want = {r["key"]: bytes(r["value"]) for r in kv_state(oplog).collect()}
             assert got == want == {1: b"v1c", 3: b"v3"}
+        elif sink == "skyline":
+            got = sorted(r["op_order"] for r in read_skyline(spark, state).collect())
+            want = sorted(
+                r["op_order"] for r in skyline2d(oplog, "op_order", "key").collect()
+            )
+            assert got == want == [10, 11, 21]
         else:
             got = {r["_k"]: r["_n"] for r in read_key_counts(spark, state).collect()}
             want = {r["key"]: r["count"] for r in oplog.groupBy("key").count().collect()}
@@ -2447,3 +2459,26 @@ class TestSnapshotSinkCrashPoints:
         assert fs.is_dir(spark, f"{state}/v_{qid}_{last}")
         entries = sorted(n for n, _, _ in fs.list_status(spark, f"{state}/_applied/{qid}"))
         assert entries == ["0", "1"]
+
+    def test_stateless_checkpoint_is_refused_before_start(self, spark, tmp_path):
+        """A checkpoint with committed batches but no state store (what
+        a stateless foreachBatch query leaves behind) cannot resume a
+        streaming aggregation: snapshot_sink says so and names the
+        checkpoint instead of starting a query that fails on a missing
+        state file."""
+        from unitdb_spark import fs
+        from unitdb_spark.streaming.continuous import continuous_key_counts
+
+        src, state, cp = (str(tmp_path / d) for d in ("src", "state", "cp"))
+        spark.createDataFrame(self._B1, self._SCHEMA).write.parquet(src)
+        stream = spark.readStream.schema(self._SCHEMA).parquet(src)
+        stream.writeStream.foreachBatch(lambda df, bid: None).option(
+            "checkpointLocation", cp
+        ).trigger(availableNow=True).start().awaitTermination(180)
+        assert fs.list_status(spark, f"{cp}/commits")
+        assert not fs.exists(spark, f"{cp}/state")
+
+        with pytest.raises(ValueError, match="fresh checkpoint") as err:
+            continuous_key_counts(stream, "key", state, cp)
+        assert cp in str(err.value)
+        assert not spark.streams.active

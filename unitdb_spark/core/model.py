@@ -77,19 +77,8 @@ def message_id(seq: int, contract: int = MASTER_CONTRACT, ts: float | None = Non
     return struct.pack(">IIQ", inv & _MAX_U32, contract & _MAX_U32, seq)
 
 
-def message_id_time(msg_id: bytes) -> int:
-    """Recover the unix timestamp embedded in a message ID
-    (message/id.go:80-86 EvalPrefix)."""
-    inv = struct.unpack(">I", msg_id[:4])[0]
-    return _EPOCH_OFFSET + (_MAX_U32 - inv)
-
-
 def message_id_seq(msg_id: bytes) -> int:
     return struct.unpack(">Q", msg_id[8:16])[0]
-
-
-def message_id_contract(msg_id: bytes) -> int:
-    return struct.unpack(">I", msg_id[4:8])[0]
 
 
 @dataclass

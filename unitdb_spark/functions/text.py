@@ -45,23 +45,6 @@ def token_count(col: Column | str) -> Column:
     return F.size(_toks(col))
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """BPE-flavored token estimate: split on whitespace, punctuation
-    boundaries, and digit runs (regex approximation of a subword
-    tokenizer's pre-tokenization; ~chars/4 floor)."""
-    c = F.col(col) if isinstance(col, str) else col
-    pieces = F.filter(
-        F.split(F.lower(c), r"[\s]+|(?=[^\w\s])|(?<=[^\w\s])|(?=\d)(?<=\D)"),
-        lambda t: t != "",
-    )
-    # long words split into ~4-char subwords
-    return F.aggregate(
-        pieces,
-        F.lit(0),
-        lambda acc, p: acc + F.greatest(F.ceil(F.length(p) / F.lit(4.0)).cast("int"), F.lit(1)),
-    )
-
-
 def char_count(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.length(c)

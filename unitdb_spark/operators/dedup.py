@@ -145,21 +145,6 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     return shingles_from_tokens(raw_tokens(col), n)
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 32) -> Column:
-    """K minhash values as one expression: min over shingles of
-    xxhash64(shingle, seed=k). Column-level variant for callers that
-    already hold a shingle array; ``minhash_lsh_pairs`` itself uses the
-    equivalent explode + groupBy-min formulation (identical values,
-    ~2x faster cold because the codegen'd aggregate is K simple mins
-    rather than one K-lambda method)."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(k))))
-            for k in range(num_hashes)
-        ]
-    )
-
-
 def _persist_sig(sig: DataFrame, persist: str) -> DataFrame:
     """Signature reuse strategy — the signature df is read twice (band
     join + est_jaccard), so callers choose how it is kept:

@@ -135,11 +135,6 @@ def kmeans_lloyd(
     return final.select(*keep)
 
 
-def cluster_sizes(assignment: DataFrame) -> DataFrame:
-    """Tiny convenience rollup: (cell, n_members)."""
-    return assignment.groupBy("cell").agg(F.count(F.lit(1)).alias("n_members"))
-
-
 def simplified_silhouette(
     df: DataFrame,
     k: int = 8,

@@ -43,10 +43,5 @@ def kv_get(oplog: DataFrame, key: int) -> bytes | None:
     return bytes(v) if v is not None else None  # put-with-NULL stays None
 
 
-def kv_keys(oplog: DataFrame) -> DataFrame:
-    """Live keys (memdb/db.go Keys())."""
-    return kv_state(oplog).select("key")
-
-
 def kv_count(oplog: DataFrame) -> int:
     return kv_state(oplog).count()

@@ -434,34 +434,40 @@ def hll_registers(
 
     The register relation IS the mergeable state (MAX per register):
     executors combine map-side, days union and re-MAX, and the
-    streaming twin appends per-batch partials — the property HLL is
-    famous for, kept SQL-checkable.
+    streaming twin folds the same max in Spark's state store — the
+    property HLL is famous for, kept SQL-checkable.
 
     Output: keys + (reg int, rho int). Scale: one distinct shuffle +
     one (keys, reg) max agg — ≤ 2^p rows of state per key.
     """
-    rem_bits = 60 - p
-    distinct = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(*keys, value_col)
-        .distinct()
+    distinct = df.select(*keys, value_col).distinct()
+    return (
+        hll_ranks(distinct, keys, value_col, p)
+        .groupBy(*keys, "reg")
+        .agg(F.max("rho").alias("rho"))
     )
-    hashed = distinct.select(
+
+
+def hll_ranks(
+    df: DataFrame, keys: list[str], value_col: str, p: int = HLL_P
+) -> DataFrame:
+    """keys + (reg, rho) for every row whose ``value_col`` is not null:
+    the per-value input of `hll_registers`' MAX. A duplicate value
+    repeats its (reg, rho), so the MAX needs no distinct — which lets
+    a stream feed it to one streaming aggregation."""
+    rem_bits = 60 - p
+    hashed = df.filter(F.col(value_col).isNotNull()).select(
         *keys, md5_int60(F.col(value_col).cast("string")).alias("_h")
     )
     rem = F.col("_h") % F.lit(1 << rem_bits)
-    return (
-        hashed.select(
-            *keys,
-            # integer div — a double route would round: _h has 60 bits
-            F.expr(f"_h div {1 << rem_bits}").cast("long").alias("reg"),
-            F.when(rem == 0, F.lit(rem_bits + 1))
-            .otherwise(F.lit(rem_bits + 1) - F.length(F.expr(f"bin(_h % {1 << rem_bits})")))
-            .cast("int")
-            .alias("rho"),
-        )
-        .groupBy(*keys, "reg")
-        .agg(F.max("rho").alias("rho"))
+    return hashed.select(
+        *keys,
+        # integer div — a double route would round: _h has 60 bits
+        F.expr(f"_h div {1 << rem_bits}").cast("long").alias("reg"),
+        F.when(rem == 0, F.lit(rem_bits + 1))
+        .otherwise(F.lit(rem_bits + 1) - F.length(F.expr(f"bin(_h % {1 << rem_bits})")))
+        .cast("int")
+        .alias("rho"),
     )
 
 

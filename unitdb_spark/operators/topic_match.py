@@ -155,22 +155,3 @@ def _coarse_pushdown(
             cond = topic.startswith(F.lit(prefix + "."))
     return cond | is_pattern
 
-
-def topic_regex(query_topic: str | TopicSpec) -> str:
-    """Anchored regex equivalent of a query pattern vs concrete topics.
-
-    Used by the DuckDB oracle SQL (and available as an alternative
-    matcher via ``rlike``): '*' -> one level, trailing '...' -> any tail.
-    """
-    spec = parse_topic(query_topic) if isinstance(query_topic, str) else query_topic
-    import re as _re
-
-    out = []
-    for p in spec.base_parts:
-        out.append(r"[^.]+" if p == WILDCARD_ONE else _re.escape(p))
-    body = r"\.".join(out)
-    if spec.has_tail:
-        if not spec.base_parts:
-            return r"^.*$"
-        return rf"^{body}(\..+)?$"
-    return rf"^{body}$"

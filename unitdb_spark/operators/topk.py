@@ -17,12 +17,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def newest_first_topk(df: DataFrame, k: int, order_col: str = "seq") -> DataFrame:
-    """Global newest-first top-K (db.go:242-315's sort+limit+refill;
-    exact filters make the refill loop unnecessary — SURVEY §2.4)."""
-    return df.orderBy(F.desc(order_col)).limit(k)
-
-
 def topk_per_key(
     df: DataFrame,
     keys: list[str],

@@ -37,24 +37,6 @@ def tumbling_agg(
     )
 
 
-def sliding_agg(
-    df: DataFrame,
-    duration: str,
-    slide: str,
-    keys: list[str],
-    aggs: list[Column],
-    ts_col: str = "ts",
-) -> DataFrame:
-    w = F.window(F.col(ts_col), duration, slide)
-    return (
-        df.groupBy(w.alias("_w"), *keys)
-        .agg(*aggs)
-        .withColumn("window_start", F.col("_w.start"))
-        .withColumn("window_end", F.col("_w.end"))
-        .drop("_w")
-    )
-
-
 def session_agg(
     df: DataFrame,
     gap: str,
@@ -107,20 +89,3 @@ def sessionize_ids(
         "session_id", F.sum("_new_s").over(wk.rowsBetween(Window.unboundedPreceding, 0))
     ).drop("_new_s")
 
-
-def topk_per_window(
-    df: DataFrame,
-    duration: str,
-    key: str,
-    metric: Column,
-    k: int,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Top-K keys per tumbling window by an aggregated metric."""
-    agged = tumbling_agg(df, duration, [key], [metric.alias("_m")], ts_col)
-    w = Window.partitionBy("window_start").orderBy(F.desc("_m"), F.asc(key))
-    return (
-        agged.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumnRenamed("_m", "metric")
-    )

@@ -48,10 +48,6 @@ def has_python_eval(df: DataFrame) -> bool:
     return "BatchEvalPython" in formatted_plan(df)
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(re.findall(r"WholeStageCodegen", formatted_plan(df)))
-
-
 def shuffle_count(df: DataFrame) -> int:
     """Number of shuffle Exchange nodes in the physical plan.
 

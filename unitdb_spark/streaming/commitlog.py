@@ -30,23 +30,27 @@ checkpoint replays the whole source and appends again — at-least-once,
 the honest answer for a non-transactional sink; true exactly-once
 across generations needs a transactional table format.
 
-Versioned snapshots (``snapshot_sink`` / ``read_snapshot``): a
-read-merge-write fold is NOT naturally idempotent (a replayed batch
-would double-count), so streaming state tables keep one snapshot
-directory per committed batch, ``<state_path>/v_<query_id>_<batch_id>``,
-and use the commit log under ``state_path`` as the commit point:
+Versioned snapshots (``snapshot_sink`` / ``read_snapshot``): Spark's
+state store does the fold and the sink only publishes. Each rolling
+state is a streaming aggregation run in complete mode; the state store
+keeps it versioned per batch in the checkpoint, so a crashed batch
+re-runs from the last committed state version and recomputes the same
+output (Structured Streaming's stateful-operator recovery). Each
+micro-batch's output is the whole state, and the sink publishes it:
 
-  read snapshot v(last committed) -> merge batch b -> write snapshot
-  v(b) -> create the commit-log entry for b
+  skip b if its commit-log entry exists -> write the state as snapshot
+  v(b) -> create the commit-log entry for b -> prune the rest
 
-A crash anywhere before the entry exists leaves the log pointing at
-the old snapshot, so the replayed batch re-merges from unchanged state
-(no loss, no double-count). Snapshots are keyed by (query-generation,
+A crash before the entry exists leaves readers on the previous
+snapshot; the replayed batch writes v(b) again. Snapshots live at
+``<state_path>/v_<query_id>_<batch_id>``, keyed by (query generation,
 batch), so a pipeline restarted with a FRESH checkpoint — which
 replays the whole source from batch 0 — rebuilds its own snapshot
 line instead of matching a stale high-water mark. One maintainer
 stream per state table; other generations and superseded snapshots
-are pruned after each commit.
+are pruned after each commit. A fold that is not a Spark aggregate
+(the skyline frontier) passes ``merge`` instead: the sink reads the
+committed snapshot and writes ``merge(snapshot ∪ batch)``.
 """
 
 from __future__ import annotations
@@ -184,35 +188,65 @@ def read_snapshot(spark: SparkSession, state_path: str, what: str) -> DataFrame:
     return spark.read.parquet(_snap_path(state_path, *cur))
 
 
+def _refuse_stateless_checkpoint(spark: SparkSession, checkpoint: str) -> None:
+    """A checkpoint that has committed batches but no ``state/`` was
+    written by a stateless query (the sink before the state store did
+    the fold). Spark would fail to restart it under a stateful query
+    with an opaque missing-delta-file error, so say what happened."""
+    cp = checkpoint.rstrip("/")
+    if fs.list_status(spark, f"{cp}/commits") and not fs.exists(spark, f"{cp}/state"):
+        raise ValueError(
+            f"checkpoint {checkpoint} has committed batches but no state "
+            "store: it was written by a stateless snapshot sink and cannot "
+            "resume a streaming aggregation — restart with a fresh checkpoint "
+            "(the state table rebuilds from batch 0 as a new generation)"
+        )
+
+
 def snapshot_sink(
-    stream: DataFrame,
+    state: DataFrame,
     state_path: str,
     checkpoint: str,
-    partials: Callable[[DataFrame], DataFrame],
-    merge: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame] | None = None,
     trigger_available_now: bool = True,
 ):
-    """Start the streaming query maintaining a versioned state table
-    under ``state_path`` (read it with ``read_snapshot``). Per
-    micro-batch, ``partials(batch)`` is the batch's mergeable state and
-    ``merge(committed ∪ partials)`` re-aggregates it with the committed
-    snapshot; the first batch is written as its partials. Returns the
-    StreamingQuery."""
-    spark = stream.sparkSession
+    """Start the streaming query that publishes a versioned state table
+    under ``state_path`` (read it with ``read_snapshot``); returns the
+    StreamingQuery.
+
+    ``state`` is a streaming aggregation. It runs in complete mode, so
+    each micro-batch's output is the whole folded state, and the sink
+    writes it as that batch's snapshot. The number of state partitions
+    (``spark.sql.shuffle.partitions``) is fixed at the checkpoint's
+    first run. A checkpoint written by a stateless query cannot be
+    resumed here: that raises ``ValueError`` before the query starts.
+
+    ``merge`` is for a fold that is not a Spark aggregate (the skyline
+    frontier): ``state`` is then the raw row stream, run in append
+    mode, and each snapshot is ``merge(committed ∪ batch)``."""
+    spark = state.sparkSession
+    if merge is None:
+        _refuse_stateless_checkpoint(spark, checkpoint)
     fs.mkdirs(spark, state_path)
     log = CommitLog(spark, checkpoint, state_path)
     root = state_path.rstrip("/")
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
+    def publish(batch_df: DataFrame, batch_id: int) -> None:
         if log.applied(batch_id):
-            return  # replay of an already-applied batch: skip (idempotence)
-        applied = log.last()
-        state = partials(batch_df)
-        if applied is not None:
-            prev = spark.read.parquet(_snap_path(root, log.query_id, applied))
-            state = merge(prev.unionByName(state))
+            # replay of an already-applied batch: publish nothing, but run
+            # the batch so the state store commits its version (Spark
+            # fails a stateful batch whose partitions were not all run)
+            batch_df.write.format("noop").mode("overwrite").save()
+            return
+        out = batch_df
+        if merge is not None:
+            applied = log.last()
+            if applied is not None:
+                prev = spark.read.parquet(_snap_path(root, log.query_id, applied))
+                out = prev.unionByName(out)
+            out = merge(out)
         snap = _snap_path(root, log.query_id, batch_id)
-        state.write.mode("overwrite").parquet(snap)
+        out.write.mode("overwrite").parquet(snap)
         log.record(batch_id)  # commit point
         # retire stale generations' commit entries BEFORE deleting any
         # snapshot: a reader between the two steps (or after a crash
@@ -225,8 +259,8 @@ def snapshot_sink(
                 fs.delete(spark, f"{root}/{name}")
 
     writer = (
-        stream.writeStream.foreachBatch(fold)
-        .outputMode("update")
+        state.writeStream.foreachBatch(publish)
+        .outputMode("complete" if merge is None else "append")
         .option("checkpointLocation", checkpoint)
     )
     if trigger_available_now:

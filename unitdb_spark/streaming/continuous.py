@@ -1,24 +1,23 @@
-"""Continuous aggregates: a rollup table maintained by the stream.
+"""Continuous aggregates: rolling state tables maintained by the stream.
 
 The batch ``operators.rollup.topic_rollup`` recomputes the whole topic
 tree; at 100 TB of history that is the wrong cost model for a
-dashboard refreshed every minute. The streaming formulation keeps a
-materialized per-(contract, topic_prefix) aggregate table and folds
-each micro-batch into it:
+dashboard refreshed every minute. The streaming formulation declares
+each state as ONE streaming aggregation (``groupBy(...).agg(...)``
+over the stream). Spark's state store folds every micro-batch into
+the aggregation buffers of the touched keys, and
+``streaming.commitlog.snapshot_sink`` publishes the whole state after
+each batch as a versioned snapshot; its docstring gives the crash and
+restart protocol. The ``read_*`` functions finish a committed
+snapshot through the batch operators' own code, so on the same rows
+the streamed dashboard IS the batch one.
 
-    new_partials = rollup(batch)           -- tiny: only touched keys
-    table        = merge(table, partials)  -- algebraic re-aggregation
-
-Only *algebraic* aggregates are maintained (count, sum, min, max —
-anything whose partials merge associatively). Distinct-topic counts
-are NOT (a distinct across batches is not a sum of per-batch
-distincts); callers needing them run the batch rollup or an
-approx-distinct sketch instead.
-
-The merge cost per refresh is O(|table| + |touched prefixes|), never
-O(history). Every state table here is a versioned snapshot maintained
-by ``streaming.commitlog.snapshot_sink``, whose docstring gives the
-crash and restart protocol.
+Only aggregates the state store can fold are maintained (count, sum,
+min, max, struct extrema). Distinct counts are NOT (a streaming
+distinct would keep every value as state); callers needing them run
+the batch operator or a sketch instead. The skyline frontier is the
+one fold that is not a Spark aggregate: it passes ``merge`` to the
+sink instead.
 """
 
 from __future__ import annotations
@@ -30,9 +29,9 @@ from unitdb_spark.operators.rollup import prefix_expr
 from unitdb_spark.streaming.commitlog import read_snapshot, snapshot_sink
 
 
-def _batch_partials(batch: DataFrame) -> DataFrame:
-    val = F.col("value") if "value" in batch.columns else F.lit(0.0)
-    ex = batch.filter(~F.col("is_pattern")).select(
+def _rollup_state(entries: DataFrame) -> DataFrame:
+    val = F.col("value") if "value" in entries.columns else F.lit(0.0)
+    ex = entries.filter(~F.col("is_pattern")).select(
         "contract",
         F.explode(prefix_expr()).alias("topic_prefix"),
         "ts",
@@ -43,15 +42,6 @@ def _batch_partials(batch: DataFrame) -> DataFrame:
         F.min("ts").alias("first_ts"),
         F.max("ts").alias("last_ts"),
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-    )
-
-
-def _merge(u: DataFrame) -> DataFrame:
-    return u.groupBy("contract", "topic_prefix").agg(
-        F.sum("n_msgs").alias("n_msgs"),
-        F.min("first_ts").alias("first_ts"),
-        F.max("last_ts").alias("last_ts"),
-        F.sum("sum_value").alias("sum_value"),
     )
 
 
@@ -72,17 +62,17 @@ def continuous_rollup(
     messages-schema stream (with derived topic columns). Returns the
     StreamingQuery."""
     return snapshot_sink(
-        entries, agg_path, checkpoint, _batch_partials, _merge,
-        trigger_available_now,
+        _rollup_state(entries), agg_path, checkpoint,
+        trigger_available_now=trigger_available_now,
     )
 
 
 # --------------------------------------------- rolling key-count state
 #
 # The concentration audit's streaming twin: per-key mass (row counts)
-# is the algebraic state — count partials merge by SUM, so the
-# committed state equals the one-shot batch groupBy bit for bit
-# regardless of how the stream was split into micro-batches. The
+# is the algebraic state — a count the state store folds batch by
+# batch, so the committed state equals the one-shot batch groupBy bit
+# for bit regardless of how the stream was split into micro-batches. The
 # CONCENTRATION REPORT (top-1/top-k shares, HHI) is derived from the
 # state at read time via the batch operator's own math
 # (operators.profile.concentration_from_counts): a rolling skew audit
@@ -102,14 +92,12 @@ def continuous_key_counts(
     go straight to the audit with ``read_concentration``. Returns the
     StreamingQuery."""
     return snapshot_sink(
-        stream,
-        state_path,
-        checkpoint,
-        lambda b: b.groupBy(F.col(key_col).alias("_k")).agg(
+        stream.groupBy(F.col(key_col).alias("_k")).agg(
             F.count(F.lit(1)).alias("_n")
         ),
-        lambda u: u.groupBy("_k").agg(F.sum("_n").alias("_n")),
-        trigger_available_now,
+        state_path,
+        checkpoint,
+        trigger_available_now=trigger_available_now,
     )
 
 
@@ -155,25 +143,18 @@ def continuous_hourly_cells(
     cents = F.expr(
         f"CAST(SUM(CAST({value_col} AS DECIMAL(18,2))) * 100 AS BIGINT)"
     )
-
-    def partials(b: DataFrame) -> DataFrame:
-        return (
-            b.filter(F.col(value_col).isNotNull())
-            .groupBy(
-                F.col(key_col).alias("_k"),
-                F.to_date(ts_col).alias("_d"),
-                F.hour(ts_col).alias("_h"),
-            )
-            .agg(cents.alias("_cents"), F.count(F.lit(1)).alias("_c"))
+    cells = (
+        stream.filter(F.col(value_col).isNotNull())
+        .groupBy(
+            F.col(key_col).alias("_k"),
+            F.to_date(ts_col).alias("_d"),
+            F.hour(ts_col).alias("_h"),
         )
-
-    def merge(u: DataFrame) -> DataFrame:
-        return u.groupBy("_k", "_d", "_h").agg(
-            F.sum("_cents").alias("_cents"), F.sum("_c").alias("_c")
-        )
-
+        .agg(cents.alias("_cents"), F.count(F.lit(1)).alias("_c"))
+    )
     return snapshot_sink(
-        stream, state_path, checkpoint, partials, merge, trigger_available_now
+        cells, state_path, checkpoint,
+        trigger_available_now=trigger_available_now,
     )
 
 
@@ -252,33 +233,23 @@ def continuous_json_stats(
     the report with ``read_json_stats``. Returns the StreamingQuery."""
     from unitdb_spark.operators.olap import json_field_expr
 
-    def partials(b: DataFrame) -> DataFrame:
-        base = b.select(
+    stats = (
+        stream.select(
             F.col(group_col).alias("group"),
             json_field_expr(json_col, field).alias("v"),
         )
-        return base.groupBy("group").agg(
+        .groupBy("group")
+        .agg(
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(F.col("v").isNull(), 1)).alias("n_missing"),
             F.min("v").alias("min_v"),
             F.max("v").alias("max_v"),
             F.sum("v").alias("sum_v"),
         )
-
-    def merge(u: DataFrame) -> DataFrame:
-        return (
-            u.groupBy("group")
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("n_missing").alias("n_missing"),
-                F.min("min_v").alias("min_v"),
-                F.max("max_v").alias("max_v"),
-                F.sum("sum_v").alias("sum_v"),
-            )
-        )
-
+    )
     return snapshot_sink(
-        stream, state_path, checkpoint, partials, merge, trigger_available_now
+        stats, state_path, checkpoint,
+        trigger_available_now=trigger_available_now,
     )
 
 
@@ -314,23 +285,10 @@ def continuous_m4(
     with ``read_m4``. Returns the StreamingQuery."""
     from unitdb_spark.operators.timeseries import m4_partials
 
-    def partials(b: DataFrame) -> DataFrame:
-        return m4_partials(b, key_col, ts_col, value_col, order_cols, bucket_s)
-
-    def merge(u: DataFrame) -> DataFrame:
-        return (
-            u.groupBy("key", "_b")
-            .agg(
-                F.sum("n").alias("n"),
-                F.min("min_v").alias("min_v"),
-                F.max("max_v").alias("max_v"),
-                F.min("_first").alias("_first"),
-                F.max("_last").alias("_last"),
-            )
-        )
-
     return snapshot_sink(
-        stream, state_path, checkpoint, partials, merge, trigger_available_now
+        m4_partials(stream, key_col, ts_col, value_col, order_cols, bucket_s),
+        state_path, checkpoint,
+        trigger_available_now=trigger_available_now,
     )
 
 
@@ -360,14 +318,9 @@ def continuous_benford(
     with ``read_benford``. Returns the StreamingQuery."""
     from unitdb_spark.operators.profile import benford_digit_counts
 
-    def partials(b: DataFrame) -> DataFrame:
-        return benford_digit_counts(b, amount_col)
-
-    def merge(u: DataFrame) -> DataFrame:
-        return u.groupBy("digit").agg(F.sum("n").alias("n"))
-
     return snapshot_sink(
-        stream, state_path, checkpoint, partials, merge, trigger_available_now
+        benford_digit_counts(stream, amount_col), state_path, checkpoint,
+        trigger_available_now=trigger_available_now,
     )
 
 
@@ -401,14 +354,9 @@ def continuous_abc(
     classification with ``read_abc``. Returns the StreamingQuery."""
     from unitdb_spark.operators.olap import abc_key_cents
 
-    def partials(b: DataFrame) -> DataFrame:
-        return abc_key_cents(b, key_col, value_col)
-
-    def merge(u: DataFrame) -> DataFrame:
-        return u.groupBy("key").agg(F.sum("cents").alias("cents"))
-
     return snapshot_sink(
-        stream, state_path, checkpoint, partials, merge, trigger_available_now
+        abc_key_cents(stream, key_col, value_col), state_path, checkpoint,
+        trigger_available_now=trigger_available_now,
     )
 
 
@@ -468,8 +416,8 @@ def read_holt_winters(
 # The embedding corpus's dominant axis as a continuously-maintained
 # dashboard: the (i, j, v) Gram/sum/count partial relation from
 # operators.pca is MERGEABLE by summation (integer sums — batch-equal
-# however the stream splits), so the commit-logged fold holds d² + d
-# + 1 longs of state regardless of corpus size, and the read side
+# however the stream splits), so the state-store aggregation holds
+# d² + d + 1 longs of state regardless of corpus size, and the read side
 # finishes through the batch code path (moment_finish +
 # power_iteration) — the streamed eigenvector IS the batch
 # eigenvector, bit for bit.
@@ -488,14 +436,9 @@ def continuous_gram(
     Returns the StreamingQuery."""
     from unitdb_spark.operators.pca import PCA_QUANT, gram_partials
 
-    def partials(b: DataFrame) -> DataFrame:
-        return gram_partials(b, vec_col, dim, PCA_QUANT)
-
-    def merge(u: DataFrame) -> DataFrame:
-        return u.groupBy("i", "j").agg(F.sum("v").cast("long").alias("v"))
-
     return snapshot_sink(
-        stream, state_path, checkpoint, partials, merge, trigger_available_now
+        gram_partials(stream, vec_col, dim, PCA_QUANT), state_path, checkpoint,
+        trigger_available_now=trigger_available_now,
     )
 
 
@@ -536,12 +479,13 @@ def read_temperature_mix(
 # ------------------------------------------------ rolling 2-D skyline
 #
 # The Pareto frontier is MERGEABLE: skyline(A ∪ B) =
-# skyline(skyline(A) ∪ skyline(B)) — dominated rows can never rejoin
-# the frontier, so the committed state holds only the current
-# frontier (buckets × |distinct B| rows, corpus-size-independent) and
-# each refresh folds the batch's own frontier into it through the
-# batch operator (operators.skyline.skyline2d) — the streamed
-# frontier IS the batch frontier on the same rows.
+# skyline(skyline(A) ∪ B) — dominated rows can never rejoin the
+# frontier, so the committed state holds only the current frontier
+# (buckets × |distinct B| rows, corpus-size-independent). A frontier
+# is not a Spark aggregate, so this twin passes ``merge`` to the sink:
+# each refresh runs the batch operator (operators.skyline.skyline2d)
+# over the committed frontier ∪ the batch — the streamed frontier IS
+# the batch frontier on the same rows.
 
 
 def continuous_skyline(
@@ -558,14 +502,10 @@ def continuous_skyline(
     ``read_skyline``. Returns the StreamingQuery."""
     from unitdb_spark.operators.skyline import skyline2d
 
-    def partials(b: DataFrame) -> DataFrame:
-        return skyline2d(b, min_col, max_col, bucket_width)
-
-    def merge(u: DataFrame) -> DataFrame:
-        return skyline2d(u, min_col, max_col, bucket_width)
-
     return snapshot_sink(
-        stream, state_path, checkpoint, partials, merge, trigger_available_now
+        stream, state_path, checkpoint,
+        merge=lambda u: skyline2d(u, min_col, max_col, bucket_width),
+        trigger_available_now=trigger_available_now,
     )
 
 
@@ -579,7 +519,7 @@ def read_skyline(spark, state_path: str) -> DataFrame:
 # The Poisson bootstrap's streaming twin: the mergeable state is the
 # per-(group, replicate) partial-sum relation (replicate 0 = identity
 # weights). Weights are a PURE FUNCTION of (event id, replicate,
-# salt), so partials merge by sum to the batch relation bit for bit
+# salt), so the streamed sums equal the batch relation bit for bit
 # however the stream was split; the order-statistic CI report runs at
 # read time through the batch operator's shared finish.
 
@@ -599,30 +539,19 @@ def continuous_bootstrap(
     StreamingQuery."""
     from unitdb_spark.operators.bootstrap import bootstrap_partials
 
-    def partials(batch: DataFrame) -> DataFrame:
-        rows = batch.filter(
-            F.col(value_col).isNotNull() & ~F.isnan(value_col)
-        ).select(
-            F.col(group_col),
-            F.col(id_col),
-            F.expr(
-                f"CAST(CAST({value_col} AS DECIMAL(18,2)) * 100 AS BIGINT)"
-            ).alias("_cents"),
-        )
-        return bootstrap_partials(rows, group_col, id_col, "_cents", b)
-
-    def merge(u: DataFrame) -> DataFrame:
-        return (
-            u.groupBy("_g", "_b")
-            .agg(
-                F.sum("_s").cast("decimal(38,0)").alias("_s"),
-                F.sum("_wn").cast("long").alias("_wn"),
-            )
-        )
-
+    rows = stream.filter(
+        F.col(value_col).isNotNull() & ~F.isnan(value_col)
+    ).select(
+        F.col(group_col),
+        F.col(id_col),
+        F.expr(
+            f"CAST(CAST({value_col} AS DECIMAL(18,2)) * 100 AS BIGINT)"
+        ).alias("_cents"),
+    )
     return snapshot_sink(
-        stream, state_path, checkpoint, partials, merge,
-        trigger_available_now,
+        bootstrap_partials(rows, group_col, id_col, "_cents", b),
+        state_path, checkpoint,
+        trigger_available_now=trigger_available_now,
     )
 
 
@@ -667,47 +596,29 @@ def continuous_survival(
     ``read_survival``. ``origin_filter``/``event_filter`` are Column
     predicates (the `time_to_event` contract). Returns the
     StreamingQuery."""
+    ts = F.col(ts_col).cast("timestamp")
+    no_s = F.lit(None).cast(stream.schema[subject_col].dataType)
+    no_d = F.lit(None).cast("date")
 
-    def partials(batch: DataFrame) -> DataFrame:
-        base = batch.select(
-            F.col(subject_col).alias("_s"),
-            F.col(ts_col).cast("timestamp").alias("_ts"),
-            origin_filter.alias("_is_o"),
-            event_filter.alias("_is_e"),
-        )
-        o = base.filter(F.col("_is_o")).groupBy("_s").agg(
-            F.min("_ts").alias("_v")
-        ).select(
-            F.lit("o").alias("_kind"), "_s",
-            F.lit(None).cast("date").alias("_d"),
-            F.col("_v").alias("_vmin"), F.col("_v").alias("_vmax"),
-        )
-        e = base.filter(F.col("_is_e")).groupBy(
-            "_s", F.to_date("_ts").alias("_d")
-        ).agg(F.max("_ts").alias("_v")).select(
-            F.lit("e").alias("_kind"), "_s", "_d",
-            F.col("_v").alias("_vmin"), F.col("_v").alias("_vmax"),
-        )
-        m = base.agg(F.max("_ts").alias("_v")).select(
-            F.lit("m").alias("_kind"),
-            F.lit(None).cast(base.schema["_s"].dataType).alias("_s"),
-            F.lit(None).cast("date").alias("_d"),
-            F.col("_v").alias("_vmin"), F.col("_v").alias("_vmax"),
-        ).filter(F.col("_vmin").isNotNull())
-        return o.unionByName(e).unionByName(m)
+    def row(kind: str, s, d):
+        return F.struct(F.lit(kind).alias("_kind"), s.alias("_s"), d.alias("_d"))
 
-    def merge(u: DataFrame) -> DataFrame:
-        return (
-            u.groupBy("_kind", "_s", "_d")
-            .agg(
-                F.min("_vmin").alias("_vmin"),
-                F.max("_vmax").alias("_vmax"),
-            )
-        )
-
+    # each input row projects to up to three state rows: its origin,
+    # its event day and the global censor
+    keys = F.array(
+        F.when(origin_filter, row("o", F.col(subject_col), no_d)),
+        F.when(event_filter, row("e", F.col(subject_col), F.to_date(ts))),
+        F.when(ts.isNotNull(), row("m", no_s, no_d)),
+    )
+    state = (
+        stream.select(F.explode(keys).alias("_r"), ts.alias("_ts"))
+        .filter(F.col("_r").isNotNull())
+        .groupBy("_r._kind", "_r._s", "_r._d")
+        .agg(F.min("_ts").alias("_vmin"), F.max("_ts").alias("_vmax"))
+    )
     return snapshot_sink(
-        stream, state_path, checkpoint, partials, merge,
-        trigger_available_now,
+        state, state_path, checkpoint,
+        trigger_available_now=trigger_available_now,
     )
 
 
@@ -951,15 +862,12 @@ def continuous_user_cents(
         f"CAST(sum(CAST({value_col} AS DECIMAL(18,2)) * 100) AS BIGINT)"
     )
     return snapshot_sink(
-        stream,
-        state_path,
-        checkpoint,
-        lambda b: b.filter(F.col(value_col).isNotNull())
+        stream.filter(F.col(value_col).isNotNull())
         .groupBy(F.col(user_col).alias("_u"))
         .agg(cents.alias("_cents"), F.count(F.lit(1)).alias("_c")),
-        lambda u: u.groupBy("_u")
-        .agg(F.sum("_cents").alias("_cents"), F.sum("_c").alias("_c")),
-        trigger_available_now,
+        state_path,
+        checkpoint,
+        trigger_available_now=trigger_available_now,
     )
 
 

@@ -2,26 +2,26 @@
 
 `operators.kv` answers point-in-time KV questions by re-reducing the
 whole op-log; fine for audits, wrong cost model for a hot state table
-refreshed per micro-batch at 100 TB of history. This sink folds each
-batch of ops into a materialized current-state snapshot:
+refreshed per micro-batch at 100 TB of history. Here the winner per
+key is one streaming aggregation,
 
-    batch_winners = last op per key IN THE BATCH     -- O(|batch|)
-    state         = winner-per-key(state ∪ winners)  -- O(|state|+|batch|)
+    state = groupBy(key).max(struct(op_order, op = 'delete', op, value))
 
-so per-refresh cost is bounded by live-key cardinality plus batch
-size, never by op-log history. Delete winners are kept as tombstone
-rows inside the snapshot (bounded by key cardinality) so a replayed or
+which Spark's state store folds batch by batch: each refresh touches
+only the keys in the batch, never the op-log history. The struct
+orders by op_order first and then puts a delete above a put, so a
+delete wins an exact op_order tie. Delete winners stay in the state as
+tombstone rows (bounded by key cardinality), so a replayed or
 out-of-order lower-`op_order` put can never resurrect a deleted key;
 `read_kv` filters them out.
 
-Crash safety is the versioned-snapshot protocol of
+Publishing and crash safety are the versioned-snapshot protocol of
 ``streaming.commitlog.snapshot_sink``.
 
 Scale note: each refresh rewrites the full state snapshot. That is the
 honest cost of crash-safe versioning over plain parquet; when live-key
 cardinality itself is huge relative to batches, the right tool is a
-transactional table format whose MERGE rewrites only touched files —
-the fold logic here maps 1:1 onto such a sink.
+transactional table format whose MERGE rewrites only touched files.
 
 Op-log schema (same as operators.kv): (key LONG, value BINARY,
 op STRING ['put','delete'], op_order LONG).
@@ -29,24 +29,20 @@ op STRING ['put','delete'], op_order LONG).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unitdb_spark.streaming.commitlog import read_snapshot, snapshot_sink
 
-_STATE_COLS = ["key", "value", "op", "op_order"]
-
 
 def _winners(ops: DataFrame) -> DataFrame:
-    """Last op per key (ties broken toward 'put' < 'delete' reversed —
-    i.e. delete wins an exact op_order tie, the conservative choice)."""
-    w = Window.partitionBy("key").orderBy(
-        F.desc("op_order"), F.desc(F.col("op") == "delete")
-    )
-    return (
-        ops.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(*_STATE_COLS)
+    """Last op per key; a delete wins an exact op_order tie (the
+    conservative choice)."""
+    last = F.max(
+        F.struct("op_order", (F.col("op") == "delete").alias("_del"), "op", "value")
+    ).alias("_w")
+    return ops.groupBy("key").agg(last).select(
+        "key", "_w.value", "_w.op", "_w.op_order"
     )
 
 
@@ -68,10 +64,6 @@ def continuous_kv(
     """Start the streaming query maintaining the KV state table under
     ``state_path`` from an op-log stream. Returns the StreamingQuery."""
     return snapshot_sink(
-        oplog,
-        state_path,
-        checkpoint,
-        lambda b: _winners(b.select(*_STATE_COLS)),
-        _winners,
-        trigger_available_now,
+        _winners(oplog), state_path, checkpoint,
+        trigger_available_now=trigger_available_now,
     )

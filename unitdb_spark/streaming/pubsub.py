@@ -31,7 +31,6 @@ O(1) scans per batch.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
 from enum import IntEnum
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,19 +50,6 @@ class DeliveryMode(IntEnum):
     EXPRESS = 0
     RELIABLE = 1
     BATCH = 2
-
-
-@dataclass
-class Subscription:
-    topic: str
-    mode: DeliveryMode = DeliveryMode.EXPRESS
-    delay_ms: int = 0
-    contract: int = MASTER_CONTRACT
-    query: StreamingQuery | None = field(default=None, repr=False)
-
-    def stop(self) -> None:
-        if self.query is not None:
-            self.query.stop()
 
 
 def prepare_entries(df: DataFrame) -> DataFrame:

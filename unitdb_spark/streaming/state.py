@@ -57,6 +57,16 @@ STATE_SCHEMA = StructType(
 )
 
 
+def _exact_units(v: float, places: int) -> int:
+    """``v`` in exact 10^-places units, as Spark's double ->
+    DECIMAL(p, places) cast gives it: round half up at ``places``
+    fractional digits on the double's shortest repr."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    q = Decimal(repr(float(v))).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP)
+    return int(q.scaleb(places))
+
+
 def _topk_fn(k: int, timeout_ms: int | None):
     def fn(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -385,7 +395,7 @@ def _gapfill_fn(step_s: int):
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         import math
-        from decimal import ROUND_HALF_UP, Decimal
+        from decimal import Decimal
 
         MICRO = Decimal("0.000001")
 
@@ -430,10 +440,8 @@ def _gapfill_fn(step_s: int):
             cnt += 1
             is_null = v is None or (isinstance(v, float) and math.isnan(v))
             if not is_null:
-                # Spark's double->DECIMAL(18,6) cast: shortest decimal
-                # repr, HALF_UP at 6 fractional digits
-                q = Decimal(repr(float(v))).quantize(MICRO, rounding=ROUND_HALF_UP)
-                sum_micro += int(q.scaleb(6))
+                # Spark's double->DECIMAL(18,6) cast
+                sum_micro += _exact_units(v, 6)
                 has_sum = True
         if cur is not None:
             state.update((cur, sum_micro, has_sum, cnt,
@@ -624,7 +632,6 @@ def _cusum_fn(target_u: int, h_u: int):
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         import math
-        from decimal import ROUND_HALF_UP, Decimal
 
         (k,) = key
         # n_valid: rows with a real deviation so far — a key whose
@@ -636,7 +643,6 @@ def _cusum_fn(target_u: int, h_u: int):
         rows = []
         batch = pd.concat(list(pdfs), ignore_index=True)
         batch = batch.sort_values(["ts_us", "event_id"])
-        q6 = Decimal("0.000001")
         for eid, v in zip(batch["event_id"], batch["value"]):
             # NULL rows never reach here (JVM-side isNotNull filter in
             # streaming_cusum — the Arrow hop would render SQL NULL as
@@ -657,11 +663,8 @@ def _cusum_fn(target_u: int, h_u: int):
                         )
                     )
                 continue
-            # round-half-up at 6 dp on the double's shortest repr —
-            # exactly Spark's round(value, 6) — then exact 1e-6 units
-            v_u = int(
-                (Decimal(repr(float(v))).quantize(q6, ROUND_HALF_UP) / q6)
-            )
+            # exactly Spark's round(value, 6), in exact 1e-6 units
+            v_u = _exact_units(v, 6)
             s_u += v_u - target_u
             mn_u = min(mn_u, s_u)  # starts at 0 == min(0, min prefix)
             mx_u = max(mx_u, s_u)
@@ -729,13 +732,10 @@ def streaming_cusum(
     key, value, s_r, cusum_pos_r, cusum_neg_r, alarm), alarm when
     either statistic exceeds ``h``.
     """
-    from decimal import ROUND_HALF_UP, Decimal
-
     from pyspark.sql import functions as F
 
-    q6 = Decimal("0.000001")
-    target_u = int(Decimal(repr(float(target))).quantize(q6, ROUND_HALF_UP) / q6)
-    h_u = int(Decimal(repr(float(h))).quantize(q6, ROUND_HALF_UP) / q6)
+    target_u = _exact_units(target, 6)
+    h_u = _exact_units(h, 6)
     # NULL rows drop JVM-SIDE (batch isNotNull parity) — past the
     # Arrow hop a SQL NULL double reads as NaN and would conflate
     # with genuine NaN values, which the batch twin KEEPS
@@ -779,20 +779,15 @@ def _ph_fn(delta_u: int, lam_u: int):
     def fn(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        from decimal import ROUND_HALF_UP, Decimal
-
         (k,) = key
         n, s_u, m_u, mn_m = state.get if state.exists else (0, 0, 0, 0)
         batch = pd.concat(list(pdfs), ignore_index=True)
         batch = batch.sort_values(["ts_us", "event_id"])
-        q6 = Decimal("0.000001")
         rows = []
         for eid, v in zip(batch["event_id"], batch["value"]):
             # NULL/NaN rows never reach here (JVM-side filter parity
             # with the batch operator's drop)
-            v_u = int(
-                Decimal(repr(float(v))).quantize(q6, ROUND_HALF_UP) / q6
-            )
+            v_u = _exact_units(v, 6)
             n += 1
             s_u += v_u
             # Python // floors for either sign — the same true floor
@@ -833,13 +828,10 @@ def streaming_page_hinkley(
     one judged row per event — (event_id, key, value_micro, m_micro,
     ph_micro, alarm), alarm when PH exceeds ``lam``.
     """
-    from decimal import ROUND_HALF_UP, Decimal
-
     from pyspark.sql import functions as F
 
-    q6 = Decimal("0.000001")
-    delta_u = int(Decimal(repr(float(delta))).quantize(q6, ROUND_HALF_UP) / q6)
-    lam_u = int(Decimal(repr(float(lam))).quantize(q6, ROUND_HALF_UP) / q6)
+    delta_u = _exact_units(delta, 6)
+    lam_u = _exact_units(lam, 6)
     prepped = stream.filter(
         F.col("value").isNotNull() & ~F.isnan(F.col("value").cast("double"))
     ).select(
@@ -1139,11 +1131,9 @@ def _records_fn():
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         import math
-        from decimal import ROUND_HALF_UP, Decimal
 
         (k,) = key
         cur_max, n_rec = state.get if state.exists else (None, 0)
-        q2 = Decimal("0.01")
         rows = []
         batch = pd.concat(list(pdfs), ignore_index=True)
         batch = batch.sort_values(["ts_us", "id"])
@@ -1151,11 +1141,8 @@ def _records_fn():
             if isinstance(v, float) and math.isnan(v):
                 # batch twin: CAST(NaN AS DECIMAL) is NULL -> dropped
                 continue
-            # exactly Spark's CAST(value AS DECIMAL(18,2)) * 100:
-            # round-half-up at 2 dp on the double's shortest repr
-            cents = int(
-                Decimal(repr(float(v))).quantize(q2, ROUND_HALF_UP) * 100
-            )
+            # exactly Spark's CAST(value AS DECIMAL(18,2)) * 100
+            cents = _exact_units(v, 2)
             if cur_max is None or cents > cur_max:
                 cur_max = cents
                 n_rec += 1

@@ -143,7 +143,7 @@ def q_topic_counts_live(spark, sf_dir):
     now = _now(spark, sf_dir)
     return (
         _messages(spark, sf_dir)
-        .filter(ttl_live_expr(F.lit(now)))
+        .filter(ttl_live_expr(now))
         .groupBy("contract", "topic")
         .agg(F.count(F.lit(1)).alias("n_live"))
     )
@@ -165,7 +165,7 @@ def q_tombstone_antijoin(spark, sf_dir):
     tombs = msgs.filter(F.col("seq") % 97 == 0).select("seq")
     return (
         msgs.join(F.broadcast(tombs), on="seq", how="left_anti")
-        .filter(ttl_live_expr(F.lit(now)))
+        .filter(ttl_live_expr(now))
         .groupBy("topic")
         .agg(F.count(F.lit(1)).alias("n_live"))
     )
@@ -176,7 +176,7 @@ def q_topk_per_topic(spark, sf_dir):
     msgs = (
         _messages(spark, sf_dir)
         .filter(F.col("contract") == MASTER_CONTRACT)
-        .filter(ttl_live_expr(F.lit(now)))
+        .filter(ttl_live_expr(now))
     )
     return topk_per_key(msgs, ["topic"], 5, order=F.desc("seq")).select(
         "topic", "seq", EPOCH("ts"), "rn"
@@ -1645,7 +1645,7 @@ def q_topic_rollup(spark, sf_dir):
     from unitdb_spark.operators.rollup import topic_rollup
 
     now = _now(spark, sf_dir)
-    live = _messages(spark, sf_dir).filter(ttl_live_expr(F.lit(now)))
+    live = _messages(spark, sf_dir).filter(ttl_live_expr(now))
     out = topic_rollup(live, value_col="value")
     return out.select(
         "contract",

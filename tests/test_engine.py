@@ -134,6 +134,101 @@ class TestGetMany:
         assert fused == individual
 
 
+class TestGetPredicate:
+    """Get builds its predicate as one SQL string and reads its tables
+    without filesystem pre-checks."""
+
+    STORED = [
+        "q'a.x", "q\\b.x", "q%c.x", "q_d.x", 'q"e.x', "q'a.*", "q\\b...",
+        "q%c.y", "qxc.x", "qxd.x", "q'a.x'", "q\\'a.x", "q.x'",
+        "q${x}.y", "q.${spark.app.name}", "q.${spark.sql.shuffle.partitions}", "q.$", "q\\${x}.y",
+    ]
+    QUERIES = [
+        "q'a.x", "q\\b.x", "q%c.x", "q_d.x", 'q"e.x', "q'a.*", "q\\b...",
+        "q%c...", "q_d...", "*.x", "q\\'a.x", "q'a.x'", "q.*", "*.x'",
+        "q${x}.y", "q.${spark.app.name}", "q.${spark.sql.shuffle.partitions}", "q.$", "q\\${x}.y",
+        "*.y", "q${x}...",
+    ]
+
+    def test_quoted_topics_match_python_matcher(self, engine: Engine):
+        """``'``, ``\\``, ``%``, ``_``, ``"`` and ``${…}`` in stored and
+        query topics are literal characters, in both match directions
+        (``${name}`` is not a Spark variable reference)."""
+        from unitdb_spark.core.topic import topic_match
+
+        for i, t in enumerate(self.STORED):
+            engine.put_entry(Entry(t, b"%d" % i), ts=T0 + i)
+        want = [
+            [b"%d" % i for i in reversed(range(len(self.STORED))) if topic_match(self.STORED[i], q)]
+            for q in self.QUERIES
+        ]
+        # every stored topic is found by its own query
+        assert all(want[:7]) and all(want[14:19])
+        assert [engine.get(q, now=T0 + 100) for q in self.QUERIES] == want
+        assert engine.get_many(self.QUERIES, now=T0 + 100) == want
+
+    def test_missing_directories_read_as_empty(self, engine: Engine, spark):
+        from unitdb_spark import fs
+
+        assert not fs.exists(spark, engine.tombstones_path)
+        assert not fs.exists(spark, engine.table.path)
+        assert engine.get("a.b", now=T0) == []
+        assert engine.get_many(["a.b", "a.*"], now=T0) == [[], []]
+        assert engine.count(now=T0) == 0
+        engine.put_entry(Entry("a.b", b"x"), ts=T0)
+        assert engine.get("a.*", now=T0) == [b"x"]  # no tombstones/ dir
+        assert engine.count(now=T0) == 1
+
+    def test_tombstone_dir_without_parquet_is_no_tombstones(self, engine: Engine, spark):
+        from unitdb_spark import fs
+
+        for i in range(3):
+            engine.put_entry(Entry("d.t", b"%d" % i), ts=T0 + i)
+        fs.write_text(spark, f"{engine.tombstones_path}/_SUCCESS", "")
+        assert engine._tombstones_df() is None
+        assert engine.get("d.t", now=T0 + 10) == [b"2", b"1", b"0"]
+        assert engine.count(now=T0 + 10) == 3
+
+    def test_fractional_now_and_subsecond_last(self, engine: Engine):
+        for name, dt_s in (("old", 0.0), ("edge", 0.25), ("new", 0.6)):
+            engine.put_entry(Entry("w.t", name.encode()), ts=T0 + dt_s)
+        now = T0 + 0.75  # ?last=500ms starts at T0 + 0.25, inclusive
+        assert engine.get("w.t?last=500ms", now=now) == [b"new", b"edge"]
+        assert engine.get_many(["w.t?last=500ms", "w.t"], now=now) == [
+            [b"new", b"edge"], [b"new", b"edge", b"old"]
+        ]
+
+    @pytest.mark.parametrize("now", [T0 + 0.123456789, T0 + 0.5, T0 - 86400.000001])
+    def test_sql_now_is_the_instant_of_the_lit_datetime(self, spark, now):
+        """The SQL clock is the instant the Column-API Get compared
+        against: ``F.lit`` of ``now`` as a naive UTC datetime."""
+        import datetime as dt
+
+        from pyspark.sql import functions as F
+
+        from unitdb_spark.table import now_sql
+
+        naive = dt.datetime.fromtimestamp(now, dt.timezone.utc).replace(tzinfo=None)
+        for v in (now, naive):
+            r = spark.range(1).select(F.lit(naive).alias("a"), F.expr(now_sql(v)).alias("b")).first()
+            assert r.a == r.b
+
+    def test_get_df_starts_no_job(self, engine: Engine, spark):
+        """Building a Get's plan runs nothing: the tombstone table is
+        read with its schema, not inferred by a Spark job."""
+        seqs = [engine.put_entry(Entry("j.t", b"%d" % i), ts=T0 + i) for i in range(4)]
+        engine.flush()
+        engine.delete(seqs[1])
+        sc = spark.sparkContext
+        sc.setJobGroup("get-df-build", "build a Get's DataFrame")
+        try:
+            df = engine.get_df(Query("j.t"), now=T0 + 10)
+            assert list(sc.statusTracker().getJobIdsForGroup("get-df-build")) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert [r["payload"] for r in df.collect()] == [b"3", b"2", b"0"]
+
+
 class TestExpiry:
     def test_pre_expired_invisible(self, engine: Engine):
         # entries whose TTL already lapsed are never returned

@@ -61,6 +61,23 @@ class TestGetPlan:
         assert not has_python_eval(store.get_df(Query("t.*.x"), now=T0 + 100))
 
 
+class TestGetManyPlan:
+    def test_top_k_below_the_shuffle(self, store):
+        """Each task keeps its newest max(limits) rows per query before
+        the exchange on query_id: a Partial WindowGroupLimit runs below
+        the Exchange, the Final one above it."""
+        from unitdb_spark.operators.get import apply_get_many
+
+        qs = [Query("t.1.x", limit=3), Query("t.*.x", limit=5)]
+        df = apply_get_many(store.table.read(), qs, now=T0 + 100)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0].splitlines()
+        exchange = next(i for i, l in enumerate(final) if "Exchange hashpartitioning(query_id" in l)
+        partial = next(i for i, l in enumerate(final) if "WindowGroupLimit" in l and "Partial" in l)
+        assert exchange < partial  # the tree prints parents above children
+
+
 class TestAnalyticsPlans:
     def test_broadcast_join_for_small_dims(self, spark):
         li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")

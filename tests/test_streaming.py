@@ -1004,6 +1004,44 @@ class TestReliableSink:
         )
         assert sorted(delivered) == want  # every message, exactly once
 
+    def test_replayed_acked_batch_of_stateful_subscription_restarts(
+        self, spark, events_dir, tmp_path
+    ):
+        """A RELIABLE subscription deduplicates with state. If the
+        subscriber dies after its ack but before Spark commits the
+        batch, Spark replays that batch on restart; the sink must skip
+        it without failing the state store's commit check, and without
+        handing it to the subscriber again."""
+        import os
+
+        from unitdb_spark.streaming.pubsub import ReliableSink
+
+        cp = str(tmp_path / "cp")
+        calls: list[int] = []
+        sink = lambda df, batch_id: calls.append(batch_id)  # noqa: E731
+
+        def run():
+            rs = ReliableSink(spark, str(tmp_path / "sub"), cp, sink)
+            q = (
+                subscribe(entries_stream(spark, events_dir), "events...", DeliveryMode.RELIABLE)
+                .writeStream.foreachBatch(rs)
+                .option("checkpointLocation", cp)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(180)
+            assert q.exception() is None, q.exception()
+
+        run()
+        assert calls
+        last = max(int(n) for n in os.listdir(f"{cp}/commits") if n.isdigit())
+        for name in (str(last), f".{last}.crc"):
+            if os.path.exists(f"{cp}/commits/{name}"):
+                os.remove(f"{cp}/commits/{name}")
+        before = list(calls)
+        run()
+        assert calls == before  # the replayed batch reached no subscriber
+
     def test_empty_inflight_torn_write_is_dropped_not_delivered(
         self, spark, tmp_path
     ):

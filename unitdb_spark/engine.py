@@ -82,6 +82,9 @@ def _capped_fetch(
         yield r, p
 
 
+#: the tombstone table: one column, the deleted seq
+TOMBSTONE_SCHEMA = "seq long"
+
 #: sentinel distinguishing "not passed" from an explicit None (= no cap)
 _UNSET = object()
 
@@ -274,7 +277,9 @@ class Engine:
     # ------------------------------------------------------------- read
     def get_df(self, query: Query | str, now: float | None = None) -> DataFrame:
         """db.go:222-319 Get() as a single declarative plan; returns the
-        full rows (callers project payload)."""
+        full rows (callers project payload). Building it starts no Spark
+        job; its one filesystem call of its own is the tombstone check
+        (see ``_live_df``)."""
         from unitdb_spark.operators.get import apply_get
 
         self._metrics["gets"] += 1
@@ -296,7 +301,11 @@ class Engine:
         — so a ``limit=100000`` query over GB-sized payloads fails
         loudly part-way instead of OOMing the driver after buffering
         everything. ``get_df`` is the scale path: it never materializes
-        results driver-side and has no cap."""
+        results driver-side and has no cap.
+
+        A store whose ``messages/`` or ``tombstones/`` directory does not
+        exist reads as holding no messages or no deletes: ``[]``, not an
+        error."""
         cap = (
             self.options.max_get_result_bytes
             if max_result_bytes is _UNSET
@@ -333,6 +342,11 @@ class Engine:
         return [[p for _, p in sorted(l, reverse=True)] for l in out]
 
     def _live_df(self) -> DataFrame:
+        """The stored rows minus tombstoned seqs, decrypted. The
+        messages table is read with no pre-check (a missing directory
+        reads as empty, see ``MessagesTable.read``); the tombstone dir
+        is checked for a data file first, and a missing or empty one
+        plans no anti-join."""
         self.flush()
         df = self.table.read()
         tombs = self._tombstones_df()
@@ -359,13 +373,16 @@ class Engine:
         t0 = time.monotonic()
         self._metrics["dels"] += len(seqs)
         self.spark.createDataFrame(
-            [(int(s),) for s in seqs], "seq long"
+            [(int(s),) for s in seqs], TOMBSTONE_SCHEMA
         ).repartition(1).write.mode("append").parquet(self.tombstones_path)
         self._latencies["del"].append(time.monotonic() - t0)
 
     def _tombstones_df(self) -> DataFrame | None:
+        """The tombstone table, or None when it holds no file (then Get
+        plans no anti-join). The explicit schema matters: inferring it
+        runs one Spark job per read."""
         if fs.has_files(self.spark, self.tombstones_path):
-            return self.spark.read.parquet(self.tombstones_path)
+            return self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(self.tombstones_path)
         return None
 
     # ------------------------------------------------------------ batch
@@ -382,11 +399,7 @@ class Engine:
     # ------------------------------------------------------------ admin
     def count(self, now: float | None = None) -> int:
         """db.go:474-482 Count(): live entries (TTL + tombstones applied)."""
-        from unitdb_spark.operators.get import now_column
-
-        if not self.table.exists() and not self._buffer:
-            return 0
-        return self._live_df().filter(ttl_live_expr(now_column(now))).count()
+        return self._live_df().filter(ttl_live_expr(now)).count()
 
     def file_size(self) -> int:
         """db.go:474-482 FileSize(): bytes on storage for this store
@@ -505,8 +518,7 @@ class Engine:
         next open: no row is lost and no seq is reused."""
         if not self.table.exists():
             return
-        now_dt = dt.datetime.fromtimestamp(now or time.time(), dt.timezone.utc).replace(tzinfo=None)
-        live = ttl_live_expr(F.lit(now_dt))
+        live = ttl_live_expr(now or time.time())
         with self._maintenance():
             dead = self.table.read().filter(~live).select("contract", "p_date").distinct()
             for r in dead.collect():
@@ -552,7 +564,7 @@ class Engine:
             ]
             if not snap_files or not self.table.exists():
                 return report
-            tomb_seqs = self.spark.read.parquet(*snap_files).select("seq").distinct()
+            tomb_seqs = self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(*snap_files).distinct()
             # affected-partition discovery is a JOIN, not a driver-side
             # intersect: a mass delete (GDPR-style) may tombstone
             # millions of seqs, which must never serialize through the

@@ -9,6 +9,9 @@ The emitted plan is: Parquet scan with pushed filters (contract is a
 partition column on the live store; ts/seq hit row-group stats) →
 whole-stage-codegen filter → TakeOrderedAndProject(limit, seq DESC).
 No shuffle except the final K-row merge.
+
+Each predicate is generated as Spark SQL and parsed once (see
+operators.topic_match for why), user strings quoted by ``sql_string``.
 """
 
 from __future__ import annotations
@@ -16,34 +19,25 @@ from __future__ import annotations
 import datetime as dt
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from unitdb_spark.core.model import Query
-from unitdb_spark.operators.topic_match import topic_match_expr
-from unitdb_spark.table import ttl_live_expr
+from unitdb_spark.operators.topic_match import topic_match_expr, topic_match_sql
+from unitdb_spark.table import now_sql, ttl_live_sql
 
 
-def now_column(now: float | dt.datetime | None) -> Column:
-    if now is None:
-        return F.current_timestamp()
-    if isinstance(now, dt.datetime):
-        return F.lit(now.replace(tzinfo=None))
-    return F.lit(dt.datetime.fromtimestamp(now, dt.timezone.utc).replace(tzinfo=None))
-
-
-def _query_predicate(q: Query, now_ts: Column) -> Column:
-    """One Get query's contract, topic and ``?last`` predicate (TTL is
-    the same for every query and is applied by the callers)."""
-    cond = (F.col("contract") == F.lit(q.contract)) & topic_match_expr(q.spec)
+def _query_terms(q: Query, now: str) -> list[str]:
+    """One Get query's contract and ``?last`` conjuncts (the topic
+    match comes from operators.topic_match; TTL is the same for every
+    query and is added by the callers)."""
+    terms = [f"contract = {int(q.contract)}"]
     last = q.last_seconds()
     if last is not None:
         # fractional-second windows stay exact (INTERVAL accepts them);
         # int() would truncate ?last=500ms to a zero-width window
-        cond = cond & (
-            F.col("ts") >= now_ts - F.expr(f"INTERVAL {float(last)!r} SECOND")
-        )
-    return cond
+        terms.append(f"ts >= {now} - INTERVAL {float(last)!r} SECOND")
+    return terms
 
 
 def apply_get(
@@ -51,9 +45,9 @@ def apply_get(
 ) -> DataFrame:
     """Apply Get semantics to a messages-schema DataFrame."""
     q = Query(topic=query) if isinstance(query, str) else query
-    now_ts = now_column(now)
-    out = df.filter(_query_predicate(q, now_ts)).filter(ttl_live_expr(now_ts))
-    return out.orderBy(F.desc("seq")).limit(q.effective_limit())
+    now_ts = now_sql(now)
+    pred = topic_match_expr(q.spec, *_query_terms(q, now_ts), ttl_live_sql(now_ts))
+    return df.filter(pred).orderBy(F.desc("seq")).limit(q.effective_limit())
 
 
 def apply_get_many(
@@ -65,37 +59,37 @@ def apply_get_many(
     store/store.go:170-181 loops per topic; here the loop is fused).
 
     Each row is tagged with every query id whose predicate it matches
-    (posexplode over the match-expression array), then a per-query-id
-    window takes the newest-K. At 100 TB this reads the table once
-    instead of N times — the batch analogue of the streaming fan-out's
-    one-scan broadcast join (`streaming.pubsub.fanout_once`).
+    (explode over the match array), then a per-query-id window takes
+    the newest-K. At 100 TB this reads the table once instead of N
+    times — the batch analogue of the streaming fan-out's one-scan
+    broadcast join (`streaming.pubsub.fanout_once`).
+
+    The window filter ANDs the literal ``_rn <= max(limits)`` beside
+    each query's own limit: from a literal bound Spark plans a
+    ``Partial`` WindowGroupLimit below the shuffle, so each task sends
+    at most that many rows per query; the per-query term keeps the
+    answer exact.
 
     Output: Get columns + ``query_id`` (index into ``queries``).
     Rows matching multiple queries appear once per match, exactly as N
     separate Gets would return them.
     """
     qs = [Query(topic=q) if isinstance(q, str) else q for q in queries]
-    now_ts = now_column(now)
-    base = df.filter(ttl_live_expr(now_ts))
-    per_query = [_query_predicate(q, now_ts) for q in qs]
-    tagged = base.select(
-        "*",
-        F.posexplode(
-            F.filter(
-                F.transform(
-                    F.array(*[c.cast("boolean") for c in per_query]),
-                    lambda m, i: F.when(m, i).otherwise(F.lit(None)),
-                ),
-                lambda v: v.isNotNull(),
-            )
-        ).alias("_pos", "query_id"),
-    ).drop("_pos")
-    limits = F.element_at(
-        F.array(*[F.lit(q.effective_limit()) for q in qs]), F.col("query_id") + 1
+    now_ts = now_sql(now)
+    matches = ", ".join(
+        " AND ".join([topic_match_sql(q.spec), *_query_terms(q, now_ts)]) for q in qs
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("seq"))
+    limits = [q.effective_limit() for q in qs]
+    tagged = df.filter(ttl_live_sql(now_ts)).selectExpr(
+        "*",
+        f"explode(filter(transform(array({matches}), (_m, _i) -> IF(_m, _i, NULL)),"
+        " _i -> _i IS NOT NULL)) AS query_id",
+    )
     return (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= limits)
+        tagged.selectExpr("*", "row_number() OVER (PARTITION BY query_id ORDER BY seq DESC) AS _rn")
+        .filter(
+            f"_rn <= {max(limits, default=0)}"
+            f" AND _rn <= element_at(array({', '.join(map(str, limits))}), query_id + 1)"
+        )
         .drop("_rn")
     )

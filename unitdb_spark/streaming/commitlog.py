@@ -41,6 +41,9 @@ micro-batch's output is the whole state, and the sink publishes it:
   skip b if its commit-log entry exists -> write the state as snapshot
   v(b) -> create the commit-log entry for b -> prune the rest
 
+(the skip is ``CommitLog.skip_replayed``, shared with every other
+foreachBatch sink on a commit log).
+
 A crash before the entry exists leaves readers on the previous
 snapshot; the replayed batch writes v(b) again. Snapshots live at
 ``<state_path>/v_<query_id>_<batch_id>``, keyed by (query generation,
@@ -112,6 +115,17 @@ class CommitLog:
 
     def applied(self, batch_id: int) -> bool:
         return self.applied_for(self.query_id, batch_id)
+
+    def skip_replayed(self, batch_df: DataFrame, batch_id: int) -> bool:
+        """True when ``batch_id`` is already applied: the caller's
+        foreachBatch sink then applies nothing. The replayed batch still
+        runs, into a ``noop`` write, so that a stateful query commits its
+        state-store version: PySpark 4.1 fails a stateful batch whose
+        partitions were not all run (STATE_STORE_COMMIT_VALIDATION_FAILED)."""
+        if not self.applied(batch_id):
+            return False
+        batch_df.write.format("noop").mode("overwrite").save()
+        return True
 
     def last(self) -> int | None:
         """Highest applied batch id for THIS query generation."""
@@ -232,11 +246,7 @@ def snapshot_sink(
     root = state_path.rstrip("/")
 
     def publish(batch_df: DataFrame, batch_id: int) -> None:
-        if log.applied(batch_id):
-            # replay of an already-applied batch: publish nothing, but run
-            # the batch so the state store commits its version (Spark
-            # fails a stateful batch whose partitions were not all run)
-            batch_df.write.format("noop").mode("overwrite").save()
+        if log.skip_replayed(batch_df, batch_id):
             return
         out = batch_df
         if merge is not None:

@@ -120,8 +120,8 @@ def ingest_stream(
     log = CommitLog(entries.sparkSession, checkpoint, table_path + ".applied")
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        if log.applied(batch_id):
-            return  # replayed batch already in the table: skip
+        if log.skip_replayed(batch_df, batch_id):
+            return  # replayed batch already in the table
         if not batch_df.isEmpty():
             table.append(batch_df.select(
                 "seq", "msg_id", "contract", "topic", "ts", "expires_at",
@@ -345,7 +345,7 @@ class ReliableSink:
         return f"{self.root}/inflight/{qid}/{int(batch_id)}"
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.log.applied(batch_id):
+        if self.log.skip_replayed(batch_df, batch_id):
             return  # replayed, already COMPLETE
         qid = self.log.query_id
         inflight = self._inflight(qid, batch_id)

@@ -20,6 +20,10 @@ row-groups.
 
 from __future__ import annotations
 
+import datetime as dt
+import time
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -149,9 +153,19 @@ class MessagesTable:
         )
 
     def read(self) -> DataFrame:
-        if not self.exists():
-            return self.spark.createDataFrame([], self._full_schema())
-        return self.spark.read.schema(self._full_schema()).parquet(self.path)
+        """The table with its explicit schema, and no existence check
+        beforehand: Spark lists the directory while it builds the
+        relation anyway, and a directory with no data file reads as
+        empty. Only a missing directory (a store not yet written) is an
+        error there, Spark's ``PATH_NOT_FOUND``, and reads as an empty
+        table."""
+        schema = self._full_schema()
+        try:
+            return self.spark.read.schema(schema).parquet(self.path)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            return self.spark.createDataFrame([], schema)
 
     def exists(self) -> bool:
         """True when the table directory exists and holds data files.
@@ -185,8 +199,27 @@ class MessagesTable:
         return T.StructType(fields)
 
 
-def ttl_live_expr(now: Column, expires_col: str = "expires_at") -> Column:
+def now_sql(now: float | dt.datetime | None) -> str:
+    """The read clock as a SQL term: ``current_timestamp()``, or the
+    instant ``F.lit`` gives the naive UTC datetime of ``now`` (epoch
+    seconds or a datetime). py4j sends a naive datetime as
+    ``time.mktime`` seconds plus its microseconds, and
+    ``timestamp_micros`` takes exactly that."""
+    if now is None:
+        return "current_timestamp()"
+    if not isinstance(now, dt.datetime):
+        now = dt.datetime.fromtimestamp(now, dt.timezone.utc)
+    d = now.replace(tzinfo=None)
+    return f"timestamp_micros({int(time.mktime(d.timetuple())) * 1_000_000 + d.microsecond})"
+
+
+def ttl_live_sql(now: str) -> str:
     """Expired entries are silently skipped at read
-    (time_window.go:63-65, 239-251)."""
-    e = F.col(expires_col)
-    return e.isNull() | (e > now)
+    (time_window.go:63-65, 239-251). ``now`` is a SQL timestamp term
+    (``now_sql``)."""
+    return f"(expires_at IS NULL OR expires_at > {now})"
+
+
+def ttl_live_expr(now: float | dt.datetime | None) -> Column:
+    """``ttl_live_sql`` at ``now`` as a Column."""
+    return F.expr(ttl_live_sql(now_sql(now)))

@@ -179,6 +179,37 @@ class TestGetPredicate:
         assert engine.get("a.*", now=T0) == [b"x"]  # no tombstones/ dir
         assert engine.count(now=T0) == 1
 
+    def test_missing_messages_dir_is_not_read_by_spark(self, engine: Engine, monkeypatch):
+        """A store without `messages/` answers Get, get_many and count
+        without a Spark read (which raises PATH_NOT_FOUND and logs a
+        stack trace each time); once written, a Get makes no
+        `fs.exists` call of its own."""
+        from pyspark.sql import DataFrameReader
+
+        from unitdb_spark import fs
+
+        reads, exists_calls = [], []
+        parquet, exists = DataFrameReader.parquet, fs.exists
+
+        def spy_parquet(self, *paths, **kw):
+            reads.append(paths)
+            return parquet(self, *paths, **kw)
+
+        def spy_exists(spark, path):
+            exists_calls.append(path)
+            return exists(spark, path)
+
+        monkeypatch.setattr(DataFrameReader, "parquet", spy_parquet)
+        monkeypatch.setattr(fs, "exists", spy_exists)
+        assert engine.get("a.b", now=T0) == []
+        assert engine.get_many(["a.b", "a.*"], now=T0) == [[], []]
+        assert engine.count(now=T0) == 0
+        assert reads == []
+        engine.put_entry(Entry("a.b", b"x"), ts=T0)
+        exists_calls.clear()
+        assert engine.get("a.b", now=T0) == [b"x"]
+        assert engine.table.path not in exists_calls
+
     def test_tombstone_dir_without_parquet_is_no_tombstones(self, engine: Engine, spark):
         from unitdb_spark import fs
 

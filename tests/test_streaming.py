@@ -645,6 +645,31 @@ class TestContinuousKV:
         again = {r["key"]: bytes(r["value"]) for r in read_kv(spark, state).collect()}
         assert again == want
 
+    def test_op_order_ties_resolve_alike_in_batch_and_stream(self, spark, tmp_path):
+        """On an exact op_order tie a delete beats a put, and of two
+        puts the larger value wins: in kv_state and in the streamed
+        fold alike, whatever the physical row order."""
+        from unitdb_spark.operators.kv import kv_state
+        from unitdb_spark.streaming.kv_sink import continuous_kv, read_kv
+
+        src, state, cp = (str(tmp_path / d) for d in ("src", "state", "cp"))
+        rows = []
+        for k in range(200):
+            rows += [(k, bytearray(b"p%d" % k), "put", k), (k, None, "delete", k)]
+        for k in range(200, 400):
+            rows += [(k, bytearray(b"b%d" % k), "put", k), (k, bytearray(b"a%d" % k), "put", k)]
+        self._write_ops(spark, src, rows)
+        continuous_kv(
+            spark.readStream.schema(self._SCHEMA).parquet(src), state, cp
+        ).awaitTermination(180)
+
+        got = {r["key"]: bytes(r["value"]) for r in read_kv(spark, state).collect()}
+        want = {
+            r["key"]: bytes(r["value"])
+            for r in kv_state(spark.read.parquet(src)).collect()
+        }
+        assert got == want == {k: b"b%d" % k for k in range(200, 400)}
+
     def test_tombstone_blocks_stale_put(self, spark, tmp_path):
         """A later batch carrying an OLDER put (lower op_order) must not
         resurrect a deleted key — the tombstone row wins the re-reduce."""

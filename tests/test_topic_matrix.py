@@ -110,7 +110,7 @@ class TestExhaustiveMatrix:
         'a.b...' must be visible to a 'a...' query."""
         from unitdb_spark.core.topic import topic_match
 
-        universe = list(_all_patterns(2))  # 25 patterns incl '...'
+        universe = list(_all_patterns(3))  # 79 patterns incl '...'
         got = _eval_matrix(spark, universe, universe)
         mismatches = []
         for t, q in got:
@@ -118,6 +118,33 @@ class TestExhaustiveMatrix:
             if got[(t, q)] != want:
                 mismatches.append((t, q, got[(t, q)], want))
         assert not mismatches, f"{len(mismatches)} mismatches, first 10: {mismatches[:10]}"
+
+    def test_fanout_pattern_messages_vs_pattern_subscriptions(self, spark):
+        """The same 79 × 79 cross product through the pub/sub fan-out
+        join: a message published to a wildcard topic reaches exactly
+        the subscriptions core.topic.topic_match pairs it with (the
+        concrete side's trailing '...' is one literal level, so 'a...'
+        reaches '*.*' but not '*')."""
+        from unitdb_spark.core.topic import topic_match
+        from unitdb_spark.streaming.pubsub import fanout_once
+
+        universe = list(_all_patterns(3))
+        messages = with_topic_columns(
+            spark.createDataFrame([(t, 1) for t in universe], "topic string, contract long")
+        )
+        subs = spark.createDataFrame(
+            [(i, q, 1) for i, q in enumerate(universe)],
+            "sub_id long, topic string, contract long",
+        )
+        rows = fanout_once(messages, subs).select("topic", "sub_id").collect()
+        got = [(r["topic"], universe[r["sub_id"]]) for r in rows]
+        assert len(got) == len(set(got))
+        want = {(t, q) for t in universe for q in universe if topic_match(t, q)}
+        extra, missing = set(got) - want, want - set(got)
+        assert not extra and not missing, (
+            f"{len(extra)} extra, first {sorted(extra)[:10]}; "
+            f"{len(missing)} missing, first {sorted(missing)[:10]}"
+        )
 
     def test_pattern_stored_vs_static_queries(self, spark):
         stored = [p for p in _all_patterns(3) if ("*" in p or p.endswith("..."))]

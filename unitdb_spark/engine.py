@@ -152,6 +152,7 @@ class Engine:
 
     def destroy(self) -> None:
         fs.delete(self.spark, self.path)
+        self.table.forget()
 
     # ------------------------------------------------------------ write
     def put(self, topic: str, payload: bytes | str, contract: int = MASTER_CONTRACT) -> int:

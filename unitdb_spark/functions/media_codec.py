@@ -3053,15 +3053,6 @@ class _MsbReader:
         self.acc = 0
 
 
-_FLAC_FIXED_COEFS = {
-    0: (),
-    1: (1,),
-    2: (2, -1),
-    3: (3, -3, 1),
-    4: (4, -6, 4, -1),
-}
-
-
 def _fixed_residuals(x, order: int):
     import numpy as np
 

@@ -12,6 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from unitdb_spark.operators.stats_tests import rank2, rank_table
+from unitdb_spark.operators.timeseries import d38
+
 
 def confusion_matrix(
     df: DataFrame, label_col: str, pred_col: str
@@ -481,19 +484,19 @@ def cuped_adjusted(
         dec(covariate_col).alias("_x"),
         arm_col.cast("int").alias("_arm"),
     ).filter(F.col("_y").isNotNull() & F.col("_x").isNotNull())
-    d38 = "decimal(38,4)"
+    dec4 = "decimal(38,4)"
     agg = base.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("_x").cast(d38)).alias("sx"),
-        F.sum(F.col("_y").cast(d38)).alias("sy"),
-        F.sum((F.col("_x") * F.col("_x")).cast(d38)).alias("sxx"),
-        F.sum((F.col("_x") * F.col("_y")).cast(d38)).alias("sxy"),
+        F.sum(F.col("_x").cast(dec4)).alias("sx"),
+        F.sum(F.col("_y").cast(dec4)).alias("sy"),
+        F.sum((F.col("_x") * F.col("_x")).cast(dec4)).alias("sxx"),
+        F.sum((F.col("_x") * F.col("_y")).cast(dec4)).alias("sxy"),
         F.count(F.when(F.col("_arm") == 0, 1)).alias("n_a"),
-        F.sum(F.when(F.col("_arm") == 0, F.col("_x")).cast(d38)).alias("sx_a"),
-        F.sum(F.when(F.col("_arm") == 0, F.col("_y")).cast(d38)).alias("sy_a"),
+        F.sum(F.when(F.col("_arm") == 0, F.col("_x")).cast(dec4)).alias("sx_a"),
+        F.sum(F.when(F.col("_arm") == 0, F.col("_y")).cast(dec4)).alias("sy_a"),
         F.count(F.when(F.col("_arm") == 1, 1)).alias("n_b"),
-        F.sum(F.when(F.col("_arm") == 1, F.col("_x")).cast(d38)).alias("sx_b"),
-        F.sum(F.when(F.col("_arm") == 1, F.col("_y")).cast(d38)).alias("sy_b"),
+        F.sum(F.when(F.col("_arm") == 1, F.col("_x")).cast(dec4)).alias("sx_b"),
+        F.sum(F.when(F.col("_arm") == 1, F.col("_y")).cast(dec4)).alias("sy_b"),
     )
     d = lambda c: F.col(c).cast("double")  # noqa: E731
     nD = d("n")
@@ -739,7 +742,6 @@ def brier_score(
 
     Output: (n, n_pos, brier_micro2).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     base = df.select(
         F.floor(F.col(score_col).cast("double") * F.lit(1_000_000.0))
         .cast("long").alias("_sm"),
@@ -853,18 +855,16 @@ def power_analysis(
             f"(have quantiles {sorted(_Z)})"
         )
     C = round(2 * (za + zb) ** 2, 6)
-    D38 = "decimal(38,0)"
     m = units.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.coalesce(F.sum(F.col(value_col)), F.lit(0))
         .cast("long").alias("s"),
-        F.coalesce(
-            F.sum(F.col(value_col).cast(D38) * F.col(value_col)), F.lit(0)
-        ).cast(D38).alias("ss"),
+        d38(F.coalesce(
+            F.sum(d38(F.col(value_col)) * F.col(value_col)), F.lit(0)
+        )).alias("ss"),
     )
     nD = F.col("n").cast("double")
-    var_num = (F.col("n").cast(D38) * F.col("ss")
-               - F.col("s").cast(D38) * F.col("s"))
+    var_num = d38(F.col("n")) * F.col("ss") - d38(F.col("s")) * F.col("s")
     mu = F.col("s").cast("double") / nD
     sd = F.sqrt(
         var_num.cast("double") / (nD * (nD - F.lit(1.0)))
@@ -915,7 +915,6 @@ def effect_size_report(
 
     Scale: one map-side-combined aggregation; no window, no join.
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     v = F.col(value_col).cast("long")
     is_a = F.col(arm_col) == 0
     agg = units.agg(
@@ -1055,27 +1054,11 @@ def auc_from_scores(
     per = base.groupBy("_sm").agg(
         F.count(F.when(F.col("_y"), 1)).alias("np_v"),
         F.count(F.when(~F.col("_y"), 1)).alias("nn_v"),
-    )
-    w = (
-        Window.partitionBy()
-        .orderBy("_sm")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = per.select(
-        "np_v", "nn_v",
-        (F.col("np_v") + F.col("nn_v")).alias("t_v"),
-        F.coalesce(
-            F.sum(F.col("np_v") + F.col("nn_v")).over(w), F.lit(0)
-        ).alias("below"),
-    )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    agg = ranked.agg(
+    ).withColumn("t_v", F.col("np_v") + F.col("nn_v"))
+    agg = rank_table(per, "_sm").agg(
         F.sum("np_v").cast("long").alias("n_pos"),
         F.sum("nn_v").cast("long").alias("n_neg"),
-        F.sum(
-            d38(F.col("np_v"))
-            * d38(F.lit(2) * F.col("below") + F.col("t_v") + 1)
-        ).alias("_rp2"),
+        F.sum(d38(F.col("np_v")) * d38(rank2())).alias("_rp2"),
     )
     u2 = F.col("_rp2") - d38(F.col("n_pos")) * (F.col("n_pos") + 1)
     both = (F.col("n_pos") > 0) & (F.col("n_neg") > 0)
@@ -1230,7 +1213,6 @@ def best_threshold_report(
     picked = tm.withColumn(
         "_rn", F.row_number().over(wpick)
     ).filter(F.col("_rn") == 1)
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     num = d38(F.col("tp")) * F.col("tn") - d38(F.col("fp")) * F.col("fn")
     d1 = (d38(F.col("tp")) + F.col("fp")) * (d38(F.col("tp")) + F.col("fn"))
     d2 = (d38(F.col("tn")) + F.col("fp")) * (d38(F.col("tn")) + F.col("fn"))

@@ -14,25 +14,32 @@ op_order LONG).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def kv_state(oplog: DataFrame, as_of_order: int | None = None) -> DataFrame:
-    """Current (or point-in-time) state: last op per key wins; a
-    'delete' winner removes the key (memdb/db.go Get/Delete visibility).
+def winners(ops: DataFrame) -> DataFrame:
+    """The last op per key, as (key, value, op, op_order): the highest
+    ``op_order`` wins, and a delete wins an exact ``op_order`` tie (the
+    conservative choice; two puts tied on ``op_order`` resolve to the
+    larger value). One aggregation on key, which Spark's state store
+    can also fold batch by batch (`streaming.kv_sink`)."""
+    last = F.max(
+        F.struct("op_order", (F.col("op") == "delete").alias("_del"), "op", "value")
+    ).alias("_w")
+    return ops.groupBy("key").agg(last).select(
+        "key", "_w.value", "_w.op", "_w.op_order"
+    )
 
-    One shuffle on key; row_number picks the winner.
-    """
+
+def kv_state(oplog: DataFrame, as_of_order: int | None = None) -> DataFrame:
+    """Current (or point-in-time) state: the `winners` whose op is a
+    put; a 'delete' winner removes the key (memdb/db.go Get/Delete
+    visibility)."""
     log = oplog
     if as_of_order is not None:
         log = log.filter(F.col("op_order") <= as_of_order)
-    w = Window.partitionBy("key").orderBy(F.desc("op_order"))
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col("op") == "put"))
-        .select("key", "value")
-    )
+    return winners(log).filter(F.col("op") == "put").select("key", "value")
 
 
 def kv_get(oplog: DataFrame, key: int) -> bytes | None:

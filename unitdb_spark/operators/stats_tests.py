@@ -19,10 +19,44 @@ extensions SURVEY §2.4 budgets for experiment review.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from unitdb_spark.operators.timeseries import count_cells, d38, dense_cells
+
 _PPM = 1_000_000
+
+
+def rank_table(per_value: DataFrame, value: str, partition=()) -> DataFrame:
+    """The distinct-value rank table behind every doubled-midrank
+    statistic: ``per_value`` (one row per distinct ``value``, per
+    ``partition`` if given, with its row count ``t_v``) plus ``below``,
+    the rows strictly before the value in its partition. It is one
+    cumulative window over values, not rows, so it stays small where
+    values quantize (cents, latencies, the micro grid)."""
+    w = (
+        Window.partitionBy(*partition)
+        .orderBy(value)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return per_value.withColumn(
+        "below", F.coalesce(F.sum("t_v").over(w), F.lit(0))
+    )
+
+
+def rank2() -> Column:
+    """Twice the midrank of a `rank_table` row: a tie group covers
+    ranks below+1 .. below+t_v, so 2·midrank = 2·below + t_v + 1, an
+    exact integer, and every rank sum stays exact."""
+    return F.lit(2) * F.col("below") + F.col("t_v") + 1
+
+
+def tie3() -> Column:
+    """The tie correction Σ(t³ − t) over a `rank_table`, summed in
+    DECIMAL(38,0) (t³ overflows int64 at the billions-of-rows
+    envelope)."""
+    t = d38(F.col("t_v"))
+    return F.sum(t * t * t - t)
 
 
 def chi_square_independence(
@@ -129,35 +163,12 @@ def mann_whitney_u(
     per_val = base.groupBy("_v").agg(
         F.count(F.when(F.col("_arm") == 0, 1)).alias("na_v"),
         F.count(F.when(F.col("_arm") == 1, 1)).alias("nb_v"),
-    )
-    w = (
-        Window.partitionBy()
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = per_val.select(
-        "na_v", "nb_v",
-        (F.col("na_v") + F.col("nb_v")).alias("t_v"),
-        F.coalesce(
-            F.sum(F.col("na_v") + F.col("nb_v")).over(w), F.lit(0)
-        ).alias("below"),
-    )
-    # 2·midrank = 2·below + t + 1 (integer); R_A2 = Σ na_v · rank2.
-    # Products lift to DECIMAL(38,0) BEFORE multiplying — at the
-    # billions-of-rows envelope t³ and na_v·rank2 overflow int64
-    # silently (Spark wraps, DuckDB raises: gate divergence)
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    agg = ranked.agg(
+    ).withColumn("t_v", F.col("na_v") + F.col("nb_v"))
+    agg = rank_table(per_val, "_v").agg(
         F.sum("na_v").alias("n_a"),
         F.sum("nb_v").alias("n_b"),
-        F.sum(
-            d38(F.col("na_v"))
-            * d38(F.lit(2) * F.col("below") + F.col("t_v") + 1)
-        ).alias("r_a2"),
-        F.sum(
-            d38(F.col("t_v")) * d38(F.col("t_v")) * d38(F.col("t_v"))
-            - d38(F.col("t_v"))
-        ).alias("tie3"),
+        F.sum(d38(F.col("na_v")) * d38(rank2())).alias("r_a2"),
+        tie3().alias("tie3"),
     )
     na, nb = F.col("n_a"), F.col("n_b")
     n = na + nb
@@ -217,34 +228,12 @@ def wilcoxon_signed_rank(
     per = base.groupBy(F.abs(F.col("_d")).alias("_a")).agg(
         F.count(F.when(F.col("_d") > 0, 1)).alias("np_v"),
         F.count(F.when(F.col("_d") < 0, 1)).alias("nn_v"),
-    )
-    w = (
-        Window.partitionBy()
-        .orderBy("_a")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = per.select(
-        "np_v", "nn_v",
-        (F.col("np_v") + F.col("nn_v")).alias("t_v"),
-        F.coalesce(
-            F.sum(F.col("np_v") + F.col("nn_v")).over(w), F.lit(0)
-        ).alias("below"),
-    )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    agg = ranked.agg(
-        F.sum(F.col("np_v") + F.col("nn_v")).alias("n"),
-        F.sum(
-            d38(F.col("np_v"))
-            * d38(F.lit(2) * F.col("below") + F.col("t_v") + 1)
-        ).alias("wp2"),
-        F.sum(
-            d38(F.col("nn_v"))
-            * d38(F.lit(2) * F.col("below") + F.col("t_v") + 1)
-        ).alias("wm2"),
-        F.sum(
-            d38(F.col("t_v")) * d38(F.col("t_v")) * d38(F.col("t_v"))
-            - d38(F.col("t_v"))
-        ).alias("tie3"),
+    ).withColumn("t_v", F.col("np_v") + F.col("nn_v"))
+    agg = rank_table(per, "_a").agg(
+        F.sum("t_v").alias("n"),
+        F.sum(d38(F.col("np_v")) * d38(rank2())).alias("wp2"),
+        F.sum(d38(F.col("nn_v")) * d38(rank2())).alias("wm2"),
+        tie3().alias("tie3"),
     )
     n = F.col("n")
     inner = (
@@ -327,32 +316,19 @@ def spearman_corr(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
         & F.col("_y").isNotNull() & ~F.isnan("_y")
     )
 
-    def rank2(col: str, out: str) -> DataFrame:
-        per = base.groupBy(col).agg(F.count(F.lit(1)).alias("t"))
-        w = (
-            Window.partitionBy()
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        return per.select(
-            col,
-            (
-                F.lit(2) * F.coalesce(F.sum("t").over(w), F.lit(0))
-                + F.col("t") + 1
-            ).alias(out),
-        )
+    def ranks(col: str, out: str) -> DataFrame:
+        per = base.groupBy(col).agg(F.count(F.lit(1)).alias("t_v"))
+        return rank_table(per, col).select(col, rank2().alias(out))
 
-    rx = rank2("_x", "rx2")
-    ry = rank2("_y", "ry2")
-    pairs = base.join(rx, "_x").join(ry, "_y")
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+    pairs = base.join(ranks("_x", "rx2"), "_x").join(ranks("_y", "ry2"), "_y")
+    rx, ry = d38(F.col("rx2")), d38(F.col("ry2"))
     m = pairs.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dec("rx2")).alias("sx"),
-        F.sum(dec("ry2")).alias("sy"),
-        F.sum(dec("rx2") * dec("rx2")).alias("sxx"),
-        F.sum(dec("ry2") * dec("ry2")).alias("syy"),
-        F.sum(dec("rx2") * dec("ry2")).alias("sxy"),
+        F.sum(rx).alias("sx"),
+        F.sum(ry).alias("sy"),
+        F.sum(rx * rx).alias("sxx"),
+        F.sum(ry * ry).alias("syy"),
+        F.sum(rx * ry).alias("sxy"),
     )
     from unitdb_spark.operators.olap import pinned_pearson
 
@@ -409,7 +385,6 @@ def ks_two_sample(df: DataFrame, value_col: str, arm_col) -> DataFrame:
     )
     # cross-multiplied ECDF difference in DECIMAL(38,0): int64 would
     # wrap silently past ~3e9 rows per side (Spark) or raise (DuckDB)
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     d = F.abs(
         d38(F.col("ca")) * d38(F.col("n_b"))
         - d38(F.col("cb")) * d38(F.col("n_a"))
@@ -468,19 +443,8 @@ def pettitt_test(
         F.col(value_col).cast("double").alias("_v"),
         *[F.col(c) for c in order_cols],
     ).filter(F.col("_v").isNotNull() & ~F.isnan("_v"))
-    per = base.groupBy("_v").agg(F.count(F.lit(1)).alias("t"))
-    wv = (
-        Window.partitionBy()
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranks = per.select(
-        "_v",
-        (
-            F.lit(2) * F.coalesce(F.sum("t").over(wv), F.lit(0))
-            + F.col("t") + 1
-        ).alias("r2"),
-    )
+    per = base.groupBy("_v").agg(F.count(F.lit(1)).alias("t_v"))
+    ranks = rank_table(per, "_v").select("_v", rank2().alias("r2"))
     wt = Window.partitionBy().orderBy("_ts", *order_cols)
     wn = Window.partitionBy()
     seq = base.join(ranks, "_v").select(
@@ -680,13 +644,12 @@ def jackknife_ratio(
             * F.lit(1_000_000.0)
         ).cast("long").alias("_r"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     stats = loo.groupBy("_k").agg(
         F.sum("_r").cast("long").alias("s1_e6"),
-        F.sum(dec(F.col("_r")) * dec(F.col("_r"))).alias("_q2"),
+        F.sum(d38(F.col("_r")) * d38(F.col("_r"))).alias("_q2"),
     )
-    nd = dec(F.col("n"))
-    s1d = dec(F.col("s1_e6"))
+    nd = d38(F.col("n"))
+    s1d = d38(F.col("s1_e6"))
     q = nd * nd * F.col("_q2") - nd * s1d * s1d
     inner = (
         q.cast("double")
@@ -788,19 +751,8 @@ def binseg_changepoints(
             F.col(t_col).cast("long").alias("_t"),
             F.col(y_col).cast("long").alias("_y"),
         ).filter(F.col("_t").isNotNull() & F.col("_y").isNotNull())
-        per = base.groupBy("_y").agg(F.count(F.lit(1)).alias("g"))
-        wv = (
-            Window.partitionBy()
-            .orderBy("_y")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        ranks = per.select(
-            "_y",
-            (
-                F.lit(2) * F.coalesce(F.sum("g").over(wv), F.lit(0))
-                + F.col("g") + 1
-            ).alias("r2"),
-        )
+        per = base.groupBy("_y").agg(F.count(F.lit(1)).alias("t_v"))
+        ranks = rank_table(per, "_y").select("_y", rank2().alias("r2"))
         wt = Window.partitionBy().orderBy("_t")
         wn = Window.partitionBy()
         seq = base.join(ranks, "_y").select(
@@ -934,77 +886,37 @@ def ljung_box(
     n = 10⁹ spine cells at max_count 10⁶; int64 would wrap at
     n ≈ 10⁵ hours, which is why the lift is not optional.
     """
-    if not 1 <= int(lags) <= len(LB_CRIT_MICRO):
-        raise ValueError(
-            f"ljung_box: lags must be in 1..{len(LB_CRIT_MICRO)} "
-            "(the injected critical-value table)"
-        )
-    lags = int(lags)
-    b = df.groupBy(
-        F.col(key_col).alias("_k"),
-        F.floor(
-            F.unix_micros(F.col(ts_col)) / F.lit(bucket_s * 1_000_000)
-        ).alias("_h"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("_y"))
-    return ljungbox_from_cells(b, "_k", "_h", "_y", lags=lags, out_key=key_col)
+    return ljungbox_from_cells(
+        count_cells(df, key_col, ts_col, bucket_s), "_k", "_h", "_y",
+        lags=lags, out_key=key_col,
+    )
 
 
-def ljungbox_from_cells(
-    cells: DataFrame,
-    key_col: str,
-    h_col: str,
-    y_col: str,
-    lags: int = 12,
-    out_key: str | None = None,
+def _centered_lag_sums(
+    cells: DataFrame, key_col: str, h_col: str, y_col: str, lags: int
 ) -> DataFrame:
-    """The Ljung-Box finish over an already-aggregated (key,
-    bucket-index, count) CELL relation — the shared code path between
-    `ljung_box` (batch) and the rolling hourly-cell twin. Cells
-    densify onto the contiguous spine, then the exact-moment Q test
-    runs per key. See `ljung_box` for semantics."""
-    if not 1 <= int(lags) <= len(LB_CRIT_MICRO):
-        raise ValueError(
-            f"ljung_box: lags must be in 1..{len(LB_CRIT_MICRO)} "
-            "(the injected critical-value table)"
-        )
-    lags = int(lags)
-    out_key = out_key or key_col
-    b = cells.select(
-        F.col(key_col).alias("_k"),
-        F.col(h_col).cast("long").alias("_h"),
-        F.col(y_col).cast("long").alias("_y"),
-    )
-    key_col = out_key
-    rng = b.groupBy("_k").agg(
-        F.min("_h").alias("_mn"), F.max("_h").alias("_mx")
-    )
-    spine = rng.select(
-        "_k", F.explode(F.sequence("_mn", "_mx")).alias("_h")
-    )
-    d = spine.join(b, ["_k", "_h"], "left").select(
-        "_k", "_h", F.coalesce(F.col("_y"), F.lit(0)).alias("_y")
-    )
+    """The lag-product sums shared by Ljung-Box and the ACF. On each
+    key's dense spine (n cells, S = Σx) the centered-scaled series
+    c_t = n·x_t − S is integral, so num = Σ c_t·c_{t+kk} (kk in
+    1..lags) and den = Σ c_t² are exact DECIMAL(38,0) sums. Output:
+    (_k, n, kk, num, den); keys with a constant series (den = 0) drop.
+    One partitioned window pass computes every lead; lag 0 rides along
+    as the denominator."""
+    d = dense_cells(cells, key_col, h_col, y_col)
     m = d.groupBy("_k").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("_y").cast("long").alias("_s"),
     )
     c = d.join(m, "_k").select(
         "_k", "_h", "n",
-        (
-            F.col("n").cast("decimal(38,0)") * F.col("_y")
-            - F.col("_s")
-        ).cast("decimal(38,0)").alias("_c"),
+        d38(d38(F.col("n")) * F.col("_y") - F.col("_s")).alias("_c"),
     )
     wo = Window.partitionBy("_k").orderBy("_h")
-    # lag 0 rides along as the denominator Σc² — one window pass
-    # (window exprs can't live under the Generate, so lead columns
-    # materialize first, then the array explodes)
+    # window exprs can't live under the Generate, so the lead columns
+    # materialize first, then the array explodes
     led = c.select(
         "_k", "n", "_c",
-        *[
-            F.lead("_c", k).over(wo).alias(f"_l{k}")
-            for k in range(1, lags + 1)
-        ],
+        *[F.lead("_c", k).over(wo).alias(f"_l{k}") for k in range(1, lags + 1)],
     )
     prods = led.select(
         "_k", "n",
@@ -1031,18 +943,35 @@ def ljungbox_from_cells(
         .select("_k", F.col("num").alias("den"))
         .filter(F.col("den") > 0)
     )
+    return nums.filter(F.col("kk") >= 1).join(den, "_k")
+
+
+def ljungbox_from_cells(
+    cells: DataFrame,
+    key_col: str,
+    h_col: str,
+    y_col: str,
+    lags: int = 12,
+    out_key: str | None = None,
+) -> DataFrame:
+    """The Ljung-Box finish over an already-aggregated (key,
+    bucket-index, count) CELL relation — the shared code path between
+    `ljung_box` (batch) and the rolling hourly-cell twin. Cells
+    densify onto the contiguous spine, then the exact-moment Q test
+    runs per key. See `ljung_box` for semantics."""
+    if not 1 <= int(lags) <= len(LB_CRIT_MICRO):
+        raise ValueError(
+            f"ljung_box: lags must be in 1..{len(LB_CRIT_MICRO)} "
+            "(the injected critical-value table)"
+        )
     rho_d = F.col("num").cast("double") / F.col("den").cast("double")
     term = F.round(
         rho_d * rho_d / (F.col("n") - F.col("kk")).cast("double"), 6
     ).cast("decimal(18,6)")
-    terms = (
-        nums.filter(F.col("kk") >= 1)
-        .join(den, "_k")
-        .select(
-            "_k", "n", "kk",
-            # round-6 decimal → exact integer micro term
-            (term * F.lit(1_000_000)).cast("long").alias("tm"),
-        )
+    terms = _centered_lag_sums(cells, key_col, h_col, y_col, int(lags)).select(
+        "_k", "n", "kk",
+        # round-6 decimal → exact integer micro term
+        (term * F.lit(1_000_000)).cast("long").alias("tm"),
     )
     crit = F.element_at(
         F.array(*[F.lit(v) for v in LB_CRIT_MICRO]), F.col("dof").cast("int")
@@ -1058,7 +987,7 @@ def ljungbox_from_cells(
             ).cast("long").alias("q_micro"),
         )
         .select(
-            F.col("_k").alias(key_col), "n", "dof", "q_micro",
+            F.col("_k").alias(out_key or key_col), "n", "dof", "q_micro",
             (F.col("q_micro") > crit).alias("significant"),
         )
     )
@@ -1315,13 +1244,10 @@ def runs_test(
     the boundaries. Nothing grows with event volume past the first
     count agg.
     """
-    b = df.groupBy(
-        F.col(key_col).alias("_k"),
-        F.floor(
-            F.unix_micros(F.col(ts_col)) / F.lit(bucket_s * 1_000_000)
-        ).alias("_h"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("_y"))
-    return runs_from_cells(b, "_k", "_h", "_y", out_key=key_col)
+    return runs_from_cells(
+        count_cells(df, key_col, ts_col, bucket_s), "_k", "_h", "_y",
+        out_key=key_col,
+    )
 
 
 def runs_from_cells(
@@ -1335,21 +1261,7 @@ def runs_from_cells(
     bucket-index, count) CELL relation — shared between `runs_test`
     (batch) and the rolling hourly-cell twin. See `runs_test`."""
     out_key = out_key or key_col
-    b = cells.select(
-        F.col(key_col).alias("_k"),
-        F.col(h_col).cast("long").alias("_h"),
-        F.col(y_col).cast("long").alias("_y"),
-    )
-    key_col = out_key
-    rng = b.groupBy("_k").agg(
-        F.min("_h").alias("_mn"), F.max("_h").alias("_mx")
-    )
-    spine = rng.select(
-        "_k", F.explode(F.sequence("_mn", "_mx")).alias("_h")
-    )
-    d = spine.join(b, ["_k", "_h"], "left").select(
-        "_k", "_h", F.coalesce(F.col("_y"), F.lit(0)).alias("_y")
-    )
+    d = dense_cells(cells, key_col, h_col, y_col)
     # median = lower middle order statistic (rank (n+1) div 2 by value)
     wv = Window.partitionBy("_k").orderBy("_y", "_h")
     ranked = d.select(
@@ -1394,7 +1306,7 @@ def runs_from_cells(
     z = (F.col("runs").cast("double") - mu) / F.sqrt(var)
     ok = (F.col("n1") > 0) & (F.col("n2") > 0) & (F.col("n1") + F.col("n2") > 1)
     out = runs.select(
-        F.col("_k").alias(key_col),
+        F.col("_k").alias(out_key),
         (F.col("n1") + F.col("n2")).alias("n"),
         "n1", "n2", "runs",
         F.when(ok, F.round(z, 6)).alias("z_r"),
@@ -1431,14 +1343,10 @@ def acf_table(
     """
     if not 1 <= int(lags) <= 48:
         raise ValueError("acf_table: lags must be in 1..48")
-    lags = int(lags)
-    b = df.groupBy(
-        F.col(key_col).alias("_k"),
-        F.floor(
-            F.unix_micros(F.col(ts_col)) / F.lit(bucket_s * 1_000_000)
-        ).alias("_h"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("_y"))
-    return acf_from_cells(b, "_k", "_h", "_y", lags=lags, out_key=key_col)
+    return acf_from_cells(
+        count_cells(df, key_col, ts_col, bucket_s), "_k", "_h", "_y",
+        lags=lags, out_key=key_col,
+    )
 
 
 def acf_from_cells(
@@ -1452,71 +1360,10 @@ def acf_from_cells(
     """The ACF finish over an already-aggregated (key, bucket-index,
     count) CELL relation — shared between `acf_table` (batch) and the
     rolling hourly-cell twin. See `acf_table`."""
-    out_key = out_key or key_col
-    lags = int(lags)
-    b = cells.select(
-        F.col(key_col).alias("_k"),
-        F.col(h_col).cast("long").alias("_h"),
-        F.col(y_col).cast("long").alias("_y"),
-    )
-    key_col = out_key
-    rng = b.groupBy("_k").agg(
-        F.min("_h").alias("_mn"), F.max("_h").alias("_mx")
-    )
-    spine = rng.select(
-        "_k", F.explode(F.sequence("_mn", "_mx")).alias("_h")
-    )
-    d = spine.join(b, ["_k", "_h"], "left").select(
-        "_k", "_h", F.coalesce(F.col("_y"), F.lit(0)).alias("_y")
-    )
-    m = d.groupBy("_k").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("_y").cast("long").alias("_s"),
-    )
-    c = d.join(m, "_k").select(
-        "_k", "_h",
-        (
-            F.col("n").cast("decimal(38,0)") * F.col("_y") - F.col("_s")
-        ).cast("decimal(38,0)").alias("_c"),
-    )
-    wo = Window.partitionBy("_k").orderBy("_h")
-    led = c.select(
-        "_k", "_c",
-        *[F.lead("_c", k).over(wo).alias(f"_l{k}") for k in range(1, lags + 1)],
-    )
-    prods = led.select(
-        "_k",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(k).alias("kk"),
-                    (
-                        F.col("_c")
-                        * (F.col("_c") if k == 0 else F.col(f"_l{k}"))
-                    ).alias("p"),
-                )
-                for k in range(0, lags + 1)
-            ])
-        ).alias("kv"),
-    ).select("_k", F.col("kv.kk").alias("kk"), F.col("kv.p").alias("p"))
-    nums = (
-        prods.filter(F.col("p").isNotNull())
-        .groupBy("_k", "kk")
-        .agg(F.sum("p").alias("num"))
-    )
-    den = (
-        nums.filter(F.col("kk") == 0)
-        .select("_k", F.col("num").alias("den"))
-        .filter(F.col("den") > 0)
-    )
-    return (
-        nums.filter(F.col("kk") >= 1)
-        .join(den, "_k")
-        .select(
-            F.col("_k").alias(key_col),
-            F.col("kk").cast("int").alias("lag"),
-            F.expr("CAST((num * 1000000) div den AS BIGINT)").alias("rho_ppm"),
-        )
+    return _centered_lag_sums(cells, key_col, h_col, y_col, int(lags)).select(
+        F.col("_k").alias(out_key or key_col),
+        F.col("kk").cast("int").alias("lag"),
+        F.expr("CAST((num * 1000000) div den AS BIGINT)").alias("rho_ppm"),
     )
 
 
@@ -1586,7 +1433,6 @@ def seasonal_mann_kendall(
         F.sum("s").cast("long").alias("s"),
         F.sum("var18").cast("long").alias("var18"),
     )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     sig = (
         (F.col("s") != 0)
         & (F.col("var18") > 0)
@@ -1662,6 +1508,33 @@ def theil_sen(
     )
 
 
+def _pooled_rank_sums(
+    df: DataFrame, value_col: str, group_col
+) -> tuple[DataFrame, DataFrame]:
+    """The ranking shared by `kruskal_wallis` and `dunn_posthoc`:
+    doubled midranks pooled across all groups, summed per group to
+    (_g, n_j, r_j2), beside the one-row (n, tie3) tie term. NULL and
+    NaN values drop."""
+    base = df.select(
+        F.col(value_col).alias("_v"),
+        group_col if not isinstance(group_col, str) else F.col(group_col),
+    ).toDF("_v", "_g").filter(
+        F.col("_v").isNotNull() & ~F.isnan(F.col("_v").cast("double"))
+    )
+    pv = base.groupBy("_v", "_g").agg(F.count(F.lit(1)).alias("c_vg"))
+    per_v = pv.groupBy("_v").agg(F.sum("c_vg").alias("t_v"))
+    per_g = (
+        pv.join(rank_table(per_v, "_v"), "_v")
+        .groupBy("_g")
+        .agg(
+            F.sum("c_vg").alias("n_j"),
+            F.sum(d38(F.col("c_vg")) * d38(rank2())).alias("r_j2"),
+        )
+    )
+    tie = per_v.agg(F.sum("t_v").alias("n"), tie3().alias("tie3"))
+    return per_g, tie
+
+
 def kruskal_wallis(
     df: DataFrame, value_col: str, group_col
 ) -> DataFrame:
@@ -1696,42 +1569,7 @@ def kruskal_wallis(
     group; past that, pre-aggregate rows onto value cells first (the
     midrank math only needs per-value counts).
     """
-    base = df.select(
-        F.col(value_col).alias("_v"),
-        group_col if not isinstance(group_col, str) else F.col(group_col),
-    ).toDF("_v", "_g").filter(
-        F.col("_v").isNotNull() & ~F.isnan(F.col("_v").cast("double"))
-    )
-    pv = base.groupBy("_v", "_g").agg(F.count(F.lit(1)).alias("c_vg"))
-    per_v = pv.groupBy("_v").agg(F.sum("c_vg").alias("t_v"))
-    w = (
-        Window.partitionBy()
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rk = per_v.select(
-        "_v", "t_v",
-        F.coalesce(F.sum("t_v").over(w), F.lit(0)).alias("below"),
-    )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    per_g = (
-        pv.join(rk, "_v")
-        .groupBy("_g")
-        .agg(
-            F.sum("c_vg").alias("n_j"),
-            F.sum(
-                d38(F.col("c_vg"))
-                * d38(F.lit(2) * F.col("below") + F.col("t_v") + 1)
-            ).alias("r_j2"),
-        )
-    )
-    tie = per_v.agg(
-        F.sum("t_v").alias("n"),
-        F.sum(
-            d38(F.col("t_v")) * d38(F.col("t_v")) * d38(F.col("t_v"))
-            - d38(F.col("t_v"))
-        ).alias("tie3"),
-    )
+    per_g, tie = _pooled_rank_sums(df, value_col, group_col)
     terms = per_g.join(F.broadcast(tie)).select(
         "n_j", "n", "tie3",
         F.expr(
@@ -1790,7 +1628,6 @@ def anova_from_moments(moments: DataFrame) -> DataFrame:
     DECIMAL envelope: (s_j·N − S·n_j)² needs |x|·N ≲ 1e16 in the
     input unit (cents): fine to ~1e11 rows of ~1e5-cent values.
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     tot = moments.agg(
         F.count(F.lit(1)).cast("int").alias("k"),
         F.sum("n_j").alias("n"),
@@ -1867,7 +1704,6 @@ def one_way_anova(
     """
     val = value_col if not isinstance(value_col, str) else F.col(value_col)
     grp = group_col if not isinstance(group_col, str) else F.col(group_col)
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     base = df.select(
         val.cast("long").alias("_x"), grp.alias("_g")
     ).filter(F.col("_x").isNotNull())
@@ -1906,20 +1742,10 @@ def _friedman_per_treat(
     )
     b = b.join(complete, "_b")
     pv = b.groupBy("_b", "_v").agg(F.count(F.lit(1)).alias("t_v"))
-    w = (
-        Window.partitionBy("_b")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rk = pv.select(
-        "_b", "_v", "t_v",
-        F.coalesce(F.sum("t_v").over(w), F.lit(0)).alias("below"),
-    ).select(
-        "_b", "_v",
-        (F.lit(2) * F.col("below") + F.col("t_v") + 1).alias("rank2"),
+    rk = rank_table(pv, "_v", partition=["_b"]).select(
+        "_b", "_v", rank2().alias("rank2")
     )
     ranked = b.join(rk, ["_b", "_v"])
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     return ranked.groupBy("_t").agg(
         F.sum("rank2").alias("r_j2"),
         F.count(F.lit(1)).alias("n_b"),
@@ -1963,7 +1789,6 @@ def friedman_test(
     block-partitioned.
     """
     per_t = _friedman_per_treat(cells, block_col, treat_col, value_col)
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     kn = per_t.agg(
         F.count(F.lit(1)).cast("int").alias("k"),
         F.min("n_b").cast("long").alias("n_blocks"),
@@ -2039,7 +1864,6 @@ def cochran_q(
         F.col(treat_col).alias("_t"),
         F.col(success_col).cast("int").alias("_x"),
     )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     per_t = b.groupBy("_t").agg(F.sum("_x").alias("c_j"))
     per_b = b.groupBy("_b").agg(F.sum("_x").alias("l_i"))
     tt = per_t.agg(
@@ -2272,10 +2096,10 @@ def dunn_posthoc(
     Bonferroni/Holm cut to the emitted z's — the correction is a
     reporting convention, the statistic is not.
 
-    Shares the kruskal machinery verbatim: per-(value, group) counts,
-    one cumulative window over the DISTINCT-value relation, doubled
-    midranks. For groups i, j the mean-rank difference clears to an
-    exact integer numerator:
+    Ranks through `kruskal_wallis`'s own `_pooled_rank_sums`:
+    per-(value, group) counts, one cumulative window over the
+    DISTINCT-value relation, doubled midranks. For groups i, j the
+    mean-rank difference clears to an exact integer numerator:
 
         num = R_i2·n_j − R_j2·n_i        (mean diff = num/(2·n_i·n_j))
         z   = (num/(2 n_i n_j)) / sqrt((N(N+1)/12 − tie3/(12(N−1)))
@@ -2292,42 +2116,7 @@ def dunn_posthoc(
     Scale: identical to kruskal_wallis plus a k²-row pair join on
     the per-group relation (control-plane).
     """
-    base = df.select(
-        F.col(value_col).alias("_v"),
-        group_col if not isinstance(group_col, str) else F.col(group_col),
-    ).toDF("_v", "_g").filter(
-        F.col("_v").isNotNull() & ~F.isnan(F.col("_v").cast("double"))
-    )
-    pv = base.groupBy("_v", "_g").agg(F.count(F.lit(1)).alias("c_vg"))
-    per_v = pv.groupBy("_v").agg(F.sum("c_vg").alias("t_v"))
-    w = (
-        Window.partitionBy()
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rk = per_v.select(
-        "_v", "t_v",
-        F.coalesce(F.sum("t_v").over(w), F.lit(0)).alias("below"),
-    )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    per_g = (
-        pv.join(rk, "_v")
-        .groupBy("_g")
-        .agg(
-            F.sum("c_vg").alias("n_j"),
-            F.sum(
-                d38(F.col("c_vg"))
-                * d38(F.lit(2) * F.col("below") + F.col("t_v") + 1)
-            ).alias("r_j2"),
-        )
-    )
-    tie = per_v.agg(
-        F.sum("t_v").alias("n"),
-        F.sum(
-            d38(F.col("t_v")) * d38(F.col("t_v")) * d38(F.col("t_v"))
-            - d38(F.col("t_v"))
-        ).alias("tie3"),
-    )
+    per_g, tie = _pooled_rank_sums(df, value_col, group_col)
     a = per_g.select(
         F.col("_g").alias("_ga"), F.col("n_j").alias("_na"),
         F.col("r_j2").alias("_ra"),
@@ -2430,6 +2219,25 @@ def nemenyi_posthoc(
     )
 
 
+def _duration_ranks(
+    cells: DataFrame, key_col: str, value_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The per-key rank table of positive integer durations shared by
+    `ks_exponential` and `ad_exponential`: (_k, _v, t_v, below, n, s),
+    and the per-key totals (_k, n, s) it joins, n the key's count and
+    s its duration sum."""
+    b = cells.select(
+        F.col(key_col).alias("_k"),
+        F.col(value_col).cast("long").alias("_v"),
+    ).filter(F.col("_v").isNotNull() & (F.col("_v") > 0))
+    per = b.groupBy("_k", "_v").agg(F.count(F.lit(1)).alias("t_v"))
+    tot = b.groupBy("_k").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("_v").alias("s"),
+    )
+    return rank_table(per, "_v", partition=["_k"]).join(tot, "_k"), tot
+
+
 def ks_exponential(
     cells: DataFrame, key_col: str, value_col: str
 ) -> DataFrame:
@@ -2455,24 +2263,7 @@ def ks_exponential(
     window on the key shuffle, one partial agg. The mann_whitney
     bounded-relation argument, per key.
     """
-    b = cells.select(
-        F.col(key_col).alias("_k"),
-        F.col(value_col).cast("long").alias("_v"),
-    ).filter(F.col("_v").isNotNull() & (F.col("_v") > 0))
-    per = b.groupBy("_k", "_v").agg(F.count(F.lit(1)).alias("t_v"))
-    tot = b.groupBy("_k").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("_v").alias("s"),
-    )
-    w = (
-        Window.partitionBy("_k")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rk = per.select(
-        "_k", "_v", "t_v",
-        F.coalesce(F.sum("t_v").over(w), F.lit(0)).alias("below"),
-    ).join(tot, "_k")
+    rk, _ = _duration_ranks(cells, key_col, value_col)
     nD = F.col("n").cast("double")
     fexp = F.lit(1.0) - F.round(
         F.exp(
@@ -2529,24 +2320,7 @@ def ad_exponential(
     Scale: identical to `ks_exponential` — per-key distinct-value
     relation, one window on the key shuffle, one partial agg.
     """
-    b = cells.select(
-        F.col(key_col).alias("_k"),
-        F.col(value_col).cast("long").alias("_v"),
-    ).filter(F.col("_v").isNotNull() & (F.col("_v") > 0))
-    per = b.groupBy("_k", "_v").agg(F.count(F.lit(1)).alias("t_v"))
-    tot = b.groupBy("_k").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("_v").alias("s"),
-    )
-    w = (
-        Window.partitionBy("_k")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rk = per.select(
-        "_k", "_v", "t_v",
-        F.coalesce(F.sum("t_v").over(w), F.lit(0)).alias("below"),
-    ).join(tot, "_k")
+    rk, tot = _duration_ranks(cells, key_col, value_col)
     # the shared pinned chain (SQL text mirrored by the oracle)
     terms = rk.selectExpr(
         "_k", "n",
@@ -2948,7 +2722,6 @@ def qq_normal(
          < F.expr(f"(_n * k + {m} - 1) div {m}"))
         & (F.expr(f"(_n * k + {m} - 1) div {m}") <= F.col("_ca"))
     ).select("k", "z_micro", F.col("_v").alias("sample_q"))
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     mom = picked.agg(
         F.count(F.lit(1)).alias("_np"),
         F.sum("z_micro").alias("_sz"),
@@ -3002,7 +2775,6 @@ def tost_equivalence(
     """
     zcrit = round(norm_ppf(1 - alpha), 6)
     m = float(margin)
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     v = F.col(value_col).cast("long")
     is_a = F.col(arm_col) == 0
     agg = units.agg(
@@ -3083,18 +2855,10 @@ def yuen_trimmed_test(
     ).filter(F.col("_v").isNotNull())
     per = b.groupBy("_a", "_v").agg(F.count(F.lit(1)).alias("t_v"))
     tot = b.groupBy("_a").agg(F.count(F.lit(1)).alias("n"))
-    w = (
-        Window.partitionBy("_a")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rel = per.select(
-        "_a", "_v", "t_v",
-        F.coalesce(F.sum("t_v").over(w), F.lit(0)).alias("below"),
-    ).join(tot, "_a").withColumn(
+    rel = rank_table(per, "_v", partition=["_a"]).join(tot, "_a").withColumn(
         "g", F.expr(f"(n * {tn}) div {td}")
     )
-    d38 = "CAST(_v AS DECIMAL(38,0))"
+    v38 = "CAST(_v AS DECIMAL(38,0))"
     agg = rel.selectExpr(
         "_a", "n", "g", "_v", "t_v", "below",
         "greatest(0, least(below + t_v, n - g) - greatest(below, g))"
@@ -3106,9 +2870,9 @@ def yuen_trimmed_test(
     ).groupBy("_a").agg(
         F.first("n").alias("n"),
         F.first("g").alias("g"),
-        F.expr(f"CAST(sum({d38} * cnt_in) AS DECIMAL(38,0))").alias("ts"),
+        F.expr(f"CAST(sum({v38} * cnt_in) AS DECIMAL(38,0))").alias("ts"),
         F.expr(
-            f"CAST(sum({d38} * _v * cnt_in) AS DECIMAL(38,0))"
+            f"CAST(sum({v38} * _v * cnt_in) AS DECIMAL(38,0))"
         ).alias("tss"),
         F.max("lo_c").alias("lo"),
         F.max("hi_c").alias("hi"),

@@ -40,6 +40,40 @@ from pyspark.sql.window import Window
 _DEC = "decimal(18,6)"
 
 
+def d38(c: Column) -> Column:
+    """``c`` lifted to DECIMAL(38,0), done BEFORE a product: an int64
+    product of counts wraps silently in Spark and raises in DuckDB."""
+    return c.cast("decimal(38,0)")
+
+
+def count_cells(df: DataFrame, key, ts: str, bucket_s: int) -> DataFrame:
+    """The event count of each (key, time bucket) cell: ``(_k, _h, _y)``
+    with ``_h`` = floor(epoch µs / bucket width) and ``_y`` a BIGINT.
+    ``key`` is a column name or a Column."""
+    k = F.col(key) if isinstance(key, str) else key
+    return df.groupBy(
+        k.alias("_k"),
+        F.floor(F.unix_micros(F.col(ts)) / F.lit(bucket_s * 1_000_000)).alias("_h"),
+    ).agg(F.count(F.lit(1)).cast("long").alias("_y"))
+
+
+def dense_cells(cells: DataFrame, key: str, h: str, y: str) -> DataFrame:
+    """Each key's cells zero-filled over its contiguous bucket spine
+    [min h, max h]: ``(_k, _h, _y)``, BIGINT bucket and count. A missing
+    bucket is a real zero, so a spike next to silence compares against
+    0. The spine is keys × span buckets, whatever the event volume."""
+    b = cells.select(
+        F.col(key).alias("_k"),
+        F.col(h).cast("long").alias("_h"),
+        F.col(y).cast("long").alias("_y"),
+    )
+    rng = b.groupBy("_k").agg(F.min("_h").alias("_mn"), F.max("_h").alias("_mx"))
+    spine = rng.select("_k", F.explode(F.sequence("_mn", "_mx")).alias("_h"))
+    return spine.join(b, ["_k", "_h"], "left").select(
+        "_k", "_h", F.coalesce(F.col("_y"), F.lit(0)).alias("_y")
+    )
+
+
 def ohlc(
     df: DataFrame,
     keys: list[str],
@@ -1165,7 +1199,6 @@ def trend_break(
         "_y",
         (F.col("_d") >= F.to_date(F.lit(break_ts))).alias("_post"),
     )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
 
     def side(name: str, flag: bool):
         cond = F.col("_post") == flag
@@ -1223,7 +1256,6 @@ def decomposition_strength(
 
     Output: (<key_col>, n, trend_strength_r, seasonal_strength_r).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     base = sd.filter(F.col("trend_mu").isNotNull()).select(
         key_col,
         F.col("residual_mu").alias("_r"),
@@ -1495,14 +1527,8 @@ def detect_peaks(
     PARTITION BY key. 100 TB note: a multi-year 1s-bucket spine is
     ~10⁸ rows per key — raise bucket_s with the horizon.
     """
-    b = df.groupBy(
-        F.col(key_col).alias("_k"),
-        F.floor(
-            F.unix_micros(F.col(ts_col)) / F.lit(bucket_s * 1_000_000)
-        ).alias("_h"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("_y"))
     return peaks_from_cells(
-        b, "_k", "_h", "_y",
+        count_cells(df, key_col, ts_col, bucket_s), "_k", "_h", "_y",
         bucket_s=bucket_s, half_window=half_window,
         thresh_num=thresh_num, thresh_den=thresh_den,
         out_key=key_col,
@@ -1527,20 +1553,7 @@ def peaks_from_cells(
     cross-multiplied rolling-mean test runs per key. See
     `detect_peaks` for semantics."""
     out_key = out_key or key_col
-    b = cells.select(
-        F.col(key_col).alias("_k"),
-        F.col(h_col).cast("long").alias("_h"),
-        F.col(y_col).cast("long").alias("_y"),
-    )
-    rng = b.groupBy("_k").agg(
-        F.min("_h").alias("_mn"), F.max("_h").alias("_mx")
-    )
-    spine = rng.select(
-        "_k", F.explode(F.sequence("_mn", "_mx")).alias("_h")
-    )
-    d = spine.join(b, ["_k", "_h"], "left").select(
-        "_k", "_h", F.coalesce(F.col("_y"), F.lit(0)).alias("_y")
-    )
+    d = dense_cells(cells, key_col, h_col, y_col)
     wo = Window.partitionBy("_k").orderBy("_h")
     ww = wo.rowsBetween(-int(half_window), int(half_window))
     w = d.select(
@@ -1611,14 +1624,8 @@ def ewma_control(
     holds to n ≈ 10⁶ spine cells at max_count 10⁶; the Spark fold is
     exact at any scale.
     """
-    b = df.groupBy(
-        F.col(key_col).alias("_k"),
-        F.floor(
-            F.unix_micros(F.col(ts_col)) / F.lit(bucket_s * 1_000_000)
-        ).alias("_h"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("_y"))
     return ewma_from_cells(
-        b, "_k", "_h", "_y",
+        count_cells(df, key_col, ts_col, bucket_s), "_k", "_h", "_y",
         bucket_s=bucket_s, lam=lam, l2=l2, out_key=key_col,
     )
 
@@ -1644,21 +1651,8 @@ def ewma_from_cells(
         raise ValueError("lam must be a rational in (0, 1)")
     l2 = int(l2)
     out_key = out_key or key_col
-    b = cells.select(
-        F.col(key_col).alias("_k"),
-        F.col(h_col).cast("long").alias("_h"),
-        F.col(y_col).cast("long").alias("_y"),
-    )
-    rng = b.groupBy("_k").agg(
-        F.min("_h").alias("_mn"), F.max("_h").alias("_mx")
-    )
-    spine = rng.select(
-        "_k", F.explode(F.sequence("_mn", "_mx")).alias("_h")
-    )
-    d = spine.join(b, ["_k", "_h"], "left").select(
-        F.col("_k").cast("string").alias("_k"),
-        "_h",
-        F.coalesce(F.col("_y"), F.lit(0)).alias("_y"),
+    d = dense_cells(cells, key_col, h_col, y_col).withColumn(
+        "_k", F.col("_k").cast("string")
     )
     SC = 1_000_000
 
@@ -1728,13 +1722,10 @@ def fano_factor(
     key — no windows at all. Envelope: n·SS at 10⁶ cells × 10⁶ max
     count needs the DECIMAL(38,0)/HUGEINT lift used here.
     """
-    b = df.groupBy(
-        F.col(key_col).alias("_k"),
-        F.floor(
-            F.unix_micros(F.col(ts_col)) / F.lit(bucket_s * 1_000_000)
-        ).alias("_h"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("_y"))
-    return fano_from_cells(b, "_k", "_h", "_y", out_key=key_col)
+    return fano_from_cells(
+        count_cells(df, key_col, ts_col, bucket_s), "_k", "_h", "_y",
+        out_key=key_col,
+    )
 
 
 def fano_from_cells(
@@ -1748,30 +1739,16 @@ def fano_from_cells(
     count) CELL relation — shared between `fano_factor` (batch) and
     the rolling hourly-cell twin. See `fano_factor` for semantics."""
     out_key = out_key or key_col
-    b = cells.select(
-        F.col(key_col).alias("_k"),
-        F.col(h_col).cast("long").alias("_h"),
-        F.col(y_col).cast("long").alias("_y"),
-    )
-    rng = b.groupBy("_k").agg(
-        F.min("_h").alias("_mn"), F.max("_h").alias("_mx")
-    )
-    spine = rng.select(
-        "_k", F.explode(F.sequence("_mn", "_mx")).alias("_h")
-    )
-    d = spine.join(b, ["_k", "_h"], "left").select(
-        "_k", F.coalesce(F.col("_y"), F.lit(0)).alias("_y")
-    )
-    D38 = "decimal(38,0)"
+    d = dense_cells(cells, key_col, h_col, y_col)
     m = d.groupBy("_k").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("_y").cast("long").alias("_s"),
-        F.sum(F.col("_y").cast(D38) * F.col("_y")).alias("_ss"),
+        F.sum(d38(F.col("_y")) * F.col("_y")).alias("_ss"),
     ).filter(F.col("_s") > 0)
     num = (
-        F.col("n").cast(D38) * F.col("_ss") - F.col("_s").cast(D38) * F.col("_s")
+        d38(F.col("n")) * F.col("_ss") - d38(F.col("_s")) * F.col("_s")
     ).cast("double")
-    den = (F.col("n").cast(D38) * F.col("_s")).cast("double")
+    den = (d38(F.col("n")) * F.col("_s")).cast("double")
     fano = num / den
     z = (fano - F.lit(1.0)) * F.sqrt(
         (F.col("n") - 1).cast("double") / F.lit(2.0)
@@ -1919,23 +1896,17 @@ def holt_reconcile(
     temperature_allocation allowlist class for its global windows).
     """
     TOTAL = "__total__"
-    cells = df.groupBy(
-        F.col(key_col).cast("string").alias("_k"),
-        F.floor(F.unix_micros(F.col(ts_col)) / F.lit(86_400_000_000)).alias(
-            "_t"
-        ),
-    ).agg(F.count(F.lit(1)).cast("long").alias("_y"))
-    tot_cells = cells.groupBy("_t").agg(
+    cells = count_cells(df, F.col(key_col).cast("string"), ts_col, 86_400)
+    tot_cells = cells.groupBy("_h").agg(
         F.sum("_y").cast("long").alias("_y")
-    ).select(F.lit(TOTAL).alias("_k"), "_t", "_y")
+    ).select(F.lit(TOTAL).alias("_k"), "_h", "_y")
     fc = holt_linear(
-        cells.unionByName(tot_cells), "_k", "_t", "_y",
+        cells.unionByName(tot_cells), "_k", "_h", "_y",
         alpha=alpha, beta=beta, horizon=1,
     )
     tot = fc.filter(F.col("_k") == TOTAL).select(
         F.greatest(F.col("fc1_e6"), F.lit(0)).alias("_T")
     )
-    D38 = "decimal(38,0)"
     keys = fc.filter(F.col("_k") != TOTAL).select(
         "_k", "n_obs", "fc1_e6",
         F.greatest(F.col("fc1_e6"), F.lit(0)).alias("_w"),
@@ -1944,7 +1915,7 @@ def holt_reconcile(
     j = keys.crossJoin(F.broadcast(tot)).select(
         "*", F.sum("_w").over(wall).cast("long").alias("_wsum")
     )
-    tw = F.col("_T").cast(D38) * F.col("_w")
+    tw = d38(F.col("_T")) * F.col("_w")
     based = j.select(
         "_k", "n_obs", "fc1_e6", "_T", "_wsum",
         F.when(F.col("_wsum") > 0, F.expr(
@@ -2012,14 +1983,8 @@ def haar_energy(
     Envelope: S ≤ span·max_count; E sums of S² need the DECIMAL lift
     (present) past ~3·10⁹ block mass.
     """
-    b = df.groupBy(
-        F.col(key_col).alias("_k"),
-        F.floor(
-            F.unix_micros(F.col(ts_col)) / F.lit(bucket_s * 1_000_000)
-        ).alias("_h"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("_y"))
     return haar_from_cells(
-        b, "_k", "_h", "_y",
+        count_cells(df, key_col, ts_col, bucket_s), "_k", "_h", "_y",
         bucket_s=bucket_s, levels=levels, out_key=key_col,
     )
 
@@ -2140,14 +2105,9 @@ def interrupted_ts(
     """
     if not 0 < int(cutoff_ppm) < 1_000_000:
         raise ValueError("cutoff_ppm must be inside the unit span")
-    D38 = "decimal(38,0)"
-    cells = df.groupBy(
-        F.col(key_col).alias("_k"),
-        F.floor(F.unix_micros(F.col(ts_col)) / F.lit(86_400_000_000))
-        .alias("_d"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("_y"))
+    cells = count_cells(df, key_col, ts_col, 86_400)
     rng = cells.groupBy("_k").agg(
-        F.min("_d").alias("_mn"), F.max("_d").alias("_mx")
+        F.min("_h").alias("_mn"), F.max("_h").alias("_mx")
     ).select(
         "_k", "_mn",
         (
@@ -2155,10 +2115,10 @@ def interrupted_ts(
             + F.expr(f"((_mx - _mn) * {int(cutoff_ppm)}) div 1000000")
         ).alias("_cut"),
     )
-    x = (F.col("_d") - F.col("_mn")).alias("_x")
+    x = (F.col("_h") - F.col("_mn")).alias("_x")
     sided = cells.join(rng, "_k").select(
         "_k", "_y", "_cut", "_mn", x,
-        (F.col("_d") > F.col("_cut")).cast("int").alias("_post"),
+        (F.col("_h") > F.col("_cut")).cast("int").alias("_post"),
     )
 
     def moments(side: int, tag: str):
@@ -2167,13 +2127,13 @@ def interrupted_ts(
         yy = F.when(c, F.col("_y"))
         return [
             F.count(xx).cast("long").alias(f"n_{tag}"),
-            F.coalesce(F.sum(xx.cast(D38)), F.lit(0)).alias(f"sx_{tag}"),
-            F.coalesce(F.sum(yy.cast(D38)), F.lit(0)).alias(f"sy_{tag}"),
+            F.coalesce(F.sum(d38(xx)), F.lit(0)).alias(f"sx_{tag}"),
+            F.coalesce(F.sum(d38(yy)), F.lit(0)).alias(f"sy_{tag}"),
             F.coalesce(
-                F.sum(xx.cast(D38) * F.col("_y")), F.lit(0)
+                F.sum(d38(xx) * F.col("_y")), F.lit(0)
             ).alias(f"sxy_{tag}"),
             F.coalesce(
-                F.sum(xx.cast(D38) * F.col("_x")), F.lit(0)
+                F.sum(d38(xx) * F.col("_x")), F.lit(0)
             ).alias(f"sxx_{tag}"),
         ]
 
@@ -2312,7 +2272,6 @@ def burstiness_report(
     Scale: one window + one partial agg per key — the
     sessionize/gaps shape; nothing leaves the key partition.
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     w = Window.partitionBy("_k").orderBy("_t", "_e")
     base = df.select(
         F.col(key_col).alias("_k"),
@@ -2426,7 +2385,6 @@ def hurst_rs(
         raise ValueError(
             f"hurst_rs: sizes must be powers of two in {sorted(_HURST_LOG2)}"
         )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     b = cells.select(
         F.col(key_col).alias("_k"),
         F.col(t_col).cast("long").alias("_t"),
@@ -2612,7 +2570,6 @@ def spc_western_rules(
         .groupBy("key", "d")
         .agg(F.sum("_c").alias("x_cents"))
     )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     stats = cells.groupBy("key").agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum("x_cents").alias("_s"),

@@ -19,24 +19,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def tumbling_agg(
-    df: DataFrame,
-    duration: str,
-    keys: list[str],
-    aggs: list[Column],
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Tumbling-window aggregation; emits window_start/window_end."""
-    w = F.window(F.col(ts_col), duration)
-    return (
-        df.groupBy(w.alias("_w"), *keys)
-        .agg(*aggs)
-        .withColumn("window_start", F.col("_w.start"))
-        .withColumn("window_end", F.col("_w.end"))
-        .drop("_w")
-    )
-
-
 def session_agg(
     df: DataFrame,
     gap: str,

@@ -32,18 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from unitdb_spark.operators.kv import winners
 from unitdb_spark.streaming.commitlog import read_snapshot, snapshot_sink
-
-
-def _winners(ops: DataFrame) -> DataFrame:
-    """Last op per key; a delete wins an exact op_order tie (the
-    conservative choice)."""
-    last = F.max(
-        F.struct("op_order", (F.col("op") == "delete").alias("_del"), "op", "value")
-    ).alias("_w")
-    return ops.groupBy("key").agg(last).select(
-        "key", "_w.value", "_w.op", "_w.op_order"
-    )
 
 
 def read_kv(spark: SparkSession, state_path: str, include_tombstones: bool = False) -> DataFrame:
@@ -64,6 +54,6 @@ def continuous_kv(
     """Start the streaming query maintaining the KV state table under
     ``state_path`` from an op-log stream. Returns the StreamingQuery."""
     return snapshot_sink(
-        _winners(oplog), state_path, checkpoint,
+        winners(oplog), state_path, checkpoint,
         trigger_available_now=trigger_available_now,
     )

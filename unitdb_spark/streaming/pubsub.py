@@ -212,28 +212,21 @@ def fanout_once(
     )
     # symmetric match, fully column-vs-column (both sides unknown until
     # runtime): equality fast path OR pattern-vs-concrete both ways
-    m_parts, m_depth, m_tail = F.col("parts"), F.col("depth"), F.col("has_tail")
-    s_parts, s_depth, s_tail = F.col("s_parts"), F.col("s_depth"), F.col("s_has_tail")
-
-    def one_way(p_parts, p_depth, p_tail, c_parts, c_depth):
-        # pattern side (p) vs concrete side (c)
-        flat = (~p_tail) & (p_depth == c_depth)
-        tail = p_tail & (p_depth <= c_depth)
-        pos_ok = F.forall(
-            F.zip_with(
-                p_parts,
-                F.slice(c_parts, 1, F.greatest(p_depth, F.lit(0))),
-                lambda p, c: p.isNull() | c.isNull() | (p == c) | (p == F.lit("*")),
-            ),
-            lambda x: x,
+    def one_way(p: str, c: str) -> str:
+        # pattern side (column prefix p) vs the other side treated as
+        # concrete (prefix c), whose trailing '...' counts as one
+        # literal level, as in core.topic.topic_match
+        length = f"({c}depth + CAST({c}has_tail AS INT))"
+        token = f"IF(i < {c}depth, get({c}parts, i), '...')"
+        return (
+            f"(IF({p}has_tail, {p}depth <= {length}, {p}depth = {length})"
+            f" AND forall(transform({p}parts, (t, i) -> t = '*' OR t = {token}), x -> x))"
         )
-        return (flat | tail) & pos_ok
 
-    match = (
-        (F.col("s_topic") == F.col("topic"))
-        | one_way(s_parts, s_depth, s_tail, m_parts, m_depth)
-        | one_way(m_parts, m_depth, m_tail, s_parts, s_depth)
-    ) & (F.col("s_contract") == F.col("contract"))
+    match = F.expr(
+        f"(s_topic = topic OR {one_way('s_', '')} OR {one_way('', 's_')})"
+        " AND s_contract = contract"
+    )
     return stream.join(F.broadcast(subs), on=match, how="inner")
 
 

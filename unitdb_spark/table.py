@@ -12,10 +12,11 @@ partitioned Parquet layout that Catalyst can prune:
   (db_internal.go:271-276); snappy is the codec parity
   (db_internal.go:292).
 
-At 100 TB the same layout holds: date partitions bound each scan,
-contract partitions bound each tenant, and files within a partition are
-written sorted by ``seq`` so newest-first top-K reads touch few
-row-groups.
+At 100 TB, contract partitions bound each tenant's scan. Date
+partitions do not bound a Get: a ``?last=`` window filters ``ts``,
+which reaches Parquet as a pushed row-group filter, while the scan
+still lists every date partition of the contract. Files within a
+partition are written sorted by ``seq``.
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ from __future__ import annotations
 import datetime as dt
 import time
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,10 +47,6 @@ MESSAGES_SCHEMA = T.StructType(
         T.StructField("encrypted", T.BooleanType(), True),
     ]
 )
-
-#: columns derived from `topic` at write time (never stored stale)
-DERIVED_COLUMNS = ("parts", "depth", "has_tail", "is_pattern", "p_date")
-
 
 def with_topic_columns(df: DataFrame, topic_col: str = "topic") -> DataFrame:
     """Add ``parts``/``depth``/``has_tail`` derived from the topic string.
@@ -99,6 +95,9 @@ class MessagesTable:
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
+        # set once the directory is known to exist; only `forget` (the
+        # store's deletion) clears it
+        self._present = False
 
     @property
     def lease_path(self) -> str:
@@ -151,21 +150,28 @@ class MessagesTable:
             .partitionBy("contract", "p_date")
             .parquet(self.path)
         )
+        self._present = True
 
     def read(self) -> DataFrame:
-        """The table with its explicit schema, and no existence check
-        beforehand: Spark lists the directory while it builds the
-        relation anyway, and a directory with no data file reads as
-        empty. Only a missing directory (a store not yet written) is an
-        error there, Spark's ``PATH_NOT_FOUND``, and reads as an empty
-        table."""
+        """The table with its explicit schema. Spark lists the directory
+        while it builds the relation, and a directory with no data file
+        reads as empty. A missing directory (a store not yet written)
+        reads as an empty frame without asking Spark, which would raise
+        and log a stack trace: until the table knows its directory
+        exists, one ``fs.exists`` call checks; after that, none."""
+        from unitdb_spark import fs
+
         schema = self._full_schema()
-        try:
-            return self.spark.read.schema(schema).parquet(self.path)
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            return self.spark.createDataFrame([], schema)
+        if not self._present:
+            if not fs.exists(self.spark, self.path):
+                return self.spark.createDataFrame([], schema)
+            self._present = True
+        return self.spark.read.schema(schema).parquet(self.path)
+
+    def forget(self) -> None:
+        """Drop what the table knows about its directory; call it after
+        deleting the directory."""
+        self._present = False
 
     def exists(self) -> bool:
         """True when the table directory exists and holds data files.
@@ -176,7 +182,9 @@ class MessagesTable:
         turning each Get/Count into an empty result."""
         from unitdb_spark import fs
 
-        return fs.has_files(self.spark, self.path)
+        found = fs.has_files(self.spark, self.path)
+        self._present = self._present or found
+        return found
 
     def file_size(self) -> int:
         """Total bytes of the table's data files (db.go:474-482

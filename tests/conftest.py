@@ -79,7 +79,6 @@ _SLOW_NODEIDS = {
     "tests/test_properties_session.py::TestLinkRecordsProperty::test_best_match_equals_python_model",
     "tests/test_topic_matrix.py::TestRandomizedPatternMatch::test_random_pairs_match_model",
     "tests/test_operators.py::TestLjungBox::test_constant_series_excluded",
-    "tests/test_operators.py::TestDedupSanity::test_lsh_persist_disk_and_none_agree",
     "tests/test_properties_graph.py::TestPagerankProperty::test_matches_python_power_iteration",
     "tests/test_operators.py::TestPipelineOps::test_connected_components_long_path_pointer_jumping",
     "tests/test_topic_matrix.py::TestExhaustiveMatrix::test_concrete_stored_vs_all_queries",

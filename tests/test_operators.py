@@ -327,24 +327,6 @@ class TestDedupSanity:
         assert all(r["n_docs"] == 10_000 for r in report)
         assert all(len(r["sample_ids"]) == 10 for r in report)
 
-    def test_lsh_persist_disk_and_none_agree(self, spark):
-        from unitdb_spark.operators.dedup import minhash_lsh_pairs
-
-        base = "the quick brown fox jumps over the lazy dog " * 5
-        df = spark.createDataFrame(
-            [(1, base), (2, base + "extra tail"), (3, "completely different words here entirely")],
-            "doc_id long, text string",
-        )
-        expect = {(1, 2)}
-        for mode in ("disk", "none"):
-            got = {
-                (r["id_a"], r["id_b"])
-                for r in minhash_lsh_pairs(
-                    df, num_hashes=16, bands=4, persist=mode
-                ).collect()
-            }
-            assert got == expect, mode
-
     def test_simhash_md5_hamming_locality(self, spark):
         from unitdb_spark.operators.dedup import simhash64_md5
 

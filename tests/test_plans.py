@@ -1055,11 +1055,14 @@ class TestSessionPlans6b:
         from unitdb_spark.operators.graph import cooccurrence_edges, kcore
 
         li = spark.read.parquet(f"{self.SF}/lineitem.parquet")
-        out = kcore(cooccurrence_edges(li, "l_orderkey", "l_partkey"),
-                    k=2, rounds=2, persist="none")
-        plan = formatted_plan(out)
-        assert "CartesianProduct" not in plan
-        assert not has_python_eval(out)
+        try:
+            out = kcore(cooccurrence_edges(li, "l_orderkey", "l_partkey"),
+                        k=2, rounds=2)
+            plan = formatted_plan(out)
+            assert "CartesianProduct" not in plan
+            assert not has_python_eval(out)
+        finally:
+            spark.catalog.clearCache()
 
     def test_skyline_stage1_window_is_partitioned(self, spark):
         """Stage 1's staircase windows are partitioned by bucket —
@@ -1097,10 +1100,12 @@ class TestSessionPlans6b:
         e = o.join(li, o["o_orderkey"] == li["l_orderkey"]).select(
             "o_custkey", "l_partkey"
         )
-        out = hits_bipartite(e, "o_custkey", "l_partkey", iterations=1,
-                             persist="none")
-        assert not has_python_eval(out)
-        assert "CartesianProduct" not in formatted_plan(out)
+        try:
+            out = hits_bipartite(e, "o_custkey", "l_partkey", iterations=1)
+            assert not has_python_eval(out)
+            assert "CartesianProduct" not in formatted_plan(out)
+        finally:
+            spark.catalog.clearCache()
 
     def test_link_pred_keyed_joins_only(self, spark):
         from unitdb_spark.operators.graph import (
@@ -1133,9 +1138,12 @@ class TestSessionPlans6b:
         e = spark.createDataFrame(
             [(1, 2, 3), (2, 1, 3), (2, 3, 1), (3, 2, 1)], ["src", "dst", "w"]
         )
-        pr = pagerank_weighted(e, iterations=1, persist="none")
-        assert "CartesianProduct" not in formatted_plan(pr)
-        assert not has_python_eval(pr)
+        try:
+            pr = pagerank_weighted(e, iterations=1)
+            assert "CartesianProduct" not in formatted_plan(pr)
+            assert not has_python_eval(pr)
+        finally:
+            spark.catalog.clearCache()
 
     def test_dominant_period_argmax_is_group_limit(self, spark):
         """The rank-1 filter over the lag relation must compile to a
@@ -1474,6 +1482,59 @@ class TestSessionPlans7b:
         assert specs and all("_k" in sp for sp in specs)
 
 
+def _plan_children(node):
+    # an AQE query stage holds its plan in a field, not as a child
+    if node.nodeName().endswith("QueryStage"):
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _agg_to_cache_scan(frames, agg_fn):
+    """For the first frame whose physical plan has a HashAggregate
+    computing ``agg_fn`` (e.g. "sum(_c"): the operators between that
+    aggregate and the cached relation it reads, broadcast sides
+    skipped, and the cached scan's output partitioning."""
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        todo = [plan]
+        while todo:
+            node = todo.pop()
+            if (
+                node.nodeName() == "HashAggregate"
+                and agg_fn in node.aggregateExpressions().toString()
+            ):
+                path = []
+                while node.nodeName() != "InMemoryTableScan":
+                    node = next(
+                        k for k in _plan_children(node)
+                        if k.nodeName()
+                        not in ("BroadcastExchange", "BroadcastQueryStage")
+                    )
+                    path.append(node.nodeName())
+                return path, node.outputPartitioning().toString()
+            todo.extend(_plan_children(node))
+    raise AssertionError(f"no aggregate computing {agg_fn}")
+
+
+@pytest.fixture()
+def checkpointed(spark, monkeypatch):
+    """Every frame an operator hands to ``localCheckpoint`` — one per
+    iteration of the graph loops — in call order."""
+    frames = []
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        frames.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return frames
+
+
 class TestBucketedEdgeTable:
     """The claimed 100 TB shape for the graph family, proven by plan:
     the co-purchase edge list materialized ONCE as a catalog table
@@ -1573,6 +1634,60 @@ class TestBucketedEdgeTable:
             }
             assert got == want and len(got) == 40
         finally:
+            spark.sql("DROP TABLE IF EXISTS bt_copurchase")
+
+    @pytest.mark.parametrize("mode", ["memory", "aligned"])
+    def test_pagerank_iteration_agg_reads_cache_without_exchange(
+        self, spark, checkpointed, mode
+    ):
+        """The plan `pagerank` itself runs: one iteration's
+        contribution aggregate on _d sits on the cached edge scan,
+        which is hash-partitioned on _d, with no Exchange between
+        them (memory: the repartition("_d") cache; aligned: the
+        dst-bucketed table, cached as it is)."""
+        from unitdb_spark.operators.graph import pagerank
+        from unitdb_spark.sources.bucketed import read_table
+
+        try:
+            self._write_edges(spark, bucket_col="dst")
+            e = read_table(spark, "bt_copurchase")
+            if mode == "memory":
+                e = e.repartition(3)  # same edges, round-robin layout
+            pagerank(e, iterations=1, persist=mode)
+            path, part = _agg_to_cache_scan(checkpointed, "sum(_c")
+            assert not {"Exchange", "ShuffleQueryStage", "AQEShuffleRead"} & set(
+                path
+            ), path
+            assert part.startswith("hashpartitioning(_d#"), part
+        finally:
+            spark.catalog.clearCache()
+            spark.sql("DROP TABLE IF EXISTS bt_copurchase")
+
+    @pytest.mark.parametrize("mode", ["memory", "aligned"])
+    def test_components_round_agg_reads_cache_without_exchange(
+        self, spark, checkpointed, mode
+    ):
+        """The plan `connected_components` itself runs: a round's
+        message aggregate (min label per destination) sits on the
+        cached edge scan, hash-partitioned on d, with no Exchange
+        between them."""
+        from unitdb_spark.operators.cluster import connected_components
+        from unitdb_spark.sources.bucketed import read_table
+
+        try:
+            self._write_edges(spark, bucket_col="dst")
+            e = read_table(spark, "bt_copurchase")
+            if mode == "memory":
+                # one direction, round-robin layout
+                e = e.filter("src < dst").repartition(3)
+            connected_components(e, src="src", dst="dst", persist=mode)
+            path, part = _agg_to_cache_scan(checkpointed, "min(label")
+            assert not {"Exchange", "ShuffleQueryStage", "AQEShuffleRead"} & set(
+                path
+            ), path
+            assert part.startswith("hashpartitioning(d#"), part
+        finally:
+            spark.catalog.clearCache()
             spark.sql("DROP TABLE IF EXISTS bt_copurchase")
 
     def test_components_aligned_round_agg_is_exchange_free(self, spark):

@@ -328,7 +328,7 @@ class TestCusumProperty:
         """C+ = S - min(0, min S) must equal the textbook sequential
         recurrence max(0, C+_{i-1} + dev_i) on random series (both
         computed over the same round-6/decimal deviations)."""
-        from decimal import Decimal
+        from decimal import ROUND_HALF_UP, Decimal
 
         from unitdb_spark.operators.timeseries import cusum
 
@@ -341,7 +341,12 @@ class TestCusumProperty:
         # in the SAME (ts, event_id) order the windows use
         ordered = sorted(rows, key=lambda t: (t[1], t[0]))
         vals = [Decimal(str(round(v, 6))) for _, _, v in ordered]
-        mean_r = Decimal(str(round(float(sum(vals)) / len(vals), 6)))
+        # the mean rounds half-up on the double's shortest repr, as
+        # F.round does (Python's round() is half-even on the binary
+        # value and can disagree at the 6th decimal)
+        mean_r = Decimal(repr(float(sum(vals)) / len(vals))).quantize(
+            Decimal("0.000001"), ROUND_HALF_UP
+        )
         devs = [v - mean_r for v in vals]
         cpos = cneg = Decimal(0)
         for (ev_id, _, _), d in zip(ordered, devs):

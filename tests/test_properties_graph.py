@@ -196,6 +196,75 @@ class TestPagerankProperty:
         assert got == want
 
 
+    @settings(max_examples=6, deadline=None)
+    @given(
+        raw=st.lists(
+            st.tuples(st.integers(0, 9), st.integers(0, 9)).filter(
+                lambda t: t[0] != t[1]
+            ),
+            min_size=1,
+            max_size=20,
+        ),
+        damping=st.sampled_from([0.85, 0.5, 0.123456]),
+    )
+    def test_unit_weight_pagerank_matches_pagerank_and_replay(
+        self, spark, raw, damping
+    ):
+        """pagerank(e), pagerank_weighted(e with w = 1) and an integer
+        replay agree bit for bit on a multigraph: duplicate edges are
+        kept, so each copy adds one to its source's out-degree and
+        carries one share of its rank."""
+        from decimal import ROUND_HALF_UP, Decimal
+        from fractions import Fraction
+
+        from pyspark.sql import functions as F
+
+        from unitdb_spark.operators.graph import (
+            PR_SCALE,
+            pagerank,
+            pagerank_weighted,
+        )
+
+        frac = Fraction(str(damping))
+        num, den = frac.numerator, frac.denominator
+        sym = raw + [(b, a) for a, b in raw]  # duplicates stay
+        deg: dict[int, int] = {}
+        for a, _ in sym:
+            deg[a] = deg.get(a, 0) + 1
+        n = len(deg)
+        u = {v: PR_SCALE // n for v in deg}
+        base = ((den - num) * PR_SCALE) // (den * n)
+        for _ in range(3):
+            inflow = {v: 0 for v in deg}
+            for a, b in sym:
+                inflow[b] += u[a] // deg[a]
+            u = {v: base + (num * inflow[v]) // den for v in deg}
+        q6 = Decimal("0.000001")
+        want = {
+            v: float(
+                Decimal(repr(float(u[v]) * float(n) / float(PR_SCALE)))
+                .quantize(q6, ROUND_HALF_UP)
+            )
+            for v in deg
+        }
+        df = spark.createDataFrame(sym, "src int, dst int")
+        try:
+            plain = {
+                r.node: r.pr_r
+                for r in pagerank(df, iterations=3, damping=damping).collect()
+            }
+            unit = {
+                r.node: r.pr_r
+                for r in pagerank_weighted(
+                    df.withColumn("w", F.lit(1)), iterations=3, damping=damping
+                ).collect()
+            }
+        finally:
+            spark.catalog.clearCache()
+        assert plain == want  # bitwise: dict equality over float64
+        assert unit == want
+
+
 class TestCanonicalUrlProperty:
     """canonical_url over randomized URL components."""
 
@@ -262,10 +331,13 @@ class TestKCoreProperty:
         sym = e.unionAll(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        got = {
-            r.node: r.deg
-            for r in kcore(sym, k=k, rounds=rounds, persist="none").collect()
-        }
+        try:
+            got = {
+                r.node: r.deg
+                for r in kcore(sym, k=k, rounds=rounds).collect()
+            }
+        finally:
+            spark.catalog.clearCache()
         assert got == want
 
 
@@ -296,7 +368,9 @@ class TestHitsProperty:
             q_ = max(1, sum(raw.values()) // (scale * len(hubs)))
             hub = {c: raw[c] // q_ for c in hubs}
         df = spark.createDataFrame(edges, ["c", "p"])
-        rows = hits_bipartite(df, "c", "p", iterations=iters,
-                              persist="none").collect()
+        try:
+            rows = hits_bipartite(df, "c", "p", iterations=iters).collect()
+        finally:
+            spark.catalog.clearCache()
         assert {r.node: r.score for r in rows if r.side == "auth"} == auth
         assert {r.node: r.score for r in rows if r.side == "hub"} == hub

@@ -16,11 +16,15 @@ batch.go:60-293) onto DataFrame operations:
   buffer (batch.go:60-293)
 - ``Count``  -> live-entry count (db.go:474-482)
 
-Scale notes (100 TB): every Get compiles to a single Catalyst plan with
-partition pruning on (contract, p_date) and predicate pushdown on
-seq/ts; the tombstone side of the anti-join is broadcast (deletes are
-rare relative to data); no driver-side row loops anywhere on the read
-path.
+Scale notes (100 TB): every Get compiles to a single Catalyst plan. It
+prunes only the ``contract`` partition: a traced Get reads every file
+of its contract (``get_mix`` seed 7: 30 files and 252,788 rows for
+1,355 returned). Only a ``?last=`` Get's ``ts`` filter reaches Parquet
+row groups; no Get prunes a ``p_date`` partition. The tombstone side
+of the anti-join is broadcast (deletes are rare relative to data). The
+driver still walks rows: ``_capped_fetch`` iterates every fetched row
+to enforce the byte cap, and ``get_many`` sorts each query's payloads
+on the driver.
 """
 
 from __future__ import annotations
@@ -633,9 +637,11 @@ class Engine:
                 n_out = max(1, math.ceil(fs.tree_bytes(self.spark, ppath) / target_file_bytes))
                 if n_out >= n_files:
                     continue  # already at or under the target layout
-                # sort AFTER coalesce: the merged output files must be
-                # seq-sorted end to end for row-group stats pruning —
-                # sorting before would leave concatenated sorted runs
+                # sort AFTER coalesce: the merged output files stay
+                # seq-sorted end to end, the layout `append` writes —
+                # sorting before would leave concatenated sorted runs.
+                # Gets do not prune on it: only a ?last= Get's ts filter
+                # reaches row groups.
                 if self._swap_partition(
                     part, lambda df: df.coalesce(n_out).sortWithinPartitions("seq")
                 ):

@@ -811,9 +811,7 @@ def bmp_ahash_chunks(df: DataFrame, grid: int = 8) -> DataFrame:
     )
 
 
-def ahash_pairs(
-    hashes: DataFrame, max_distance: int = 3, persist: str = "memory"
-) -> DataFrame:
+def ahash_pairs(hashes: DataFrame, max_distance: int = 3) -> DataFrame:
     """Near-duplicate image pairs by Hamming distance over the
     average-hash: the Manku '07 pigeonhole — any pair within distance
     ``max_distance`` ≤ 3 agrees EXACTLY on at least one of the four
@@ -824,24 +822,20 @@ def ahash_pairs(
 
     Output: (id_a, id_b, hamming), hamming ≤ max_distance.
 
-    ``persist="memory"`` (default) caches the hash relation — one
-    narrow row per image (id + four 16-bit chunks) — because it
-    feeds FOUR consumers here (both candidate self-join sides and
-    both confirm-join sides). When ``hashes`` is an expensive
+    The hash relation is cached — one narrow row per image (id + four
+    16-bit chunks) — because it feeds FOUR consumers here (both
+    candidate self-join sides and both confirm-join sides). When ``hashes`` is an expensive
     lineage (the per-blob codec decode in `bmp_ahash_chunks`), an
     uncached plan re-runs the whole decode per consumer (r13:
-    media_dup_modularity re-ran the codec subtree 4+ times).
-    ``persist="none"`` opts out; the cache is not unpersisted (the
-    result is lazy — same accumulation note as
-    `graph.triangle_counts`).
+    media_dup_modularity re-ran the codec subtree 4+ times). The
+    cache is not unpersisted (the result is lazy — same accumulation
+    note as `graph.triangle_counts`).
     """
     if max_distance > 3:
         raise ValueError(
             "ahash_pairs: 4-chunk pigeonhole only covers distance <= 3"
         )
-    h = hashes.filter(F.col("c0").isNotNull())
-    if persist == "memory":
-        h = h.persist()
+    h = hashes.filter(F.col("c0").isNotNull()).persist()
     melted = h.select(
         "id",
         F.explode(

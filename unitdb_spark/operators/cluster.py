@@ -51,8 +51,7 @@ def connected_components(
     `graph.pagerank`; without it every round re-derives the upstream
     pair build (the |group|² co-occurrence join in the flagship
     parts_components query: measured 32s → 13s at sf0.1 from this
-    cache alone). ``persist="none"`` opts out for callers managing
-    their own storage level; at 100 TB pre-materialize the edge list.
+    cache alone). At 100 TB pre-materialize the edge list:
     ``persist="aligned"`` (r12, same contract as
     `graph.pagerank(persist="aligned")`) is that pre-materialized
     form: the caller passes a SYMMETRIC edge relation (both
@@ -62,22 +61,28 @@ def connected_components(
     catalog table, sources/bucketed.py). The symmetrization union
     and the repartition are both skipped, so every per-round message
     aggregation is exchange-free straight off the table layout
-    (tests/test_plans.py pins the plan).
+    (tests/test_plans.py pins the plan). Any other value raises
+    ValueError. Both modes broadcast the node-sized label relation,
+    so the node set must fit a broadcast.
 
     Output: (node, cluster_id).
     """
+    if persist not in ("memory", "aligned"):
+        raise ValueError(
+            "connected_components: persist must be 'memory' or 'aligned', "
+            f"got {persist!r}"
+        )
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     if persist == "aligned":
         # edges arrive symmetric AND hash-partitioned on the
         # destination key (dst-bucketed catalog table): no union (it
         # would destroy the scan's partitioning), no repartition —
         # the per-round groupBy(d) is exchange-free off the layout.
-        bi = e.persist()
+        bi = e
     else:
         bi = e.unionByName(
             e.select(F.col("d").alias("s"), F.col("s").alias("d"))
         )
-    if persist == "memory":
         # cache the symmetric edges PARTITIONED BY DESTINATION (round
         # 10): the per-round message aggregation groups on the
         # destination key, and a d-aligned cached relation carries
@@ -87,7 +92,8 @@ def connected_components(
         # disappears (labels, |nodes|-sized, is the only thing that
         # moves). The 100 TB shape is the same relation bucketed by
         # destination (sources/bucketed.py).
-        bi = bi.repartition("d").persist()
+        bi = bi.repartition("d")
+    bi = bi.persist()
     base = bi.select(F.col("s").alias("node")).distinct()
     if nodes is not None:
         base = base.unionByName(
@@ -99,14 +105,10 @@ def connected_components(
     # (r11, same as pagerank's rank hint): without it a graph past
     # the broadcast threshold gets a sort-merge join that re-shuffles
     # the d-aligned edge cache by s every round, turning the
-    # repartition("d") into a pure regression. memory/aligned assert
-    # labels is broadcast-sized; billion-node graphs use
-    # persist="none" and manage their own layout.
-    _hint = (
-        F.broadcast if persist in ("memory", "aligned") else (lambda df: df)
-    )
+    # repartition("d") into a pure regression. Both modes assume
+    # labels is broadcast-sized.
     for _ in range(max_iterations):
-        lab_b = _hint(labels)
+        lab_b = F.broadcast(labels)
         msgs = bi.join(lab_b, bi["s"] == lab_b["node"]).select(
             F.col("d").alias("node"), "label"
         )

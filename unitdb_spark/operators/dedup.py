@@ -145,28 +145,6 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     return shingles_from_tokens(raw_tokens(col), n)
 
 
-def _persist_sig(sig: DataFrame, persist: str) -> DataFrame:
-    """Signature reuse strategy — the signature df is read twice (band
-    join + est_jaccard), so callers choose how it is kept:
-
-    - "memory": .cache() (MEMORY_AND_DISK) — right at bench scale.
-    - "disk": StorageLevel.DISK_ONLY — at 100 TB signatures outgrow
-      executor memory; disk-only persist avoids evicting the shuffle
-      data the bucket join needs while still computing them once.
-    - "none": no persist — recompute per use; right when even local
-      disk is tight or lineage is cheap relative to storage.
-    """
-    if persist == "memory":
-        return sig.cache()
-    if persist == "disk":
-        from pyspark import StorageLevel
-
-        return sig.persist(StorageLevel.DISK_ONLY)
-    if persist == "none":
-        return sig
-    raise ValueError(f"persist must be memory|disk|none, got {persist!r}")
-
-
 def _minhash_sig_banded(
     df: DataFrame,
     text_col: str,
@@ -175,13 +153,15 @@ def _minhash_sig_banded(
     bands: int,
     shingle_n: int,
     hash_family: str,
-    persist: str,
+    cache: bool,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared signature + banding pipeline for both hash families.
 
     Returns (sig, banded): sig = (_id, _sig array), banded =
     (_id, band, bucket) where bucket is the hash of the band's
-    signature slice — the LSH shuffle key.
+    signature slice — the LSH shuffle key. ``cache`` caches the
+    signatures, which the pair path reads twice (band join +
+    est_jaccard); the overflow report reads them once.
     """
     rows_per_band = num_hashes // bands
     # signature computation is CPU-bound: spread small inputs (one
@@ -214,9 +194,9 @@ def _minhash_sig_banded(
             F.min(F.md5(F.concat(F.col("_s"), F.lit(f":{k}"))))
             for k in range(num_hashes)
         ]
-    sig = _persist_sig(
-        sh.groupBy("_id").agg(F.array(*mins).alias("_sig")), persist
-    )
+    sig = sh.groupBy("_id").agg(F.array(*mins).alias("_sig"))
+    if cache:
+        sig = sig.cache()
     # explode to (band, bucket_hash, id): shuffle key is the bucket
     if hash_family == "xxhash64":
         band_exprs = [
@@ -278,12 +258,19 @@ def _cap_buckets(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
     )
 
 
-def _lsh_pairs_from(
-    sig: DataFrame,
-    banded: DataFrame,
+def _minhash_lsh_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
     num_hashes: int,
-    persist: str = "none",
+    bands: int,
+    shingle_n: int,
+    max_bucket_size: int | None,
+    hash_family: str,
 ) -> DataFrame:
+    sig, banded = _minhash_sig_banded(
+        df, text_col, id_col, num_hashes, bands, shingle_n, hash_family, True
+    )
     # materialize the (capped) banded relation: it feeds BOTH sides of
     # the bucket self-join, and without a persist each side re-runs
     # the band posexplode + Exchange + Sort + Window bucket-size count
@@ -292,8 +279,8 @@ def _lsh_pairs_from(
     # plans/r12/doc_minhash_lsh_before.txt) — the same duplicated-
     # subtree shape setjoin.prefix_jaccard_pairs had. The relation is
     # three narrow columns (_id, band, bucket), far smaller than the
-    # signatures already persisted under the same knob.
-    banded = _persist_sig(banded, persist)
+    # signatures cached above.
+    banded = _cap_buckets(banded, max_bucket_size).cache()
     a = banded.select(F.col("_id").alias("id_a"), "band", "bucket")
     b = banded.select(F.col("_id").alias("id_b"), "band", "bucket")
     cand = (
@@ -328,25 +315,21 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket_size: int | None = 500,
-    persist: str = "memory",
 ) -> DataFrame:
     """Near-dup candidate pairs via MinHash + LSH banding.
 
     rows = num_hashes/bands; docs sharing any band bucket meet once.
     Buckets larger than ``max_bucket_size`` are dropped before the
     self-join (degenerate-cluster guard — see ``_cap_buckets``; audit
-    the dropped mass with ``lsh_overflow_report``). ``persist``
-    controls signature reuse ("memory" | "disk" | "none", see
-    ``_persist_sig``).
+    the dropped mass with ``lsh_overflow_report``). The signatures
+    and the capped band relation are cached: each feeds two consumers.
     Output: (id_a, id_b, est_jaccard) — est from full-signature
     agreement of the candidates (exact verify is a cheap follow-up on
     this tiny candidate set).
     """
-    sig, banded = _minhash_sig_banded(
-        df, text_col, id_col, num_hashes, bands, shingle_n, "xxhash64", persist
-    )
-    return _lsh_pairs_from(
-        sig, _cap_buckets(banded, max_bucket_size), num_hashes, persist
+    return _minhash_lsh_pairs(
+        df, text_col, id_col, num_hashes, bands, shingle_n, max_bucket_size,
+        "xxhash64",
     )
 
 
@@ -358,7 +341,6 @@ def minhash_lsh_pairs_md5(
     bands: int = 4,
     shingle_n: int = 3,
     max_bucket_size: int | None = 500,
-    persist: str = "memory",
 ) -> DataFrame:
     """MinHash+LSH with md5 as the hash family — engine-portable, so
     the full pipeline (shingle → signature → banding → bucket join →
@@ -370,11 +352,9 @@ def minhash_lsh_pairs_md5(
 
     Output: (id_a, id_b, est_jaccard), id_a < id_b.
     """
-    sig, banded = _minhash_sig_banded(
-        df, text_col, id_col, num_hashes, bands, shingle_n, "md5", persist
-    )
-    return _lsh_pairs_from(
-        sig, _cap_buckets(banded, max_bucket_size), num_hashes, persist
+    return _minhash_lsh_pairs(
+        df, text_col, id_col, num_hashes, bands, shingle_n, max_bucket_size,
+        "md5",
     )
 
 
@@ -388,7 +368,6 @@ def lsh_verified_pairs(
     max_bucket_size: int | None = 500,
     threshold: float = 0.5,
     hash_family: str = "md5",
-    persist: str = "memory",
 ) -> DataFrame:
     """The full candidate→verify near-dup pipeline: LSH candidates
     (banded bucket join) confirmed by the EXACT Jaccard over distinct
@@ -405,7 +384,7 @@ def lsh_verified_pairs(
     pairs_fn = minhash_lsh_pairs_md5 if hash_family == "md5" else minhash_lsh_pairs
     cand = pairs_fn(
         df, text_col, id_col, num_hashes, bands, shingle_n,
-        max_bucket_size=max_bucket_size, persist=persist,
+        max_bucket_size=max_bucket_size,
     )
     verified = _join_candidate_shingles(df, cand, text_col, id_col, shingle_n)
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -454,7 +433,6 @@ def lsh_containment_pairs(
     max_bucket_size: int | None = 500,
     threshold: float = 0.6,
     hash_family: str = "md5",
-    persist: str = "memory",
 ) -> DataFrame:
     """ASYMMETRIC near-dup: Jaccard containment C(A,B) = |A∩B| / |A|
     over LSH candidates (Broder '97 distinguishes resemblance from
@@ -476,7 +454,7 @@ def lsh_containment_pairs(
     pairs_fn = minhash_lsh_pairs_md5 if hash_family == "md5" else minhash_lsh_pairs
     cand = pairs_fn(
         df, text_col, id_col, num_hashes, bands, shingle_n,
-        max_bucket_size=max_bucket_size, persist=persist,
+        max_bucket_size=max_bucket_size,
     ).select("id_a", "id_b")
     verified = _join_candidate_shingles(df, cand, text_col, id_col, shingle_n)
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
@@ -498,7 +476,6 @@ def incremental_dedup(
     shingle_n: int = 3,
     threshold: float = 0.5,
     hash_family: str = "md5",
-    persist: str = "memory",
 ) -> DataFrame:
     """Ingestion-time dedup: admit a NEW batch against an EXISTING
     corpus — the production shape where yesterday's 100 TB is already
@@ -515,9 +492,8 @@ def incremental_dedup(
        resolved to the best corpus match (max jaccard, min id).
 
     Ids must be disjoint across the two frames. In production the
-    corpus side's signatures are precomputed once and persisted
-    (``persist=``/a signature table); computing them here keeps the
-    operator self-contained.
+    corpus side's signatures are precomputed once into a signature
+    table; computing them here keeps the operator self-contained.
 
     Output: one row per NEW doc — (id, status, match_id, jaccard_r)
     with status in ('exact_dup', 'near_dup', 'kept'); exact wins over
@@ -544,7 +520,7 @@ def incremental_dedup(
     union = corp.unionByName(new)
     pairs_fn = minhash_lsh_pairs_md5 if hash_family == "md5" else minhash_lsh_pairs
     cand = pairs_fn(
-        union, "text", "id", num_hashes, bands, shingle_n, persist=persist
+        union, "text", "id", num_hashes, bands, shingle_n
     ).select("id_a", "id_b")
     sides = corp.select("id", F.lit(0).alias("side")).unionByName(
         new.select("id", F.lit(1).alias("side"))
@@ -622,7 +598,7 @@ def lsh_overflow_report(
     quality signal, not an LSH tuning problem.
     """
     _, banded = _minhash_sig_banded(
-        df, text_col, id_col, num_hashes, bands, shingle_n, hash_family, "none"
+        df, text_col, id_col, num_hashes, bands, shingle_n, hash_family, False
     )
     return (
         banded.groupBy("band", "bucket")
@@ -697,7 +673,6 @@ def simhash_pairs(
     bands: int = 4,
     hash_family: str = "md5",
     max_bucket_size: int | None = 500,
-    persist: str = "memory",
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ ``k`` via the
     pigeonhole banding of Manku et al. (WWW '07, Google's web dedup):
@@ -726,10 +701,8 @@ def simhash_pairs(
     fp_expr = simhash64_md5(text_col) if hash_family == "md5" else simhash64(text_col)
     fps = df.select(F.col(id_col).alias("_id"), fp_expr.alias("_fp"))
     # the fingerprint UDF runs once; band explode + both join sides
-    # reuse the persisted result — same memory/disk/none discipline as
-    # the LSH signatures (at 100 TB fingerprints outgrow executor
-    # memory; "disk" avoids evicting shuffle blocks, "none" recomputes)
-    fps = _persist_sig(fps, persist)
+    # reuse the cached result, as with the LSH signatures
+    fps = fps.cache()
     banded = fps.select(
         "_id",
         F.posexplode(

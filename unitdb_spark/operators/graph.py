@@ -128,6 +128,122 @@ def cooccurrence_edges(df: DataFrame, group_col: str, item_col: str) -> DataFram
 PR_SCALE = 1_000_000_000_000
 
 
+def _power_iteration(
+    e: DataFrame,
+    seeds: DataFrame | None,
+    iterations: int,
+    damping: float,
+    persist: str,
+    name: str,
+    out: str,
+) -> DataFrame:
+    """The one fixed-point power iteration behind `pagerank`,
+    `pagerank_weighted` and `personalized_pagerank`.
+
+    ``e`` is the edge list as (_s, _d, _w) with BIGINT weights, or
+    (_s, _d) for unit weights; the node set is its sources. Every
+    node carries its out-weight Σw_u on each out-edge and sends
+    (pr_u · w) div Σw_u along it — with unit weights, pr_u div
+    out_degree (no weight column rides the edge cache). Restart mass
+    goes uniformly to the T teleport nodes: the ``seeds`` (an ``_s``
+    column; ids that are not graph nodes are ignored), or every node
+    when ``seeds`` is None. Per node the loop
+    reads its teleport units ``_t`` (floor((den−num)·SCALE / (den·T))
+    on a teleport node, else 0) and its start mass ``_u`` (SCALE div
+    T, else 0), so a round is pr_u' = _t + (num · inflow) div den.
+
+    ``persist`` is "memory" (cache the edges repartitioned by _d) or
+    "aligned" (the edges already hash on _d: cache them as they
+    are). Both broadcast the node-sized relations, so they assume the
+    node set is broadcast-sized. Output: (node, ``out``) — rank
+    scaled by N and rounded to 6.
+    """
+    if persist not in ("memory", "aligned"):
+        raise ValueError(
+            f"{name}: persist must be 'memory' or 'aligned', got {persist!r}"
+        )
+    from fractions import Fraction
+
+    frac = Fraction(str(damping))
+    d_num, d_den = frac.numerator, frac.denominator
+    weighted = "_w" in e.columns
+    ws = e.groupBy("_s").agg(
+        (F.sum("_w") if weighted else F.count(F.lit(1))).cast("long").alias("_ws")
+    )
+    share = "(_u * _w) div _ws" if weighted else "_u div _ws"
+    # broadcast the node-sized out-weight relation into the edge
+    # build, so the edge relation is never shuffled by _s on its way
+    # to d-alignment (memory: saves one edge-sized exchange before the
+    # repartition; aligned: PRESERVES the bucketed table's hash(dst)
+    # partitioning, the whole point).
+    ewd = e.join(F.broadcast(ws), "_s")
+    if persist == "memory":
+        # cache the loop-invariant edge relation PARTITIONED BY
+        # DESTINATION (r10, same trick as connected_components): the
+        # per-iteration contribution agg groups on _d, and the cached
+        # HashPartitioning(_d) survives the (broadcast-sized) rank
+        # join's project, so the groupBy shuffles NOTHING — only the
+        # |nodes|-sized rank relation moves per iteration. "aligned"
+        # is the 100 TB steady state: the dst-bucketed catalog table
+        # gives the same exchange-free iterations with no repartition.
+        ewd = ewd.repartition("_d")
+    ewd = ewd.persist()
+    # the node relation is re-joined every iteration, and the eager
+    # counts below would otherwise each re-run the full edge build
+    nodes = ws.select("_s").persist()
+    n = nodes.count()
+    if n == 0:
+        raise ValueError(f"{name}: empty edge list")
+    on, n_t = F.lit(True), n
+    if seeds is not None:
+        sd = seeds.distinct().join(nodes, "_s", "leftsemi")
+        n_t = sd.count()
+        if n_t == 0:
+            raise ValueError(f"{name}: no seed is a graph node")
+        nodes = nodes.join(
+            sd.withColumn("_on", F.lit(True)), "_s", "left"
+        ).persist()
+        on = F.col("_on")
+    base_u = ((d_den - d_num) * PR_SCALE) // (d_den * n_t)
+    nodes = nodes.select(
+        "_s",
+        F.when(on, F.lit(base_u)).otherwise(0).cast("long").alias("_t"),
+        F.when(on, F.lit(PR_SCALE // n_t)).otherwise(0).cast("long").alias("_u"),
+    )
+    ranks = nodes.select("_s", "_u")
+    for _ in range(iterations):
+        # the d-alignment above only pays off if the rank join does
+        # NOT re-shuffle ewd by _s — pin it with an explicit broadcast
+        # hint on the |nodes|-sized rank relation (r11; without the
+        # hint, a graph past the broadcast threshold gets an AQE
+        # sort-merge join and the repartition("_d") becomes a pure
+        # regression).
+        inflow = (
+            ewd.join(F.broadcast(ranks), "_s")
+            .select("_d", F.expr(share).alias("_c"))
+            .groupBy("_d")
+            .agg(F.sum("_c").alias("_in"))
+        )
+        ranks = (
+            nodes.join(inflow.withColumnRenamed("_d", "_s"), "_s", "left")
+            .select(
+                "_s",
+                (
+                    F.col("_t")
+                    + F.expr(f"({d_num} * coalesce(_in, 0L)) div {d_den}")
+                ).alias("_u"),
+            )
+            .localCheckpoint(eager=False)
+        )
+    return ranks.select(
+        F.col("_s").alias("node"),
+        F.round(
+            F.col("_u").cast("double") * F.lit(float(n)) / F.lit(float(PR_SCALE)),
+            6,
+        ).alias(out),
+    )
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -150,25 +266,25 @@ def pagerank(
     dangling nodes this formulation would leak their mass — callers
     with genuinely directed graphs must add back-edges or drop sinks.
 
-    Per iteration: one shuffle joining ranks to edges on ``src`` and
-    one partial-agg shuffle on ``dst``, then a node-relation re-join so
-    a node with out-edges but NO in-edges keeps its row (and its
-    outgoing contributions) instead of silently dropping after round 1.
-    The edges-with-degree and node relations are loop-invariant and
-    reused k (resp. k+1) times, so ``persist="memory"`` (default)
-    caches them — measured 23s → 15s cold / 17s → 5s warm at sf0.1
-    (without the cache every iteration re-derives the co-occurrence
-    self-join from the source table). ``persist="none"`` opts out for
-    callers managing their own storage level; at 100 TB the
-    edge relation belongs in MEMORY_AND_DISK or a pre-materialized
-    table. ``persist="aligned"`` (r11) is the pre-materialized form:
-    the caller passes edges whose source partitioning ALREADY hashes
-    on ``dst`` (a catalog table bucketed on dst —
-    sources/bucketed.py), so the loop invariants persist WITHOUT the
-    repartition and the degree join broadcasts the node-sized degree
-    relation to keep the edge side's partitioning intact; every
-    per-iteration aggregation is then exchange-free straight off the
-    table layout (tests/test_plans.py pins the plan).
+    Per iteration: a broadcast join of the ranks to the edges and one
+    partial-agg on ``dst``, then a node-relation re-join so a node
+    with out-edges but NO in-edges keeps its row (and its outgoing
+    contributions) instead of silently dropping after round 1. The
+    edges-with-degree and node relations are loop-invariant and
+    reused k (resp. k+1) times, so they are cached — measured 23s →
+    15s cold / 17s → 5s warm at sf0.1 (without the cache every
+    iteration re-derives the co-occurrence self-join from the source
+    table). ``persist="memory"`` (default) caches the edges
+    repartitioned by ``dst``. ``persist="aligned"`` (r11) is the
+    pre-materialized form: the caller passes edges whose source
+    partitioning ALREADY hashes on ``dst`` (a catalog table bucketed
+    on dst — sources/bucketed.py), so the loop invariants persist
+    WITHOUT the repartition and the degree join broadcasts the
+    node-sized degree relation to keep the edge side's partitioning
+    intact; every per-iteration aggregation is then exchange-free
+    straight off the table layout (tests/test_plans.py pins the
+    plan). Any other value raises ValueError. Both modes broadcast
+    the node-sized relations, so the node set must fit a broadcast.
 
     Determinism contract (the fix for the round-4 ulp risk): all
     arithmetic is BIGINT — contribution = pr_u div out_degree, damping
@@ -182,79 +298,14 @@ def pagerank(
     graph small enough to enumerate. The final pr_r is one pinned
     float expression: round(double(u) · N / SCALE, 6).
     """
-    from fractions import Fraction
-
-    frac = Fraction(str(damping))
-    d_num, d_den = frac.numerator, frac.denominator
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-    deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
-    # broadcast-sized modes broadcast the node-sized degree relation
-    # into the edges-with-degree build, so the edge relation is never
-    # shuffled by _s on its way to d-alignment (memory: saves one
-    # edge-sized exchange before the repartition; aligned: PRESERVES
-    # the bucketed table's hash(dst) partitioning, the whole point).
-    _bc = persist in ("memory", "aligned")
-    ewd = e.join(F.broadcast(deg) if _bc else deg, "_s")
-    nodes = deg.select("_s")
-    if persist == "memory":
-        # cache the loop-invariant edge relation PARTITIONED BY
-        # DESTINATION (r10, same trick as connected_components): the
-        # per-iteration contribution agg groups on _d, and the cached
-        # HashPartitioning(_d) survives the (broadcast-sized) rank
-        # join's project, so the groupBy shuffles NOTHING — only the
-        # |nodes|-sized rank relation moves per iteration.
-        ewd = ewd.repartition("_d").persist()
-        nodes = nodes.persist()
-    elif persist == "aligned":
-        # edges arrive already hash-partitioned on dst (dst-bucketed
-        # catalog table): same exchange-free iterations as "memory"
-        # with NO repartition at all — the 100 TB steady state.
-        ewd = ewd.persist()
-        nodes = nodes.persist()
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank: empty edge list")
-    ranks = nodes.select("_s", F.lit(PR_SCALE // n).alias("_pr_u"))
-    base_u = ((d_den - d_num) * PR_SCALE) // (d_den * n)
-    # the d-alignment above only pays off if the per-iteration rank
-    # join does NOT re-shuffle ewd by _s — pin it with an explicit
-    # broadcast hint on the |nodes|-sized rank relation (r11; without
-    # the hint, a graph past the broadcast threshold gets an AQE
-    # sort-merge join and the repartition("_d") becomes a pure
-    # regression). memory/aligned assert nodes is broadcast-sized;
-    # billion-node graphs use persist="none" + a bucketed edge table.
-    _hint = F.broadcast if _bc else (lambda d: d)
-    for _ in range(iterations):
-        contrib = ewd.join(_hint(ranks), "_s").select(
-            F.col("_d"), F.expr("_pr_u div _deg").alias("_c")
-        )
-        agg = contrib.groupBy("_d").agg(F.sum("_c").alias("_in"))
-        ranks = (
-            nodes.join(agg.select(F.col("_d").alias("_s"), "_in"), "_s", "left")
-            .select(
-                "_s",
-                (
-                    F.lit(base_u)
-                    + F.expr(
-                        f"({d_num} * coalesce(_in, 0L)) div {d_den}"
-                    )
-                ).alias("_pr_u"),
-            )
-        ).localCheckpoint(eager=False)
-    return ranks.select(
-        F.col("_s").alias("node"),
-        F.round(
-            F.col("_pr_u").cast("double")
-            * F.lit(float(n))
-            / F.lit(float(PR_SCALE)),
-            6,
-        ).alias("pr_r"),
+    return _power_iteration(
+        e, None, iterations, damping, persist, "pagerank", "pr_r"
     )
 
 
 def triangle_counts(
-    edges: DataFrame, src: str = "src", dst: str = "dst",
-    persist: str = "memory",
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Per-node triangle counts over an undirected graph.
 
@@ -277,40 +328,35 @@ def triangle_counts(
     Output: (node, n_triangles) for every node in the edge set,
     zeros included. Exact integers end to end.
 
-    ``persist="memory"`` (default) caches the normalized edge,
-    degree, and forward-list relations for the duration of the
-    returned plan and does NOT unpersist them (the result is lazy; a
-    terminal action inside the operator would change its contract).
-    Repeated calls in a long-lived session therefore accumulate
-    cached relations — call ``spark.catalog.clearCache()`` between
-    invocations, or pass ``persist="none"``, when that matters.
+    The normalized edge, degree, forward-list and edge-triangle
+    relations are cached for the duration of the returned plan and
+    NOT unpersisted (the result is lazy; a terminal action inside the
+    operator would change its contract). Repeated calls in a
+    long-lived session therefore accumulate cached relations — call
+    ``spark.catalog.clearCache()`` between invocations when that
+    matters.
     """
-    from unitdb_spark.operators.dedup import _persist_sig
-
     # the normalized edge set feeds FOUR consumers (both degree
     # derivations, the orientation join, and the wedge-closing join),
     # fwd two (both wedge sides), deg three — without persists each
     # consumer re-runs the distinct (an edge-sized exchange) from the
     # source relation per use (r12: parts_triangles 26.6-32.7s →
-    # 4.6-5.6s with the three persists; same storage knob as the
-    # MinHash/prefix persists, "none" opts out).
-    e = _persist_sig(
+    # 4.6-5.6s with the three caches).
+    e = (
         edges.select(F.col(src).alias("_a"), F.col(dst).alias("_b"))
         .filter(F.col("_a") != F.col("_b"))
         .select(
             F.least("_a", "_b").alias("_a"), F.greatest("_a", "_b").alias("_b")
         )
-        .distinct(),
-        persist,
+        .distinct()
+        .cache()
     )
     # total degree per node (undirected), then direct each edge from
     # the (degree, id)-smaller endpoint to the larger
     nodes = e.select(F.col("_a").alias("_n")).unionAll(
         e.select(F.col("_b").alias("_n"))
     )
-    deg = _persist_sig(
-        nodes.groupBy("_n").agg(F.count(F.lit(1)).alias("_deg")), persist
-    )
+    deg = nodes.groupBy("_n").agg(F.count(F.lit(1)).alias("_deg")).cache()
     da = deg.select(F.col("_n").alias("_a"), F.col("_deg").alias("_dega"))
     db = deg.select(F.col("_n").alias("_b"), F.col("_deg").alias("_degb"))
     ed = e.join(da, "_a").join(db, "_b")
@@ -323,7 +369,7 @@ def triangle_counts(
         .otherwise(F.struct(F.col("_b").alias("u"), F.col("_a").alias("v")))
         .alias("_e")
     ).select(F.col("_e.u").alias("_u"), F.col("_e.v").alias("_v"))
-    fwd = _persist_sig(fwd, persist)
+    fwd = fwd.cache()
     # adjacency-intersect close (r12): the explicit wedge self-join
     # materializes Σ fd(u)² wedge ROWS through an exchange before the
     # closing join — 41M wedges for sf0.1's 1.2M-edge co-purchase
@@ -343,14 +389,14 @@ def triangle_counts(
     adj = fwd.groupBy("_u").agg(F.collect_list("_v").alias("_nb"))
     la = adj.select(F.col("_u"), F.col("_nb").alias("_nbu"))
     lb = adj.select(F.col("_u").alias("_v"), F.col("_nb").alias("_nbv"))
-    etri = _persist_sig(
+    etri = (
         fwd.join(la, "_u")
         .join(lb, "_v")
         .select(
             "_u", "_v", F.array_intersect("_nbu", "_nbv").alias("_cm")
         )
-        .select("_u", "_v", F.size("_cm").alias("_nc"), "_cm"),
-        persist,
+        .select("_u", "_v", F.size("_cm").alias("_nc"), "_cm")
+        .cache()
     )
     corners = (
         etri.select(F.col("_u").alias("_n"), F.col("_nc").alias("_c"))
@@ -457,7 +503,6 @@ def personalized_pagerank(
     seed_col: str | None = None,
     iterations: int = 5,
     damping: float = 0.85,
-    persist: str = "memory",
 ) -> DataFrame:
     """Random walk with restart to a SEED set — proximity to the
     seeds, not global importance.
@@ -479,79 +524,10 @@ def personalized_pagerank(
     (see its docstring): integer sums are order-free, so the SQL
     oracle replay matches bitwise by construction.
     """
-    from fractions import Fraction
-
-    frac = Fraction(str(damping))
-    d_num, d_den = frac.numerator, frac.denominator
-    sc = seed_col or seeds.columns[0]
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-    deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
-    # broadcast the node-sized degree relation into the build (r11,
-    # see pagerank): the edge relation reaches the d-repartition
-    # without first shuffling by _s — one edge-sized exchange, not two
-    _bc = persist == "memory"
-    ewd = e.join(F.broadcast(deg) if _bc else deg, "_s")
-    if persist == "memory":  # loop-invariant, reused every iteration
-        # d-aligned (r10, see pagerank): iteration agg exchange-free
-        ewd = ewd.repartition("_d").persist()
-        # persist the node-sized degree relation too (r12): the two
-        # eager counts below (n, n_seeds) plus the node/marked
-        # relations each re-ran the FULL edge build otherwise —
-        # pagerank already persists its node relation for the same
-        # reason (measured: parts_ppr min 10.9s vs pagerank 6.4s on
-        # the same graph, the gap being exactly these extra builds).
-        deg = deg.persist()
-    n = deg.count()
-    if n == 0:
-        raise ValueError("personalized_pagerank: empty edge list")
-    sd = (
-        seeds.select(F.col(sc).alias("_s"))
-        .distinct()
-        .join(deg.select("_s"), "_s", "leftsemi")
-    )
-    n_seeds = sd.count()
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank: no seed is a graph node")
-    base_u = ((d_den - d_num) * PR_SCALE) // (d_den * n_seeds)
-    nodes = deg.select("_s")
-    marked = nodes.join(
-        sd.select("_s", F.lit(True).alias("_is_seed")), "_s", "left"
-    ).select("_s", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"))
-    if persist == "memory":  # re-joined every iteration
-        marked = marked.persist()
-    ranks = marked.select(
-        "_s",
-        F.when(F.col("_is_seed"), F.lit(PR_SCALE // n_seeds))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("_pr_u"),
-    )
-    # same plan-pinning broadcast as `pagerank` (r11): keep the rank
-    # join from re-shuffling the d-aligned edge cache by _s.
-    _hint = F.broadcast if persist == "memory" else (lambda d: d)
-    for _ in range(iterations):
-        contrib = ewd.join(_hint(ranks), "_s").select(
-            F.col("_d"), F.expr("_pr_u div _deg").alias("_c")
-        )
-        agg = contrib.groupBy("_d").agg(F.sum("_c").alias("_in"))
-        ranks = (
-            marked.join(agg.select(F.col("_d").alias("_s"), "_in"), "_s", "left")
-            .select(
-                "_s",
-                (
-                    F.expr(f"({d_num} * coalesce(_in, 0L)) div {d_den}")
-                    + F.when(F.col("_is_seed"), F.lit(base_u)).otherwise(F.lit(0))
-                ).alias("_pr_u"),
-            )
-        ).localCheckpoint(eager=False)
-    return ranks.select(
-        F.col("_s").alias("node"),
-        F.round(
-            F.col("_pr_u").cast("double")
-            * F.lit(float(n))
-            / F.lit(float(PR_SCALE)),
-            6,
-        ).alias("ppr_r"),
+    sd = seeds.select(F.col(seed_col or seeds.columns[0]).alias("_s"))
+    return _power_iteration(
+        e, sd, iterations, damping, "memory", "personalized_pagerank", "ppr_r"
     )
 
 
@@ -906,7 +882,6 @@ def label_propagation(
     dst: str = "dst",
     weight: str | None = "w",
     rounds: int = 3,
-    persist: str = "memory",
 ) -> DataFrame:
     """Synchronous weighted label propagation (Raghavan '07), made
     fully deterministic: every node starts as its own label; each
@@ -927,9 +902,9 @@ def label_propagation(
     Per round: one shuffle joining labels to edges on ``src``, one
     partial-agg shuffle on (dst, label), one window over the per-node
     candidate labels (partitioned by node — no global ordering).
-    The edge and node relations are loop-invariant and persisted by
-    default (`persist="none"` opts out); lineage is cut per round
-    with a lazy localCheckpoint like the pagerank loop.
+    The edge and node relations are loop-invariant and persisted;
+    lineage is cut per round with a lazy localCheckpoint like the
+    pagerank loop.
 
     Output: (node, lbl) — final community label per connected node.
     """
@@ -942,9 +917,8 @@ def label_propagation(
         F.col(src).alias("_s"), F.col(dst).alias("_d"), w_col.alias("_w")
     )
     nodes = e.select(F.col("_s").alias("_n")).distinct()
-    if persist == "memory":
-        e = e.persist()
-        nodes = nodes.persist()
+    e = e.persist()
+    nodes = nodes.persist()
     labels = nodes.select("_n", F.col("_n").alias("_lbl"))
     rank_w = Window.partitionBy("_d").orderBy(
         F.desc("_wsum"), F.asc("_lbl")
@@ -979,7 +953,6 @@ def kcore(
     rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
-    persist: str = "memory",
 ) -> DataFrame:
     """Bounded-round k-core peeling (Seidman '83): repeatedly delete
     nodes whose degree in the SURVIVING subgraph is < k. The fixed
@@ -995,17 +968,15 @@ def kcore(
     Per round: two semi-join shuffles (edge endpoints against the
     surviving set) + one partial-agg shuffle for degrees — all keyed
     joins, no broadcast needed when the node relation is large. The
-    edge relation is loop-invariant and persisted by default;
-    survivor lineage is cut per round with a lazy localCheckpoint.
+    edge relation is loop-invariant and persisted; survivor lineage
+    is cut per round with a lazy localCheckpoint.
 
     Output: (node, deg) — survivors after ``rounds`` peels, with
     their degree inside the FINAL surviving subgraph (recomputed
     after the last peel; all-integer, so an unrolled-CTE oracle
     matches bitwise).
     """
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-    if persist == "memory":
-        e = e.persist()
+    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).persist()
     alive = e.select(F.col("_s").alias("_n")).distinct()
     for _ in range(rounds):
         sub = e.join(
@@ -1049,7 +1020,6 @@ def hits_bipartite(
     auth_col: str,
     iterations: int = 2,
     scale: int = HITS_SCALE,
-    persist: str = "memory",
 ) -> DataFrame:
     """HITS (Kleinberg '99) over a bipartite edge list — hubs on the
     left (e.g. customers), authorities on the right (e.g. parts):
@@ -1070,18 +1040,18 @@ def hits_bipartite(
     Per update: one keyed join shuffle + one partial agg; the total
     and the side counts are 1-row/driver-scalar control-plane reads
     (pagerank's sanctioned pattern). The edge relation is
-    loop-invariant and persisted by default.
+    loop-invariant and persisted.
 
     Output: (side, node, score) with side in ('hub', 'auth') — raw
     BIGINT fixed-point scores, no float anywhere.
     """
     if iterations < 1:
         raise ValueError("hits_bipartite: iterations must be >= 1")
-    e = edges.select(
-        F.col(hub_col).alias("_c"), F.col(auth_col).alias("_p")
-    ).distinct()
-    if persist == "memory":
-        e = e.persist()
+    e = (
+        edges.select(F.col(hub_col).alias("_c"), F.col(auth_col).alias("_p"))
+        .distinct()
+        .persist()
+    )
     hubs0 = e.select("_c").distinct()
     n_auth = e.select("_p").distinct().count()
     n_hub = hubs0.count()
@@ -1310,15 +1280,16 @@ def pagerank_weighted(
     weight: str = "w",
     iterations: int = 5,
     damping: float = 0.85,
-    persist: str = "memory",
 ) -> DataFrame:
     """Weighted PageRank: mass flows along edges in proportion to
     edge weight — contribution u→v = (pr_u · w_uv) div Σw_u — so a
     part co-purchased with something 40 times pulls 40× the rank a
     one-off pairing does. Same exact-BIGINT-picounits determinism
     contract, iteration shape, damping rational, and lineage
-    discipline as `pagerank` (which this generalizes: weight ≡ 1
-    reduces to it up to per-step floor placement).
+    discipline as `pagerank`, which this generalizes: with every
+    weight 1, (pr_u · 1) div Σ1 is pr_u div out_degree, so the two
+    agree bit for bit (a duplicated edge counts once per copy in
+    both).
 
     Overflow envelope: pr_u ≤ SCALE (1e12 picounits of total mass)
     and pr_u · w must clear int64 — fine for any count-valued weight
@@ -1326,61 +1297,13 @@ def pagerank_weighted(
 
     Output: (node, pr_r) — N-scaled round-6, as `pagerank`.
     """
-    from fractions import Fraction
-
-    frac = Fraction(str(damping))
-    d_num, d_den = frac.numerator, frac.denominator
     e = edges.select(
         F.col(src).alias("_s"),
         F.col(dst).alias("_d"),
         F.col(weight).cast("long").alias("_w"),
     )
-    ws = e.groupBy("_s").agg(F.sum("_w").cast("long").alias("_ws"))
-    # broadcast-weighted-degree build (r11, see pagerank): one
-    # edge-sized exchange (the d-repartition), not two
-    _bc = persist == "memory"
-    ewd = e.join(F.broadcast(ws) if _bc else ws, "_s")
-    nodes = ws.select("_s")
-    if persist == "memory":
-        # d-aligned loop-invariant cache (r10, see pagerank): the
-        # per-iteration inflow agg on _d becomes exchange-free
-        ewd = ewd.repartition("_d").persist()
-        nodes = nodes.persist()
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank_weighted: empty edge list")
-    restart = (d_den - d_num) * PR_SCALE // (d_den * n)
-    pr = nodes.withColumn("_u", F.lit(PR_SCALE // n).cast("long"))
-    # same plan-pinning broadcast as `pagerank` (r11)
-    _hint = F.broadcast if persist == "memory" else (lambda d: d)
-    for _ in range(iterations):
-        inflow = (
-            ewd.join(_hint(pr.withColumnRenamed("_s", "_src")
-                           .withColumnRenamed("_u", "_pu")),
-                     F.col("_s") == F.col("_src"))
-            .select("_d", F.expr("(_pu * _w) div _ws").alias("_c"))
-            .groupBy("_d")
-            .agg(F.sum("_c").cast("long").alias("_v"))
-        )
-        pr = (
-            nodes.join(inflow, nodes["_s"] == inflow["_d"], "left")
-            .select(
-                "_s",
-                (
-                    F.lit(int(restart)).cast("long")
-                    + F.expr(
-                        f"({d_num} * coalesce(_v, 0L)) div {d_den}"
-                    ).cast("long")
-                ).alias("_u"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return pr.select(
-        F.col("_s").alias("node"),
-        F.round(
-            F.col("_u").cast("double") * F.lit(float(n)) / F.lit(float(PR_SCALE)),
-            6,
-        ).alias("pr_r"),
+    return _power_iteration(
+        e, None, iterations, damping, "memory", "pagerank_weighted", "pr_r"
     )
 
 

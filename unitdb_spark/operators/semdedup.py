@@ -26,6 +26,7 @@ convention.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,7 +42,6 @@ def semdedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    persist: str = "memory",
 ) -> DataFrame:
     """Mark semantic near-duplicates within k-means cells.
 
@@ -52,15 +52,14 @@ def semdedup(
     qualifying earlier id (the exemplar this row deduplicates to).
 
     The assigned (id, cell, vec) relation feeds both self-join sides,
-    so it is persisted once (``persist``: "memory" / "disk" / "none",
-    same convention as MinHash signatures) — without it Spark re-runs
-    the assignment subplan per branch. The persist is session-pinned
-    (Spark has no plan-scoped lifetime); long-lived jobs should release
-    it via ``spark.catalog.clearCache()`` once consumed, as with the
-    TF-IDF ``reuse_tf`` persist. The final keeper join runs on
-    the NARROW (id, cell) assignment relation (16 B/row — vectors
-    never ride the closing exchange, and the dup side can be any size
-    without a broadcast gamble).
+    so it is persisted once (MEMORY_AND_DISK) — without it Spark
+    re-runs the assignment subplan per branch. The persist is
+    session-pinned (Spark has no plan-scoped lifetime); long-lived
+    jobs should release it via ``spark.catalog.clearCache()`` once
+    consumed. The final keeper join runs on the NARROW (id, cell)
+    assignment relation (16 B/row — vectors never ride the closing
+    exchange, and the dup side can be any size without a broadcast
+    gamble).
     """
     assigned = kmeans_lloyd(df, k=k, n_iters=n_iters, id_col=id_col, vec_col=vec_col, seed=seed)
     # persist the assignment relation ALREADY hash-partitioned on the
@@ -76,13 +75,8 @@ def semdedup(
         df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_vec"))
         .join(assigned.withColumnRenamed(id_col, "vec_id"), "vec_id")
         .repartition(par, "cell")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if persist != "none":
-        from pyspark import StorageLevel
-
-        t = t.persist(
-            StorageLevel.MEMORY_AND_DISK if persist == "memory" else StorageLevel.DISK_ONLY
-        )
     a = t.select(F.col("vec_id").alias("_ida"), F.col("cell"), F.col("_vec").alias("_va"))
     b = t.select(F.col("vec_id").alias("_idb"), F.col("cell"), F.col("_vec").alias("_vb"))
     pairs = (

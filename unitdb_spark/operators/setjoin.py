@@ -89,7 +89,6 @@ def prefix_jaccard_pairs(
     threshold: float = 0.5,
     unit: str = "shingle",
     shingle_n: int = 3,
-    persist: str = "memory",
 ) -> DataFrame:
     """EVERY pair with exact Jaccard >= threshold — no blocking column.
 
@@ -108,9 +107,8 @@ def prefix_jaccard_pairs(
     near-linear in the inverted prefix-index size instead of
     quadratic in documents.
 
-    ``persist`` caches the token-set relation, read three times
-    (frequency explode + both verify sides) — same knob as the
-    MinHash family's signature persist.
+    The token-set relation is cached: it is read three times
+    (frequency explode + both verify sides).
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
@@ -121,9 +119,7 @@ def prefix_jaccard_pairs(
     # and every bound is exact integer arithmetic from here on
     frac = Fraction(str(threshold))
     tp, tq = frac.numerator, frac.denominator
-    from unitdb_spark.operators.dedup import _persist_sig
-
-    t = _persist_sig(_token_sets(df, text_col, id_col, unit, shingle_n), persist)
+    t = _token_sets(df, text_col, id_col, unit, shingle_n).cache()
 
     # global document frequency per token — the ordering dictionary.
     # One partial-agg shuffle on token; at 100 TB this relation is
@@ -157,11 +153,8 @@ def prefix_jaccard_pairs(
     # that rank once; ABBA-measured at sf0.1/32c with cache cleared
     # per rep: quiet-cluster 8.1-8.9s -> 7.2-7.5s (~12%); at scale
     # the saved work is a full Sort+Window of the token-position
-    # relation. Same storage-level knob as the token-set persist;
-    # "none" keeps the recompute-per-use behavior for callers
-    # managing storage.
-    if persist != "none":
-        pre = _persist_sig(pre, persist)
+    # relation.
+    pre = pre.cache()
 
     # candidates: share any prefix token + the length filter
     # (|y| >= t*|x| is necessary for J >= t): q*|y| >= p*|x|.

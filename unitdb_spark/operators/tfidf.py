@@ -37,7 +37,6 @@ def tfidf_top_terms(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_df: int = 1,
-    reuse_tf: bool = False,
 ) -> DataFrame:
     """Top-``k`` terms per document by smooth TF-IDF.
 
@@ -49,14 +48,7 @@ def tfidf_top_terms(
     the corpus is tokenized twice (embarrassingly parallel map work;
     the skew-safe alternative — df as a window count over term — puts
     every occurrence of a stopword in ONE task, which is exactly the
-    partition that explodes at corpus scale). ``reuse_tf=True``
-    persists the tf aggregate instead, trading executor storage for
-    the second scan — the right call on a cluster where the corpus
-    read dominates; leave False when inputs are small or memory-tight.
-    The persist is pinned for the session (Spark offers no
-    plan-scoped lifetime); long-lived jobs calling this repeatedly
-    should release it via ``spark.catalog.clearCache()`` (or track
-    ``df.persist`` handles themselves) once the result is consumed.
+    partition that explodes at corpus scale).
 
     Output: (doc_id, term, tf, df, score, rank), rank 1..k.
     """
@@ -65,10 +57,6 @@ def tfidf_top_terms(
         .groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    if reuse_tf:
-        from pyspark import StorageLevel
-
-        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
     df_counts = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if min_df > 1:
         df_counts = df_counts.filter(F.col("df") >= min_df)

@@ -11,6 +11,7 @@ Contracts   (db_test.go:55): isolation between tenants.
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 
 import pytest
 
@@ -18,6 +19,71 @@ from unitdb_spark.core.model import MASTER_CONTRACT, Entry, Query
 from unitdb_spark.engine import Engine, ImmutableError
 
 T0 = 1_700_000_000.0  # fixed test clock base
+
+
+def _parquet_files(root: str) -> list[str]:
+    """The Parquet files on disk under ``root``, committed or not."""
+    from pathlib import Path
+
+    return sorted(str(p) for p in Path(root).rglob("*.parquet"))
+
+
+def _log_entries(table) -> list[dict]:
+    """Every version of a table's log, in order."""
+    import json
+
+    from unitdb_spark import fs
+
+    return [json.loads(fs.read_text(table.spark, table._log_file(v))) for v in range(table.version + 1)]
+
+
+def _before_commits(monkeypatch, actions: list) -> list[bool]:
+    """Run ``actions[i]`` just before the i-th log commit that follows
+    (another writer's commit landing first); returns the result of every
+    commit, the actions' own included, in the order they finish."""
+    from unitdb_spark import fs
+
+    real, results, pending = fs.create_atomic, [], list(actions)
+
+    def commit(*args, **kwargs):
+        if pending:
+            pending.pop(0)()
+        results.append(real(*args, **kwargs))
+        return results[-1]
+
+    monkeypatch.setattr(fs, "create_atomic", commit)
+    return results
+
+
+def _crash_fs_at(monkeypatch, k: int) -> tuple[list[str], list[int], Callable[[], None]]:
+    """Make the (k+1)-th call of any public ``unitdb_spark.fs`` function
+    raise instead of running. Returns the names called, a list that
+    grows when a ``create_atomic`` succeeds, and the undo."""
+    import inspect
+
+    from unitdb_spark import fs
+
+    real = {
+        n: f for n, f in inspect.getmembers(fs, inspect.isfunction)
+        if f.__module__ == fs.__name__ and not n.startswith("_")
+    }
+    calls, committed = [], []
+
+    def faulty(name):
+        def call(*args, **kwargs):
+            calls.append(name)
+            if len(calls) == k + 1:
+                raise RuntimeError(f"crash at {name} #{k}")
+            out = real[name](*args, **kwargs)
+            if name == "create_atomic" and out:
+                committed.append(k)
+            return out
+
+        return call
+
+    for name in real:
+        monkeypatch.setattr(fs, name, faulty(name))
+    return calls, committed, lambda: [monkeypatch.setattr(fs, n, f) for n, f in real.items()]
 
 
 class TestSimple:
@@ -216,7 +282,7 @@ class TestGetPredicate:
         for i in range(3):
             engine.put_entry(Entry("d.t", b"%d" % i), ts=T0 + i)
         fs.write_text(spark, f"{engine.tombstones_path}/_SUCCESS", "")
-        assert engine._tombstones_df() is None
+        assert engine.table.read_tombstones() is None
         assert engine.get("d.t", now=T0 + 10) == [b"2", b"1", b"0"]
         assert engine.count(now=T0 + 10) == 3
 
@@ -287,17 +353,15 @@ class TestExpiry:
     def test_purge_rewrites_only_partitions_with_expired_rows(self, engine: Engine, spark):
         """A partition left with no live row is dropped; a partition
         with nothing expired keeps its files untouched."""
-        from unitdb_spark.engine import _data_files, _partitions
-
         engine.put_entry(Entry("e.t", b"dead", ttl="1s"), ts=T0)
         engine.put_entry(Entry("e.t", b"live"), ts=T0 + 90_000)
         engine.flush()
-        root = engine.table.path
-        dead_part, live_part = sorted(_partitions(spark, root))
-        live_files = _data_files(spark, f"{root}/{live_part}")
+        dead_part, live_part = sorted(engine.table.partitions())
+        live_files = engine.table.partitions()[live_part]
         engine.purge_expired(now=T0 + 100_000)
-        assert list(_partitions(spark, root)) == [live_part]
-        assert _data_files(spark, f"{root}/{live_part}") == live_files
+        assert engine.table.partitions() == {live_part: live_files}
+        dead_dir = f"{engine.table.path}/{dead_part}"
+        assert _parquet_files(dead_dir) == []  # dropped files are deleted
         assert engine.get("e.t", now=T0 + 100_000) == [b"live"]
 
     def test_purge_crash_between_renames_loses_nothing(self, spark, tmp_path, monkeypatch):
@@ -311,11 +375,15 @@ class TestExpiry:
         eng = Engine.open(spark, path)
         eng.put_entry(Entry("e.t", b"dead", ttl="1s"), ts=T0)
         seqs = [eng.put_entry(Entry("e.t", b"live%d" % i), ts=T0 + i) for i in range(3)]
+        # a second partition with an expired row: purge rewrites two
+        # partitions, one rename each
+        eng.put_entry(Entry("e.t", b"dead-next-day", ttl="1s"), ts=T0 + 90_000)
+        seqs.append(eng.put_entry(Entry("e.t", b"next-day"), ts=T0 + 90_001))
         eng.flush()
         eng.delete(seqs[0])
-        now = T0 + 100
+        now = T0 + 100_000
         before = eng.get("e.t", now=now)
-        assert before == [b"live2", b"live1"]
+        assert before == [b"next-day", b"live2", b"live1"]
 
         real_rename = fs.rename
         done = []
@@ -592,7 +660,6 @@ class TestVacuum:
     def test_vacuum_applies_tombstones_physically_and_retires_them(
         self, spark, tmp_path
     ):
-        from unitdb_spark import fs
         from unitdb_spark.engine import Engine
 
         eng = Engine.open(spark, str(tmp_path / "vac"))
@@ -609,9 +676,9 @@ class TestVacuum:
             assert len(before) == 3  # tombstones already applied at read
             report = eng.vacuum()
             assert sum(report.values()) == 2 and len(report) == 2
-            # tombstone set retired; reads unchanged; lease released
-            assert not fs.has_files(spark, eng.tombstones_path)
-            assert not fs.exists(spark, eng.table.lease_path)
+            # tombstone set retired (and its files deleted); reads unchanged
+            assert eng.table.tombstones == set()
+            assert _parquet_files(eng.tombstones_path) == []
             assert eng.get("v.t", now=T0 + 100_000) == before
             # rows are PHYSICALLY gone (raw read, no anti-join)
             raw = {r["seq"] for r in eng.table.read().select("seq").collect()}
@@ -628,7 +695,6 @@ class TestVacuum:
         """A tombstone for a seq no partition holds (deleted before
         flush, or double-deleted after a previous vacuum) must retire
         without rewriting anything."""
-        from unitdb_spark import fs
         from unitdb_spark.engine import Engine
 
         eng = Engine.open(spark, str(tmp_path / "vac2"))
@@ -637,7 +703,8 @@ class TestVacuum:
             eng.flush()
             eng.delete(10_000_000)  # matches nothing
             assert eng.vacuum() == {}
-            assert not fs.has_files(spark, eng.tombstones_path)
+            assert eng.table.tombstones == set()
+            assert _parquet_files(eng.tombstones_path) == []
             assert eng.get("v.t", now=T0 + 10) == [b"keep"]
         finally:
             eng.destroy()
@@ -672,88 +739,202 @@ class TestGetResultCap:
             eng.destroy()
 
 
-class TestCompactSafety:
-    def test_append_refuses_while_lease_held(self, spark, tmp_path):
-        """Single-writer guard: any append (flush / put_df / streaming
-        foreachBatch — all route through MessagesTable.append) refuses
-        loudly while a compaction lease is held, instead of racing the
-        partition swap and losing the new file to the trash delete."""
-        import pytest as _pytest
+class TestCommitVisibility:
+    """A write's files are on disk before the version that names them
+    exists, and no reader sees them until it does."""
 
-        from unitdb_spark import fs
-        from unitdb_spark.engine import Engine
+    def test_get_between_placement_and_commit_sees_old_answer(self, spark, tmp_path, monkeypatch):
+        path = str(tmp_path / "vis")
+        writer = Engine.open(spark, path)
+        writer.put_entry(Entry("v.t", b"old"), ts=T0)
+        writer.flush()
+        reader = Engine(spark, path)
+        seen = []
 
-        eng = Engine.open(spark, str(tmp_path / "leased"))
-        try:
-            eng.put_entry(Entry("a.b", b"before"), ts=T0)
-            eng.flush()
-            fs.write_text(spark, eng.table.lease_path, "")
-            eng.put_entry(Entry("a.b", b"blocked"), ts=T0 + 1)
-            with _pytest.raises(RuntimeError, match="compact"):
-                eng.flush()
-            fs.delete(spark, eng.table.lease_path)
-            eng.flush()  # lease released -> append proceeds
-            assert eng.get("a.b", now=T0 + 10) == [b"blocked", b"before"]
-        finally:
-            fs.delete(spark, eng.table.lease_path)
-            eng.destroy()
+        def get_first():
+            on_disk = len(_parquet_files(writer.table.path))
+            seen.append((on_disk > len(writer.table.files), reader.get("v.t", now=T0 + 10)))
 
-    def test_compact_raises_when_lease_already_held(self, spark, tmp_path):
-        from unitdb_spark import fs
-        from unitdb_spark.engine import Engine
+        _before_commits(monkeypatch, [get_first])
+        writer.put_entry(Entry("v.t", b"new"), ts=T0 + 1)
+        writer.flush()
+        assert seen == [(True, [b"old"])]
+        assert reader.get("v.t", now=T0 + 10) == [b"new", b"old"]
 
-        import pytest as _pytest
+    def test_batch_puts_and_deletes_become_visible_together(self, spark, tmp_path, monkeypatch):
+        path = str(tmp_path / "visbatch")
+        writer = Engine.open(spark, path)
+        first = writer.put_entry(Entry("v.t", b"a"), ts=T0)
+        writer.put_entry(Entry("v.t", b"b"), ts=T0 + 1)
+        writer.flush()
+        reader = Engine(spark, path)
+        seen = []
+        _before_commits(monkeypatch, [lambda: seen.append(reader.get("v.t", now=T0 + 10))])
+        with writer.batch() as b:
+            b.put_entry(Entry("v.t", b"c"), ts=T0 + 2)
+            b.delete(first)
+        assert seen == [[b"b", b"a"]]
+        assert reader.get("v.t", now=T0 + 10) == [b"c", b"b"]
 
-        eng = Engine.open(spark, str(tmp_path / "held"))
-        try:
-            for i in range(5):
-                eng.put_entry(Entry("h.t", b"m%d" % i), ts=T0 + i)
-                eng.flush()
-            fs.write_text(spark, eng.table.lease_path, "")
-            with _pytest.raises(RuntimeError, match="lease"):
-                eng.compact(min_files=4)
-        finally:
-            fs.delete(spark, eng.table.lease_path)
-            eng.destroy()
 
-    def test_recovery_restores_trash_when_stage_incomplete(self, spark, tmp_path):
-        """Crash during the stage write (no _SUCCESS): the original
-        partition must come back from trash, the partial stage dropped."""
-        from unitdb_spark import fs
-        from unitdb_spark.engine import Engine
+class TestTwoWriters:
+    """Two Engines on one path race for log versions: exactly one commit
+    wins each version, and every row survives."""
 
-        path = str(tmp_path / "crashearly")
+    @staticmethod
+    def _fragmented(spark, path) -> Engine:
         eng = Engine.open(spark, path)
-        eng.put_entry(Entry("r.t", b"keep"), ts=T0)
-        eng.flush()
-        root = eng.table.path
-        part = next(
-            f"{c}/{d}"
-            for c, _, cd in fs.list_status(spark, root)
-            if cd and c.startswith("contract=")
-            for d, _, dd in fs.list_status(spark, f"{root}/{c}")
-            if dd and d.startswith("p_date=")
-        )
-        ppath = f"{root}/{part}"
-        stage = f"{path}/.compact-part/stage/{part}"
-        fs.mkdirs(spark, stage)
-        fs.write_text(spark, f"{stage}/part-torn.parquet", "not a rewrite")
-        trash = f"{path}/.compact-part/trash/{part}"
-        fs.mkdirs(spark, str(__import__("pathlib").Path(trash).parent))
-        fs.rename(spark, ppath, trash)
-        spark.catalog.refreshByPath(root)
+        for i in range(5):
+            eng.put_entry(Entry("w.t", b"m%d" % i), ts=T0 + i)
+            eng.flush()
+        return eng
+
+    def test_flush_between_compaction_read_and_commit_survives(self, spark, tmp_path, monkeypatch):
+        path = str(tmp_path / "flushrace")
+        a = self._fragmented(spark, path)
+        b = Engine(spark, path)
+        start = a.table.version
+
+        def flush_b():
+            b.put_entry(Entry("w.t", b"late"), ts=T0 + 10)  # same partition
+            b.flush()
+
+        results = _before_commits(monkeypatch, [flush_b])
+        report = a.compact(min_files=4)
+        # b's flush won version start+1; a lost it, read it, and since
+        # the files a read were all still committed, won start+2
+        assert results == [True, False, True]
+        assert list(report.values()) == [(5, 1)]
+        log = _log_entries(a.table)
+        assert len(log) == start + 3
+        assert len(log[start + 1]["add"]) == 1 and "remove" not in log[start + 1]
+        assert len(log[start + 2]["remove"]) == 5
+        want = [b"late"] + [b"m%d" % i for i in reversed(range(5))]
+        assert a.get("w.t", now=T0 + 100) == want
+        assert Engine(spark, path).get("w.t", now=T0 + 100) == want
+        assert len(a.table.files) == 2
+
+    def test_racing_compactions_one_wins(self, spark, tmp_path, monkeypatch):
+        path = str(tmp_path / "compactrace")
+        a = self._fragmented(spark, path)
+        b = Engine(spark, path)
+        start = a.table.version
+        reports = []
+        results = _before_commits(monkeypatch, [lambda: reports.append(b.compact(min_files=4))])
+        reports.append(a.compact(min_files=4))
+        # b won start+1; a lost it and skips the partition, whose files
+        # b's version dropped
+        assert results == [True, False]
+        assert [list(r.values()) for r in reports] == [[(5, 1)], []]
+        assert len(_log_entries(a.table)) == start + 2
+        want = [b"m%d" % i for i in reversed(range(5))]
         reopened = Engine(spark, path)
-        assert reopened.get("r.t", now=T0 + 10) == [b"keep"]
-        assert not fs.exists(spark, stage)
-        reopened.destroy()
+        assert reopened.get("w.t", now=T0 + 100) == want
+        raw = [r["seq"] for r in reopened.table.read().select("seq").collect()]
+        assert len(raw) == len(set(raw)) == 5
+        # a deleted the files it wrote for nothing
+        assert len(_parquet_files(a.table.path)) == len(reopened.table.files) == 1
 
 
-class TestMaintenanceCrashPoints:
-    """Crash compact, vacuum and purge_expired at each fs.rename /
-    fs.delete call they make (the call raises instead of running),
-    reopen the store, and compare it with the state before the job:
-    the same live rows, no duplicate seq, nothing left under
-    ``.compact-part/``, and a seq counter above every stored seq."""
+class TestLogConversion:
+    """A store written before the log existed converts on open."""
+
+    @staticmethod
+    def _old_store(spark, tmp_path) -> tuple[str, list[bytes], int]:
+        """Plain partitioned Parquet and a tombstone directory, as the
+        directory-layout engine left them, with file names repeated
+        across partitions; returns (path, live payloads, max seq)."""
+        src = Engine.open(spark, str(tmp_path / "src"))
+        seqs = [src.put_entry(Entry("o.t", b"p%d" % i), ts=T0 + i * 40_000) for i in range(6)]
+        src.flush()
+        src.delete(seqs[2])
+        live = src.get("o.t", now=T0 + 300_000)
+        path = str(tmp_path / "old")
+        src.table.read().repartition(2).write.partitionBy("contract", "p_date").parquet(
+            f"{path}/messages"
+        )
+        src.table.read_tombstones().write.parquet(f"{path}/tombstones")
+        return path, live, max(seqs)
+
+    def test_store_without_log_gets_version_zero(self, spark, tmp_path):
+        path, live, top = self._old_store(spark, tmp_path)
+        names = [p.rsplit("/", 1)[-1] for p in _parquet_files(f"{path}/messages")]
+        assert len(names) > len(set(names))  # one write repeats names
+        eng = Engine(spark, path)
+        assert eng.table.version == 0
+        assert eng.get("o.t", now=T0 + 300_000) == live
+        assert len(eng.table.tombstones) == 1
+        names = [p.rsplit("/", 1)[-1] for p in _parquet_files(f"{path}/messages")]
+        assert len(names) == len(set(names)) == len(eng.table.files)
+        assert eng.put_entry(Entry("o.t", b"next"), ts=T0) > top
+        eng.flush()
+        assert Engine(spark, path).table.version == 1  # read, not converted again
+
+    def test_crash_at_every_fs_call_converts_again(self, spark, tmp_path, monkeypatch):
+        """A conversion cut at any fs call leaves a store the next open
+        converts whole: the same live rows, no duplicate seq."""
+        import shutil
+
+        base, live, top = self._old_store(spark, tmp_path)
+        for k in range(100):
+            path = str(tmp_path / f"k{k}")
+            shutil.copytree(base, path)
+            _, _, undo = _crash_fs_at(monkeypatch, k)
+            try:
+                Engine(spark, path)
+                crashed = False
+            except RuntimeError as e:
+                assert str(e).startswith("crash at"), e
+                crashed = True
+            finally:
+                undo()
+            eng = Engine(spark, path)
+            assert eng.table.version == 0, f"crash at call {k}"
+            assert eng.get("o.t", now=T0 + 300_000) == live, f"crash at call {k}"
+            raw = [r["seq"] for r in eng.table.read().select("seq").collect()]
+            assert len(raw) == len(set(raw)) and max(raw) == top, f"crash at call {k}"
+            if not crashed:
+                break
+        else:
+            pytest.fail("the conversion never finished without reaching the crash point")
+        assert k >= 5  # at least: read version 0, list three times, rename, commit
+
+    def test_leftover_partition_swap_raises(self, spark, tmp_path):
+        from unitdb_spark import fs
+
+        path, _, _ = self._old_store(spark, tmp_path)
+        fs.mkdirs(spark, f"{path}/.compact-part/stage/contract=1/p_date=2023-11-14")
+        with pytest.raises(RuntimeError, match=r"\.compact-part"):
+            Engine(spark, path)
+        assert not fs.exists(spark, f"{path}/messages/_log")
+
+
+def _put_df(e: Engine) -> None:
+    import datetime as dt
+
+    from unitdb_spark.table import MESSAGES_SCHEMA
+
+    rows = [
+        (10_000 + i, None, MASTER_CONTRACT, "k.t", dt.datetime(2023, 11, 14 + i), None, b"bulk%d" % i, False)
+        for i in range(3)
+    ]
+    e.put_df(e.spark.createDataFrame(rows, MESSAGES_SCHEMA))
+
+
+def _batch(e: Engine, live: list[int]) -> None:
+    with e.batch() as b:
+        b.put_entry(Entry("k.t", b"batched"), ts=T0 + 7)
+        b.put_entry(Entry("k.t", b"batched-next-day"), ts=T0 + 90_007)
+        b.delete(live[0])
+
+
+class TestCrashPoints:
+    """Make fs call k raise, for every k, along each write path; reopen
+    the store after each crash and compare its live seqs with a model of
+    the acknowledged writes. The write is atomic: the store holds the
+    rows before it, or once its version was created, the rows after it.
+    So no row is lost, duplicated or resurrected; and the reopened seq
+    counter is above every stored seq."""
 
     NOW = T0 + 200_000
 
@@ -782,60 +963,55 @@ class TestMaintenanceCrashPoints:
         df = eng.get_df(Query("...", limit=1000), now=now)
         return sorted(r["seq"] for r in df.select("seq").collect())
 
-    @pytest.mark.parametrize(
-        "op",
-        [
-            lambda e: e.compact(min_files=4),
-            lambda e: e.vacuum(),
-            lambda e: e.purge_expired(now=TestMaintenanceCrashPoints.NOW),
-        ],
-        ids=["compact", "vacuum", "purge_expired"],
-    )
-    def test_crash_at_every_rename_and_delete(self, spark, base_store, tmp_path, monkeypatch, op):
+    OPS = {
+        "flush": lambda e, live: (
+            e.put_entry(Entry("k.t", b"f0"), ts=T0 + 5),
+            e.put_entry(Entry("k.t", b"f1"), ts=T0 + 90_005),
+            e.flush(),
+        ),
+        "put_df": lambda e, live: _put_df(e),
+        "batch": _batch,
+        "delete": lambda e, live: e.delete(live[-1]),
+        "compact": lambda e, live: e.compact(min_files=4),
+        "vacuum": lambda e, live: e.vacuum(),
+        "purge_expired": lambda e, live: e.purge_expired(now=TestCrashPoints.NOW),
+    }
+
+    @pytest.mark.parametrize("op", list(OPS))
+    def test_crash_at_every_fs_call(self, spark, base_store, tmp_path, monkeypatch, op):
         import shutil
 
-        from unitdb_spark import fs
-
-        real = {"rename": fs.rename, "delete": fs.delete}
-        want = self._live_seqs(Engine(spark, base_store), self.NOW)
-        for k in range(50):
+        run = self.OPS[op]
+        before = self._live_seqs(Engine(spark, base_store), self.NOW)
+        after_path = str(tmp_path / "after")
+        shutil.copytree(base_store, after_path)
+        run(Engine(spark, after_path), before)
+        after = self._live_seqs(Engine(spark, after_path), self.NOW)
+        for k in range(100):
             path = str(tmp_path / f"k{k}")
             shutil.copytree(base_store, path)
             eng = Engine(spark, path)
-            calls = []
-
-            def faulty(name):
-                def call(*args, **kwargs):
-                    calls.append(name)
-                    if len(calls) == k + 1:
-                        raise RuntimeError(f"crash at {name} #{k}")
-                    return real[name](*args, **kwargs)
-
-                return call
-
-            for name in real:
-                monkeypatch.setattr(fs, name, faulty(name))
+            calls, committed, undo = _crash_fs_at(monkeypatch, k)
             try:
-                op(eng)
+                run(eng, before)
                 crashed = False
             except RuntimeError as e:
                 assert str(e).startswith("crash at"), e
                 crashed = True
             finally:
-                for name, fn in real.items():
-                    monkeypatch.setattr(fs, name, fn)
+                undo()
 
             reopened = Engine(spark, path)
-            assert self._live_seqs(reopened, self.NOW) == want, f"crash at call {k}"
+            want = after if committed else before
+            assert self._live_seqs(reopened, self.NOW) == want, f"crash at call {k}: {calls[-1]}"
             raw = [r["seq"] for r in reopened.table.read().select("seq").collect()]
             assert len(raw) == len(set(raw)), f"duplicate rows after crash at call {k}"
-            assert not fs.has_files(spark, f"{path}/.compact-part", ""), k
             assert reopened.put_entry(Entry("k.t", b"new"), ts=self.NOW) > max(raw)
             if not crashed:
                 break
         else:
-            pytest.fail("the job never finished without reaching the crash point")
-        assert k >= 5  # at least the swap's two deletes, two renames and trash drop
+            pytest.fail("the write never finished without reaching the crash point")
+        assert k >= 3  # at least: list the stage, move a file, drop the stage, commit
 
 
 class TestCompactMixedGenerations:
@@ -888,88 +1064,56 @@ class TestVacuumConcurrency:
     def test_tombstone_appended_after_snapshot_survives(
         self, spark, tmp_path, monkeypatch
     ):
-        """A delete() landing between vacuum's tombstone snapshot and
-        the retire step must NOT be discarded (that would silently
-        un-delete the row); it stays live for the next vacuum run."""
-        from unitdb_spark import fs
-        from unitdb_spark import engine as eng_mod
-        from unitdb_spark.engine import Engine
+        """A delete() committed by another writer between vacuum's
+        tombstone read and its commit must NOT be retired (that would
+        silently un-delete the row); it stays live for the next run."""
+        path = str(tmp_path / "vacc")
+        eng = Engine.open(spark, path)
+        seqs = [eng.put_entry(Entry("v.t", b"d%d" % i), ts=T0 + i) for i in range(3)]
+        eng.flush()
+        eng.delete(seqs[0])
+        other = Engine(spark, path)
 
-        eng = Engine.open(spark, str(tmp_path / "vacc"))
-        try:
-            seqs = [eng.put_entry(Entry("v.t", b"d%d" % i), ts=T0 + i) for i in range(3)]
-            eng.flush()
-            eng.delete(seqs[0])
-
-            real_ls = eng_mod.fs.list_status
-            fired = {}
-
-            def racing_ls(sp, path):
-                res = real_ls(sp, path)
-                if path == eng.tombstones_path and "x" not in fired:
-                    fired["x"] = True
-                    eng.delete(seqs[1])  # lands AFTER the snapshot
-                return res
-
-            monkeypatch.setattr(eng_mod.fs, "list_status", racing_ls)
-            report = eng.vacuum()
-            monkeypatch.setattr(eng_mod.fs, "list_status", real_ls)
-
-            assert sum(report.values()) == 1  # only the snapshotted seq applied
-            # the concurrent tombstone survived the retire step...
-            assert fs.has_files(spark, eng.tombstones_path)
-            # ...so the row stays hidden from reads
-            assert len(eng.get("v.t", now=T0 + 100)) == 1
-            # and the NEXT vacuum applies it physically
-            report2 = eng.vacuum()
-            assert sum(report2.values()) == 1
-            assert not fs.has_files(spark, eng.tombstones_path)
-            raw = {r["seq"] for r in eng.table.read().select("seq").collect()}
-            assert raw == {seqs[2]}
-        finally:
-            eng.destroy()
+        results = _before_commits(monkeypatch, [lambda: other.delete(seqs[1])])
+        report = eng.vacuum()
+        assert results == [True, False, True]  # vacuum lost a version, then won
+        assert sum(report.values()) == 1  # only the tombstone it read applied
+        # the concurrent tombstone survived the retire step...
+        assert len(eng.table.tombstones) == len(_parquet_files(eng.tombstones_path)) == 1
+        # ...so the row stays hidden from reads
+        assert len(eng.get("v.t", now=T0 + 100)) == 1
+        # and the NEXT vacuum applies it physically
+        report2 = eng.vacuum()
+        assert sum(report2.values()) == 1
+        assert eng.table.tombstones == set()
+        raw = {r["seq"] for r in eng.table.read().select("seq").collect()}
+        assert raw == {seqs[2]}
 
     def test_skipped_partition_keeps_snapshot_tombstones(
         self, spark, tmp_path, monkeypatch
     ):
-        """A writer that ignores the lease lands a file in the partition
-        vacuum is rewriting, so the pre-swap re-check skips it. The
-        snapshotted tombstones must then stay: retiring them would
+        """Another writer compacts the partition vacuum is rewriting and
+        commits first, dropping the files vacuum read, so vacuum skips
+        it. The tombstones it read must then stay: retiring them would
         bring the skipped partition's deleted row back."""
-        from unitdb_spark import fs
-        from unitdb_spark import engine as eng_mod
-        from unitdb_spark.engine import Engine
-
-        eng = Engine.open(spark, str(tmp_path / "vacskip"))
-        try:
-            seqs = [eng.put_entry(Entry("v.t", b"d%d" % i), ts=T0 + i) for i in range(3)]
+        path = str(tmp_path / "vacskip")
+        eng = Engine.open(spark, path)
+        seqs = []
+        for i in range(3):
+            seqs.append(eng.put_entry(Entry("v.t", b"d%d" % i), ts=T0 + i))
             eng.flush()
-            eng.delete(seqs[0])
+        eng.delete(seqs[0])
+        other = Engine(spark, path)
 
-            real_ls = eng_mod.fs.list_status
-            fired = {}
-
-            def racing_ls(sp, path):
-                res = real_ls(sp, path)
-                if path.startswith(eng.table.path + "/") and "p_date=" in path and "x" not in fired:
-                    fired["x"] = True
-                    fs.delete(spark, eng.table.lease_path)
-                    eng.put_entry(Entry("v.t", b"late"), ts=T0 + 5)
-                    eng.flush()
-                    fs.create_new(spark, eng.table.lease_path)
-                return res
-
-            monkeypatch.setattr(eng_mod.fs, "list_status", racing_ls)
-            report = eng.vacuum()
-            monkeypatch.setattr(eng_mod.fs, "list_status", real_ls)
-
-            assert fired and report == {}  # the only affected partition was skipped
-            assert fs.has_files(spark, eng.tombstones_path)
-            assert not fs.exists(spark, eng.table.lease_path)
-            assert eng.get("v.t", now=T0 + 100) == [b"late", b"d2", b"d1"]
-            # the next run applies the kept tombstone
-            assert sum(eng.vacuum().values()) == 1
-            assert not fs.has_files(spark, eng.tombstones_path)
-            assert eng.get("v.t", now=T0 + 100) == [b"late", b"d2", b"d1"]
-        finally:
-            eng.destroy()
+        results = _before_commits(monkeypatch, [lambda: other.compact(min_files=2)])
+        report = eng.vacuum()
+        # the compaction won; vacuum skipped its only partition and had
+        # nothing left to commit
+        assert results == [True, False]
+        assert report == {}
+        assert len(eng.table.tombstones) == 1
+        assert eng.get("v.t", now=T0 + 100) == [b"d2", b"d1"]
+        # the next run applies the kept tombstone
+        assert sum(eng.vacuum().values()) == 1
+        assert eng.table.tombstones == set()
+        assert eng.get("v.t", now=T0 + 100) == [b"d2", b"d1"]

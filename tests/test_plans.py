@@ -1627,7 +1627,7 @@ class TestBucketedEdgeTable:
             want = {
                 r.node: r.pr_r
                 for r in pagerank(
-                    e.unionAll(e).distinct(),  # same edges, no bucketing
+                    e.repartition(3),  # same edges, round-robin layout
                     iterations=2,
                     persist="memory",
                 ).collect()

@@ -870,7 +870,7 @@ class TestCompactWithStreaming:
     ):
         """The real compaction lifecycle: streaming ingest fragments
         partitions (one file per micro-batch), compact() bin-packs them
-        under its lease, a later ingest run appends more — no rows
+        and commits one log version, a later append adds more — no rows
         lost, no duplicates, queries unchanged."""
         from unitdb_spark import fs
         from unitdb_spark.engine import Engine
@@ -884,13 +884,12 @@ class TestCompactWithStreaming:
         before = eng.count(now=0)  # TTL clock before any expiry
         report = eng.compact(min_files=2, target_file_bytes=256 << 20)
         assert report, "micro-batch appends should leave compactable partitions"
-        assert not fs.exists(spark, eng.table.lease_path)  # released
         assert eng.count(now=0) == before
-        # post-compact ingest still works (lease released) and lands
+        # a post-compact append still lands
         eng.put(b"post.compact".decode(), b"tail")
         eng.flush()
         assert eng.count(now=0) == before + 1
-        # recovery dir left no debris inside the table
+        # nothing but partitions and the log's own directories
         names = [n for n, _, _ in fs.list_status(spark, table)]
         assert all(n.startswith("contract=") or n.startswith("_") for n in names)
 

@@ -6,14 +6,17 @@ batch.go:60-293) onto DataFrame operations:
 - ``Open``   -> Engine.open (SparkSession + table path)
 - ``Put/PutEntry`` -> buffered driver-side rows, flushed as one atomic
   Parquet append (the tiny-log 100 ms group commit collapses into the
-  flush — memdb/tiny_log.go:202-301)
+  flush — memdb/tiny_log.go:202-301): atomic, as every write commits
+  at one point like unitdb's WAL sync (db_sync.go), a create-if-absent
+  version of the messages table's log (``MessagesTable``)
 - ``Get``    -> one declarative DataFrame expression: contract filter →
   topic match → trailing-window cutoff → TTL filter → tombstone
   anti-join → newest-first top-K (db.go:222-319)
-- ``Delete/DeleteEntry`` -> tombstone table + read-time anti-join
+- ``Delete/DeleteEntry`` -> tombstone file + read-time anti-join
   (db.go:389-425); forbidden when immutable (options.go:102-119)
-- ``Batch``  -> context manager; commit = single append, abort = drop
-  buffer (batch.go:60-293)
+- ``Batch``  -> context manager; commit = one log version holding the
+  batch's data and tombstone files, abort = drop buffer
+  (batch.go:60-293)
 - ``Count``  -> live-entry count (db.go:474-482)
 
 Scale notes (100 TB): every Get compiles to a single Catalyst plan. It
@@ -33,14 +36,12 @@ import datetime as dt
 import math
 import time
 from collections import deque
-from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from unitdb_spark import fs
 
@@ -86,14 +87,8 @@ def _capped_fetch(
         yield r, p
 
 
-#: the tombstone table: one column, the deleted seq
-TOMBSTONE_SCHEMA = "seq long"
-
 #: sentinel distinguishing "not passed" from an explicit None (= no cap)
 _UNSET = object()
-
-#: a table lease older than this is presumed held by a crashed job
-LEASE_TTL_S = 3600
 
 
 @dataclass
@@ -127,7 +122,7 @@ class Engine:
         self.path = str(path)
         self.options = options or EngineOptions()
         self.table = MessagesTable(spark, str(Path(self.path) / "messages"))
-        self.tombstones_path = str(Path(self.path) / "tombstones")
+        self.tombstones_path = self.table.tombstones_path
         self._seq = _SeqSource()
         self._buffer: list[Row] = []
         self._metrics: dict[str, int] = {"puts": 0, "gets": 0, "dels": 0}
@@ -135,16 +130,9 @@ class Engine:
         self._latencies: dict[str, deque] = {
             op: deque(maxlen=50) for op in ("get", "put", "del")
         }
-        # finish any crashed partition swap BEFORE first read: a crash
-        # between its renames leaves a partition absent from the table
-        self._recover_compact()
-        # break a lease whose holder crashed past the TTL (else appends
-        # would refuse until someone re-runs a maintenance job)
-        if self._lease_stale():
-            fs.delete(self.spark, self.table.lease_path)
-        if self.table.exists():
-            top = self.table.read().agg(F.max("seq")).collect()[0][0]
-            self._seq.advance_to(int(top or 0))
+        # every version records the store's max seq: no job at open
+        self.table.refresh()
+        self._seq.advance_to(self.table.max_seq)
 
     # ------------------------------------------------------------- open
     @classmethod
@@ -223,8 +211,8 @@ class Engine:
         """Bulk ingest path: append a DataFrame already in messages
         schema (seq, msg_id?, contract, topic, ts, expires_at, payload).
         This is the 100 TB path — no driver-side rows. The max(seq) the
-        seq counter needs is captured via observe() DURING the write —
-        a separate agg would re-execute the caller's whole input plan."""
+        seq counter needs is observed during the write
+        (``MessagesTable.append``)."""
         self.flush()
         cols = {c for c in df.columns}
         if "msg_id" not in cols:
@@ -233,27 +221,26 @@ class Engine:
             df = df.withColumn("expires_at", F.lit(None).cast("timestamp"))
         if "encrypted" not in cols:
             df = df.withColumn("encrypted", F.lit(self._encrypt_all))
-        obs = Observation("put_df_seq")
-        observed = df.select([f.name for f in MESSAGES_SCHEMA.fields]).observe(
-            obs, F.max("seq").alias("max_seq")
-        )
-        self._append(observed)
-        self._seq.advance_to(int(obs.get["max_seq"] or 0))
+        self._append(df.select([f.name for f in MESSAGES_SCHEMA.fields]))
 
     def flush(self) -> None:
         """Group commit (tiny-log writeLoop parity,
-        memdb/tiny_log.go:202-301): one atomic append per flush."""
+        memdb/tiny_log.go:202-301): one atomic append per flush. The
+        rows go to new files first and become visible together when
+        one log version names them."""
         if not self._buffer:
             return
         df = self.spark.createDataFrame(self._buffer, MESSAGES_SCHEMA)
-        self._append(df)
+        self._append(df, max(r.seq for r in self._buffer))
         self._buffer.clear()
 
-    def _append(self, df: DataFrame) -> None:
-        """One atomic append of encrypted rows: the commit unit of
-        flush, put_df and batch commit, timed into the put reservoir."""
+    def _append(self, df: DataFrame, max_seq: int | None = None, tombstones: list[str] = ()) -> None:
+        """One atomic append of encrypted rows (and a batch's tombstone
+        files), the commit unit of flush, put_df and batch commit, timed
+        into the put reservoir: one version of the table's log."""
         t0 = time.monotonic()
-        self.table.append(self._codec(df, F.aes_encrypt))
+        self.table.append(self._codec(df, F.aes_encrypt), max_seq, tombstones)
+        self._seq.advance_to(self.table.max_seq)
         self._latencies["put"].append(time.monotonic() - t0)
 
     def _codec(self, df: DataFrame, aes: Callable) -> DataFrame:
@@ -283,8 +270,8 @@ class Engine:
     def get_df(self, query: Query | str, now: float | None = None) -> DataFrame:
         """db.go:222-319 Get() as a single declarative plan; returns the
         full rows (callers project payload). Building it starts no Spark
-        job; its one filesystem call of its own is the tombstone check
-        (see ``_live_df``)."""
+        job; its one filesystem call is the log read that finds no new
+        version (see ``_live_df``)."""
         from unitdb_spark.operators.get import apply_get
 
         self._metrics["gets"] += 1
@@ -347,14 +334,13 @@ class Engine:
         return [[p for _, p in sorted(l, reverse=True)] for l in out]
 
     def _live_df(self) -> DataFrame:
-        """The stored rows minus tombstoned seqs, decrypted. The
-        messages table is read with no pre-check (a missing directory
-        reads as empty, see ``MessagesTable.read``); the tombstone dir
-        is checked for a data file first, and a missing or empty one
-        plans no anti-join."""
+        """The committed rows minus tombstoned seqs, decrypted. Both
+        come from one version of the log: reading the table reads any
+        new version, and a store with no tombstone file plans no
+        anti-join."""
         self.flush()
         df = self.table.read()
-        tombs = self._tombstones_df()
+        tombs = self.table.read_tombstones()
         if tombs is not None:
             # deletes are rare → broadcast anti-join, no shuffle of the big side
             df = df.join(F.broadcast(tombs), on="seq", how="left_anti")
@@ -362,33 +348,17 @@ class Engine:
 
     # ----------------------------------------------------------- delete
     def delete(self, seq: int) -> None:
-        """db.go:389-425 Delete(): tombstone by sequence."""
+        """db.go:389-425 Delete(): tombstone by sequence, as one
+        tombstone file committed as one log version."""
         if self.options.immutable:
             raise ImmutableError("delete forbidden: store is immutable")
-        self._write_tombstones([seq])
+        t0 = time.monotonic()
+        self._metrics["dels"] += 1
+        self.table.commit(add_tombstones=self.table.write_tombstones([seq]))
+        self._latencies["del"].append(time.monotonic() - t0)
 
     def delete_entry(self, entry: Entry) -> None:
         self.delete(_entry_seq(entry))
-
-    def _write_tombstones(self, seqs: list[int]) -> None:
-        """One append of tombstone rows (the delete and batch-commit
-        path), as ONE file: every Get lists and scans the tombstone dir.
-        repartition(1), not coalesce(1): coalesce pulls the input's
-        partitions through one task and made each write ~2x slower."""
-        t0 = time.monotonic()
-        self._metrics["dels"] += len(seqs)
-        self.spark.createDataFrame(
-            [(int(s),) for s in seqs], TOMBSTONE_SCHEMA
-        ).repartition(1).write.mode("append").parquet(self.tombstones_path)
-        self._latencies["del"].append(time.monotonic() - t0)
-
-    def _tombstones_df(self) -> DataFrame | None:
-        """The tombstone table, or None when it holds no file (then Get
-        plans no anti-join). The explicit schema matters: inferring it
-        runs one Spark job per read."""
-        if fs.has_files(self.spark, self.tombstones_path):
-            return self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(self.tombstones_path)
-        return None
 
     # ------------------------------------------------------------ batch
     def batch(self) -> "Batch":
@@ -440,102 +410,76 @@ class Engine:
     # ------------------------------------------------------ maintenance
     # compact, vacuum and purge_expired are unitdb's background reclaim
     # jobs (leasing.go, expiry_window.go). Each one only picks partitions
-    # and says how to rewrite one; the lease and the recoverable swap
-    # below are shared.
+    # and says how to rewrite one; ``_rewrite`` commits them.
 
-    def _lease_stale(self) -> bool:
-        """True unless a live maintenance job holds the table lease: the
-        lease file is absent, or older than ``LEASE_TTL_S`` (its holder
-        crashed)."""
-        m = fs.mtime(self.spark, self.table.lease_path)
-        return m is None or time.time() * 1000 - m >= LEASE_TTL_S * 1000
-
-    @contextmanager
-    def _maintenance(self):
-        """Flush, then hold the single-writer table lease (atomic
-        create-if-absent; a stale lease is broken) for the body, and
-        always release it. The flush comes first because appends refuse
-        while the lease is held — which is the point: no file can land
-        in a partition between a job's listing and its swap."""
-        self.flush()
-        lease = self.table.lease_path
-        if not fs.create_new(self.spark, lease):
-            if not self._lease_stale():
-                raise RuntimeError(
-                    f"another maintenance job holds the lease at {lease}; retry "
-                    f"after it finishes (or after the {LEASE_TTL_S}s lease TTL)"
-                )
-            fs.delete(self.spark, lease)  # stale: previous holder crashed
-            if not fs.create_new(self.spark, lease):
-                raise RuntimeError(f"lost the race re-acquiring the lease at {lease}")
-        try:
-            yield
-        finally:
-            fs.delete(self.spark, lease)
-
-    def _swap_partition(self, part: str, rewrite: Callable[[DataFrame], DataFrame]) -> bool:
-        """Replace partition dir ``part`` (``contract=<c>/p_date=<d>``)
-        with ``rewrite`` of its rows, or drop it when no row survives.
-        Caller holds ``_maintenance()``.
-
-        The rewrite is written to ``.compact-part/stage/<part>``; then
-        the partition is re-listed, and if its files changed since they
-        were read (a writer ignored the lease) the stage is dropped and
-        False returned with the partition untouched. Otherwise: rename
-        live → trash, stage → live, drop trash. Stage and trash sit
-        outside the table dir, where a leftover cannot parse as a
-        partition value. A crash at any step is finished or undone by
-        ``_recover_compact`` at the next open."""
-        ppath = f"{self.table.path}/{part}"
-        stage = f"{self._stage_root}/stage/{part}"
-        trash = f"{self._stage_root}/trash/{part}"
-        files = _data_files(self.spark, ppath)
-        fs.delete(self.spark, stage)  # debris of an earlier failed run
-        fs.delete(self.spark, trash)
-        kept = Observation()
-        rewrite(self.spark.read.schema(_DATA_SCHEMA).parquet(ppath)).observe(
-            kept, F.count(F.lit(1)).alias("rows")
-        ).write.parquet(stage)
-        if _data_files(self.spark, ppath) != files:
-            fs.delete(self.spark, stage)
-            return False
-        fs.mkdirs(self.spark, str(Path(trash).parent))
-        _rename(self.spark, ppath, trash)
-        if kept.get["rows"]:
-            _rename(self.spark, stage, ppath)
-        else:
-            fs.delete(self.spark, stage)
-        fs.delete(self.spark, trash)
-        return True
-
-    @property
-    def _stage_root(self) -> str:
-        return str(Path(self.path) / ".compact-part")
+    def _rewrite(
+        self,
+        rewrites: dict[str, Callable[[DataFrame], DataFrame]],
+        retire: Iterable[str] = (),
+    ) -> dict[str, tuple[int, int]]:
+        """Write ``rewrites[part](rows of part)`` for each partition,
+        then commit one version that adds the new files, drops the files
+        read and retires the tombstone files ``retire``. If another
+        writer committed first, a partition any of whose read files it
+        dropped is skipped (its new files deleted, and nothing retired,
+        or its deleted rows would come back) and the commit retried; a
+        file appended meanwhile stays. Dropped files are deleted after
+        the commit; a crash anywhere leaves the old version or the new.
+        Returns {part: (files read, files written)} as committed."""
+        t = self.table
+        by_part = t.partitions()
+        done: dict[str, tuple[list[str], list[str]]] = {}
+        for part, fn in rewrites.items():
+            kept = Observation()
+            new = t.write(fn(t.read_partition(part)).observe(kept, F.count(F.lit(1)).alias("n")), part)
+            if not kept.get["n"]:  # the write's one empty file
+                for f in new:
+                    fs.delete(self.spark, f"{t.path}/{f}")
+                new = []
+            done[part] = (by_part[part], new)
+        retire = sorted(retire)
+        while True:
+            for part in [p for p, (old, _) in done.items() if not all(f in t.files for f in old)]:
+                for f in done.pop(part)[1]:
+                    fs.delete(self.spark, f"{t.path}/{f}")
+                retire = []
+            retire = [f for f in retire if f in t.tombstones]
+            if not done and not retire:
+                return {}
+            if t.commit(
+                add=[f for _, new in done.values() for f in new],
+                remove=[f for old, _ in done.values() for f in old],
+                remove_tombstones=retire,
+            ):
+                break
+        for old, _ in done.values():
+            for f in old:
+                fs.delete(self.spark, f"{t.path}/{f}")
+        for f in retire:
+            fs.delete(self.spark, f"{t.tombstones_path}/{f}")
+        return {p: (len(old), len(new)) for p, (old, new) in done.items()}
 
     def purge_expired(self, now: float | None = None) -> None:
         """Background expirer parity (expiry_window.go:28-148): rewrite
         the partitions that hold a row with ``expires_at <= now``,
         dropping those rows. Partitions with nothing expired are not
-        touched, so the cost tracks expired data, not table size.
-
-        Runs under the shared table lease and swaps each partition with
-        ``_swap_partition``, so a crash at any step is recovered at the
-        next open: no row is lost and no seq is reused."""
+        touched, so the cost tracks expired data, not table size; a
+        partition left with no row loses its files. Committed by
+        ``_rewrite``: no row is lost and no seq is reused at a crash."""
+        self.flush()
         if not self.table.exists():
             return
         live = ttl_live_expr(now or time.time())
-        with self._maintenance():
-            dead = self.table.read().filter(~live).select("contract", "p_date").distinct()
-            for r in dead.collect():
-                self._swap_partition(
-                    _part_dir(r["contract"], r["p_date"]),
-                    lambda df: df.filter(live).sortWithinPartitions("seq"),
-                )
+        dead = self.table.read().filter(~live).select("contract", "p_date").distinct()
+        self._rewrite({
+            _part_dir(r["contract"], r["p_date"]): lambda df: df.filter(live).sortWithinPartitions("seq")
+            for r in dead.collect()
+        })
 
     def vacuum(self) -> dict[str, int]:
         """Physically apply delete tombstones, then drop them — the
-        free-block reclaim half of Delete (reference: deletes release
-        blocks to the lease/free lists for reuse, leasing.go +
+        free-block reclaim half of Delete (reference: deletes return
+        blocks to the free lists for reuse, leasing.go +
         db_internal.go:143; here tombstoned rows leave the Parquet
         files and the read path's anti-join shrinks to nothing).
 
@@ -546,59 +490,36 @@ class Engine:
         (GDPR-style, millions of tombstones) stays fully distributed:
         nothing serializes through the driver except the
         affected-partition list, and the per-partition rewrite is an
-        anti-JOIN on seq, never a driver-built IN-list. Single-writer
-        via the shared table lease; each partition is replaced by
-        ``_swap_partition``. The snapshotted tombstone files retire
-        only when every affected partition was rewritten: if one was
-        skipped (its files changed under us) they stay, or its rows
-        would come back. Re-runnable — a crash leaves the tombstone
-        set in place, so reads stay correct either way.
-        Returns {partition_dir: rows_removed}.
+        anti-JOIN on seq, never a driver-built IN-list. The rewrites
+        and the retirement of the tombstone files read are one version
+        (``_rewrite``); tombstones committed after that read stay for
+        the next run. Returns {partition_dir: rows_removed}.
         """
-        report: dict[str, int] = {}
-        if not fs.has_files(self.spark, self.tombstones_path):
-            return report
-        # lease FIRST, snapshot SECOND: a tombstone appended after the
-        # snapshot survives (only the snapshotted files retire below),
-        # and appends to the table are blocked for the whole rewrite —
-        # no window where a concurrent delete() can be silently undone
-        with self._maintenance():
-            snap_files = [
-                f"{self.tombstones_path}/{name}"
-                for name in _data_files(self.spark, self.tombstones_path)
-            ]
-            if not snap_files or not self.table.exists():
-                return report
-            tomb_seqs = self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(*snap_files).distinct()
-            # affected-partition discovery is a JOIN, not a driver-side
-            # intersect: a mass delete (GDPR-style) may tombstone
-            # millions of seqs, which must never serialize through the
-            # driver or inflate a plan IN-list. The partition-range
-            # aggregate (one row per partition) is the broadcast side;
-            # the only collect is the affected-partition list itself.
-            ranges = (
-                self.table.read()
-                .groupBy("contract", "p_date")
-                .agg(F.min("seq").alias("lo"), F.max("seq").alias("hi"))
-            )
-            retire = True
-            for r in _tombstone_affected(ranges, tomb_seqs).collect():
-                part = _part_dir(r["contract"], r["p_date"])
-                pdf = self.spark.read.schema(_DATA_SCHEMA).parquet(f"{self.table.path}/{part}")
-                removed = pdf.join(tomb_seqs, "seq", "leftsemi").count()
-                if not removed:
-                    continue
-                if self._swap_partition(part, lambda df: _partition_kept(df, tomb_seqs)):
-                    report[part] = removed
-                else:
-                    retire = False
-            # every seq in the SNAPSHOT is now physically absent (or was
-            # never in any partition's range) — retire exactly the
-            # snapshotted files; tombstones appended since stay live
-            if retire:
-                for f in snap_files:
-                    fs.delete(self.spark, f)
-        return report
+        self.flush()
+        t = self.table
+        rows = t.read()
+        tombs = t.read_tombstones()
+        if tombs is None:
+            return {}
+        retire = list(t.tombstones)
+        tomb_seqs = tombs.distinct()
+        removed: dict[str, int] = {}
+        # affected-partition discovery is a JOIN, not a driver-side
+        # intersect: a mass delete may tombstone millions of seqs, which
+        # must never serialize through the driver or inflate a plan
+        # IN-list. The partition-range aggregate (one row per partition)
+        # is the broadcast side; the only collect is the affected-partition
+        # list itself.
+        ranges = rows.groupBy("contract", "p_date").agg(F.min("seq").alias("lo"), F.max("seq").alias("hi"))
+        for r in _tombstone_affected(ranges, tomb_seqs).collect():
+            part = _part_dir(r["contract"], r["p_date"])
+            n = t.read_partition(part).join(tomb_seqs, "seq", "leftsemi").count()
+            if n:
+                removed[part] = n
+        done = self._rewrite(
+            {part: lambda df: _partition_kept(df, tomb_seqs) for part in removed}, retire
+        )
+        return {part: removed[part] for part in done}
 
     def compact(
         self,
@@ -615,72 +536,28 @@ class Engine:
         coalescing each to ceil(bytes / target_file_bytes) seq-sorted
         files — it never touches healthy partitions, so the job's cost
         tracks fragmentation, not table size (compaction of a day's
-        worth of micro-batches reads a day, not the decade).
+        worth of micro-batches reads a day, not the decade). The file
+        counts come from the log, not a directory walk.
 
-        Single-writer under the shared table lease (``_maintenance``):
-        every append refuses while it is held, and a lease older than
-        ``LEASE_TTL_S`` is presumed crashed and broken. Each partition
-        is replaced by ``_swap_partition``, which skips a partition
-        whose files changed under us and is recovered at the next open
-        after a crash. Returns {partition_dir: (files_before,
+        Appends go on meanwhile; the rewrites are one version, committed
+        by ``_rewrite``. Returns {partition_dir: (files_before,
         files_after)}.
         """
-        report: dict[str, tuple[int, int]] = {}
-        if not self.table.exists():
-            return report
-        with self._maintenance():
-            for part in _partitions(self.spark, self.table.path):
-                ppath = f"{self.table.path}/{part}"
-                n_files = len(_data_files(self.spark, ppath))
-                if n_files < min_files:
-                    continue
-                n_out = max(1, math.ceil(fs.tree_bytes(self.spark, ppath) / target_file_bytes))
-                if n_out >= n_files:
-                    continue  # already at or under the target layout
+        self.flush()
+        self.table.refresh()
+        rewrites = {}
+        for part, files in self.table.partitions().items():
+            if len(files) < min_files:
+                continue
+            n_out = max(1, math.ceil(fs.tree_bytes(self.spark, f"{self.table.path}/{part}") / target_file_bytes))
+            if n_out < len(files):
                 # sort AFTER coalesce: the merged output files stay
                 # seq-sorted end to end, the layout `append` writes —
                 # sorting before would leave concatenated sorted runs.
                 # Gets do not prune on it: only a ?last= Get's ts filter
                 # reaches row groups.
-                if self._swap_partition(
-                    part, lambda df: df.coalesce(n_out).sortWithinPartitions("seq")
-                ):
-                    report[part] = (n_files, len(_data_files(self.spark, ppath)))
-        return report
-
-    def _recover_compact(self) -> None:
-        """Promote/restore leftovers of a crashed ``_swap_partition``.
-
-        Crash points and their cleanup (stage written → rename ppath→
-        trash → rename stage→ppath → delete trash):
-
-        - stage written, swap not started: partition intact → drop stage;
-        - between the renames: partition MISSING, stage complete
-          (``_SUCCESS`` present) → promote stage, drop trash;
-        - stage incomplete (no ``_SUCCESS``) and partition missing:
-          restore trash;
-        - after promote, trash delete lost: partition intact → drop trash.
-        """
-        root = self.table.path
-        for part in list(_partitions(self.spark, f"{self._stage_root}/stage")):
-            stage = f"{self._stage_root}/stage/{part}"
-            trash = f"{self._stage_root}/trash/{part}"
-            ppath = f"{root}/{part}"
-            complete = fs.exists(self.spark, f"{stage}/_SUCCESS")
-            if not fs.exists(self.spark, ppath) and complete:
-                fs.rename(self.spark, stage, ppath)
-                fs.delete(self.spark, trash)
-            else:
-                if not fs.exists(self.spark, ppath) and fs.exists(self.spark, trash):
-                    fs.rename(self.spark, trash, ppath)
-                fs.delete(self.spark, stage)
-        for part in list(_partitions(self.spark, f"{self._stage_root}/trash")):
-            trash = f"{self._stage_root}/trash/{part}"
-            ppath = f"{root}/{part}"
-            if not fs.exists(self.spark, ppath):
-                fs.rename(self.spark, trash, ppath)
-            else:
-                fs.delete(self.spark, trash)
+                rewrites[part] = lambda df, n=n_out: df.coalesce(n).sortWithinPartitions("seq")
+        return self._rewrite(rewrites)
 
     def new_contract(self) -> int:
         return new_contract()
@@ -741,26 +618,22 @@ class Batch:
         pass
 
     def commit(self) -> None:
-        """All-or-nothing for the entry set: every entry was validated
-        at staging time; rows are built and written as ONE atomic
-        append, bypassing the engine's incremental buffer entirely (no
-        flush_every flush can fire mid-batch, and a failure persists
-        nothing).
-
-        Entries and tombstones are two physical tables, so a crash
-        between the writes is a partial batch either way. Tombstones go
-        FIRST: they target pre-existing seqs and re-applying them on a
-        retried batch is idempotent, whereas the reverse order can
-        surface the batch's puts while its deletes vanish."""
+        """All-or-nothing: every entry was validated at staging time;
+        the rows and the tombstones are written to new files, bypassing
+        the engine's incremental buffer (no flush_every flush can fire
+        mid-batch), and then ONE log version names them all. A reader
+        sees the batch's puts and deletes together or neither, and a
+        failure before the commit persists nothing."""
         eng = self.engine
         eng.flush()  # earlier direct puts are a separate commit unit
-        if self._deletes:
-            eng._write_tombstones(self._deletes)
-        if self._entries:
-            rows = [eng._make_row(entry, ts)[1] for entry, ts in self._entries]
-            df = eng.spark.createDataFrame(rows, MESSAGES_SCHEMA)
-            eng._append(df)
-            eng._metrics["puts"] += len(rows)
+        tombs = eng.table.write_tombstones(self._deletes) if self._deletes else []
+        rows = [eng._make_row(entry, ts)[1] for entry, ts in self._entries]
+        if rows:
+            eng._append(eng.spark.createDataFrame(rows, MESSAGES_SCHEMA), max(r.seq for r in rows), tombs)
+        elif tombs:
+            eng.table.commit(add_tombstones=tombs)
+        eng._metrics["puts"] += len(self._entries)
+        eng._metrics["dels"] += len(self._deletes)
         self._entries.clear()
         self._deletes.clear()
         self._committed = True
@@ -791,40 +664,8 @@ def _entry_seq(entry: Entry) -> int:
     return message_id_seq(entry.msg_id)
 
 
-#: the columns stored IN a partition's files: everything but the
-#: directory-encoded partition columns. Reads pass it explicitly —
-#: inferring from one legacy file would drop columns it lacks (the
-#: `encrypted` marker, turning mixed-store ciphertext into "plaintext").
-_DATA_SCHEMA = T.StructType(
-    [f for f in MessagesTable._full_schema().fields if f.name not in ("contract", "p_date")]
-)
-
-
 def _part_dir(contract: int, p_date: dt.date) -> str:
     return f"contract={contract}/p_date={p_date}"
-
-
-def _partitions(spark: SparkSession, base: str) -> Iterator[str]:
-    """The ``contract=<c>/p_date=<d>`` dirs under ``base``."""
-    for cdir, _, c_is_dir in fs.list_status(spark, base):
-        if c_is_dir and cdir.startswith("contract="):
-            for ddir, _, d_is_dir in fs.list_status(spark, f"{base}/{cdir}"):
-                if d_is_dir and ddir.startswith("p_date="):
-                    yield f"{cdir}/{ddir}"
-
-
-def _rename(spark: SparkSession, src: str, dst: str) -> None:
-    """A swap rename; failing loudly keeps the trash for recovery."""
-    if not fs.rename(spark, src, dst):
-        raise RuntimeError(f"partition swap failed to rename {src} -> {dst}")
-
-
-def _data_files(spark: SparkSession, path: str) -> list[str]:
-    """Sorted names of the ``*.parquet`` files directly under ``path``."""
-    return sorted(
-        n for n, _, is_dir in fs.list_status(spark, path)
-        if not is_dir and n.endswith(".parquet")
-    )
 
 
 def _tombstone_affected(ranges: DataFrame, tomb_seqs: DataFrame) -> DataFrame:

@@ -10,16 +10,20 @@ All calls ride the live JVM gateway of the provided SparkSession — no
 extra process, no Python I/O; the FS instances are cached by Hadoop per
 (scheme, authority), so per-call overhead is a method hop.
 
-Rename caveat (matters for the partition swap that compact, vacuum and
-purge_expired share, `Engine._swap_partition`): HDFS/local renames are
-atomic directory moves, so a crash between its two renames leaves a
-complete stage that the next open promotes. S3A "rename" is
-copy+delete and not atomic; on an object store prefer a catalog
-pointer swap.
+Commit caveat (the messages table's log, `table.py`): `create_atomic`
+is Spark's `CheckpointFileManager.createAtomic` without overwrite, a
+temp file renamed to the version's name only if that name is free. On
+HDFS the rename is one namenode operation: of two writers racing for a
+version exactly one wins. A local disk checks the name, then renames,
+so two commits in the same instant could both succeed, the later
+replacing the earlier; so could an object store without an atomic
+create-if-absent (S3A before conditional writes). Run one writer per
+store there, or serialize commits outside the store.
 """
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -52,42 +56,42 @@ def delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
     return bool(fs.delete(p, recursive))
 
 
-def create_new(spark: SparkSession, path: str) -> bool:
-    """Atomic create-if-absent (lock/lease primitive): True iff this
-    call created the file. Rides HDFS/local `createNewFile` — an atomic
-    namenode op; on S3A it is best-effort (no atomic create-exclusive),
-    which is the same caveat every file-lock on S3 carries."""
-    fs, p = _fs(spark, path)
-    parent = p.getParent()
-    if parent is not None and not fs.exists(parent):
-        fs.mkdirs(parent)
-    return bool(fs.createNewFile(p))
-
-
-def mtime(spark: SparkSession, path: str) -> int | None:
-    """Modification time (ms since epoch) of path, None if absent."""
-    fs, p = _fs(spark, path)
-    if not fs.exists(p):
-        return None
-    return int(fs.getFileStatus(p).getModificationTime())
+def create_atomic(spark: SparkSession, path: str, text: str) -> bool:
+    """Publish ``text`` at ``path`` unless the name is taken; True iff
+    this call created it. Readers see the whole file or none: Spark's
+    ``CheckpointFileManager.createAtomic`` writes a temp file and
+    close() renames it without overwrite. A loser's temp file is deleted
+    here: ``cancel()`` does nothing once close() has failed."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    cfm = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        p.getParent(), spark._jsc.hadoopConfiguration()
+    )
+    cfm.mkdirs(p.getParent())
+    if cfm.exists(p):  # a stale writer: no temp file, no WARN stack trace
+        return False
+    out = cfm.createAtomic(p, False)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+        out.close()
+        return True
+    except Py4JJavaError:  # the name was taken in the meantime, or an I/O error
+        out.cancel()
+        if not cfm.exists(p):
+            raise
+    # once the name exists, every temp file for it is a loser's
+    tmp = f".{p.getName()}."
+    for st in cfm.list(p.getParent()):
+        name = st.getPath().getName()
+        if name.startswith(tmp) and name.endswith(".tmp"):
+            cfm.delete(st.getPath())
+    return False
 
 
 def rename(spark: SparkSession, src: str, dst: str) -> bool:
     fs, p_src = _fs(spark, src)
     _, p_dst = _fs(spark, dst)
     return bool(fs.rename(p_src, p_dst))
-
-
-def has_files(spark: SparkSession, path: str, suffix: str = ".parquet") -> bool:
-    """True when the directory exists and holds at least one data file."""
-    fs, p = _fs(spark, path)
-    if not fs.exists(p):
-        return False
-    it = fs.listFiles(p, True)  # recursive
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(suffix):
-            return True
-    return False
 
 
 def tree_bytes(spark: SparkSession, path: str) -> int:
@@ -100,6 +104,14 @@ def tree_bytes(spark: SparkSession, path: str) -> int:
     # getContentSummary is a single namenode/listing call (recursive
     # server-side on HDFS), cheaper than client-side iteration
     return int(fs.getContentSummary(p).getLength())
+
+
+def list_files(spark: SparkSession, pattern: str) -> list[str]:
+    """The paths matching the Hadoop glob ``pattern`` (``*`` stops at
+    ``/``), fully qualified: one listing call, two JVM round trips per
+    match."""
+    fs, p = _fs(spark, pattern)
+    return [str(st.getPath().toString()) for st in fs.globStatus(p) or []]
 
 
 def list_status(spark: SparkSession, path: str) -> list[tuple[str, int, bool]]:

@@ -8,7 +8,10 @@ catalog, which documents sit central in a citation/link graph, which
 sources dominate a crawl. Power-iteration maps directly onto Spark:
 each iteration is one join (edges x ranks) and one partial-agg
 shuffle on the destination key; `localCheckpoint` per round cuts the
-growing lineage exactly as in `kmeans.py`/`cluster.py`.
+growing lineage as in `kmeans.py`/`cluster.py`. Under AQE (on in
+`session.py`) `localCheckpoint(eager=False)` runs the round's shuffle
+map stages at the call, on the driver's call path; only the final
+stage, which fills the checkpoint blocks, waits for an action.
 
 Determinism contract: fixed iteration count (no float convergence
 test), and the PageRank family runs in exact BIGINT fixed-point
@@ -38,7 +41,7 @@ from pyspark.sql import functions as F
 #: the self-join. There is no key to mint, so two different inputs
 #: never share a relation (a CacheManager match needs equal plans),
 #: and a relation lives exactly as long as the session's cache: it is
-#: released by `unpersist()` or `spark.catalog.clearCache()`
+#: dropped by `unpersist()` or `spark.catalog.clearCache()`
 #: (`clear_pair_cache`). At 100 TB you would materialize the edge
 #: list ONCE as a catalog-bucketed table (sources/bucketed.py —
 #: write_bucketed(edges, "copurchase_edges", ["src"]) — bucketed on
@@ -48,7 +51,7 @@ from pyspark.sql import functions as F
 
 
 def clear_pair_cache() -> None:
-    """Release the persisted pair relations: the active session's
+    """Drop the persisted pair relations: the active session's
     ``catalog.clearCache()``, which drops every other cached relation
     along with them. A no-op when no session is active."""
     spark = SparkSession.getActiveSession()
@@ -65,7 +68,7 @@ def cooccurrence_pairs(df: DataFrame, group_col: str, item_col: str) -> DataFram
     default), so N graph queries over one source pay ONE |group|² build:
     each later call over an equal source plan reads the cached
     relation (see the block comment above); Spark logs such a hit as
-    "Asked to cache already cached data". Release it with
+    "Asked to cache already cached data". Drop it with
     ``unpersist()`` on the returned frame, or with
     ``spark.catalog.clearCache()``.
 
@@ -903,8 +906,8 @@ def label_propagation(
     partial-agg shuffle on (dst, label), one window over the per-node
     candidate labels (partitioned by node — no global ordering).
     The edge and node relations are loop-invariant and persisted;
-    lineage is cut per round with a lazy localCheckpoint like the
-    pagerank loop.
+    lineage is cut per round like the pagerank loop, by a
+    localCheckpoint that runs the round's shuffles at the call.
 
     Output: (node, lbl) — final community label per connected node.
     """
@@ -969,7 +972,7 @@ def kcore(
     surviving set) + one partial-agg shuffle for degrees — all keyed
     joins, no broadcast needed when the node relation is large. The
     edge relation is loop-invariant and persisted; survivor lineage
-    is cut per round with a lazy localCheckpoint.
+    is cut per round by a localCheckpoint that runs its shuffles at once.
 
     Output: (node, deg) — survivors after ``rounds`` peels, with
     their degree inside the FINAL surviving subgraph (recomputed

@@ -108,11 +108,11 @@ def ingest_stream(
     replay path (a batch whose id is logged for this checkpoint
     generation is skipped — see streaming.commitlog for why the log is
     keyed by query id, not a bare high-water mark), shrinking the
-    duplicate window to the instants between data append and log
-    append — true exactly-once needs a transactional table format
-    (Delta/Iceberg) where data+txn commit together. Same discipline as
-    streaming.continuous and the reference's WAL-release-after-sync
-    (db_sync.go).
+    duplicate window to the instants between the data commit (one log
+    version, never half visible) and the batch record; exactly-once needs
+    the batch id in that version too. Same discipline as
+    streaming.continuous and the reference's WAL, freed only after its
+    sync (db_sync.go).
     """
     from unitdb_spark.streaming.commitlog import CommitLog
 

@@ -22,12 +22,17 @@ partition are written sorted by ``seq``.
 from __future__ import annotations
 
 import datetime as dt
+import json
+import re
 import time
+import uuid
+from collections import Counter
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from unitdb_spark import fs
 from unitdb_spark.core.topic import WILDCARD_TAIL
 
 MESSAGES_SCHEMA = T.StructType(
@@ -85,118 +90,236 @@ def with_partition_columns(df: DataFrame, ts_col: str = "ts") -> DataFrame:
 
 
 class MessagesTable:
-    """Partitioned-Parquet messages store.
+    """Partitioned-Parquet messages store with a log of committed files.
 
-    Layout: ``<path>/contract=<c>/p_date=<d>/part-*.parquet``. A Get
-    prunes on ``contract`` (the reference's contract-prefix routing);
-    it does not prune ``p_date`` partitions, so the reference's timeID
-    pruning has no counterpart: a traced Get reads every file of its
-    contract (``get_mix`` seed 7: 30 files, 252,788 rows for 1,355
-    returned), and only a ``?last=`` Get's ``ts`` filter reaches row
-    groups.
+    Layout: ``<path>/contract=<c>/p_date=<d>/<file>.parquet``, and the
+    deletes' tombstone files in the sibling ``tombstones/``. A Get prunes
+    on ``contract`` (the reference's contract-prefix routing), not on
+    ``p_date``: a traced Get reads every file of its contract
+    (``get_mix`` seed 7: 30 files, 252,788 rows for 1,355 returned), and
+    only a ``?last=`` Get's ``ts`` filter reaches row groups.
+
+    Every write commits at one point, the log ``<path>/_log/<v>.json``
+    (Structured Streaming's file-sink metadata log; Delta Lake's design).
+    A version lists the files it adds and removes and the store's max
+    seq, and ``fs.create_atomic`` publishes it whole or not at all: of
+    two writers racing for a version, one wins. New files are written
+    under ``_stage/<uuid>/`` and moved into their directories under
+    store-unique names (one write repeats names across partitions).
+    Reads pass Spark the committed names as a ``pathGlobFilter`` (its
+    listing skips ``_log`` and ``_stage``), so a file is invisible until
+    a version names it; a crash before the commit leaves garbage files,
+    never rows. Nothing reclaims those files yet.
     """
 
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
-        self.path = path
-        # set once the directory is known to exist; only `forget` (the
-        # store's deletion) clears it
-        self._present = False
-
-    @property
-    def lease_path(self) -> str:
-        """Maintenance lease marker — a dot-free SIBLING of the table dir
-        (never inside it, where it would parse as a partition value).
-        While this file exists, one of `Engine.compact`, `Engine.vacuum`
-        or `Engine.purge_expired` owns the table: appends refuse loudly
-        instead of racing its partition swap."""
-        return self.path.rstrip("/") + ".compact-lease"
-
-    def append(self, df: DataFrame) -> None:
-        """Atomic Parquet append of fully-derived rows.
-
-        Rows are sorted by ``seq`` within each output partition
-        (reverse-time layout parity, time_window.go:37-40). Newest-first
-        top-K Gets do not skip old row groups on it: a Get reads every
-        file of its contract, and only a ``?last=`` Get's ``ts`` filter
-        reaches row groups.
-
-        Refuses while the maintenance lease is held: a file appended to
-        a partition between a job's listing and its directory swap
-        would be silently deleted with the old partition (leasing.go
-        parity — writers there also wait out the lease).
-        """
-        from unitdb_spark import fs
-
-        if fs.exists(self.spark, self.lease_path):
-            raise RuntimeError(
-                "messages table is held by compact/vacuum/purge_expired "
-                f"(lease at {self.lease_path}); retry after it finishes"
-            )
-        out = with_partition_columns(with_topic_columns(df))
-        # cluster rows by partition key before the write: one task per
-        # (contract, date) -> one right-sized file per partition dir
-        # instead of n_tasks x n_dirs small files; AQE splits any
-        # skewed partition. seq-sort within gives each file seq-ordered
-        # row groups (a top-K Get still reads them all).
-        # sort key = partition cols THEN seq: the dynamic-partition
-        # writer requires task rows ordered by (contract, p_date) and
-        # plans its own sort when the child ordering doesn't match —
-        # a bare seq sort is ELIMINATED as redundant under it (r12:
-        # the executed plan showed Sort[contract, p_date] only, so the
-        # documented seq-within-file layout rode on sort-internals
-        # luck). The combined key satisfies the writer's requirement
-        # (one sort, no planner-inserted extra) and makes the
-        # row-group min/max-on-seq property structural.
-        (
-            out.repartition(F.col("contract"), F.col("p_date"))
-            .sortWithinPartitions("contract", "p_date", "seq")
-            .write.mode("append")
-            .partitionBy("contract", "p_date")
-            .parquet(self.path)
-        )
-        self._present = True
-
-    def read(self) -> DataFrame:
-        """The table with its explicit schema. Spark lists the directory
-        while it builds the relation, and a directory with no data file
-        reads as empty. A missing directory (a store not yet written)
-        reads as an empty frame without asking Spark, which would raise
-        and log a stack trace: until the table knows its directory
-        exists, one ``fs.exists`` call checks; after that, none."""
-        from unitdb_spark import fs
-
-        schema = self._full_schema()
-        if not self._present:
-            if not fs.exists(self.spark, self.path):
-                return self.spark.createDataFrame([], schema)
-            self._present = True
-        return self.spark.read.schema(schema).parquet(self.path)
+        self.path = path.rstrip("/")
+        self.tombstones_path = self.path.rsplit("/", 1)[0] + "/tombstones"
+        self.forget()
 
     def forget(self) -> None:
-        """Drop what the table knows about its directory; call it after
-        deleting the directory."""
-        self._present = False
+        """Drop what the table knows; call it after deleting the store."""
+        self.version = -1
+        self.files: set[str] = set()  # data files, relative to path
+        self.tombstones: set[str] = set()  # tombstone file names
+        self.max_seq = 0
+        self._loaded = False
+
+    # ------------------------------------------------------------- log
+    def _log_file(self, version: int) -> str:
+        return f"{self.path}/_log/{version:020d}.json"
+
+    def refresh(self) -> None:
+        """Read the versions committed since the last call: on a current
+        table one fs call, the read that finds no next version. The
+        first call converts a store that has data but no version 0."""
+        while (text := fs.read_text(self.spark, self._log_file(self.version + 1))) is not None:
+            self._apply(json.loads(text))
+        if not self._loaded:
+            self._loaded = True
+            if self.version < 0:
+                self._convert()
+
+    def _apply(self, entry: dict) -> None:
+        self.version += 1
+        for have, kind in ((self.files, ""), (self.tombstones, "_tombstones")):
+            have.difference_update(entry.get("remove" + kind, ()))
+            have.update(entry.get("add" + kind, ()))
+        self.max_seq = max(self.max_seq, entry["max_seq"])
+
+    def commit(self, max_seq: int | None = None, **change) -> bool:
+        """Publish the next version of ``change`` (lists of files:
+        ``add``/``remove`` data files, ``add_tombstones``/
+        ``remove_tombstones``); True once it wins. When another
+        writer created that version first, the table reads it. A change
+        that only adds cannot conflict, so it is retried at the next
+        version; one that removes returns False, and the caller decides
+        whether it still holds."""
+        entry = {k: sorted(v) for k, v in change.items() if v}
+        while True:
+            entry["max_seq"] = max(self.max_seq, max_seq or 0)
+            if fs.create_atomic(self.spark, self._log_file(self.version + 1), json.dumps(entry)):
+                self._apply(entry)
+                return True
+            self.refresh()
+            if change.get("remove") or change.get("remove_tombstones"):
+                return False
+
+    def _convert(self) -> None:
+        """Give a store written before the log its version 0, from one
+        listing of each directory, after renaming files whose names
+        repeat (a crash before the commit leaves a store this converts
+        again). A hidden directory beside the table is the stage of an
+        older sparkmsg's partition swap (the only one it made), left by a
+        crash: it raises, as the partition being replaced may be missing
+        or doubled."""
+        root = self.path.rsplit("/", 1)[0]
+        for name, _, is_dir in fs.list_status(self.spark, root):
+            if is_dir and name.startswith("."):
+                raise RuntimeError(
+                    f"{root}/{name} is left over from an interrupted partition swap "
+                    "of an older sparkmsg; restore its partitions by hand, remove it, reopen"
+                )
+        data, tombs = (
+            {f for f in _tail(fs.list_files(self.spark, pattern), depth) if not re.search(r"(^|/)[_.]", f)}
+            for pattern, depth in ((f"{self.path}/*/*/*.parquet", 3), (f"{self.tombstones_path}/*.parquet", 1))
+        )
+        if not data and not tombs:
+            return
+        names = Counter(f.rsplit("/", 1)[-1] for f in data)
+        uid = uuid.uuid4().hex
+        for i, f in enumerate(sorted(data)):
+            if names[f.rsplit("/", 1)[-1]] > 1:
+                new = f"{f.rsplit('/', 1)[0]}/part-{i:05d}-{uid}.parquet"
+                self._move(f"{self.path}/{f}", f"{self.path}/{new}")
+                data.remove(f)
+                data.add(new)
+        top = self._scan(self.path, data, self._full_schema()).agg(F.max("seq")).first()[0]
+        self.commit(add=data, add_tombstones=tombs, max_seq=top)
+
+    # ----------------------------------------------------------- write
+    def write(self, df: DataFrame, part: str | None = None) -> list[str]:
+        """Write rows as new files no version names yet; returns them.
+        ``df`` holds message rows, or with ``part`` the stored columns of
+        the rows replacing partition ``part``. Message rows are sorted by
+        ``seq`` within each file (reverse-time layout parity,
+        time_window.go:37-40), though a Get reads every file of its
+        contract regardless."""
+        writer = df.write
+        if part is None:
+            # one task per (contract, date) -> one right-sized file per
+            # partition dir; AQE splits any skewed partition. The sort
+            # key is the partition columns THEN seq: the dynamic-partition
+            # writer needs rows ordered by (contract, p_date) and would
+            # drop a bare seq sort as redundant under its own (r12).
+            writer = (
+                with_partition_columns(with_topic_columns(df))
+                .repartition(F.col("contract"), F.col("p_date"))
+                .sortWithinPartitions("contract", "p_date", "seq")
+                .write.partitionBy("contract", "p_date")
+            )
+        stage = f"{self.path}/_stage/{uuid.uuid4().hex}"
+        writer.parquet(stage)
+        return self._place(stage, self.path, part)
+
+    def write_tombstones(self, seqs: list[int]) -> list[str]:
+        """Write deleted seqs as one new tombstone file no version names
+        yet. repartition(1), not coalesce(1): coalesce pulls the input's
+        partitions through one task and made each write ~2x slower."""
+        stage = f"{self.path}/_stage/{uuid.uuid4().hex}"
+        self.spark.createDataFrame(
+            [(int(s),) for s in seqs], TOMBSTONE_SCHEMA
+        ).repartition(1).write.parquet(stage)
+        return self._place(stage, self.tombstones_path, "")
+
+    def _place(self, stage: str, root: str, part: str | None) -> list[str]:
+        """Move the Parquet files of ``stage`` into their partition
+        directory under ``root`` (``part``, or the one they were written
+        to) under store-unique names; drop the stage. Returns the files,
+        relative to ``root``."""
+        if self.version < 0:
+            # the store's first write: convert an old store before a new
+            # file is in its directories, then commit a version 0, so a
+            # crash from here on is not taken for an old store
+            self.refresh()
+            if self.version < 0:
+                self.commit()
+        uid = stage.rsplit("/", 1)[-1]
+        depth = 3 if part is None else 1  # contract=/p_date=/file, or file
+        written = _tail(fs.list_files(self.spark, stage + "/*" * depth + ".parquet"), depth)
+        names = {
+            rel: f"{rel.rpartition('/')[0] if part is None else part}/part-{i:05d}-{uid}.parquet".lstrip("/")
+            for i, rel in enumerate(sorted(written))
+        }
+        for rel, name in names.items():
+            self._move(f"{stage}/{rel}", f"{root}/{name}")
+        fs.delete(self.spark, stage)
+        return list(names.values())
+
+    def _move(self, src: str, dst: str) -> None:
+        """Rename. On a local disk a rename into a missing directory
+        makes it (~12 ms, against ~16 ms for a separate ``mkdirs`` first);
+        HDFS fails it, and the directory is made then."""
+        if not fs.rename(self.spark, src, dst):
+            fs.mkdirs(self.spark, dst.rsplit("/", 1)[0])
+            if not fs.rename(self.spark, src, dst):
+                raise RuntimeError(f"could not move {src} to {dst}")
+
+    def append(self, df: DataFrame, max_seq: int | None = None, add_tombstones: list[str] = ()) -> None:
+        """Write fully-derived rows and commit them, with any tombstone
+        files already written, as one version: all become visible
+        together, or none. ``max_seq`` is the rows' highest seq; unless
+        given it is observed during the write (a separate aggregate
+        would run the input plan twice)."""
+        if max_seq is None:
+            obs = Observation()
+            df = df.observe(obs, F.max("seq").alias("max_seq"))
+        add = self.write(df)
+        if add or add_tombstones:
+            top = obs.get["max_seq"] if max_seq is None else max_seq
+            self.commit(add=add, add_tombstones=add_tombstones, max_seq=top)
+
+    # ------------------------------------------------------------ read
+    def read(self) -> DataFrame:
+        """The committed rows, with the explicit schema. Spark lists the
+        directory while it builds the relation and keeps the files the
+        log names; with none, the frame is empty and Spark is not asked."""
+        self.refresh()
+        return self._scan(self.path, self.files, self._full_schema())
+
+    def read_tombstones(self) -> DataFrame | None:
+        """The deleted seqs as of the last ``read`` or ``refresh``, or
+        None when there is none (then a Get plans no anti-join); no fs
+        call. The explicit schema spares a Spark inference job."""
+        if self.tombstones:
+            return self._scan(self.tombstones_path, self.tombstones, TOMBSTONE_SCHEMA)
+        return None
+
+    def partitions(self) -> dict[str, list[str]]:
+        """The committed data files of each partition directory, as of
+        the last ``read`` or ``refresh``."""
+        out: dict[str, list[str]] = {}
+        for f in sorted(self.files):
+            out.setdefault(f.rsplit("/", 1)[0], []).append(f)
+        return out
+
+    def read_partition(self, part: str) -> DataFrame:
+        """The stored columns of one partition's committed files."""
+        return self._scan(f"{self.path}/{part}", self.partitions()[part], DATA_SCHEMA)
+
+    def _scan(self, root: str, files, schema) -> DataFrame:
+        """Spark's read of directory ``root``, kept to ``files`` by their
+        (store-unique) names."""
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        names = sorted(re.sub(r"([\\{}\[\]*?,])", r"\\\1", f.rsplit("/", 1)[-1]) for f in files)
+        return self.spark.read.schema(schema).option("pathGlobFilter", "{" + ",".join(names) + "}").parquet(root)
 
     def exists(self) -> bool:
-        """True when the table directory exists and holds data files.
-
-        Goes through the Hadoop FileSystem API so any Spark-readable
-        scheme works (s3a://, hdfs://, gs://, file:) — local pathlib
-        would silently report 'no table' for every object-store path,
-        turning each Get/Count into an empty result."""
-        from unitdb_spark import fs
-
-        found = fs.has_files(self.spark, self.path)
-        self._present = self._present or found
-        return found
-
-    def file_size(self) -> int:
-        """Total bytes of the table's data files (db.go:474-482
-        FileSize parity — there the sum of index/data/log sizes)."""
-        from unitdb_spark import fs
-
-        return fs.tree_bytes(self.spark, self.path)
+        """True when the table has committed data files."""
+        self.refresh()
+        return bool(self.files)
 
     @staticmethod
     def _full_schema() -> T.StructType:
@@ -210,6 +333,23 @@ class MessagesTable:
             T.StructField("p_date", T.DateType(), True),
         ]
         return T.StructType(fields)
+
+
+#: the tombstone table: one column, the deleted seq
+TOMBSTONE_SCHEMA = "seq long"
+
+#: the columns stored IN a partition's files: everything but the
+#: directory-encoded partition columns. Reads pass it explicitly —
+#: inferring from one legacy file would drop columns it lacks (the
+#: `encrypted` marker, turning mixed-store ciphertext into "plaintext").
+DATA_SCHEMA = T.StructType(
+    [f for f in MessagesTable._full_schema().fields if f.name not in ("contract", "p_date")]
+)
+
+
+def _tail(paths: list[str], depth: int) -> list[str]:
+    """The last ``depth`` components of each path."""
+    return ["/".join(p.split("/")[-depth:]) for p in paths]
 
 
 def now_sql(now: float | dt.datetime | None) -> str:

@@ -434,6 +434,16 @@ class TestContracts:
         assert engine.get(Query("same.topic"), now=T0 + 10) == [b"master"]
         assert engine.get(Query("same.topic", contract=c2), now=T0 + 10) == [b"tenant"]
 
+    def test_get_reads_only_its_contracts_files(self, engine: Engine):
+        c2 = 424242
+        engine.put_entry(Entry("t", b"master"), ts=T0)
+        engine.put_entry(Entry("t", b"tenant", contract=c2), ts=T0)
+        engine.flush()
+        for contracts in ([c2], [MASTER_CONTRACT, c2]):
+            files = engine.table.read(contracts).inputFiles()
+            assert sorted(f.split("/contract=")[1].split("/")[0] for f in files) == sorted(map(str, contracts))
+        assert engine.get_many([Query("t"), Query("t", contract=c2)], now=T0 + 10) == [[b"master"], [b"tenant"]]
+
 
 class TestWildcardsThroughSpark:
     """db_test.go:288-318 through the full engine path."""
@@ -776,6 +786,19 @@ class TestCommitVisibility:
         assert seen == [[b"b", b"a"]]
         assert reader.get("v.t", now=T0 + 10) == [b"c", b"b"]
 
+    def test_new_partition_directories_made_once_before_the_moves(self, spark, tmp_path, monkeypatch):
+        """A write makes each partition directory no committed file is in,
+        once, before it moves its files: every move is then a rename (a
+        local disk copies a file renamed into a missing directory)."""
+        eng = Engine.open(spark, str(tmp_path / "dirs"))
+        calls, _, _ = _crash_fs_at(monkeypatch, 10**6)
+        _put_df(eng)  # three days: three new partitions
+        assert calls.count("mkdirs") == 3
+        assert max(i for i, c in enumerate(calls) if c == "mkdirs") < calls.index("rename")
+        calls.clear()
+        _put_df(eng)
+        assert calls.count("rename") == 3 and "mkdirs" not in calls
+
 
 class TestTwoWriters:
     """Two Engines on one path race for log versions: exactly one commit
@@ -903,10 +926,28 @@ class TestLogConversion:
         from unitdb_spark import fs
 
         path, _, _ = self._old_store(spark, tmp_path)
-        fs.mkdirs(spark, f"{path}/.compact-part/stage/contract=1/p_date=2023-11-14")
+        trash = f"{path}/.compact-part/trash/contract=1/p_date=2023-11-14"
+        fs.mkdirs(spark, trash)
+        fs.write_text(spark, f"{trash}/part-00000.parquet", "")
         with pytest.raises(RuntimeError, match=r"\.compact-part"):
             Engine(spark, path)
         assert not fs.exists(spark, f"{path}/messages/_log")
+
+    def test_finished_partition_swap_and_other_hidden_dirs_convert(self, spark, tmp_path):
+        """A finished swap of the old engine left empty stage/ and trash/
+        directories: they are removed and the store converts. Other
+        hidden directories are not the engine's and stay."""
+        from unitdb_spark import fs
+
+        path, live, _ = self._old_store(spark, tmp_path)
+        for half in ("stage", "trash"):
+            fs.mkdirs(spark, f"{path}/.compact-part/{half}/contract=1")
+        fs.mkdirs(spark, f"{path}/.ipynb_checkpoints")
+        eng = Engine(spark, path)
+        assert eng.table.version == 0
+        assert eng.get("o.t", now=T0 + 300_000) == live
+        assert not fs.exists(spark, f"{path}/.compact-part")
+        assert fs.exists(spark, f"{path}/.ipynb_checkpoints")
 
 
 def _put_df(e: Engine) -> None:

@@ -231,15 +231,15 @@ class Engine:
         if not self._buffer:
             return
         df = self.spark.createDataFrame(self._buffer, MESSAGES_SCHEMA)
-        self._append(df, max(r.seq for r in self._buffer))
+        self._append(df)
         self._buffer.clear()
 
-    def _append(self, df: DataFrame, max_seq: int | None = None, tombstones: list[str] = ()) -> None:
+    def _append(self, df: DataFrame, tombstones: list[str] = ()) -> None:
         """One atomic append of encrypted rows (and a batch's tombstone
         files), the commit unit of flush, put_df and batch commit, timed
         into the put reservoir: one version of the table's log."""
         t0 = time.monotonic()
-        self.table.append(self._codec(df, F.aes_encrypt), max_seq, tombstones)
+        self.table.append(self._codec(df, F.aes_encrypt), tombstones)
         self._seq.advance_to(self.table.max_seq)
         self._latencies["put"].append(time.monotonic() - t0)
 
@@ -275,7 +275,8 @@ class Engine:
         from unitdb_spark.operators.get import apply_get
 
         self._metrics["gets"] += 1
-        return apply_get(self._live_df(), query, now=now)
+        q = Query(topic=query) if isinstance(query, str) else query
+        return apply_get(self._live_df([q.contract]), q, now=now)
 
     def get(
         self,
@@ -319,7 +320,8 @@ class Engine:
 
         t0 = time.monotonic()
         self._metrics["gets"] += len(queries)
-        rows = apply_get_many(self._live_df(), queries, now=now).select(
+        qs = [Query(topic=q) if isinstance(q, str) else q for q in queries]
+        rows = apply_get_many(self._live_df({q.contract for q in qs}), qs, now=now).select(
             "query_id", "seq", "payload"
         )
         out: list[list[tuple[int, bytes]]] = [[] for _ in queries]
@@ -333,13 +335,13 @@ class Engine:
         self._latencies["get"].append(time.monotonic() - t0)
         return [[p for _, p in sorted(l, reverse=True)] for l in out]
 
-    def _live_df(self) -> DataFrame:
-        """The committed rows minus tombstoned seqs, decrypted. Both
-        come from one version of the log: reading the table reads any
-        new version, and a store with no tombstone file plans no
-        anti-join."""
+    def _live_df(self, contracts: Iterable[int] | None = None) -> DataFrame:
+        """The committed rows (of ``contracts`` only, when given) minus
+        tombstoned seqs, decrypted. Both come from one version of the
+        log: reading the table reads any new version, and a store with
+        no tombstone file plans no anti-join."""
         self.flush()
-        df = self.table.read()
+        df = self.table.read(contracts)
         tombs = self.table.read_tombstones()
         if tombs is not None:
             # deletes are rare → broadcast anti-join, no shuffle of the big side
@@ -629,7 +631,7 @@ class Batch:
         tombs = eng.table.write_tombstones(self._deletes) if self._deletes else []
         rows = [eng._make_row(entry, ts)[1] for entry, ts in self._entries]
         if rows:
-            eng._append(eng.spark.createDataFrame(rows, MESSAGES_SCHEMA), max(r.seq for r in rows), tombs)
+            eng._append(eng.spark.createDataFrame(rows, MESSAGES_SCHEMA), tombs)
         elif tombs:
             eng.table.commit(add_tombstones=tombs)
         eng._metrics["puts"] += len(self._entries)

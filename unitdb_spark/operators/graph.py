@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 #: the self-join. There is no key to mint, so two different inputs
 #: never share a relation (a CacheManager match needs equal plans),
 #: and a relation lives exactly as long as the session's cache: it is
-#: dropped by `unpersist()` or `spark.catalog.clearCache()`
+#: released by `unpersist()` or `spark.catalog.clearCache()`
 #: (`clear_pair_cache`). At 100 TB you would materialize the edge
 #: list ONCE as a catalog-bucketed table (sources/bucketed.py —
 #: write_bucketed(edges, "copurchase_edges", ["src"]) — bucketed on
@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 
 def clear_pair_cache() -> None:
-    """Drop the persisted pair relations: the active session's
+    """Release the persisted pair relations: the active session's
     ``catalog.clearCache()``, which drops every other cached relation
     along with them. A no-op when no session is active."""
     spark = SparkSession.getActiveSession()
@@ -68,7 +68,7 @@ def cooccurrence_pairs(df: DataFrame, group_col: str, item_col: str) -> DataFram
     default), so N graph queries over one source pay ONE |group|² build:
     each later call over an equal source plan reads the cached
     relation (see the block comment above); Spark logs such a hit as
-    "Asked to cache already cached data". Drop it with
+    "Asked to cache already cached data". Release it with
     ``unpersist()`` on the returned frame, or with
     ``spark.catalog.clearCache()``.
 

@@ -563,7 +563,7 @@ def kanonymity_report(
     sensitive_col: str,
     k: int = 5,
 ) -> DataFrame:
-    """One-row k-anonymity / l-diversity audit before publishing data:
+    """One-row k-anonymity / l-diversity audit before a data release:
     group rows by the quasi-identifier columns and measure how much of
     the table sits in equivalence classes smaller than ``k`` (re-
     identifiable) and how many classes carry a single sensitive value

@@ -55,7 +55,7 @@ def semdedup(
     so it is persisted once (MEMORY_AND_DISK) — without it Spark
     re-runs the assignment subplan per branch. The persist is
     session-pinned (Spark has no plan-scoped lifetime); long-lived
-    jobs should free it with ``spark.catalog.clearCache()`` once
+    jobs should release it via ``spark.catalog.clearCache()`` once
     consumed. The final keeper join runs on the NARROW (id, cell)
     assignment relation (16 B/row — vectors never ride the closing
     exchange, and the dup side can be any size without a broadcast

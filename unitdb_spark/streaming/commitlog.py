@@ -24,8 +24,8 @@ any Spark-readable scheme works.
 
 Replay semantics: a batch whose id is logged is skipped (exactly-once
 within a checkpoint generation, closing Spark's replay-after-crash
-window — same discipline as the reference's WAL, freed only after its
-sync, db_sync.go). Restarting against an existing table with a *fresh*
+window — same discipline as the reference's WAL release after sync,
+db_sync.go). Restarting against an existing table with a *fresh*
 checkpoint replays the whole source and appends again — at-least-once,
 the honest answer for a non-transactional sink; true exactly-once
 across generations needs a transactional table format.

@@ -111,8 +111,8 @@ def ingest_stream(
     duplicate window to the instants between the data commit (one log
     version, never half visible) and the batch record; exactly-once needs
     the batch id in that version too. Same discipline as
-    streaming.continuous and the reference's WAL, freed only after its
-    sync (db_sync.go).
+    streaming.continuous and the reference's WAL-release-after-sync
+    (db_sync.go).
     """
     from unitdb_spark.streaming.commitlog import CommitLog
 

@@ -27,6 +27,7 @@ import re
 import time
 import uuid
 from collections import Counter
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -170,17 +171,17 @@ class MessagesTable:
         """Give a store written before the log its version 0, from one
         listing of each directory, after renaming files whose names
         repeat (a crash before the commit leaves a store this converts
-        again). A hidden directory beside the table is the stage of an
-        older sparkmsg's partition swap (the only one it made), left by a
-        crash: it raises, as the partition being replaced may be missing
-        or doubled."""
-        root = self.path.rsplit("/", 1)[0]
-        for name, _, is_dir in fs.list_status(self.spark, root):
-            if is_dir and name.startswith("."):
-                raise RuntimeError(
-                    f"{root}/{name} is left over from an interrupted partition swap "
-                    "of an older sparkmsg; restore its partitions by hand, remove it, reopen"
-                )
+        again). A file under ``.compact-part/``, the stage of an older
+        sparkmsg's partition swap, was left by a crash: it raises, as
+        the partition being replaced may be missing or doubled. The
+        empty directories a finished swap left there are removed."""
+        swap = self.path.rsplit("/", 1)[0] + "/.compact-part"
+        if fs.list_files(self.spark, swap + "/*/*/*/*"):
+            raise RuntimeError(
+                f"{swap} holds files of an interrupted partition swap of an older "
+                "sparkmsg; put each partition back from its stage/ or trash/ copy, remove it, reopen"
+            )
+        fs.delete(self.spark, swap)
         data, tombs = (
             {f for f in _tail(fs.list_files(self.spark, pattern), depth) if not re.search(r"(^|/)[_.]", f)}
             for pattern, depth in ((f"{self.path}/*/*/*.parquet", 3), (f"{self.tombstones_path}/*.parquet", 1))
@@ -252,41 +253,45 @@ class MessagesTable:
             rel: f"{rel.rpartition('/')[0] if part is None else part}/part-{i:05d}-{uid}.parquet".lstrip("/")
             for i, rel in enumerate(sorted(written))
         }
+        # one mkdirs per directory no committed file is in, so every
+        # move is a rename (a local disk copies a file renamed into a
+        # missing directory); directories are never removed
+        have = {f.rpartition("/")[0] for f in (self.files if root == self.path else self.tombstones)}
+        for d in {n.rpartition("/")[0] for n in names.values()} - have:
+            fs.mkdirs(self.spark, f"{root}/{d}".rstrip("/"))
         for rel, name in names.items():
             self._move(f"{stage}/{rel}", f"{root}/{name}")
         fs.delete(self.spark, stage)
         return list(names.values())
 
     def _move(self, src: str, dst: str) -> None:
-        """Rename. On a local disk a rename into a missing directory
-        makes it (~12 ms, against ~16 ms for a separate ``mkdirs`` first);
-        HDFS fails it, and the directory is made then."""
         if not fs.rename(self.spark, src, dst):
-            fs.mkdirs(self.spark, dst.rsplit("/", 1)[0])
-            if not fs.rename(self.spark, src, dst):
-                raise RuntimeError(f"could not move {src} to {dst}")
+            raise RuntimeError(f"could not move {src} to {dst}")
 
-    def append(self, df: DataFrame, max_seq: int | None = None, add_tombstones: list[str] = ()) -> None:
+    def append(self, df: DataFrame, add_tombstones: list[str] = ()) -> None:
         """Write fully-derived rows and commit them, with any tombstone
         files already written, as one version: all become visible
-        together, or none. ``max_seq`` is the rows' highest seq; unless
-        given it is observed during the write (a separate aggregate
-        would run the input plan twice)."""
-        if max_seq is None:
-            obs = Observation()
-            df = df.observe(obs, F.max("seq").alias("max_seq"))
-        add = self.write(df)
+        together, or none. The rows' highest seq is observed during the
+        write (a separate aggregate would run the input plan twice)."""
+        obs = Observation()
+        add = self.write(df.observe(obs, F.max("seq").alias("max_seq")))
         if add or add_tombstones:
-            top = obs.get["max_seq"] if max_seq is None else max_seq
-            self.commit(add=add, add_tombstones=add_tombstones, max_seq=top)
+            self.commit(add=add, add_tombstones=add_tombstones, max_seq=obs.get["max_seq"])
 
     # ------------------------------------------------------------ read
-    def read(self) -> DataFrame:
-        """The committed rows, with the explicit schema. Spark lists the
-        directory while it builds the relation and keeps the files the
-        log names; with none, the frame is empty and Spark is not asked."""
+    def read(self, contracts: Iterable[int] | None = None) -> DataFrame:
+        """The committed rows, of ``contracts`` only when given, with the
+        explicit schema. Spark lists the directory while it builds the
+        relation and keeps the files the log names (Hadoop matches every
+        listed file against each name, so naming one contract's files
+        keeps that cost to the contract); with none, the frame is empty
+        and Spark is not asked."""
         self.refresh()
-        return self._scan(self.path, self.files, self._full_schema())
+        files = self.files
+        if contracts is not None:
+            dirs = tuple(f"contract={int(c)}/" for c in contracts)
+            files = [f for f in files if f.startswith(dirs)]
+        return self._scan(self.path, files, self._full_schema())
 
     def read_tombstones(self) -> DataFrame | None:
         """The deleted seqs as of the last ``read`` or ``refresh``, or

@@ -88,10 +88,11 @@ def create_atomic(spark: SparkSession, path: str, text: str) -> bool:
     return False
 
 
-def rename(spark: SparkSession, src: str, dst: str) -> bool:
+def rename(spark: SparkSession, src: str, dst: str) -> None:
     fs, p_src = _fs(spark, src)
     _, p_dst = _fs(spark, dst)
-    return bool(fs.rename(p_src, p_dst))
+    if not fs.rename(p_src, p_dst):
+        raise OSError(f"could not rename {src} to {dst}")
 
 
 def tree_bytes(spark: SparkSession, path: str) -> int:

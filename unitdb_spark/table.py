@@ -171,16 +171,13 @@ class MessagesTable:
         """Give a store written before the log its version 0, from one
         listing of each directory, after renaming files whose names
         repeat (a crash before the commit leaves a store this converts
-        again). A file under ``.compact-part/``, the stage of an older
-        sparkmsg's partition swap, was left by a crash: it raises, as
-        the partition being replaced may be missing or doubled. The
-        empty directories a finished swap left there are removed."""
+        again). A file in an older sparkmsg's partition swap directory
+        was left by a crash, and the partition may be missing or doubled:
+        it raises. The empty directories a finished swap left go."""
         swap = self.path.rsplit("/", 1)[0] + "/.compact-part"
         if fs.list_files(self.spark, swap + "/*/*/*/*"):
-            raise RuntimeError(
-                f"{swap} holds files of an interrupted partition swap of an older "
-                "sparkmsg; put each partition back from its stage/ or trash/ copy, remove it, reopen"
-            )
+            raise RuntimeError(f"{swap} holds files of an interrupted partition swap of an older "
+                               "sparkmsg; put each partition back from stage/ or trash/, remove it, reopen")
         fs.delete(self.spark, swap)
         data, tombs = (
             {f for f in _tail(fs.list_files(self.spark, pattern), depth) if not re.search(r"(^|/)[_.]", f)}
@@ -193,7 +190,7 @@ class MessagesTable:
         for i, f in enumerate(sorted(data)):
             if names[f.rsplit("/", 1)[-1]] > 1:
                 new = f"{f.rsplit('/', 1)[0]}/part-{i:05d}-{uid}.parquet"
-                self._move(f"{self.path}/{f}", f"{self.path}/{new}")
+                fs.rename(self.spark, f"{self.path}/{f}", f"{self.path}/{new}")
                 data.remove(f)
                 data.add(new)
         top = self._scan(self.path, data, self._full_schema()).agg(F.max("seq")).first()[0]
@@ -253,20 +250,15 @@ class MessagesTable:
             rel: f"{rel.rpartition('/')[0] if part is None else part}/part-{i:05d}-{uid}.parquet".lstrip("/")
             for i, rel in enumerate(sorted(written))
         }
-        # one mkdirs per directory no committed file is in, so every
-        # move is a rename (a local disk copies a file renamed into a
-        # missing directory); directories are never removed
+        # one mkdirs per directory no committed file is in: a local disk
+        # copies a file renamed into a missing directory
         have = {f.rpartition("/")[0] for f in (self.files if root == self.path else self.tombstones)}
         for d in {n.rpartition("/")[0] for n in names.values()} - have:
             fs.mkdirs(self.spark, f"{root}/{d}".rstrip("/"))
         for rel, name in names.items():
-            self._move(f"{stage}/{rel}", f"{root}/{name}")
+            fs.rename(self.spark, f"{stage}/{rel}", f"{root}/{name}")
         fs.delete(self.spark, stage)
         return list(names.values())
-
-    def _move(self, src: str, dst: str) -> None:
-        if not fs.rename(self.spark, src, dst):
-            raise RuntimeError(f"could not move {src} to {dst}")
 
     def append(self, df: DataFrame, add_tombstones: list[str] = ()) -> None:
         """Write fully-derived rows and commit them, with any tombstone
@@ -280,12 +272,9 @@ class MessagesTable:
 
     # ------------------------------------------------------------ read
     def read(self, contracts: Iterable[int] | None = None) -> DataFrame:
-        """The committed rows, of ``contracts`` only when given, with the
-        explicit schema. Spark lists the directory while it builds the
-        relation and keeps the files the log names (Hadoop matches every
-        listed file against each name, so naming one contract's files
-        keeps that cost to the contract); with none, the frame is empty
-        and Spark is not asked."""
+        """The committed rows, of ``contracts`` only when given. Spark lists
+        the directory and keeps the files named (Hadoop matches each listed
+        file against every name); with none, Spark is not asked."""
         self.refresh()
         files = self.files
         if contracts is not None:

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
+from pathlib import Path
 
 import pytest
 
@@ -23,8 +24,6 @@ T0 = 1_700_000_000.0  # fixed test clock base
 
 def _parquet_files(root: str) -> list[str]:
     """The Parquet files on disk under ``root``, committed or not."""
-    from pathlib import Path
-
     return sorted(str(p) for p in Path(root).rglob("*.parquet"))
 
 
@@ -53,6 +52,87 @@ def _before_commits(monkeypatch, actions: list) -> list[bool]:
 
     monkeypatch.setattr(fs, "create_atomic", commit)
     return results
+
+
+def _jobs_and_writes(spark, monkeypatch, fn: Callable[[], object]) -> tuple[object, list[int], list[str]]:
+    """Run ``fn``; returns its result, the Spark jobs it started and the
+    ``DataFrameWriter`` methods it called."""
+    import uuid
+
+    from pyspark.sql import DataFrameWriter
+
+    writes = []
+
+    def spy(name):
+        real = getattr(DataFrameWriter, name)
+
+        def call(self, *args, **kwargs):
+            writes.append(name)
+            return real(self, *args, **kwargs)
+
+        return call
+
+    for name in ("parquet", "save", "saveAsTable", "insertInto"):
+        monkeypatch.setattr(DataFrameWriter, name, spy(name))
+    sc, group = spark.sparkContext, f"jobs-and-writes-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count what one call runs")
+    try:
+        out = fn()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group)), writes
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _with_tombstone_files(spark, path: str, keep_log: bool) -> None:
+    """Rewrite a store's deletes the way older sparkmsg stored them: each
+    version's deleted seqs become one Parquet file under ``tombstones/``,
+    named by that version's ``add_tombstones`` (``keep_log``), or, with
+    the log removed, found by the conversion's listing."""
+    import json
+    import shutil
+    import uuid
+
+    log = Path(path) / "messages" / "_log"
+    for i, f in enumerate(sorted(log.glob("*.json"))):
+        entry = json.loads(f.read_text())
+        assert "retire" not in entry
+        if "delete" not in entry:
+            continue
+        out = Path(path) / "tombstones" / f"_w{i}"
+        spark.createDataFrame([(s,) for s in entry.pop("delete")], "seq long").coalesce(1).write.parquet(str(out))
+        name = f"part-00000-{uuid.uuid4().hex}.parquet"
+        next(out.glob("*.parquet")).rename(out.parent / name)
+        shutil.rmtree(out)
+        entry["add_tombstones"] = [name]
+        f.write_text(json.dumps(entry))
+        f.with_name(f".{f.name}.crc").unlink()  # Hadoop's checksum of the old text
+    if not keep_log:
+        shutil.rmtree(log)
+
+
+def _at_every_crash(monkeypatch, base: str, tmp_dir: Path, run: Callable[[str], object],
+                    check: Callable[[str, str], None]) -> int:
+    """For k = 0, 1, …: copy store ``base``, call ``run(copy)`` with fs
+    call k raising, then ``check(copy, where)``. Returns the first k at
+    which ``run`` finished."""
+    import shutil
+
+    for k in range(100):
+        path = str(tmp_dir / f"k{k}")
+        shutil.copytree(base, path)
+        calls, _, undo = _crash_fs_at(monkeypatch, k)
+        try:
+            run(path)
+            crashed = False
+        except RuntimeError as e:
+            assert str(e).startswith("crash at"), e
+            crashed = True
+        finally:
+            undo()
+        check(path, f"crash at call {k}: {calls[-1]}")
+        if not crashed:
+            return k
+    pytest.fail("the run never finished without reaching the crash point")
 
 
 def _crash_fs_at(monkeypatch, k: int) -> tuple[list[str], list[int], Callable[[], None]]:
@@ -181,6 +261,23 @@ class TestBatch:
         assert engine.get(Query("ct.a", contract=c), now=T0 + 10) == [b"scoped"]
         assert engine.get("ct.a", now=T0 + 10) == []  # master sees nothing
 
+    def test_puts_and_deletes_are_one_parquet_write(self, engine: Engine, spark, monkeypatch):
+        """A batch writes its rows once and lists its deleted seqs in the
+        version that names the new files."""
+        first = engine.put_entry(Entry("d.c", b"old"), ts=T0)
+        engine.flush()
+
+        def batch():
+            with engine.batch() as b:
+                b.put_entry(Entry("d.c", b"new"), ts=T0 + 1)
+                b.delete(first)
+
+        _, _, writes = _jobs_and_writes(spark, monkeypatch, batch)
+        assert writes == ["parquet"]
+        last = _log_entries(engine.table)[-1]
+        assert last["delete"] == [first] and len(last["add"]) == 1
+        assert engine.get("d.c", now=T0 + 10) == [b"new"]
+
     def test_sync_and_close_flush(self, engine: Engine, spark):
         engine.put_entry(Entry("s.a", b"1"), ts=T0)
         engine.sync()
@@ -236,14 +333,17 @@ class TestGetPredicate:
     def test_missing_directories_read_as_empty(self, engine: Engine, spark):
         from unitdb_spark import fs
 
-        assert not fs.exists(spark, engine.tombstones_path)
         assert not fs.exists(spark, engine.table.path)
         assert engine.get("a.b", now=T0) == []
         assert engine.get_many(["a.b", "a.*"], now=T0) == [[], []]
         assert engine.count(now=T0) == 0
+        engine.delete(10**9)  # a seq no row holds
         engine.put_entry(Entry("a.b", b"x"), ts=T0)
-        assert engine.get("a.*", now=T0) == [b"x"]  # no tombstones/ dir
+        assert engine.get("a.*", now=T0) == [b"x"]
         assert engine.count(now=T0) == 1
+        # the delete is a log record, not a file
+        assert engine.table.deleted == {10**9}
+        assert not fs.exists(spark, f"{engine.path}/tombstones")
 
     def test_missing_messages_dir_is_not_read_by_spark(self, engine: Engine, monkeypatch):
         """A store without `messages/` answers Get, get_many and count
@@ -277,14 +377,20 @@ class TestGetPredicate:
         assert engine.table.path not in exists_calls
 
     def test_tombstone_dir_without_parquet_is_no_tombstones(self, engine: Engine, spark):
+        """A stray ``tombstones/_SUCCESS`` changes nothing: deletes are
+        read from the log, and the next open removes the directory."""
         from unitdb_spark import fs
 
         for i in range(3):
             engine.put_entry(Entry("d.t", b"%d" % i), ts=T0 + i)
-        fs.write_text(spark, f"{engine.tombstones_path}/_SUCCESS", "")
-        assert engine.table.read_tombstones() is None
+        fs.write_text(spark, f"{engine.path}/tombstones/_SUCCESS", "")
+        assert engine.table.read_deleted() is None
         assert engine.get("d.t", now=T0 + 10) == [b"2", b"1", b"0"]
         assert engine.count(now=T0 + 10) == 3
+        reopened = Engine(spark, engine.path)
+        assert reopened.table.deleted == set()
+        assert reopened.get("d.t", now=T0 + 10) == [b"2", b"1", b"0"]
+        assert not fs.exists(spark, f"{engine.path}/tombstones")
 
     def test_fractional_now_and_subsecond_last(self, engine: Engine):
         for name, dt_s in (("old", 0.0), ("edge", 0.25), ("new", 0.6)):
@@ -310,20 +416,34 @@ class TestGetPredicate:
             r = spark.range(1).select(F.lit(naive).alias("a"), F.expr(now_sql(v)).alias("b")).first()
             assert r.a == r.b
 
-    def test_get_df_starts_no_job(self, engine: Engine, spark):
-        """Building a Get's plan runs nothing: the tombstone table is
-        read with its schema, not inferred by a Spark job."""
+    def test_get_df_starts_no_job(self, engine: Engine, spark, monkeypatch):
+        """Building a Get's plan runs nothing: the deleted seqs are a
+        local relation, and the data files are read with their schema,
+        not inferred by a Spark job."""
         seqs = [engine.put_entry(Entry("j.t", b"%d" % i), ts=T0 + i) for i in range(4)]
         engine.flush()
         engine.delete(seqs[1])
-        sc = spark.sparkContext
-        sc.setJobGroup("get-df-build", "build a Get's DataFrame")
-        try:
-            df = engine.get_df(Query("j.t"), now=T0 + 10)
-            assert list(sc.statusTracker().getJobIdsForGroup("get-df-build")) == []
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+        df, jobs, _ = _jobs_and_writes(spark, monkeypatch, lambda: engine.get_df(Query("j.t"), now=T0 + 10))
+        assert jobs == []
         assert [r["payload"] for r in df.collect()] == [b"3", b"2", b"0"]
+
+    def test_pending_deletes_are_a_broadcast_local_relation(self, engine: Engine):
+        """A Get anti-joins the pending deleted seqs as the broadcast
+        build side, a ``LocalTableScan`` (no Python job, no file); the
+        only Parquet scan is of ``messages/``."""
+        seqs = [engine.put_entry(Entry("j.t", b"%d" % i), ts=T0 + i) for i in range(4)]
+        engine.delete(seqs[0])
+        engine.delete(seqs[2])
+        df = engine.get_df(Query("j.t"), now=T0 + 10)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        lines = plan.splitlines()
+        join = next(i for i, l in enumerate(lines) if "BroadcastHashJoin" in l)
+        assert "LeftAnti, BuildRight" in lines[join]
+        build = [l.strip() for l in lines[join + 1:] if "BroadcastExchange" in l or "LocalTableScan" in l]
+        assert build[0].startswith("+- BroadcastExchange") and build[1].startswith("+- LocalTableScan [seq")
+        assert plan.count("FileScan parquet") == 1
+        assert {f.split("/messages/", 1)[1] for f in df.inputFiles()} == engine.table.files
+        assert [r["payload"] for r in df.collect()] == [b"3", b"1"]
 
 
 class TestExpiry:
@@ -368,7 +488,7 @@ class TestExpiry:
         """A crash right after purge_expired's first rename must be
         recovered at the next open: same reads, and the seq counter
         resumes above every stored seq (a reused seq would be hidden by
-        a tombstone still on disk)."""
+        a delete still pending in the log)."""
         from unitdb_spark import fs
 
         path = str(tmp_path / "purgecrash")
@@ -410,6 +530,20 @@ class TestDelete:
         seqs = [engine.put_entry(Entry("d.t", b"m%d" % i), ts=T0 + i) for i in range(4)]
         engine.delete(seqs[2])
         assert engine.get("d.t", now=T0 + 10) == [b"m3", b"m1", b"m0"]
+
+    def test_delete_is_one_log_commit(self, engine: Engine, spark, monkeypatch):
+        """A delete starts no Spark job and writes no file: its one fs
+        call publishes the log version that lists the seq."""
+        seq = engine.put_entry(Entry("d.t", b"x"), ts=T0)
+        engine.flush()
+        calls, _, undo = _crash_fs_at(monkeypatch, 10**6)
+        try:
+            _, jobs, writes = _jobs_and_writes(spark, monkeypatch, lambda: engine.delete(seq))
+        finally:
+            undo()
+        assert (jobs, writes, calls) == ([], [], ["create_atomic"])
+        assert _log_entries(engine.table)[-1] == {"delete": [seq], "max_seq": seq}
+        assert engine.get("d.t", now=T0 + 10) == []
 
     def test_immutable_forbids_delete(self, spark, tmp_path):
         eng = Engine.open(spark, str(tmp_path / "imm"), immutable=True)
@@ -526,7 +660,7 @@ class TestCountVarz:
         assert lat["n"] == 3
         assert 0 < lat["p50"] <= lat["p95"] <= lat["p999"]
         assert lat["hmean"] > 0
-        # one flushed append, one tombstone write
+        # one flushed append, one delete commit
         for op in ("put", "del"):
             assert varz[f"{op}_latency"]["n"] == 1
             assert varz[f"{op}_latency"]["p50"] > 0
@@ -665,6 +799,28 @@ class TestCompact:
         finally:
             eng.destroy()
 
+    def test_uncommitted_file_does_not_size_a_partition(self, spark, tmp_path):
+        """A crashed write's file in a fragmented partition is not data:
+        the partition compacts to the same file count with it as
+        without it."""
+        import shutil
+
+        base = str(tmp_path / "sized")
+        eng = Engine.open(spark, base)
+        for i in range(6):
+            eng.put_entry(Entry("frag.topic", b"m%d" % i), ts=T0 + i)
+            eng.flush()
+        committed = sum(Path(f).stat().st_size for f in _parquet_files(eng.table.path))
+        stray_store = str(tmp_path / "stray")
+        shutil.copytree(base, stray_store)
+        (part,) = eng.table.partitions()
+        stray = Path(stray_store) / "messages" / part / "part-00000-0123456789abcdef0123456789abcdef.parquet"
+        stray.write_bytes(b"\0" * (10 * committed))
+        reports = [Engine(spark, p).compact(target_file_bytes=committed + 1, min_files=4) for p in (base, stray_store)]
+        assert reports[0] == reports[1] == {part: (6, 1)}
+        assert stray.exists()  # not the compaction's to reclaim
+        assert Engine(spark, stray_store).get("frag.topic", now=T0 + 100) == [b"m%d" % i for i in reversed(range(6))]
+
 
 class TestVacuum:
     def test_vacuum_applies_tombstones_physically_and_retires_them(
@@ -683,12 +839,12 @@ class TestVacuum:
             eng.delete(seqs[1])
             eng.delete(seqs[4])
             before = eng.get("v.t", now=T0 + 100_000)
-            assert len(before) == 3  # tombstones already applied at read
+            assert len(before) == 3  # deletes already applied at read
             report = eng.vacuum()
             assert sum(report.values()) == 2 and len(report) == 2
-            # tombstone set retired (and its files deleted); reads unchanged
-            assert eng.table.tombstones == set()
-            assert _parquet_files(eng.tombstones_path) == []
+            # the deleted set is retired by the vacuum's version; reads unchanged
+            assert eng.table.deleted == set()
+            assert _log_entries(eng.table)[-1]["retire"] == sorted([seqs[1], seqs[4]])
             assert eng.get("v.t", now=T0 + 100_000) == before
             # rows are PHYSICALLY gone (raw read, no anti-join)
             raw = {r["seq"] for r in eng.table.read().select("seq").collect()}
@@ -712,9 +868,10 @@ class TestVacuum:
             eng.put_entry(Entry("v.t", b"keep"), ts=T0)
             eng.flush()
             eng.delete(10_000_000)  # matches nothing
+            files = set(eng.table.files)
             assert eng.vacuum() == {}
-            assert eng.table.tombstones == set()
-            assert _parquet_files(eng.tombstones_path) == []
+            assert eng.table.deleted == set() and eng.table.files == files
+            assert _log_entries(eng.table)[-1] == {"retire": [10_000_000], "max_seq": 1}
             assert eng.get("v.t", now=T0 + 10) == [b"keep"]
         finally:
             eng.destroy()
@@ -863,69 +1020,91 @@ class TestLogConversion:
     """A store written before the log existed converts on open."""
 
     @staticmethod
-    def _old_store(spark, tmp_path) -> tuple[str, list[bytes], int]:
-        """Plain partitioned Parquet and a tombstone directory, as the
-        directory-layout engine left them, with file names repeated
-        across partitions; returns (path, live payloads, max seq)."""
-        src = Engine.open(spark, str(tmp_path / "src"))
+    def _old_store(spark, tmp_path, logged: bool = False) -> tuple[str, list[bytes], int, list[int]]:
+        """Without ``logged``: plain partitioned Parquet and a tombstone
+        directory, as the directory-layout engine left them, with file
+        names repeated across partitions. With it: a store with the log
+        whose deletes are tombstone files its versions name. Returns
+        (path, live payloads, max seq, deleted seqs)."""
+        src = Engine.open(spark, str(tmp_path / ("src-logged" if logged else "src")))
         seqs = [src.put_entry(Entry("o.t", b"p%d" % i), ts=T0 + i * 40_000) for i in range(6)]
         src.flush()
         src.delete(seqs[2])
+        src.delete(seqs[4])
         live = src.get("o.t", now=T0 + 300_000)
+        if logged:
+            _with_tombstone_files(spark, src.path, keep_log=True)
+            return src.path, live, max(seqs), [seqs[2], seqs[4]]
         path = str(tmp_path / "old")
         src.table.read().repartition(2).write.partitionBy("contract", "p_date").parquet(
             f"{path}/messages"
         )
-        src.table.read_tombstones().write.parquet(f"{path}/tombstones")
-        return path, live, max(seqs)
+        spark.createDataFrame([(s,) for s in src.table.deleted], "seq long").write.parquet(f"{path}/tombstones")
+        return path, live, max(seqs), [seqs[2], seqs[4]]
 
     def test_store_without_log_gets_version_zero(self, spark, tmp_path):
-        path, live, top = self._old_store(spark, tmp_path)
+        from unitdb_spark import fs
+
+        path, live, top, deleted = self._old_store(spark, tmp_path)
         names = [p.rsplit("/", 1)[-1] for p in _parquet_files(f"{path}/messages")]
         assert len(names) > len(set(names))  # one write repeats names
         eng = Engine(spark, path)
-        assert eng.table.version == 0
+        # version 0 names the files found; version 1 moves the deletes
+        # from the tombstone files into the log
+        log = _log_entries(eng.table)
+        assert len(log) == 2 and log[0]["add_tombstones"] == log[1]["remove_tombstones"]
+        assert log[1]["delete"] == sorted(deleted)
+        assert eng.table.deleted == set(deleted) and eng.table.tombstones == set()
+        assert not fs.exists(spark, f"{path}/tombstones")
         assert eng.get("o.t", now=T0 + 300_000) == live
-        assert len(eng.table.tombstones) == 1
         names = [p.rsplit("/", 1)[-1] for p in _parquet_files(f"{path}/messages")]
         assert len(names) == len(set(names)) == len(eng.table.files)
         assert eng.put_entry(Entry("o.t", b"next"), ts=T0) > top
         eng.flush()
-        assert Engine(spark, path).table.version == 1  # read, not converted again
+        assert Engine(spark, path).table.version == 2  # read, not converted again
+
+    def test_tombstone_files_of_a_logged_store_move_into_the_log(self, spark, tmp_path):
+        from unitdb_spark import fs
+
+        path, live, _, deleted = self._old_store(spark, tmp_path, logged=True)
+        assert len(_parquet_files(f"{path}/tombstones")) == 2
+        eng = Engine(spark, path)
+        log = _log_entries(eng.table)
+        assert sum(len(e.get("add_tombstones", ())) for e in log) == len(log[-1]["remove_tombstones"]) == 2
+        assert log[-1]["delete"] == sorted(deleted)
+        assert eng.table.deleted == set(deleted) and eng.table.tombstones == set()
+        assert not fs.exists(spark, f"{path}/tombstones")
+        assert eng.get("o.t", now=T0 + 300_000) == live
+        assert Engine(spark, path).table.version == eng.table.version  # not converted again
 
     def test_crash_at_every_fs_call_converts_again(self, spark, tmp_path, monkeypatch):
         """A conversion cut at any fs call leaves a store the next open
-        converts whole: the same live rows, no duplicate seq."""
-        import shutil
+        converts whole: the same live rows (no deleted row comes back),
+        no duplicate seq, no tombstone file. Both a store without a log
+        and one whose versions name tombstone files."""
+        for logged in (False, True):
+            base, live, top, deleted = self._old_store(spark, tmp_path, logged)
+            # the versions a finished conversion leaves: version 0 and the
+            # deletes' version, or the logged store's and the deletes'
+            versions = len(list(Path(base, "messages", "_log").glob("*.json"))) or 1
 
-        base, live, top = self._old_store(spark, tmp_path)
-        for k in range(100):
-            path = str(tmp_path / f"k{k}")
-            shutil.copytree(base, path)
-            _, _, undo = _crash_fs_at(monkeypatch, k)
-            try:
-                Engine(spark, path)
-                crashed = False
-            except RuntimeError as e:
-                assert str(e).startswith("crash at"), e
-                crashed = True
-            finally:
-                undo()
-            eng = Engine(spark, path)
-            assert eng.table.version == 0, f"crash at call {k}"
-            assert eng.get("o.t", now=T0 + 300_000) == live, f"crash at call {k}"
-            raw = [r["seq"] for r in eng.table.read().select("seq").collect()]
-            assert len(raw) == len(set(raw)) and max(raw) == top, f"crash at call {k}"
-            if not crashed:
-                break
-        else:
-            pytest.fail("the conversion never finished without reaching the crash point")
-        assert k >= 5  # at least: read version 0, list three times, rename, commit
+            def check(path, where):
+                eng = Engine(spark, path)
+                assert eng.table.version == versions, where
+                assert eng.table.deleted == set(deleted) and eng.table.tombstones == set(), where
+                assert not Path(path, "tombstones").exists(), where
+                assert eng.get("o.t", now=T0 + 300_000) == live, where
+                raw = [r["seq"] for r in eng.table.read().select("seq").collect()]
+                assert len(raw) == len(set(raw)) and max(raw) == top, where
+
+            k = _at_every_crash(monkeypatch, base, tmp_path / f"crash-{logged}", lambda p: Engine(spark, p), check)
+            # at least: read the log, list (pre-log), commit, drop tombstones/
+            assert k >= 5
 
     def test_leftover_partition_swap_raises(self, spark, tmp_path):
         from unitdb_spark import fs
 
-        path, _, _ = self._old_store(spark, tmp_path)
+        path, _, _, _ = self._old_store(spark, tmp_path)
         trash = f"{path}/.compact-part/trash/contract=1/p_date=2023-11-14"
         fs.mkdirs(spark, trash)
         fs.write_text(spark, f"{trash}/part-00000.parquet", "")
@@ -939,12 +1118,12 @@ class TestLogConversion:
         hidden directories are not the engine's and stay."""
         from unitdb_spark import fs
 
-        path, live, _ = self._old_store(spark, tmp_path)
+        path, live, _, _ = self._old_store(spark, tmp_path)
         for half in ("stage", "trash"):
             fs.mkdirs(spark, f"{path}/.compact-part/{half}/contract=1")
         fs.mkdirs(spark, f"{path}/.ipynb_checkpoints")
         eng = Engine(spark, path)
-        assert eng.table.version == 0
+        assert eng.table.version == 1
         assert eng.get("o.t", now=T0 + 300_000) == live
         assert not fs.exists(spark, f"{path}/.compact-part")
         assert fs.exists(spark, f"{path}/.ipynb_checkpoints")
@@ -1052,7 +1231,35 @@ class TestCrashPoints:
                 break
         else:
             pytest.fail("the write never finished without reaching the crash point")
-        assert k >= 3  # at least: list the stage, move a file, drop the stage, commit
+        # a delete is one commit; a data write at least lists the stage,
+        # moves a file, drops the stage and commits
+        assert (k == 1) if op == "delete" else (k >= 3)
+
+    @pytest.mark.parametrize("logged", [False, True], ids=["pre_log", "logged"])
+    def test_crash_at_every_fs_call_of_the_tombstone_conversion(
+        self, spark, base_store, tmp_path, monkeypatch, logged
+    ):
+        """The base store's deletes as tombstone files of an older
+        sparkmsg, without a log or named by its versions: opening it is
+        cut at every fs call, and each reopened store has the live seqs
+        of the base (no deleted row comes back) and no tombstone file."""
+        import shutil
+
+        before = self._live_seqs(Engine(spark, base_store), self.NOW)
+        old = str(tmp_path / "old")
+        shutil.copytree(base_store, old)
+        _with_tombstone_files(spark, old, keep_log=logged)
+        assert _parquet_files(f"{old}/tombstones")
+
+        def check(path, where):
+            reopened = Engine(spark, path)
+            assert self._live_seqs(reopened, self.NOW) == before, where
+            assert reopened.table.tombstones == set() and not Path(path, "tombstones").exists(), where
+            raw = [r["seq"] for r in reopened.table.read().select("seq").collect()]
+            assert len(raw) == len(set(raw)), where
+            assert reopened.put_entry(Entry("k.t", b"new"), ts=self.NOW) > max(raw)
+
+        assert _at_every_crash(monkeypatch, old, tmp_path, lambda p: Engine(spark, p), check) >= 3
 
 
 class TestCompactMixedGenerations:
@@ -1119,14 +1326,14 @@ class TestVacuumConcurrency:
         report = eng.vacuum()
         assert results == [True, False, True]  # vacuum lost a version, then won
         assert sum(report.values()) == 1  # only the tombstone it read applied
-        # the concurrent tombstone survived the retire step...
-        assert len(eng.table.tombstones) == len(_parquet_files(eng.tombstones_path)) == 1
+        # the concurrent delete survived the retire step...
+        assert eng.table.deleted == {seqs[1]}
         # ...so the row stays hidden from reads
         assert len(eng.get("v.t", now=T0 + 100)) == 1
         # and the NEXT vacuum applies it physically
         report2 = eng.vacuum()
         assert sum(report2.values()) == 1
-        assert eng.table.tombstones == set()
+        assert eng.table.deleted == set()
         raw = {r["seq"] for r in eng.table.read().select("seq").collect()}
         assert raw == {seqs[2]}
 
@@ -1152,9 +1359,9 @@ class TestVacuumConcurrency:
         # nothing left to commit
         assert results == [True, False]
         assert report == {}
-        assert len(eng.table.tombstones) == 1
+        assert eng.table.deleted == {seqs[0]}
         assert eng.get("v.t", now=T0 + 100) == [b"d2", b"d1"]
         # the next run applies the kept tombstone
         assert sum(eng.vacuum().values()) == 1
-        assert eng.table.tombstones == set()
+        assert eng.table.deleted == set()
         assert eng.get("v.t", now=T0 + 100) == [b"d2", b"d1"]

@@ -10,12 +10,13 @@ batch.go:60-293) onto DataFrame operations:
   at one point like unitdb's WAL sync (db_sync.go), a create-if-absent
   version of the messages table's log (``MessagesTable``)
 - ``Get``    -> one declarative DataFrame expression: contract filter →
-  topic match → trailing-window cutoff → TTL filter → tombstone
-  anti-join → newest-first top-K (db.go:222-319)
-- ``Delete/DeleteEntry`` -> tombstone file + read-time anti-join
-  (db.go:389-425); forbidden when immutable (options.go:102-119)
+  topic match → trailing-window cutoff → TTL filter → anti-join with
+  the deleted seqs → newest-first top-K (db.go:222-319)
+- ``Delete/DeleteEntry`` -> one log version listing the seq, applied by
+  a read-time anti-join (db.go:389-425: a record appended to the log);
+  forbidden when immutable (options.go:102-119)
 - ``Batch``  -> context manager; commit = one log version holding the
-  batch's data and tombstone files, abort = drop buffer
+  batch's data files and deleted seqs, abort = drop buffer
   (batch.go:60-293)
 - ``Count``  -> live-entry count (db.go:474-482)
 
@@ -23,11 +24,11 @@ Scale notes (100 TB): every Get compiles to a single Catalyst plan. It
 prunes only the ``contract`` partition: a traced Get reads every file
 of its contract (``get_mix`` seed 7: 30 files and 252,788 rows for
 1,355 returned). Only a ``?last=`` Get's ``ts`` filter reaches Parquet
-row groups; no Get prunes a ``p_date`` partition. The tombstone side
-of the anti-join is broadcast (deletes are rare relative to data). The
-driver still walks rows: ``_capped_fetch`` iterates every fetched row
-to enforce the byte cap, and ``get_many`` sorts each query's payloads
-on the driver.
+row groups; no Get prunes a ``p_date`` partition. The deleted seqs
+pending a vacuum are the broadcast side of the anti-join, a local
+relation built on the driver from the log. The driver still walks
+rows: ``_capped_fetch`` iterates every fetched row to enforce the byte
+cap, and ``get_many`` sorts each query's payloads on the driver.
 """
 
 from __future__ import annotations
@@ -122,7 +123,6 @@ class Engine:
         self.path = str(path)
         self.options = options or EngineOptions()
         self.table = MessagesTable(spark, str(Path(self.path) / "messages"))
-        self.tombstones_path = self.table.tombstones_path
         self._seq = _SeqSource()
         self._buffer: list[Row] = []
         self._metrics: dict[str, int] = {"puts": 0, "gets": 0, "dels": 0}
@@ -234,12 +234,12 @@ class Engine:
         self._append(df)
         self._buffer.clear()
 
-    def _append(self, df: DataFrame, tombstones: list[str] = ()) -> None:
-        """One atomic append of encrypted rows (and a batch's tombstone
-        files), the commit unit of flush, put_df and batch commit, timed
+    def _append(self, df: DataFrame, delete: list[int] = ()) -> None:
+        """One atomic append of encrypted rows (and a batch's deleted
+        seqs), the commit unit of flush, put_df and batch commit, timed
         into the put reservoir: one version of the table's log."""
         t0 = time.monotonic()
-        self.table.append(self._codec(df, F.aes_encrypt), tombstones)
+        self.table.append(self._codec(df, F.aes_encrypt), delete)
         self._seq.advance_to(self.table.max_seq)
         self._latencies["put"].append(time.monotonic() - t0)
 
@@ -296,9 +296,9 @@ class Engine:
         everything. ``get_df`` is the scale path: it never materializes
         results driver-side and has no cap.
 
-        A store whose ``messages/`` or ``tombstones/`` directory does not
-        exist reads as holding no messages or no deletes: ``[]``, not an
-        error."""
+        A store whose ``messages/`` directory does not exist reads as
+        holding no messages: ``[]``, not an error. Deleted seqs come
+        from the log, not from a directory."""
         cap = (
             self.options.max_get_result_bytes
             if max_result_bytes is _UNSET
@@ -337,26 +337,26 @@ class Engine:
 
     def _live_df(self, contracts: Iterable[int] | None = None) -> DataFrame:
         """The committed rows (of ``contracts`` only, when given) minus
-        tombstoned seqs, decrypted. Both come from one version of the
-        log: reading the table reads any new version, and a store with
-        no tombstone file plans no anti-join."""
+        deleted seqs, decrypted. Both come from one version of the log:
+        reading the table reads any new version, and a store with no
+        pending delete plans no anti-join."""
         self.flush()
         df = self.table.read(contracts)
-        tombs = self.table.read_tombstones()
-        if tombs is not None:
-            # deletes are rare → broadcast anti-join, no shuffle of the big side
-            df = df.join(F.broadcast(tombs), on="seq", how="left_anti")
+        deleted = self.table.read_deleted()
+        if deleted is not None:
+            # broadcast anti-join: the big side never shuffles
+            df = df.join(F.broadcast(deleted), on="seq", how="left_anti")
         return self._codec(df, F.aes_decrypt)
 
     # ----------------------------------------------------------- delete
     def delete(self, seq: int) -> None:
-        """db.go:389-425 Delete(): tombstone by sequence, as one
-        tombstone file committed as one log version."""
+        """db.go:389-425 Delete(): one log version listing the seq; no
+        Spark job, no data file."""
         if self.options.immutable:
             raise ImmutableError("delete forbidden: store is immutable")
         t0 = time.monotonic()
         self._metrics["dels"] += 1
-        self.table.commit(add_tombstones=self.table.write_tombstones([seq]))
+        self.table.commit(delete=[int(seq)])
         self._latencies["del"].append(time.monotonic() - t0)
 
     def delete_entry(self, entry: Entry) -> None:
@@ -375,14 +375,15 @@ class Engine:
 
     # ------------------------------------------------------------ admin
     def count(self, now: float | None = None) -> int:
-        """db.go:474-482 Count(): live entries (TTL + tombstones applied)."""
+        """db.go:474-482 Count(): live entries (TTL + deletes applied)."""
         return self._live_df().filter(ttl_live_expr(now)).count()
 
     def file_size(self) -> int:
-        """db.go:474-482 FileSize(): bytes on storage for this store
-        (messages + tombstones; buffered rows not yet flushed don't
-        count, matching the reference where only synced files do).
-        One recursive content-summary listing — no data read."""
+        """db.go:474-482 FileSize(): bytes on storage under the store's
+        directory — data files and log, and also the files of a write that
+        crashed before its commit, which nothing reclaims yet. Buffered rows
+        not yet flushed don't count, matching the reference where only synced
+        files do. One recursive content-summary listing — no data read."""
         return fs.tree_bytes(self.spark, self.path)
 
     def varz(self) -> dict:
@@ -417,16 +418,16 @@ class Engine:
     def _rewrite(
         self,
         rewrites: dict[str, Callable[[DataFrame], DataFrame]],
-        retire: Iterable[str] = (),
+        retire: Iterable[int] = (),
     ) -> dict[str, tuple[int, int]]:
         """Write ``rewrites[part](rows of part)`` for each partition,
         then commit one version that adds the new files, drops the files
-        read and retires the tombstone files ``retire``. If another
-        writer committed first, a partition any of whose read files it
-        dropped is skipped (its new files deleted, and nothing retired,
-        or its deleted rows would come back) and the commit retried; a
-        file appended meanwhile stays. Dropped files are deleted after
-        the commit; a crash anywhere leaves the old version or the new.
+        read and retires the deleted seqs ``retire``. If another writer
+        committed first, a partition any of whose read files it dropped
+        is skipped (its new files deleted, and nothing retired, or its
+        deleted rows would come back) and the commit retried; a file
+        appended meanwhile stays. Dropped files are deleted after the
+        commit; a crash anywhere leaves the old version or the new.
         Returns {part: (files read, files written)} as committed."""
         t = self.table
         by_part = t.partitions()
@@ -445,20 +446,18 @@ class Engine:
                 for f in done.pop(part)[1]:
                     fs.delete(self.spark, f"{t.path}/{f}")
                 retire = []
-            retire = [f for f in retire if f in t.tombstones]
+            retire = [s for s in retire if s in t.deleted]
             if not done and not retire:
                 return {}
             if t.commit(
                 add=[f for _, new in done.values() for f in new],
                 remove=[f for old, _ in done.values() for f in old],
-                remove_tombstones=retire,
+                retire=retire,
             ):
                 break
         for old, _ in done.values():
             for f in old:
                 fs.delete(self.spark, f"{t.path}/{f}")
-        for f in retire:
-            fs.delete(self.spark, f"{t.tombstones_path}/{f}")
         return {p: (len(old), len(new)) for p, (old, new) in done.items()}
 
     def purge_expired(self, now: float | None = None) -> None:
@@ -479,47 +478,39 @@ class Engine:
         })
 
     def vacuum(self) -> dict[str, int]:
-        """Physically apply delete tombstones, then drop them — the
+        """Physically apply the pending deletes, then retire them — the
         free-block reclaim half of Delete (reference: deletes return
         blocks to the free lists for reuse, leasing.go +
-        db_internal.go:143; here tombstoned rows leave the Parquet
-        files and the read path's anti-join shrinks to nothing).
+        db_internal.go:143; here deleted rows leave the Parquet files
+        and the read path's anti-join shrinks to nothing).
 
         Selective like compact(): the partitions whose seq range holds
-        a tombstoned seq are found by JOINING the tombstone relation
-        against the broadcast partition-range aggregate — the rewrite
-        cost tracks deleted data, not table size, and a MASS delete
-        (GDPR-style, millions of tombstones) stays fully distributed:
-        nothing serializes through the driver except the
-        affected-partition list, and the per-partition rewrite is an
-        anti-JOIN on seq, never a driver-built IN-list. The rewrites
-        and the retirement of the tombstone files read are one version
-        (``_rewrite``); tombstones committed after that read stay for
-        the next run. Returns {partition_dir: rows_removed}.
+        a deleted seq are found by JOINING the deleted seqs against the
+        broadcast partition-range aggregate, so the rewrite cost tracks
+        deleted data, not table size. The seqs are in the log and so on
+        the driver; Gets and this job read them as one local relation.
+        The only collect is the affected-partition list, and the
+        per-partition rewrite is an anti-JOIN on seq, never an IN-list.
+        The rewrites and the retirement of the seqs read are one version
+        (``_rewrite``); seqs deleted after that read stay for the next
+        run. Returns {partition_dir: rows_removed}.
         """
         self.flush()
         t = self.table
         rows = t.read()
-        tombs = t.read_tombstones()
-        if tombs is None:
+        deleted = t.read_deleted()
+        if deleted is None:
             return {}
-        retire = list(t.tombstones)
-        tomb_seqs = tombs.distinct()
+        retire = list(t.deleted)
         removed: dict[str, int] = {}
-        # affected-partition discovery is a JOIN, not a driver-side
-        # intersect: a mass delete may tombstone millions of seqs, which
-        # must never serialize through the driver or inflate a plan
-        # IN-list. The partition-range aggregate (one row per partition)
-        # is the broadcast side; the only collect is the affected-partition
-        # list itself.
         ranges = rows.groupBy("contract", "p_date").agg(F.min("seq").alias("lo"), F.max("seq").alias("hi"))
-        for r in _tombstone_affected(ranges, tomb_seqs).collect():
+        for r in _tombstone_affected(ranges, deleted).collect():
             part = _part_dir(r["contract"], r["p_date"])
-            n = t.read_partition(part).join(tomb_seqs, "seq", "leftsemi").count()
+            n = t.read_partition(part).join(deleted, "seq", "leftsemi").count()
             if n:
                 removed[part] = n
         done = self._rewrite(
-            {part: lambda df: _partition_kept(df, tomb_seqs) for part in removed}, retire
+            {part: lambda df: _partition_kept(df, deleted) for part in removed}, retire
         )
         return {part: removed[part] for part in done}
 
@@ -538,8 +529,8 @@ class Engine:
         coalescing each to ceil(bytes / target_file_bytes) seq-sorted
         files — it never touches healthy partitions, so the job's cost
         tracks fragmentation, not table size (compaction of a day's
-        worth of micro-batches reads a day, not the decade). The file
-        counts come from the log, not a directory walk.
+        worth of micro-batches reads a day, not the decade). Only the
+        files the log names count, in number and in bytes.
 
         Appends go on meanwhile; the rewrites are one version, committed
         by ``_rewrite``. Returns {partition_dir: (files_before,
@@ -551,7 +542,9 @@ class Engine:
         for part, files in self.table.partitions().items():
             if len(files) < min_files:
                 continue
-            n_out = max(1, math.ceil(fs.tree_bytes(self.spark, f"{self.table.path}/{part}") / target_file_bytes))
+            on_disk = fs.list_files(self.spark, f"{self.table.path}/{part}/*.parquet")
+            size = sum(n for p, n in on_disk.items() if p.endswith(tuple(files)))
+            n_out = max(1, math.ceil(size / target_file_bytes))
             if n_out < len(files):
                 # sort AFTER coalesce: the merged output files stay
                 # seq-sorted end to end, the layout `append` writes —
@@ -608,7 +601,7 @@ class Batch:
         self._entries.append((entry, ts))
 
     def delete(self, seq: int) -> None:
-        """batch.go:108 Delete(): tombstone staged until commit."""
+        """batch.go:108 Delete(): the seq is staged until commit."""
         if self.engine.options.immutable:
             raise ImmutableError("delete forbidden: store is immutable")
         self._deletes.append(int(seq))
@@ -621,19 +614,18 @@ class Batch:
 
     def commit(self) -> None:
         """All-or-nothing: every entry was validated at staging time;
-        the rows and the tombstones are written to new files, bypassing
-        the engine's incremental buffer (no flush_every flush can fire
-        mid-batch), and then ONE log version names them all. A reader
-        sees the batch's puts and deletes together or neither, and a
-        failure before the commit persists nothing."""
+        the rows are written to new files, bypassing the engine's
+        incremental buffer (no flush_every flush can fire mid-batch),
+        and then ONE log version names them and lists the deleted seqs.
+        A reader sees the batch's puts and deletes together or neither,
+        and a failure before the commit persists nothing."""
         eng = self.engine
         eng.flush()  # earlier direct puts are a separate commit unit
-        tombs = eng.table.write_tombstones(self._deletes) if self._deletes else []
         rows = [eng._make_row(entry, ts)[1] for entry, ts in self._entries]
         if rows:
-            eng._append(eng.spark.createDataFrame(rows, MESSAGES_SCHEMA), tombs)
-        elif tombs:
-            eng.table.commit(add_tombstones=tombs)
+            eng._append(eng.spark.createDataFrame(rows, MESSAGES_SCHEMA), self._deletes)
+        elif self._deletes:
+            eng.table.commit(delete=self._deletes)
         eng._metrics["puts"] += len(self._entries)
         eng._metrics["dels"] += len(self._deletes)
         self._entries.clear()
@@ -671,11 +663,9 @@ def _part_dir(contract: int, p_date: dt.date) -> str:
 
 
 def _tombstone_affected(ranges: DataFrame, tomb_seqs: DataFrame) -> DataFrame:
-    """Partitions whose [lo, hi] seq range holds at least one
-    tombstoned seq — as a JOIN with the partition-range aggregate on
-    the broadcast side (one row per partition), so the tombstone
-    relation can be arbitrarily large without ever touching the
-    driver. Returns distinct (contract, p_date)."""
+    """Partitions whose [lo, hi] seq range holds at least one deleted
+    seq — as a JOIN with the partition-range aggregate on the broadcast
+    side (one row per partition). Returns distinct (contract, p_date)."""
     return (
         tomb_seqs.join(
             F.broadcast(ranges),
@@ -687,7 +677,6 @@ def _tombstone_affected(ranges: DataFrame, tomb_seqs: DataFrame) -> DataFrame:
 
 
 def _partition_kept(pdf: DataFrame, tomb_seqs: DataFrame) -> DataFrame:
-    """Surviving rows of one partition under a tombstone set: an
-    anti-join on seq (never a driver-built IN-list — a mass delete
-    must stay distributed), seq-sorted for the rewrite."""
+    """Surviving rows of one partition under a set of deleted seqs: an
+    anti-join on seq (never an IN-list), seq-sorted for the rewrite."""
     return pdf.join(tomb_seqs, "seq", "left_anti").sortWithinPartitions("seq")

@@ -107,12 +107,12 @@ def tree_bytes(spark: SparkSession, path: str) -> int:
     return int(fs.getContentSummary(p).getLength())
 
 
-def list_files(spark: SparkSession, pattern: str) -> list[str]:
+def list_files(spark: SparkSession, pattern: str) -> dict[str, int]:
     """The paths matching the Hadoop glob ``pattern`` (``*`` stops at
-    ``/``), fully qualified: one listing call, two JVM round trips per
-    match."""
+    ``/``), fully qualified, with their bytes: one listing call, three
+    JVM round trips per match."""
     fs, p = _fs(spark, pattern)
-    return [str(st.getPath().toString()) for st in fs.globStatus(p) or []]
+    return {str(st.getPath().toString()): int(st.getLen()) for st in fs.globStatus(p) or []}
 
 
 def list_status(spark: SparkSession, path: str) -> list[tuple[str, int, bool]]:

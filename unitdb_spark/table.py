@@ -29,6 +29,7 @@ import uuid
 from collections import Counter
 from collections.abc import Iterable
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -93,8 +94,7 @@ def with_partition_columns(df: DataFrame, ts_col: str = "ts") -> DataFrame:
 class MessagesTable:
     """Partitioned-Parquet messages store with a log of committed files.
 
-    Layout: ``<path>/contract=<c>/p_date=<d>/<file>.parquet``, and the
-    deletes' tombstone files in the sibling ``tombstones/``. A Get prunes
+    Layout: ``<path>/contract=<c>/p_date=<d>/<file>.parquet``. A Get prunes
     on ``contract`` (the reference's contract-prefix routing), not on
     ``p_date``: a traced Get reads every file of its contract
     (``get_mix`` seed 7: 30 files, 252,788 rows for 1,355 returned), and
@@ -102,7 +102,8 @@ class MessagesTable:
 
     Every write commits at one point, the log ``<path>/_log/<v>.json``
     (Structured Streaming's file-sink metadata log; Delta Lake's design).
-    A version lists the files it adds and removes and the store's max
+    A version lists the files it adds and removes, the seqs it deletes
+    (``delete``) or a vacuum applied (``retire``) and the store's max
     seq, and ``fs.create_atomic`` publishes it whole or not at all: of
     two writers racing for a version, one wins. New files are written
     under ``_stage/<uuid>/`` and moved into their directories under
@@ -116,14 +117,14 @@ class MessagesTable:
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path.rstrip("/")
-        self.tombstones_path = self.path.rsplit("/", 1)[0] + "/tombstones"
         self.forget()
 
     def forget(self) -> None:
         """Drop what the table knows; call it after deleting the store."""
         self.version = -1
         self.files: set[str] = set()  # data files, relative to path
-        self.tombstones: set[str] = set()  # tombstone file names
+        self.deleted: set[int] = set()  # deleted seqs no vacuum applied yet
+        self.tombstones: set[str] = set()  # files of an older store's deletes
         self.max_seq = 0
         self._loaded = False
 
@@ -134,29 +135,31 @@ class MessagesTable:
     def refresh(self) -> None:
         """Read the versions committed since the last call: on a current
         table one fs call, the read that finds no next version. The
-        first call converts a store that has data but no version 0."""
+        first call converts an older store (``_convert``,
+        ``_inline_tombstones``)."""
         while (text := fs.read_text(self.spark, self._log_file(self.version + 1))) is not None:
             self._apply(json.loads(text))
         if not self._loaded:
             self._loaded = True
             if self.version < 0:
                 self._convert()
+            self._inline_tombstones()
 
     def _apply(self, entry: dict) -> None:
         self.version += 1
-        for have, kind in ((self.files, ""), (self.tombstones, "_tombstones")):
-            have.difference_update(entry.get("remove" + kind, ()))
-            have.update(entry.get("add" + kind, ()))
+        for have, drop, add in ((self.files, "remove", "add"), (self.deleted, "retire", "delete"),
+                                (self.tombstones, "remove_tombstones", "add_tombstones")):
+            have.difference_update(entry.get(drop, ()))
+            have.update(entry.get(add, ()))
         self.max_seq = max(self.max_seq, entry["max_seq"])
 
     def commit(self, max_seq: int | None = None, **change) -> bool:
-        """Publish the next version of ``change`` (lists of files:
-        ``add``/``remove`` data files, ``add_tombstones``/
-        ``remove_tombstones``); True once it wins. When another
-        writer created that version first, the table reads it. A change
-        that only adds cannot conflict, so it is retried at the next
-        version; one that removes returns False, and the caller decides
-        whether it still holds."""
+        """Publish the next version of ``change``: lists of data files
+        (``add``/``remove``) and of seqs (``delete``/``retire``); True
+        once it wins. When another writer created that version first,
+        the table reads it. A change that only adds cannot conflict, so
+        it is retried at the next version; one that removes returns
+        False, and the caller decides whether it still holds."""
         entry = {k: sorted(v) for k, v in change.items() if v}
         while True:
             entry["max_seq"] = max(self.max_seq, max_seq or 0)
@@ -164,8 +167,20 @@ class MessagesTable:
                 self._apply(entry)
                 return True
             self.refresh()
-            if change.get("remove") or change.get("remove_tombstones"):
+            if any(change.get(k) for k in ("remove", "retire", "remove_tombstones")):
                 return False
+
+    def _inline_tombstones(self) -> None:
+        """Move the deletes of an older store into the log: its
+        ``tombstones/`` files (named by versions it wrote, or by
+        ``_convert``) are read in one Spark job, one version records
+        their seqs and drops the files, then the directory goes. A crash
+        anywhere leaves files this redoes at the next open."""
+        root = self.path.rsplit("/", 1)[0] + "/tombstones"
+        while self.tombstones:
+            seqs = [r.seq for r in self._scan(root, self.tombstones, "seq long").collect()]
+            self.commit(delete=seqs, remove_tombstones=self.tombstones)
+        fs.delete(self.spark, root)
 
     def _convert(self) -> None:
         """Give a store written before the log its version 0, from one
@@ -174,14 +189,15 @@ class MessagesTable:
         again). A file in an older sparkmsg's partition swap directory
         was left by a crash, and the partition may be missing or doubled:
         it raises. The empty directories a finished swap left go."""
-        swap = self.path.rsplit("/", 1)[0] + "/.compact-part"
+        root = self.path.rsplit("/", 1)[0]
+        swap = root + "/.compact-part"
         if fs.list_files(self.spark, swap + "/*/*/*/*"):
             raise RuntimeError(f"{swap} holds files of an interrupted partition swap of an older "
                                "sparkmsg; put each partition back from stage/ or trash/, remove it, reopen")
         fs.delete(self.spark, swap)
         data, tombs = (
             {f for f in _tail(fs.list_files(self.spark, pattern), depth) if not re.search(r"(^|/)[_.]", f)}
-            for pattern, depth in ((f"{self.path}/*/*/*.parquet", 3), (f"{self.tombstones_path}/*.parquet", 1))
+            for pattern, depth in ((f"{self.path}/*/*/*.parquet", 3), (f"{root}/tombstones/*.parquet", 1))
         )
         if not data and not tombs:
             return
@@ -198,9 +214,11 @@ class MessagesTable:
 
     # ----------------------------------------------------------- write
     def write(self, df: DataFrame, part: str | None = None) -> list[str]:
-        """Write rows as new files no version names yet; returns them.
-        ``df`` holds message rows, or with ``part`` the stored columns of
-        the rows replacing partition ``part``. Message rows are sorted by
+        """Write rows as new files no version names yet, moved out of the
+        stage into their partition directory (``part``, or the one they
+        were written to) under store-unique names; returns them. ``df``
+        holds message rows, or with ``part`` the stored columns of the
+        rows replacing partition ``part``. Message rows are sorted by
         ``seq`` within each file (reverse-time layout parity,
         time_window.go:37-40), though a Get reads every file of its
         contract regardless."""
@@ -217,25 +235,9 @@ class MessagesTable:
                 .sortWithinPartitions("contract", "p_date", "seq")
                 .write.partitionBy("contract", "p_date")
             )
-        stage = f"{self.path}/_stage/{uuid.uuid4().hex}"
+        uid = uuid.uuid4().hex
+        stage = f"{self.path}/_stage/{uid}"
         writer.parquet(stage)
-        return self._place(stage, self.path, part)
-
-    def write_tombstones(self, seqs: list[int]) -> list[str]:
-        """Write deleted seqs as one new tombstone file no version names
-        yet. repartition(1), not coalesce(1): coalesce pulls the input's
-        partitions through one task and made each write ~2x slower."""
-        stage = f"{self.path}/_stage/{uuid.uuid4().hex}"
-        self.spark.createDataFrame(
-            [(int(s),) for s in seqs], TOMBSTONE_SCHEMA
-        ).repartition(1).write.parquet(stage)
-        return self._place(stage, self.tombstones_path, "")
-
-    def _place(self, stage: str, root: str, part: str | None) -> list[str]:
-        """Move the Parquet files of ``stage`` into their partition
-        directory under ``root`` (``part``, or the one they were written
-        to) under store-unique names; drop the stage. Returns the files,
-        relative to ``root``."""
         if self.version < 0:
             # the store's first write: convert an old store before a new
             # file is in its directories, then commit a version 0, so a
@@ -243,32 +245,30 @@ class MessagesTable:
             self.refresh()
             if self.version < 0:
                 self.commit()
-        uid = stage.rsplit("/", 1)[-1]
         depth = 3 if part is None else 1  # contract=/p_date=/file, or file
         written = _tail(fs.list_files(self.spark, stage + "/*" * depth + ".parquet"), depth)
         names = {
-            rel: f"{rel.rpartition('/')[0] if part is None else part}/part-{i:05d}-{uid}.parquet".lstrip("/")
+            rel: f"{rel.rpartition('/')[0] if part is None else part}/part-{i:05d}-{uid}.parquet"
             for i, rel in enumerate(sorted(written))
         }
         # one mkdirs per directory no committed file is in: a local disk
         # copies a file renamed into a missing directory
-        have = {f.rpartition("/")[0] for f in (self.files if root == self.path else self.tombstones)}
-        for d in {n.rpartition("/")[0] for n in names.values()} - have:
-            fs.mkdirs(self.spark, f"{root}/{d}".rstrip("/"))
+        for d in {n.rpartition("/")[0] for n in names.values()} - {f.rpartition("/")[0] for f in self.files}:
+            fs.mkdirs(self.spark, f"{self.path}/{d}")
         for rel, name in names.items():
-            fs.rename(self.spark, f"{stage}/{rel}", f"{root}/{name}")
+            fs.rename(self.spark, f"{stage}/{rel}", f"{self.path}/{name}")
         fs.delete(self.spark, stage)
         return list(names.values())
 
-    def append(self, df: DataFrame, add_tombstones: list[str] = ()) -> None:
-        """Write fully-derived rows and commit them, with any tombstone
-        files already written, as one version: all become visible
-        together, or none. The rows' highest seq is observed during the
-        write (a separate aggregate would run the input plan twice)."""
+    def append(self, df: DataFrame, delete: list[int] = ()) -> None:
+        """Write fully-derived rows and commit them, with any deleted
+        seqs, as one version: all become visible together, or none. The
+        rows' highest seq is observed during the write (a separate
+        aggregate would run the input plan twice)."""
         obs = Observation()
         add = self.write(df.observe(obs, F.max("seq").alias("max_seq")))
-        if add or add_tombstones:
-            self.commit(add=add, add_tombstones=add_tombstones, max_seq=obs.get["max_seq"])
+        if add or delete:
+            self.commit(add=add, delete=delete, max_seq=obs.get["max_seq"])
 
     # ------------------------------------------------------------ read
     def read(self, contracts: Iterable[int] | None = None) -> DataFrame:
@@ -282,12 +282,14 @@ class MessagesTable:
             files = [f for f in files if f.startswith(dirs)]
         return self._scan(self.path, files, self._full_schema())
 
-    def read_tombstones(self) -> DataFrame | None:
-        """The deleted seqs as of the last ``read`` or ``refresh``, or
-        None when there is none (then a Get plans no anti-join); no fs
-        call. The explicit schema spares a Spark inference job."""
-        if self.tombstones:
-            return self._scan(self.tombstones_path, self.tombstones, TOMBSTONE_SCHEMA)
+    def read_deleted(self) -> DataFrame | None:
+        """The pending deleted seqs as of the last ``read`` or
+        ``refresh``, or None when there is none (then a Get plans no
+        anti-join); no fs call and no Spark job. Built from an Arrow
+        table, so Spark plans a ``LocalRelation``: a list of tuples
+        would plan an RDD scan that runs a Python job at every Get."""
+        if self.deleted:
+            return self.spark.createDataFrame(pa.table({"seq": pa.array(self.deleted, pa.int64())}))
         return None
 
     def partitions(self) -> dict[str, list[str]]:
@@ -329,9 +331,6 @@ class MessagesTable:
         return T.StructType(fields)
 
 
-#: the tombstone table: one column, the deleted seq
-TOMBSTONE_SCHEMA = "seq long"
-
 #: the columns stored IN a partition's files: everything but the
 #: directory-encoded partition columns. Reads pass it explicitly —
 #: inferring from one legacy file would drop columns it lacks (the
@@ -341,7 +340,7 @@ DATA_SCHEMA = T.StructType(
 )
 
 
-def _tail(paths: list[str], depth: int) -> list[str]:
+def _tail(paths: Iterable[str], depth: int) -> list[str]:
     """The last ``depth`` components of each path."""
     return ["/".join(p.split("/")[-depth:]) for p in paths]
 

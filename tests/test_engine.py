@@ -666,6 +666,28 @@ class TestCountVarz:
             assert varz[f"{op}_latency"]["p50"] > 0
 
 
+    def test_varz_reports_the_last_gets_scan(self, engine: Engine):
+        """``varz()['last_get']`` is what the last fetched Get read (from
+        its executed plan, through AQE's stages for ``get_many``) and
+        what it returned."""
+        assert "last_get" not in engine.varz()
+        for day in range(3):
+            for i in range(4):
+                engine.put_entry(Entry("s.t" if i % 2 else "s.u", b"x"), ts=T0 + day * 86400 + i)
+            engine.flush()
+        size = sum(Path(f).stat().st_size for f in _parquet_files(engine.table.path))
+        engine.get("s.t", now=T0 + 3 * 86400)
+        assert engine.varz()["last_get"] == {
+            "files": 3, "bytes": size, "rows_read": 12, "rows_returned": 6, "read_amplification": 2.0
+        }
+        engine.get("s.t?last=1h", now=T0 + 2 * 86400 + 100)  # one date partition
+        last = engine.varz()["last_get"]
+        assert (last["files"], last["rows_read"], last["rows_returned"]) == (1, 4, 2)
+        engine.get_many(["s.t", "s.u"], now=T0 + 3 * 86400)
+        last = engine.varz()["last_get"]
+        assert (last["files"], last["rows_read"], last["rows_returned"]) == (3, 12, 12)
+
+
 class TestEncryption:
     """Payload value-codec parity (db.go:281-294; reference uses
     chacha20-poly1305, we use JVM-side AES-GCM via aes_encrypt)."""
@@ -877,6 +899,28 @@ class TestVacuum:
             eng.destroy()
 
 
+    def test_vacuum_bin_packs_the_partition(self, spark, tmp_path):
+        """A partition vacuum rewrites comes back packed as compact packs
+        it: two small files with one deleted row become one file."""
+        eng = Engine.open(spark, str(tmp_path / "vacpack"))
+        try:
+            seqs = []
+            for flush in range(2):
+                seqs += [eng.put_entry(Entry("v.t", b"%d.%d" % (flush, i)), ts=T0 + 3 * flush + i) for i in range(3)]
+                eng.flush()
+            ((part, files),) = eng.table.partitions().items()
+            assert len(files) == 2
+            before = eng.get("v.t", now=T0 + 10)
+            eng.delete(seqs[1])
+            assert eng.vacuum() == {part: 1}
+            assert len(eng.table.partitions()[part]) == 1
+            assert eng.get("v.t", now=T0 + 10) == [p for p in before if p != b"0.1"]
+            raw = sorted(r["seq"] for r in eng.table.read().select("seq").collect())
+            assert raw == sorted(set(seqs) - {seqs[1]})
+        finally:
+            eng.destroy()
+
+
 class TestGetResultCap:
     def test_oversized_result_aborts_before_buffering(self, spark, tmp_path):
         """limit × payload products past the cap must raise mid-fetch,
@@ -904,6 +948,158 @@ class TestGetResultCap:
                 eng.get_many(["cap.t"], now=T0 + 100)
         finally:
             eng.destroy()
+
+
+def _serving_threads(spark) -> list[str]:
+    """The JVM threads serving a collected or streamed result to Python."""
+    threads = spark._jvm.java.lang.Thread.getAllStackTraces().keySet().toArray()
+    return [t.getName() for t in threads if t.getName() in ("serve-DataFrame", "serve toLocalIterator")]
+
+
+def _no_serving_thread(spark) -> bool:
+    """Whether the serving threads are gone, waiting up to 10 s."""
+    deadline = time.monotonic() + 10
+    while _serving_threads(spark) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    return _serving_threads(spark) == []
+
+
+class TestGetFetch:
+    def test_get_is_one_job_of_one_stage(self, engine: Engine, spark, monkeypatch):
+        """A Get is fetched by Spark's collect path: each scan task keeps
+        its top K and the driver merges them, one job of one stage (the
+        request-per-partition iterator shuffled them into one partition
+        first, a second stage)."""
+        for day in range(4):
+            for i in range(5):
+                engine.put_entry(Entry("f.t", b"%d.%d" % (day, i)), ts=T0 + day * 86400 + i)
+            engine.flush()
+        assert len(engine.table.files) == 4
+        got, jobs, _ = _jobs_and_writes(
+            spark, monkeypatch, lambda: engine.get(Query("f.t", limit=7), now=T0 + 5 * 86400)
+        )
+        assert got == [b"%d.%d" % (d, i) for d in (3, 2) for i in reversed(range(5))][:7]
+        assert len(jobs) == 1
+        assert len(spark.sparkContext.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+
+    @staticmethod
+    def _many_files(engine: Engine) -> list[bytes]:
+        """16 files of 5 rows with 20 kB incompressible payloads, in one
+        partition; the payloads newest first."""
+        import random
+
+        payloads = [random.Random(n).randbytes(20_000) for n in range(80)]
+        for f in range(16):
+            for i in range(5):
+                engine.put_entry(Entry("m.t", payloads[f * 5 + i]), ts=T0 + f * 10 + i)
+            engine.flush()
+        assert len(engine.table.files) == 16
+        return payloads[::-1]
+
+    def test_many_scan_tasks_merge_on_the_driver(self, engine: Engine, spark, monkeypatch):
+        """With a split size below a file's size every file is read by
+        its own tasks: the driver merges each task's top K, still one job
+        of one stage, and the answer is the newest K of the store."""
+        want = self._many_files(engine)
+        try:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", "32768")
+            got, jobs, _ = _jobs_and_writes(
+                spark, monkeypatch, lambda: engine.get(Query("m.t", limit=33), now=T0 + 1000)
+            )
+        finally:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
+        assert got == want[:33]
+        tracker = spark.sparkContext.statusTracker()
+        assert len(jobs) == 1
+        (stage,) = tracker.getJobInfo(jobs[0]).stageIds
+        assert tracker.getStageInfo(stage).numTasks >= 32
+
+    def test_driver_result_limit_falls_back_to_streaming(self, engine: Engine, spark, monkeypatch):
+        """When the per-task rows pass ``spark.driver.maxResultSize`` but
+        the K newest fit it, Spark aborts the collect job and the Get
+        streams the same plan instead (the per-task rows shuffled into one
+        partition): the answer is the same, the byte cap still applies to
+        it, and an abort part-way ends the stream's serving thread."""
+        from unitdb_spark.engine import ResultTooLarge
+
+        want = self._many_files(engine)
+        conf = spark.sparkContext._jsc.sc().conf()
+        try:
+            conf.set("spark.driver.maxResultSize", "1m")  # 16 tasks: 1.6 MB; the 30 kept, pickled: about 0.9 MB
+            got, jobs, _ = _jobs_and_writes(
+                spark, monkeypatch, lambda: engine.get(Query("m.t", limit=30), now=T0 + 1000)
+            )
+            with pytest.raises(ResultTooLarge, match="get_df") as raised:
+                engine.get(Query("m.t", limit=30), now=T0 + 1000, max_result_bytes=500_000)
+        finally:
+            conf.remove("spark.driver.maxResultSize")
+        assert raised and _no_serving_thread(spark)  # the error held, the stream's thread ended
+        assert got == want[:30]
+        tracker = spark.sparkContext.statusTracker()
+        assert [tracker.getJobInfo(j).status for j in sorted(jobs)][0] == "FAILED"
+        assert engine.get(Query("m.t", limit=30), now=T0 + 1000) == want[:30]
+
+    def test_abort_mid_stream_leaves_no_serving_thread(self, engine: Engine, spark):
+        """``ResultTooLarge`` part-way closes the result socket, so the JVM
+        thread writing to it ends, even while the caller still holds the
+        error (and with it the fetch's frame); the next Get answers."""
+        from unitdb_spark.engine import ResultTooLarge
+
+        for i in range(24):
+            engine.put_entry(Entry("big.t", b"z" * 1_000_000), ts=T0 + i)
+        engine.flush()
+        held = []
+        for _ in range(5):
+            with pytest.raises(ResultTooLarge) as raised:
+                engine.get("big.t", now=T0 + 100, max_result_bytes=3_000_000)
+            held.append(raised)
+        assert _no_serving_thread(spark)
+        assert len(engine.get("big.t", now=T0 + 100)) == 24
+
+
+class TestLastPrunesDates:
+    """A ``?last=`` Get reads only the date partitions its window can
+    reach, and the bound loses no row of the window."""
+
+    def test_rows_at_the_cutoff_and_one_microsecond_before(self, engine: Engine):
+        import datetime as dt
+
+        cutoff = dt.datetime(2023, 11, 15, tzinfo=dt.timezone.utc).timestamp()  # a date boundary
+        for name, at in (("old", cutoff - 3 * 86400), ("before", cutoff - 1e-6), ("at", cutoff),
+                         ("new", cutoff + 1800)):
+            engine.put_entry(Entry("w.t", name.encode()), ts=at)
+        engine.flush()
+        assert len(engine.table.partitions()) == 3
+        assert engine.get("w.t?last=1h", now=cutoff + 3600) == [b"new", b"at"]
+        assert engine.varz()["last_get"]["files"] == 2  # the "old" date is pruned
+        assert engine.get("w.t?last=1h", now=cutoff + 3600 + 1e-6) == [b"new"]
+
+    @pytest.mark.parametrize("writer, reader", [
+        ("Etc/GMT+12", "Pacific/Kiritimati"),  # UTC-12 writes, UTC+14 reads
+        ("Pacific/Kiritimati", "Etc/GMT+12"),
+        ("-18:00", "+18:00"),  # the widest offsets a session accepts
+    ])
+    def test_read_under_another_time_zone_than_the_write(self, engine: Engine, spark, writer, reader):
+        """``p_date`` is the date of ``ts`` in the writer's session time
+        zone: reading under another zone keeps every row of the window,
+        including one dated two days before the reader's date of the
+        cutoff."""
+        import datetime as dt
+
+        cutoff = dt.datetime(2023, 11, 15, 11, 30, tzinfo=dt.timezone.utc).timestamp()
+        stamps = [cutoff + h * 3600 for h in range(-70, 41, 3)] + [cutoff, cutoff - 1e-6]
+        try:
+            spark.conf.set("spark.sql.session.timeZone", writer)
+            for i, at in enumerate(stamps):
+                engine.put_entry(Entry("z.t", b"%d" % i), ts=at)
+            engine.flush()
+            spark.conf.set("spark.sql.session.timeZone", reader)
+            now = cutoff + 2 * 3600
+            got = engine.get(Query("z.t?last=2h", limit=1000), now=now)
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", "UTC")
+        assert got == [b"%d" % i for i in reversed(range(len(stamps))) if stamps[i] >= cutoff]
+        assert engine.varz()["last_get"]["files"] < len(engine.table.files)
 
 
 class TestCommitVisibility:

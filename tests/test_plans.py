@@ -53,6 +53,10 @@ class TestGetPlan:
         info = scan_info(store.get_df(Query("t.1.x", last="1h"), now=T0 + 100))
         assert any("GreaterThanOrEqual(ts" in f for f in info["pushed_filters"])
 
+    def test_last_window_prunes_p_date(self, store):
+        info = scan_info(store.get_df(Query("t.1.x", last="1h"), now=T0 + 100))
+        assert any("p_date" in f for f in info["partition_filters"])
+
     def test_no_shuffle_in_get(self, store):
         # newest-first top-K = TakeOrderedAndProject, not a sort shuffle
         assert shuffle_count(store.get_df(Query("t.1.x"), now=T0 + 100)) == 0

@@ -21,28 +21,38 @@ batch.go:60-293) onto DataFrame operations:
 - ``Count``  -> live-entry count (db.go:474-482)
 
 Scale notes (100 TB): every Get compiles to a single Catalyst plan. It
-prunes only the ``contract`` partition: a traced Get reads every file
-of its contract (``get_mix`` seed 7: 30 files and 252,788 rows for
-1,355 returned). Only a ``?last=`` Get's ``ts`` filter reaches Parquet
-row groups; no Get prunes a ``p_date`` partition. The deleted seqs
-pending a vacuum are the broadcast side of the anti-join, a local
-relation built on the driver from the log. The driver still walks
-rows: ``_capped_fetch`` iterates every fetched row to enforce the byte
-cap, and ``get_many`` sorts each query's payloads on the driver.
+prunes the ``contract`` partition, and a ``?last=`` Get also prunes
+``p_date`` to the dates its window can reach; any other Get reads every
+file of its contract (``get_mix`` seed 7: 30 files and 252,788 rows for
+1,355 returned). The Get predicate reaches Parquet as pushed filters,
+but they skip no row group: files are seq-sorted, so every topic spans
+every row group, and ``ts``/``expires_at`` are stored as INT96, which
+Parquet writes no min/max statistics for. The deleted seqs pending a
+vacuum are the broadcast side of the anti-join, a local relation built
+on the driver from the log. A Get is fetched by Spark's collect path
+(one job; each scan task's top-K is merged on the JVM driver), or
+streamed when those rows pass ``spark.driver.maxResultSize``; both are
+read under a byte cap. ``get_many`` is streamed one partition at a time
+(``toLocalIterator``) and sorts each query's payloads on the driver.
+``Engine.varz()`` reports the last Get's scan counters.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import math
 import time
 from collections import deque
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Generator, Iterable, Iterator
 from dataclasses import dataclass
 from pathlib import Path
 
+from py4j.protocol import Py4JJavaError
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import _create_local_socket
 
 from unitdb_spark import fs
 
@@ -57,7 +67,7 @@ from unitdb_spark.core.model import (
     new_contract,
 )
 from unitdb_spark.core.topic import parse_topic
-from unitdb_spark.table import MESSAGES_SCHEMA, MessagesTable, ttl_live_expr
+from unitdb_spark.table import MESSAGES_SCHEMA, MessagesTable, p_date_since_sql, ttl_live_expr
 
 
 class ImmutableError(RuntimeError):
@@ -70,26 +80,81 @@ class ResultTooLarge(RuntimeError):
 
 
 def _capped_fetch(
-    df: DataFrame, cap: int | None, what: str, hint: str
+    rows: Generator[Row, None, None], cap: int | None, what: str, hint: str
 ) -> Iterator[tuple[Row, bytes]]:
-    """Stream ``df`` to the driver one partition at a time
-    (``toLocalIterator``), yielding (row, payload bytes), and raise
-    ``ResultTooLarge`` once the payloads seen pass ``cap`` bytes (None
-    = no cap)."""
-    total = 0
-    for n, r in enumerate(df.toLocalIterator(), 1):
-        p = bytes(r["payload"] or b"")
-        total += len(p)
-        if cap is not None and total > cap:
-            raise ResultTooLarge(
-                f"{what} result passed {cap} bytes at row {n}; "
-                f"raise max_get_result_bytes or use {hint}"
-            )
-        yield r, p
+    """Yield (row, payload bytes) from ``rows`` and raise
+    ``ResultTooLarge`` once the payloads seen pass ``cap`` bytes (None =
+    no cap), so Python holds at most the cap plus what the row source
+    buffers (one pickled batch or one partition). ``rows`` is closed
+    however the reading ends, which lets its JVM serving thread end even
+    while the caller holds the error."""
+    with contextlib.closing(rows):
+        total = 0
+        for n, r in enumerate(rows, 1):
+            p = bytes(r["payload"] or b"")
+            total += len(p)
+            if cap is not None and total > cap:
+                raise ResultTooLarge(
+                    f"{what} result passed {cap} bytes at row {n}; "
+                    f"raise max_get_result_bytes or use {hint}"
+                )
+            yield r, p
+
+
+def _collect_rows(df: DataFrame) -> Generator[Row, None, None]:
+    """The rows of a top-K ``df`` by Spark's collect path, as
+    ``DataFrame.collect`` gets them (one job: each scan task's top K is
+    merged on the JVM driver), read off the socket one pickled batch at
+    a time. Closing the generator closes the socket, which ends the JVM
+    thread serving it.
+
+    The per-task rows count against ``spark.driver.maxResultSize``: when
+    Spark aborts the job on it (tasks × K × payload past 1 GB by
+    default), the same plan is streamed by ``toLocalIterator`` instead,
+    which shuffles the per-task rows into one partition and sends the
+    driver only the K it keeps (a Get whose K rows alone pass the limit
+    fails on either path)."""
+    try:
+        port_auth = df._jdf.collectToPython()
+    except Py4JJavaError as e:
+        if "spark.driver.maxResultSize" not in str(e.java_exception):
+            raise
+        yield from df.toLocalIterator()
+        return
+    sockfile = _create_local_socket(port_auth)
+    try:
+        yield from BatchedSerializer(CPickleSerializer()).load_stream(sockfile)
+    finally:
+        sockfile.close()
+
+
+def _scan_counters(plan) -> dict[str, int]:
+    """Files, bytes and rows read by the Parquet scans of an executed
+    plan (a JVM ``SparkPlan``), through AQE's wrapper and query stages."""
+    out = {"files": 0, "bytes": 0, "rows_read": 0}
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            if name == "FileSourceScanExec":
+                metrics = node.metrics()
+                for key, metric in (("files", "numFiles"), ("bytes", "filesSize"), ("rows_read", "numOutputRows")):
+                    out[key] += metrics.apply(metric).value()
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
 
 
 #: sentinel distinguishing "not passed" from an explicit None (= no cap)
 _UNSET = object()
+
+#: the file size ``compact`` and ``vacuum`` pack a partition into
+TARGET_FILE_BYTES = 128 << 20
 
 
 @dataclass
@@ -130,6 +195,8 @@ class Engine:
         self._latencies: dict[str, deque] = {
             op: deque(maxlen=50) for op in ("get", "put", "del")
         }
+        # the last fetched Get and its row count; varz() reads its scan
+        self._last_get: tuple[DataFrame, int] | None = None
         # every version records the store's max seq: no job at open
         self.table.refresh()
         self._seq.advance_to(self.table.max_seq)
@@ -271,12 +338,18 @@ class Engine:
         """db.go:222-319 Get() as a single declarative plan; returns the
         full rows (callers project payload). Building it starts no Spark
         job; its one filesystem call is the log read that finds no new
-        version (see ``_live_df``)."""
+        version (see ``_live_df``). A ``?last=`` Get also bounds
+        ``p_date`` (``table.p_date_since_sql``), so its scan lists only
+        the date partitions the window can reach."""
         from unitdb_spark.operators.get import apply_get
 
         self._metrics["gets"] += 1
         q = Query(topic=query) if isinstance(query, str) else query
-        return apply_get(self._live_df([q.contract]), q, now=now)
+        df = self._live_df([q.contract])
+        last = q.last_seconds()
+        if last is not None and (since := p_date_since_sql(now, last)) is not None:
+            df = df.filter(since)
+        return apply_get(df, q, now=now)
 
     def get(
         self,
@@ -286,15 +359,20 @@ class Engine:
     ) -> list[bytes]:
         """Payloads, newest-first (the reference's [][]byte return).
 
-        Driver-memory guard: results stream to the driver one partition
-        at a time (``toLocalIterator``) with a running byte count, and
-        the fetch ABORTS with ``ResultTooLarge`` once accepted payloads
-        exceed ``max_result_bytes`` (default
+        The fetch is one Spark job: each scan task keeps its newest K
+        rows and the JVM driver merges them, as ``DataFrame.collect``
+        does. Every task's K rows count against
+        ``spark.driver.maxResultSize`` (1 GB by default); when they pass
+        it, Spark aborts that job and the Get streams the same plan by
+        ``toLocalIterator``, which sends the driver only the K rows
+        (``_collect_rows``). Python reads the rows with a running byte
+        count, and the fetch ABORTS with ``ResultTooLarge`` once
+        accepted payloads exceed ``max_result_bytes`` (default
         ``EngineOptions.max_get_result_bytes``, 512 MB; None disables)
         — so a ``limit=100000`` query over GB-sized payloads fails
-        loudly part-way instead of OOMing the driver after buffering
-        everything. ``get_df`` is the scale path: it never materializes
-        results driver-side and has no cap.
+        loudly part-way instead of OOMing the Python driver.
+        ``get_df`` is the scale path: it never materializes results
+        driver-side and has no cap.
 
         A store whose ``messages/`` directory does not exist reads as
         holding no messages: ``[]``, not an error. Deleted seqs come
@@ -306,8 +384,9 @@ class Engine:
         )
         t0 = time.monotonic()
         rows = self.get_df(query, now=now).select("payload")
-        out = [p for _, p in _capped_fetch(rows, cap, "get()", "get_df()")]
+        out = [p for _, p in _capped_fetch(_collect_rows(rows), cap, "get()", "get_df()")]
         self._latencies["get"].append(time.monotonic() - t0)
+        self._last_get = (rows, len(out))
         return out
 
     def get_many(
@@ -315,7 +394,10 @@ class Engine:
     ) -> list[list[bytes]]:
         """Multi-topic relay (store/store.go:170-181) fused to ONE
         table scan: per-query newest-first payload lists, same results
-        as N separate ``get`` calls."""
+        as N separate ``get`` calls. The rows are streamed one partition
+        at a time (``toLocalIterator``) under the byte cap: the plan has
+        an exchange, so Spark's collect path would save no stage, and it
+        would hold the whole result in the JVM driver first."""
         from unitdb_spark.operators.get import apply_get_many
 
         t0 = time.monotonic()
@@ -326,13 +408,14 @@ class Engine:
         )
         out: list[list[tuple[int, bytes]]] = [[] for _ in queries]
         for r, p in _capped_fetch(
-            rows,
+            rows.toLocalIterator(),
             self.options.max_get_result_bytes,
             "get_many()",
             "apply_get_many directly",
         ):
             out[r["query_id"]].append((r["seq"], p))
         self._latencies["get"].append(time.monotonic() - t0)
+        self._last_get = (rows, sum(map(len, out)))
         return [[p for _, p in sorted(l, reverse=True)] for l in out]
 
     def _live_df(self, contracts: Iterable[int] | None = None) -> DataFrame:
@@ -389,8 +472,19 @@ class Engine:
     def varz(self) -> dict:
         """meter.go:28-90 Varz(): op counters + per-op latency
         percentiles from a trailing 50-sample reservoir
-        (metrics/timeseries.go:24-44, P50..P999 as there)."""
+        (metrics/timeseries.go:24-44, P50..P999 as there), and
+        ``last_get``: the Parquet files, bytes and rows the last fetched
+        ``get``/``get_many`` read, the rows it returned and their ratio
+        (read amplification). Those come from that Get's executed plan,
+        walked here, not on the Get path; after a Get that fell back to
+        streaming, rows read also count the tasks its aborted collect
+        job finished."""
         out: dict = dict(self._metrics)
+        if self._last_get is not None:
+            df, returned = self._last_get
+            scan = _scan_counters(df._jdf.queryExecution().executedPlan())
+            out["last_get"] = {**scan, "rows_returned": returned,
+                               "read_amplification": scan["rows_read"] / max(returned, 1)}
         for op, samples in self._latencies.items():
             if not samples:
                 continue
@@ -460,6 +554,14 @@ class Engine:
                 fs.delete(self.spark, f"{t.path}/{f}")
         return {p: (len(old), len(new)) for p, (old, new) in done.items()}
 
+    def _files_out(self, part: str, files: list[str], target_file_bytes: int) -> int:
+        """How many files a rewrite of ``part`` writes: ceil(bytes /
+        ``target_file_bytes``) over its committed ``files``, at least 1
+        (one listing of the partition directory)."""
+        on_disk = fs.list_files(self.spark, f"{self.table.path}/{part}/*.parquet")
+        size = sum(n for p, n in on_disk.items() if p.endswith(tuple(files)))
+        return max(1, math.ceil(size / target_file_bytes))
+
     def purge_expired(self, now: float | None = None) -> None:
         """Background expirer parity (expiry_window.go:28-148): rewrite
         the partitions that hold a row with ``expires_at <= now``,
@@ -491,9 +593,11 @@ class Engine:
         the driver; Gets and this job read them as one local relation.
         The only collect is the affected-partition list, and the
         per-partition rewrite is an anti-JOIN on seq, never an IN-list.
-        The rewrites and the retirement of the seqs read are one version
-        (``_rewrite``); seqs deleted after that read stay for the next
-        run. Returns {partition_dir: rows_removed}.
+        Each rewritten partition is bin-packed as ``compact`` packs it,
+        into ceil(bytes / 128 MB) files. The rewrites and the retirement
+        of the seqs read are one version (``_rewrite``); seqs deleted
+        after that read stay for the next run. Returns
+        {partition_dir: rows_removed}.
         """
         self.flush()
         t = self.table
@@ -503,20 +607,23 @@ class Engine:
             return {}
         retire = list(t.deleted)
         removed: dict[str, int] = {}
+        rewrites = {}
+        by_part = t.partitions()
         ranges = rows.groupBy("contract", "p_date").agg(F.min("seq").alias("lo"), F.max("seq").alias("hi"))
         for r in _tombstone_affected(ranges, deleted).collect():
             part = _part_dir(r["contract"], r["p_date"])
             n = t.read_partition(part).join(deleted, "seq", "leftsemi").count()
             if n:
                 removed[part] = n
-        done = self._rewrite(
-            {part: lambda df: _partition_kept(df, deleted) for part in removed}, retire
-        )
+                n_out = self._files_out(part, by_part[part], TARGET_FILE_BYTES)
+                # a broadcast anti-join keeps its input's partitioning: coalesce first
+                rewrites[part] = lambda df, n=n_out: _partition_kept(df.coalesce(n), deleted)
+        done = self._rewrite(rewrites, retire)
         return {part: removed[part] for part in done}
 
     def compact(
         self,
-        target_file_bytes: int = 128 << 20,
+        target_file_bytes: int = TARGET_FILE_BYTES,
         min_files: int = 4,
     ) -> dict[str, tuple[int, int]]:
         """Selective small-file compaction (free-block/defrag parity,
@@ -542,15 +649,13 @@ class Engine:
         for part, files in self.table.partitions().items():
             if len(files) < min_files:
                 continue
-            on_disk = fs.list_files(self.spark, f"{self.table.path}/{part}/*.parquet")
-            size = sum(n for p, n in on_disk.items() if p.endswith(tuple(files)))
-            n_out = max(1, math.ceil(size / target_file_bytes))
+            n_out = self._files_out(part, files, target_file_bytes)
             if n_out < len(files):
                 # sort AFTER coalesce: the merged output files stay
                 # seq-sorted end to end, the layout `append` writes —
                 # sorting before would leave concatenated sorted runs.
-                # Gets do not prune on it: only a ?last= Get's ts filter
-                # reaches row groups.
+                # No Get skips a row group on it: no Get filters a seq
+                # range, and ts is stored as INT96, which has no stats.
                 rewrites[part] = lambda df, n=n_out: df.coalesce(n).sortWithinPartitions("seq")
         return self._rewrite(rewrites)
 

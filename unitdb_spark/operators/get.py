@@ -6,9 +6,13 @@ Shared by Engine.get_df (live store) and the correctness harness
 db.go:222-319, query.go:50-123).
 
 The emitted plan is: Parquet scan with pushed filters (contract is a
-partition column on the live store; ts/seq hit row-group stats) →
-whole-stage-codegen filter → TakeOrderedAndProject(limit, seq DESC).
-No shuffle except the final K-row merge.
+partition column on the live store; ``Engine.get_df`` adds a ``p_date``
+bound for ``?last``, since a derived messages DataFrame has no
+``p_date``) → whole-stage-codegen filter → TakeOrderedAndProject(limit,
+seq DESC). The pushed ``ts``/``expires_at`` conjuncts skip no row group
+on the live store: those columns are stored as INT96, which carries no
+min/max statistics. No shuffle: collected, each task's top-K is merged
+on the driver.
 
 Each predicate is generated as Spark SQL and parsed once (see
 operators.topic_match for why), user strings quoted by ``sql_string``.

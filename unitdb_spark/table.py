@@ -7,22 +7,24 @@ partitioned Parquet layout that Catalyst can prune:
 
 - partitioned by ``contract`` (tenant prefix pruning — query.go:106,
   db.go:238) and ``p_date`` (time-block pruning — time_window.go:67-69);
-- Parquet min/max stats on ``seq``/``ts`` stand in for the reverse-time
-  window chains; dictionary encoding stands in for store-topic-once
+- dictionary encoding stands in for store-topic-once
   (db_internal.go:271-276); snappy is the codec parity
   (db_internal.go:292).
 
-At 100 TB, contract partitions bound each tenant's scan. Date
-partitions do not bound a Get: a ``?last=`` window filters ``ts``,
-which reaches Parquet as a pushed row-group filter, while the scan
-still lists every date partition of the contract. Files within a
-partition are written sorted by ``seq``.
+At 100 TB, contract partitions bound each tenant's scan, and a
+``?last=`` Get's ``p_date`` bound (``p_date_since_sql``) bounds it to
+the dates its window reaches. Nothing stands in for the reverse-time
+window chains below a partition: ``ts`` and ``expires_at`` are stored
+as INT96 (Spark's default ``outputTimestampType``), which Parquet
+writes no min/max statistics for, so their pushed filters skip no row
+group. Files within a partition are written sorted by ``seq``.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import json
+import math
 import re
 import time
 import uuid
@@ -95,10 +97,11 @@ class MessagesTable:
     """Partitioned-Parquet messages store with a log of committed files.
 
     Layout: ``<path>/contract=<c>/p_date=<d>/<file>.parquet``. A Get prunes
-    on ``contract`` (the reference's contract-prefix routing), not on
-    ``p_date``: a traced Get reads every file of its contract
-    (``get_mix`` seed 7: 30 files, 252,788 rows for 1,355 returned), and
-    only a ``?last=`` Get's ``ts`` filter reaches row groups.
+    on ``contract`` (the reference's contract-prefix routing), and a
+    ``?last=`` Get on ``p_date`` too; any other Get reads every file of
+    its contract (``get_mix`` seed 7: 30 files, 252,788 rows for 1,355
+    returned). No Get skips a row group: ``ts`` is INT96, without
+    min/max statistics.
 
     Every write commits at one point, the log ``<path>/_log/<v>.json``
     (Structured Streaming's file-sink metadata log; Delta Lake's design).
@@ -220,8 +223,8 @@ class MessagesTable:
         holds message rows, or with ``part`` the stored columns of the
         rows replacing partition ``part``. Message rows are sorted by
         ``seq`` within each file (reverse-time layout parity,
-        time_window.go:37-40), though a Get reads every file of its
-        contract regardless."""
+        time_window.go:37-40), though a Get reads every file of the
+        partitions it keeps regardless."""
         writer = df.write
         if part is None:
             # one task per (contract, date) -> one right-sized file per
@@ -351,12 +354,38 @@ def now_sql(now: float | dt.datetime | None) -> str:
     seconds or a datetime). py4j sends a naive datetime as
     ``time.mktime`` seconds plus its microseconds, and
     ``timestamp_micros`` takes exactly that."""
+    return "current_timestamp()" if now is None else f"timestamp_micros({_micros(now)})"
+
+
+def _micros(now: float | dt.datetime | None) -> int:
+    """The instant ``now_sql`` names, in epoch microseconds (the wall
+    clock for None)."""
     if now is None:
-        return "current_timestamp()"
+        return time.time_ns() // 1000
     if not isinstance(now, dt.datetime):
         now = dt.datetime.fromtimestamp(now, dt.timezone.utc)
     d = now.replace(tzinfo=None)
-    return f"timestamp_micros({int(time.mktime(d.timetuple())) * 1_000_000 + d.microsecond})"
+    return int(time.mktime(d.timetuple())) * 1_000_000 + d.microsecond
+
+
+#: the widest offset from UTC a Spark session time zone can have
+_MAX_ZONE_OFFSET_US = 18 * 3600 * 1_000_000
+_DAY_US = 86_400 * 1_000_000
+#: the unix day of 0001-01-01: a bound before it would keep every date
+#: (and could overflow ``date_from_unix_date``'s int argument)
+_FIRST_UNIX_DATE = -719_162
+
+
+def p_date_since_sql(now: float | dt.datetime | None, seconds: float) -> str | None:
+    """A ``p_date`` bound that keeps every row with ``ts`` at or after
+    ``now`` minus ``seconds``, or None when no date is that old. A row's
+    ``p_date`` is the date of its ``ts`` in the writer's session time
+    zone, at most 18 h off UTC, so none of those rows is dated before the
+    UTC date of the cutoff less 18 h; the reader's time zone plays no
+    part. With ``now`` None the bound is taken from the wall clock now,
+    no later than the ``current_timestamp()`` the query runs at."""
+    days = math.floor((_micros(now) - seconds * 1e6 - _MAX_ZONE_OFFSET_US) / _DAY_US)
+    return f"p_date >= date_from_unix_date({days})" if days > _FIRST_UNIX_DATE else None
 
 
 def ttl_live_sql(now: str) -> str:
